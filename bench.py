@@ -39,6 +39,7 @@ headline set changes):
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import statistics
@@ -203,7 +204,7 @@ def merge_detail(existing: object, record: dict) -> dict:
     history = merged.get("runs_history")
     if not isinstance(history, list):
         history = []
-    entry = dict(record)
+    entry = copy.deepcopy(record)
     entry["attempt"] = 1 + max(
         (h.get("attempt", 0) for h in history if isinstance(h, dict)), default=0
     )

@@ -23,9 +23,11 @@ Extract and load stay PLUGGABLE (the pipeline contract): dotted
   Obtain the session with ``social_warner_spark.session.get_spark()``
   (getOrCreate — shares the CLI's session).
 - ``--load``: ``(df, config) -> int`` (rows written).  When ``--out DIR``
-  is given instead, the built-in parquet loader writes each config's
-  frame to ``DIR/<sink_table_name>`` (the reference's BigQuery table
-  naming, data_load.py:36) and reports the written row count.
+  is given instead, each config's frame goes through the package's one
+  sink, ``sinks.write_table``, appending to ``DIR/<sink_table_name>`` (the
+  reference's BigQuery table naming, data_load.py:36).  The reported row
+  count comes from the write itself, and an empty frame fails its config,
+  exactly as over WSGI.
 
 No new dependency: argparse + wsgiref are stdlib, like wsgi.py.
 """
@@ -69,28 +71,6 @@ def resolve_callable(ref: str) -> Callable:
     return fn
 
 
-def parquet_loader(out_dir: str) -> Callable:
-    """Built-in load: write each config's frame under ``out_dir`` using
-    the reference's sink table naming; returns the written row count.
-    The frame is persisted around count+write so the extract lineage is
-    evaluated ONCE and the reported count is the count that was written
-    (ADVICE r08 — a nondeterministic extract would otherwise report a
-    different count than the sink received)."""
-
-    def load(df, config) -> int:
-        df = df.persist()
-        try:
-            n = df.count()
-            path = f"{out_dir.rstrip('/')}/{config.sink_table_name}"
-            df.write.mode("append").parquet(path)
-        finally:
-            df.unpersist()
-        logu.info("parquet load", config_id=config.config_id, path=path, rows=n)
-        return n
-
-    return load
-
-
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="python -m social_warner_spark",
@@ -112,7 +92,8 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     common.add_argument(
         "--out",
-        help="directory for the built-in parquet loader (alternative to --load)",
+        help="append each config to DIR/<sink_table_name> via sinks.write_table"
+        " (alternative to --load)",
     )
     common.add_argument(
         "--anchor",
@@ -139,7 +120,14 @@ def _wire(args) -> tuple[dict, Callable, Callable, dt.date | None]:
     with open(args.configs) as f:
         configs = parse_config_document(f.read())
     extract = resolve_callable(args.extract)
-    load = resolve_callable(args.load) if args.load else parquet_loader(args.out)
+    if args.load:
+        load = resolve_callable(args.load)
+    else:
+        from social_warner_spark.sinks import write_table
+
+        def load(df, config) -> int:
+            return write_table(df, f"{args.out.rstrip('/')}/{config.sink_table_name}")
+
     anchor = dt.date.fromisoformat(args.anchor) if args.anchor else None
     return configs, extract, load, anchor
 

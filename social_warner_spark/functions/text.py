@@ -7,8 +7,6 @@ stages at 100 TB with no shuffle and no Python.
 
 from __future__ import annotations
 
-import pandas as pd
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -97,10 +95,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(t), F.lit(1))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lg: stopword_ratio(text, lg) for lg in LANG_MARKERS}
-
-
 def quality_score(text: Column) -> Column:
     """Composite document-quality heuristic in [0,1]:
     length component (saturating at 200 tokens), mean-token-length component
@@ -166,35 +160,6 @@ def fingerprint(text: Column, bits: int = 64) -> Column:
     """
     norm = F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
     return F.substring(F.md5(norm), 1, bits // 4)
-
-
-def compression_ratio(text: Column) -> Column:
-    """zlib-compressed-size / raw-size per document — the classic
-    compressibility quality signal (boilerplate and degenerate repetition
-    compress far below natural prose; very low ratios flag junk).
-
-    This is the sanctioned Python escape hatch: zlib is not expressible
-    in SQL/Catalyst, so it runs as an Arrow-batched pandas UDF (never
-    row-at-a-time).  Deterministic (zlib level 6 is stable across
-    platforms for identical bytes), narrow map, zero shuffle; tested
-    against known strings rather than a SQL oracle.
-    """
-
-    @F.pandas_udf("double")
-    def _ratio(batch: pd.Series) -> pd.Series:
-        import zlib
-
-        def one(s: str | None) -> float | None:
-            if s is None:
-                return None
-            raw = s.encode("utf-8")
-            if not raw:
-                return None
-            return round(len(zlib.compress(raw, 6)) / len(raw), 6)
-
-        return batch.map(one)
-
-    return _ratio(text)
 
 
 #: The Gopher-rules stopword list (Rae et al. 2021, arXiv:2112.11446,

@@ -24,7 +24,3 @@ def warning(message: str, **fields) -> None:
 
 def error(message: str, **fields) -> None:
     log("ERROR", message, **fields)
-
-
-def debug(message: str, **fields) -> None:
-    log("DEBUG", message, **fields)

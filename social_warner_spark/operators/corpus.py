@@ -28,21 +28,15 @@ def prepare_corpus(
     docs: DataFrame,
     min_quality: float = 0.3,
     jaccard_threshold: float = 0.8,
-    decon_shingle_n: int | None = None,
-):
-    """documents(doc_id, text, lang, …) → deduplicated, quality-filtered
-    corpus with per-doc stats: (doc_id, lang, n_tokens, quality).
+) -> tuple[DataFrame, DataFrame]:
+    """documents(doc_id, text, lang, …) → ``(prepared, survivors)``.
 
-    With ``decon_shingle_n`` (r11, the x31 flagship device), returns the
-    pair ``(prepared, decon_shingles)`` where ``decon_shingles`` is the
-    per-doc-distinct (doc_id, shingle) relation at that width over the
-    EXACT-DEDUP SURVIVOR set — generated in the SAME tokenize+explode
-    pass as the near-dup prune's 3-gram shingles (one shared persisted
-    multi-width relation instead of two full text-splitting passes over
-    the corpus).  The survivor set is a superset of ``prepared``'s docs;
-    callers that anti-join ``prepared`` by doc_id against a predicate of
-    ``decon_shingles`` get identical results (extra doc_ids are inert in
-    the anti-join) without re-scanning and re-splitting the corpus."""
+    ``prepared`` is the deduplicated, quality-filtered corpus with per-doc
+    stats: (doc_id, lang, n_tokens, quality).  ``survivors`` is the
+    persisted exact-dedup survivor set (a superset of ``prepared``'s docs,
+    with their text), so a caller can run further passes over it — e.g.
+    x31's decontamination shingles — without re-scanning and re-splitting
+    the corpus."""
     scored = docs.withColumn("quality", quality_score(F.col("text")))
     gated = scored.where(F.col("quality") >= min_quality)
 
@@ -61,22 +55,6 @@ def prepare_corpus(
 
     kept = register_persisted(gated.join(survivors, "doc_id", "left_semi").persist())
 
-    decon_sh = None
-    if decon_shingle_n is not None:
-        from social_warner_spark.operators.dedup import doc_shingles
-
-        # One narrow explode over the ALREADY-PERSISTED survivor set —
-        # replaces the caller's corpus re-scan + survivor semi-join +
-        # re-tokenize.  Deliberately NOT a combined (3, 4)-width shingle
-        # relation shared with the prune below: that variant was built
-        # and measured 0.5-0.7 s SLOWER at sf0.1 (OPTIMIZATION_r11.md,
-        # x31 section) — persisting the 4-gram rows next to the
-        # 3-gram ones doubles the cached relation that the prune's
-        # self-join + sizes re-read, and at 100 TB materializing a
-        # single-consumer n-gram relation costs more than streaming it
-        # into its one broadcast join.
-        decon_sh = doc_shingles(kept, n=decon_shingle_n)
-
     # near-dup prune: drop the b side of every (a < b) pair
     dropped = (
         exact_jaccard_pairs(kept, jaccard_threshold)
@@ -91,9 +69,7 @@ def prepare_corpus(
         token_count_ws(F.col("text")).alias("n_tokens"),
         "quality",
     )
-    if decon_shingle_n is None:
-        return prepared
-    return prepared, decon_sh
+    return prepared, kept
 
 
 def per_group_cap(

@@ -7,9 +7,8 @@
   the lateral-view/table-function surface.  The expression-only
   parse_kv_list (operators/nested.py) stays the hot-path implementation;
   the UDTF exists for API-surface parity and row-generating use cases.
-- `salted_join_counts`: demonstration of key salting for skewed aggregation:
-  two-stage aggregate (key, salt) → key.  At 100 TB, a hot key that would
-  overwhelm one reducer is spread across `salt_buckets` partial aggregates.
+- `salted_join`: key salting for skewed equi-joins — a hot key's big-side
+  rows spread across `salts` reducers against a replicated small side.
 """
 
 from __future__ import annotations
@@ -77,24 +76,6 @@ try:
 except ImportError:  # pragma: no cover - Spark < 4
     ParseKVListUDTF = None  # type: ignore[assignment]
     HAS_UDTF = False
-
-
-def salted_aggregate(
-    df: DataFrame,
-    key: str,
-    value: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Skew-resistant sum: aggregate on (key, salt) first, then on key.
-
-    Stage 1 spreads a hot key over `salt_buckets` reducers; stage 2 combines
-    `salt_buckets` rows per key — negligible.  Equivalent result to a plain
-    groupBy(key).sum(value); use when AQE skew handling isn't enough (e.g.
-    a single key holding >1 partition worth of rows pre-shuffle).
-    """
-    salted = df.withColumn("_salt", (F.rand(seed=0) * salt_buckets).cast("int"))
-    partial = salted.groupBy(key, "_salt").agg(F.sum(value).alias("_partial"))
-    return partial.groupBy(key).agg(F.sum("_partial").alias(f"sum_{value}"))
 
 
 def salted_join(

@@ -13,12 +13,12 @@ DECODES FOR REAL in pure stdlib(+numpy for the IDCT) — `decode_png`
 (integer PCM and G.711 μ-law expansion, x216/x236), `decode_gif_frames`
 (full LZW incl. KwKwK and the 4096 reset — the multi-frame/video
 sampling shape, x232), `decode_jpeg_gray` (canonical Huffman, DPCM,
-run-length AC, dequant, generic IDCT, x235).  `decode_stub`,
-`_resize_stub` (decode→nearest-neighbor→`encode_png`) and
-`_frame_sample_stub` (GIF frames → PNG) dispatch to these real paths at
-fake=False; NotImplementedError remains ONLY for formats declared out
-of scope (wild chroma JPEG, psychoacoustic audio, true video
-containers), and fake=True keeps the deterministic plumbing-test path.
+run-length AC, dequant, generic IDCT, x235).  `decode_stub` dispatches
+to these real paths at fake=False (fake=True keeps the deterministic
+plumbing-test path); `_resize_stub` (decode→nearest-neighbor→`encode_png`)
+and `_frame_sample_stub` (GIF frames → PNG) always take them.
+NotImplementedError remains ONLY for formats declared out of scope (wild
+chroma JPEG, psychoacoustic audio, true video containers).
 
 Container METADATA needs no codec at all: `parse_media_header` reads
 real PNG/JPEG/GIF dimensions and WAV format/duration straight from the
@@ -1497,13 +1497,6 @@ def with_synth_media_content(
     return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
 
 
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Test helper: synthesize a binary payload column from text content."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
-        "media_type", F.lit("text/plain")
-    )
-
-
 def with_synth_media(
     df: DataFrame, id_col: str = "doc_id", n_chars_col: str = "n_chars"
 ) -> DataFrame:
@@ -1521,17 +1514,10 @@ def with_synth_media(
     return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
 
 
-# --- typed media operators (decode / resize / frame-sample) ------------------
+# --- per-payload resize / frame-sample codecs ---------------------------------
 #
-# Each is the standard mapInPandas shape: binary in → (metadata, binary) out.
-# The codec call is isolated in one stub function per op so swapping in
-# PIL/libav later changes no Spark plumbing.
-
-RESIZE_SCHEMA = (
-    "item_id long, width int, height int, payload binary"
-)
-FRAMES_SCHEMA = "item_id long, frame_index int, frame_ts_ms long, frame binary"
-
+# Pure functions over one payload, ready to run inside the standard
+# mapInPandas shape (binary in → (metadata, binary) out).
 
 def encode_png(width: int, height: int, channels: int, values: list[int]) -> bytes:
     """Assemble a real PNG (8-bit gray/RGB/RGBA, filter-0 rows, zlib
@@ -1566,113 +1552,38 @@ def encode_png(width: int, height: int, channels: int, values: list[int]) -> byt
     )
 
 
-def _resize_stub(payload: bytes, width: int, height: int, fake: bool) -> bytes:
-    """Resize one image payload.  fake=True keeps the original
-    digest-seeded placeholder (plumbing tests); fake=False runs the REAL
-    pipeline for PNG — decode_png → deterministic nearest-neighbor
-    resample → encode_png — and lets the decoder's ValueError propagate
-    for non-PNG payloads."""
-    if not fake:
-        w0, h0, ch, vals = decode_png(payload)
-        out = []
-        for y in range(height):
-            sy = (y * h0) // height
-            for x in range(width):
-                sx = (x * w0) // width
-                base = (sy * w0 + sx) * ch
-                out.extend(vals[base : base + ch])
-        return encode_png(width, height, ch, out)
-    # deterministic fake: digest-seeded bytes of length w*h (content-stable)
-    seed = hashlib.sha256(payload + f"|{width}x{height}".encode()).digest()
-    reps = (width * height) // len(seed) + 1
-    return (seed * reps)[: width * height]
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "item_id",
-    payload_col: str = "payload",
-    fake_decode: bool = True,
-) -> DataFrame:
-    """Batch image resize over binary payloads (decode→resize→re-encode)."""
-
-    _pickle_module_by_value()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf[id_col].astype("int64"),
-                    "width": width,
-                    "height": height,
-                    "payload": pdf[payload_col].map(
-                        lambda b: _resize_stub(b, width, height, fake_decode)
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
+def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
+    """Resize one PNG payload: decode_png → deterministic nearest-neighbor
+    resample → encode_png.  The decoder's ValueError propagates for
+    non-PNG payloads."""
+    w0, h0, ch, vals = decode_png(payload)
+    out = []
+    for y in range(height):
+        sy = (y * h0) // height
+        for x in range(width):
+            sx = (x * w0) // width
+            base = (sy * w0 + sx) * ch
+            out.extend(vals[base : base + ch])
+    return encode_png(width, height, ch, out)
 
 
 def _frame_sample_stub(
-    payload: bytes, every_ms: int, max_frames: int, fake: bool
+    payload: bytes, every_ms: int, max_frames: int
 ) -> list[tuple[int, int, bytes]]:
-    """Sample frames from one video-like payload.  fake=False runs the
-    REAL path for multi-frame GIF — decode_gif_frames (full LZW) with
-    each sampled frame re-encoded as an RGB PNG via the global color
-    table; true video containers (MP4/AVI…) raise NotImplementedError
-    (perceptual codecs are out of scope)."""
-    if not fake:
-        if payload[:3] == b"GIF":
-            w, h, colors, frames = decode_gif_frames(payload)
-            out = []
-            for i, frame in enumerate(frames[:max_frames]):
-                rgb: list[int] = []
-                for idx in frame:
-                    rgb.extend(colors[idx])
-                out.append((i, i * every_ms, encode_png(w, h, 3, rgb)))
-            return out
+    """Sample frames from one multi-frame GIF payload — decode_gif_frames
+    (full LZW) with each sampled frame re-encoded as an RGB PNG via the
+    global color table; true video containers (MP4/AVI…) raise
+    NotImplementedError (perceptual codecs are out of scope)."""
+    if payload[:3] != b"GIF":
         raise NotImplementedError(
             "no in-repo decoder for this container (GIF is the supported "
             "multi-frame format; true video codecs are out of scope)"
         )
-    # deterministic fake: frame count derived from payload length
-    n = min(max_frames, max(1, len(payload) // 64))
-    return [
-        (i, i * every_ms, hashlib.sha256(payload + bytes([i])).digest())
-        for i in range(n)
-    ]
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_ms: int = 1000,
-    max_frames: int = 8,
-    id_col: str = "item_id",
-    payload_col: str = "payload",
-    fake_decode: bool = True,
-) -> DataFrame:
-    """Row-expanding frame sampling: one output row per sampled frame.
-
-    A mapInPandas generator (not explode of a UDF array) so very long
-    videos never materialize all frames in one value.
-    """
-
-    _pickle_module_by_value()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"item_id": [], "frame_index": [], "frame_ts_ms": [], "frame": []}
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                for idx, ts_ms, frame in _frame_sample_stub(
-                    payload, every_ms, max_frames, fake_decode
-                ):
-                    out["item_id"].append(int(item_id))
-                    out["frame_index"].append(idx)
-                    out["frame_ts_ms"].append(ts_ms)
-                    out["frame"].append(frame)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=FRAMES_SCHEMA)
+    w, h, colors, frames = decode_gif_frames(payload)
+    out = []
+    for i, frame in enumerate(frames[:max_frames]):
+        rgb: list[int] = []
+        for idx in frame:
+            rgb.extend(colors[idx])
+        out.append((i, i * every_ms, encode_png(w, h, 3, rgb)))
+    return out

@@ -64,10 +64,6 @@ def parse_kv_list(arr: Column, prefix: str) -> Column:
     return F.when(arr.isNull(), F.create_map().cast("map<string,string>")).otherwise(folded)
 
 
-def _lambda_free_key(c: Column) -> Column:
-    return c
-
-
 def distinct_map_keys(df: DataFrame, map_col: str) -> list[str]:
     """Pass 1 of the dynamic pivot: bounded driver-side key discovery."""
     from social_warner_spark.operators.transforms import qcol

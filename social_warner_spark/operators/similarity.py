@@ -457,7 +457,12 @@ def pq_encode(
     groupBy(id) collect_list` pair computed, because `min` ignores the
     NULLs from other subspaces and orders the struct lexicographically —
     same tie-break, one Exchange instead of two, and a plain
-    HashAggregate instead of the ObjectHashAggregate collect_list."""
+    HashAggregate instead of the ObjectHashAggregate collect_list.
+
+    Precondition: ``books`` holds codewords for every subspace in
+    ``range(m)``.  A missing subspace leaves its ``min`` NULL; the code
+    assembly fails the query with ``raise_error`` on that NULL inside the
+    same projection (no extra Spark job) instead of emitting corrupt codes."""
     subs = _subvectors(corpus, m, sublen, vec_col, id_col, id_col)
     scored = subs.join(F.broadcast(books), "sub").withColumn(
         "d", F.round(_l2sq(F.col("sv"), F.col("cw"), sublen), 6)
@@ -472,7 +477,13 @@ def pq_encode(
         scored.groupBy(id_col)
         .agg(*per_sub)
         .select(
-            id_col, F.array(*[F.col(f"_c{s}") for s in range(m)]).alias("codes")
+            id_col,
+            F.array(*[
+                F.coalesce(F.col(f"_c{s}"), F.raise_error(
+                    F.lit(f"pq_encode: books has no codewords for subspace {s}")
+                ))
+                for s in range(m)
+            ]).alias("codes"),
         )
     )
 

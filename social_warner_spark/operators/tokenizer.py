@@ -117,30 +117,3 @@ def _merge_loop(
             .select("_id", F.replace(F.col("s"), pat, rep).alias("s"))
         )
     return best_rows, seq
-
-
-def bpe_reference(corpus: list[list[str]], rounds: int) -> list[tuple[int, str, str, int]]:
-    """Pure-Python reference BPE (greedy left-to-right merge) for tests."""
-    seqs = [list(doc) for doc in corpus]
-    out = []
-    for r in range(1, rounds + 1):
-        counts: dict[tuple[str, str], int] = {}
-        for s in seqs:
-            for a, b in zip(s, s[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + 1
-        if not counts:
-            break
-        (p1, p2), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        out.append((r, p1, p2, n))
-        merged_sym = p1 + MERGE_SEP + p2
-        for idx, s in enumerate(seqs):
-            ns, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == p1 and s[i + 1] == p2:
-                    ns.append(merged_sym)
-                    i += 2
-                else:
-                    ns.append(s[i])
-                    i += 1
-            seqs[idx] = ns
-    return out

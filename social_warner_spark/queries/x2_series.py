@@ -105,7 +105,8 @@ def x16_corpus_prep(spark, sf_dir):
     near-dup prune → per-doc stats (operators/corpus.py)."""
     from social_warner_spark.operators.corpus import prepare_corpus
 
-    return prepare_corpus(T(spark, sf_dir, "documents"))
+    prepared, _ = prepare_corpus(T(spark, sf_dir, "documents"))
+    return prepared
 
 
 QUERIES = {

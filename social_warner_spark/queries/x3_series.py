@@ -388,16 +388,16 @@ def x31_full_pipeline(spark, sf_dir):
 
     BUDGET = 512
     docs = T(spark, sf_dir, "documents")
-    # r11: the near-dup prune (3-grams) and the decontamination check
-    # (4-grams) share ONE tokenize+explode pass over the exact-dedup
-    # survivor set (prepare_corpus's decon_shingle_n mode) — the old
-    # shape re-scanned documents and re-split every surviving text a
-    # second time just to build the 4-gram relation.  surv4 covers the
-    # exact-dedup survivors, a superset of prepared's docs; the left_anti
-    # below keys on prepared's doc_ids, so the extra rows are inert and
-    # the result is unchanged (oracle-mirrored at three scales).
-    prepared, surv4 = prepare_corpus(docs, decon_shingle_n=4)
+    # The decontamination 4-grams come from ONE narrow explode over
+    # prepare_corpus's persisted exact-dedup survivor set, not a second
+    # scan and re-split of documents.  surv4 covers a superset of
+    # prepared's docs; the left_anti below keys on prepared's doc_ids, so
+    # the extra rows are inert.  Sharing one (3, 4)-width shingle relation
+    # with the near-dup prune is slower (OPTIMIZATION_r11.md, x31): it
+    # doubles the cached relation the prune's self-join re-reads.
+    prepared, survivors = prepare_corpus(docs)
     prepared = register_persisted(prepared.persist())
+    surv4 = doc_shingles(survivors, n=4)
 
     probe_sh = (
         doc_shingles(docs.where(F.col("doc_id") < 5), n=4)

@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "social-warner-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
@@ -35,8 +35,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SWS_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -54,12 +52,8 @@ def get_spark(
         # already derives the target from max(bytes/parallelism,
         # minPartitionSize=1m), i.e. KB-scale stages coalesce to one task
         # either way — the r10 "inversion" was mostly the polluted 32-core
-        # sweep.  The knob stays env-settable for I/O-bound cluster
-        # deployments where the docs' advice applies.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SWS_AQE_PARALLELISM_FIRST", "true"),
-        )
+        # sweep.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

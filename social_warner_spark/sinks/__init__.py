@@ -1,7 +1,3 @@
-from social_warner_spark.sinks.writers import (
-    WriteDisposition,
-    write_table,
-    bigquery_available,
-)
+from social_warner_spark.sinks.writers import WriteDisposition, write_table
 
-__all__ = ["WriteDisposition", "write_table", "bigquery_available"]
+__all__ = ["WriteDisposition", "write_table"]

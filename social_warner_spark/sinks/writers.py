@@ -81,17 +81,6 @@ def plan_write(
     )
 
 
-def bigquery_available(spark) -> bool:
-    """True if the spark-bigquery-connector is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def write_table(
     df: DataFrame,
     path_or_table: str,

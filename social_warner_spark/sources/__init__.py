@@ -1,3 +1,3 @@
-from social_warner_spark.sources.rest import read_paged, PagedRestDataSource
+from social_warner_spark.sources.rest import PagedRestDataSource
 
-__all__ = ["read_paged", "PagedRestDataSource"]
+__all__ = ["PagedRestDataSource"]

@@ -1,17 +1,11 @@
 """Paginated REST source (SURVEY.md A1: per-page fetch → DataFrame).
 
 The reference iterates API result pages on the driver and pandas-concats
-them (data_extract.py:89-94) — single-process, memory-bound.  Two Spark
-surfaces replace it:
-
-- `PagedRestDataSource`: a Spark 4 Python DataSource where EACH PAGE IS A
-  PARTITION — page fetches run on executors in parallel, nothing is
-  concatenated in driver memory.  The fetcher is addressed by module path
-  (must be importable on executors) because DataSource options are strings.
-- `read_paged`: driver-side fallback for clients that can't plan partition
-  counts up front (unknown page count, sequential cursors).  Still avoids
-  one giant concat: each page becomes an Arrow-backed DataFrame and the
-  union is a metadata operation.
+them (data_extract.py:89-94) — single-process, memory-bound.
+`PagedRestDataSource` replaces it: a Spark 4 Python DataSource where EACH
+PAGE IS A PARTITION — page fetches run on executors in parallel, nothing is
+concatenated in driver memory.  The fetcher is addressed by module path
+(must be importable on executors) because DataSource options are strings.
 
 Auth/secret retrieval (reference utils.py:78-92) is a driver concern:
 `resolve_credentials` runs a pluggable CredentialProvider ONCE on the
@@ -28,20 +22,8 @@ import json
 import os
 from typing import Callable, Iterable, Iterator, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
-
-from social_warner_spark.operators.transforms import union_pages
-
-try:  # Spark 4 Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    _HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - older Spark
-    _HAS_DATASOURCE_API = False
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-    InputPartition = object  # type: ignore[assignment,misc]
 
 
 PageFetcher = Callable[[int, dict], Iterable[dict]]
@@ -98,71 +80,45 @@ def resolve_fetcher(path: str) -> PageFetcher:
     return getattr(mod, fn_name)
 
 
-if _HAS_DATASOURCE_API:
-
-    class _PagePartition(InputPartition):
-        def __init__(self, index: int):
-            self.index = index
-
-    class _PagedRestReader(DataSourceReader):
-        def __init__(self, schema: StructType, options: dict):
-            self._schema = schema
-            self._options = dict(options)
-
-        def partitions(self) -> Sequence[InputPartition]:
-            n = int(self._options.get("num_pages", "1"))
-            return [_PagePartition(i) for i in range(n)]
-
-        def read(self, partition: _PagePartition) -> Iterator[tuple]:
-            fetch = resolve_fetcher(self._options["fetcher"])
-            names = [f.name for f in self._schema.fields]
-            for row in fetch(partition.index, self._options):
-                yield tuple(row.get(name) for name in names)
-
-    class PagedRestDataSource(DataSource):
-        """spark.read.format("paged_rest")
-        .schema(...)
-        .option("fetcher", "my_module:fetch_page")
-        .option("num_pages", "8").load()
-
-        Register once per session:
-        ``spark.dataSource.register(PagedRestDataSource)``.
-        """
-
-        @classmethod
-        def name(cls) -> str:
-            return "paged_rest"
-
-        def schema(self) -> str | StructType:
-            if "schema_json" in self.options:
-                return StructType.fromJson(json.loads(self.options["schema_json"]))
-            raise ValueError("paged_rest requires an explicit .schema(...)")
-
-        def reader(self, schema: StructType) -> DataSourceReader:
-            return _PagedRestReader(schema, self.options)
-
-else:  # pragma: no cover
-
-    class PagedRestDataSource:  # type: ignore[no-redef]
-        def __init__(self, *_, **__):
-            raise NotImplementedError(
-                "Spark 4 Python DataSource API unavailable; use read_paged()"
-            )
+class _PagePartition(InputPartition):
+    def __init__(self, index: int):
+        self.index = index
 
 
-def read_paged(
-    spark: SparkSession,
-    fetch_pages: Callable[[], Iterable[Iterable[dict]]],
-    schema: StructType | str,
-) -> DataFrame | None:
-    """Driver-side paginated read: generator of pages → unioned DataFrame.
+class _PagedRestReader(DataSourceReader):
+    def __init__(self, schema: StructType, options: dict):
+        self._schema = schema
+        self._options = dict(options)
 
-    Returns None when the source yields no pages (reference skip-empty
-    semantics, main.py:80-85).
+    def partitions(self) -> Sequence[InputPartition]:
+        n = int(self._options.get("num_pages", "1"))
+        return [_PagePartition(i) for i in range(n)]
+
+    def read(self, partition: _PagePartition) -> Iterator[tuple]:
+        fetch = resolve_fetcher(self._options["fetcher"])
+        names = [f.name for f in self._schema.fields]
+        for row in fetch(partition.index, self._options):
+            yield tuple(row.get(name) for name in names)
+
+
+class PagedRestDataSource(DataSource):
+    """spark.read.format("paged_rest")
+    .schema(...)
+    .option("fetcher", "my_module:fetch_page")
+    .option("num_pages", "8").load()
+
+    Register once per session:
+    ``spark.dataSource.register(PagedRestDataSource)``.
     """
-    frames = [
-        spark.createDataFrame(list(page), schema=schema) for page in fetch_pages()
-    ]
-    if not frames:
-        return None
-    return union_pages(frames)
+
+    @classmethod
+    def name(cls) -> str:
+        return "paged_rest"
+
+    def schema(self) -> str | StructType:
+        if "schema_json" in self.options:
+            return StructType.fromJson(json.loads(self.options["schema_json"]))
+        raise ValueError("paged_rest requires an explicit .schema(...)")
+
+    def reader(self, schema: StructType) -> DataSourceReader:
+        return _PagedRestReader(schema, self.options)

@@ -115,49 +115,6 @@ def cms_cells_stream(
     stream_foreach_batch(docs_stream, build, checkpoint, timeout_sec)
 
 
-def hist_cells_stream(
-    spark: SparkSession,
-    rows_stream: DataFrame,
-    cells_path: str,
-    checkpoint: str,
-    value_col: str,
-    group_col: str,
-    k: int = 20,
-    timeout_sec: float = 120.0,
-) -> None:
-    """Maintain the log-bucket quantile histogram (operators/sketch.py:
-    log_histogram_cells) over a row stream — the quantile twin of
-    ``cms_cells_stream``, same exactly-once epoch-partition contract.
-    Histogram cells are additive, so the live sketch is the cross-epoch
-    SUM and running p50/p95/p99 over the full history never replays the
-    raw stream."""
-    from social_warner_spark.operators.sketch import log_histogram_cells
-
-    def build(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        (
-            log_histogram_cells(batch_df, value_col, group_col, k)
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(cells_path)
-        )
-
-    stream_foreach_batch(rows_stream, build, checkpoint, timeout_sec)
-
-
-def merged_hist_cells(spark: SparkSession, cells_path: str) -> DataFrame:
-    """Cross-epoch histogram merge: per-(grp, bucket) sums — exactly the
-    batch cells over the concatenated stream (parity-tested)."""
-    return (
-        spark.read.parquet(cells_path)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def merged_cms_cells(spark: SparkSession, cells_path: str) -> DataFrame:
     """The live sketch: per-(r, bucket) sums across all epochs — identical
     to the batch sketch over the concatenated stream (cells are additive),
@@ -182,7 +139,7 @@ def value_cells_stream(
     stream distribution is the cross-epoch SUM (operators/drift.py:
     merge_cells) and a KS test against any baseline never replays the
     raw stream.  Same exactly-once epoch-partition contract as the
-    CMS/histogram cell streams."""
+    CMS cell stream."""
     from social_warner_spark.operators.drift import value_cells
 
     def build(batch_df: DataFrame, epoch_id: int) -> None:
@@ -198,14 +155,3 @@ def value_cells_stream(
         )
 
     stream_foreach_batch(rows_stream, build, checkpoint, timeout_sec)
-
-
-def stream_ks_vs_base(
-    spark: SparkSession, cells_path: str, base_cells: DataFrame
-) -> DataFrame:
-    """KS drift verdict of the accumulated stream distribution vs a
-    baseline cell relation (1 row: n_a, n_b, ks, ks_crit, drifted)."""
-    from social_warner_spark.operators.drift import merge_cells, two_sample_ks
-
-    merged = merge_cells(spark.read.parquet(cells_path).select("v", "c"))
-    return two_sample_ks(merged, base_cells)

@@ -39,7 +39,8 @@ def stream_to_parquet(
 
     File sinks require append mode (aggregations feeding this sink need a
     watermark so finalized windows emit as appends).  `partition_by` gives
-    the same date-partitioned layout contract as layout.write_partitioned.
+    the same date-partitioned layout contract as the batch sink's
+    ``write_table(partition_by=...)``.
     """
     writer = (
         stream_df.writeStream.format("parquet")

@@ -55,55 +55,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_ewma(events: DataFrame, decay: float = 0.9) -> DataFrame:
-    """Per-user streaming EWMA — batch twin of
-    operators/timeseries.py:ewma (x75), as an applyInPandasWithState
-    stateful operator.
-
-    State per user is ONE double (the recurrence value s); each
-    micro-batch sorts its own rows by (ts, event_id) and folds
-    ``s = x + decay·s`` forward, emitting one row per event.  Ordering
-    ACROSS batches is the source's contract (feed time-ordered batches —
-    the parity test drives two checkpointed availableNow runs, proving
-    state resumes across restarts); state size is O(users),
-    watermark-free.
-
-    Spark 4's transformWithStateInPandas (ValueState) is the same shape
-    with finer-grained state primitives, but its driver worker imports
-    google.protobuf, absent in this environment — applyInPandasWithState
-    expresses the identical recurrence with zero extra dependencies.
-    """
-
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (s,) = state.get if state.exists else (0.0,)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            out = []
-            for x in pdf["value"]:
-                s = float(x) + decay * s
-                out.append(s)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(pdf),
-                    "event_id": pdf["event_id"].to_list(),
-                    "ewma": out,
-                }
-            )
-        state.update((s,))
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, event_id long, ewma double",
-        stateStructType="s double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_heavy_hitters(events: DataFrame, k: int = 20) -> DataFrame:
     """Per-event-type Misra–Gries heavy hitters over the user stream —
     the deterministic-guarantee top-k summary the CMS cells

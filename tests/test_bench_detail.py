@@ -93,6 +93,17 @@ def test_history_survives_a_merge_as_auxiliary_state():
     assert [h["value"] for h in second["runs_history"]] == [1, 2]
 
 
+def test_history_entry_is_isolated_from_the_live_record():
+    # the history ring must keep what the run recorded, even if the live
+    # record's nested dicts are mutated after the merge
+    record = {"metric": "m", "queries": {"q1": 1.0}, "queries_steal": {"q1": 0}}
+    merged = merge_detail({}, record)
+    record["queries"]["q1"] = 9.9
+    record["queries_steal"]["q2"] = 5
+    assert merged["runs_history"][-1]["queries"] == {"q1": 1.0}
+    assert merged["runs_history"][-1]["queries_steal"] == {"q1": 0}
+
+
 def test_steal_ticks_parses_proc_stat(tmp_path):
     from bench import steal_ticks
 

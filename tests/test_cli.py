@@ -1,6 +1,6 @@
 """CLI transport (`python -m social_warner_spark`): the same
 service.handle_request contract as HTTP, driven through argparse with
-pluggable dotted-path extract/load and the built-in parquet loader."""
+pluggable dotted-path extract/load and the `--out` sink (sinks.write_table)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import json
 
 import pytest
 
-from social_warner_spark.__main__ import main, parquet_loader, resolve_callable
+from social_warner_spark.__main__ import main, resolve_callable
 
 CONFIG_DOC = {
     "a": {
@@ -35,11 +35,12 @@ def demo_extract(config, start, end):
 
     if config.config_id == "boom":
         raise RuntimeError("boom")
-    return get_spark().createDataFrame(
+    df = get_spark().createDataFrame(
         [("yt", "acme", "10")],
         "`lfm.post.channel` string, `lfm.brand.name` string,"
         " `metric.impressions` string",
     )
+    return df.limit(0) if config.config_id == "empty" else df
 
 
 def demo_load(df, config):
@@ -85,7 +86,7 @@ def test_batch_ok_with_builtin_parquet_loader(spark, tmp_path, capsys):
     assert rc == 0
     assert body["processed"] == 2 and body["failed"] == []
     assert body["start_date"] == "2024-01-01"  # macro resolved at anchor
-    # the built-in loader wrote the reference-named sink tables
+    # the --out sink wrote the reference-named sink tables
     written = spark.read.parquet(str(out_dir / "010_warner_dl_lf_a"))
     assert written.count() == 1
     assert "lfm&brand&name" in written.columns  # sanitize ran (A12)
@@ -187,11 +188,39 @@ def test_serve_wires_the_wsgi_app(tmp_path, monkeypatch):
     assert callable(captured["app"])  # the WSGI app from make_wsgi_app
 
 
-def test_parquet_loader_counts_before_write(spark, tmp_path):
-    from social_warner_spark.config import parse_config
+def _batch_out(tmp_path, out_dir, doc=CONFIG_DOC, *extra):
+    return main([
+        "batch",
+        "--configs", _write_configs(tmp_path, doc),
+        "--extract", "tests.test_cli:demo_extract",
+        "--out", str(out_dir),
+        "--start", "2024-01-01",
+        "--end", "2024-01-08",
+        *extra,
+    ])
 
-    cfg = parse_config("a", CONFIG_DOC["a"])
-    df = spark.createDataFrame([(1,), (2,), (3,)], "x long")
-    n = parquet_loader(str(tmp_path))(df, cfg)
-    assert n == 3
-    assert spark.read.parquet(str(tmp_path / "010_warner_dl_lf_a")).count() == 3
+
+def test_out_appends_across_batches(spark, tmp_path, capsys):
+    """--out appends, as the removed built-in loader did: a second batch
+    doubles every sink table."""
+    out_dir = tmp_path / "exports"
+    for _ in range(2):
+        assert _batch_out(tmp_path, out_dir) == 0
+        body = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert body["processed"] == 2 and body["failed"] == []
+    for cid in CONFIG_DOC:
+        assert spark.read.parquet(str(out_dir / f"010_warner_dl_lf_{cid}")).count() == 2
+
+
+def test_out_empty_config_fails_and_writes_nothing(spark, tmp_path, capsys):
+    """An empty transformed frame fails its config (the sink's empty-input
+    guard, as over WSGI) while the other config still loads; exit 1."""
+    out_dir = tmp_path / "exports"
+    doc = dict(CONFIG_DOC, empty=dict(CONFIG_DOC["a"]))
+    rc = _batch_out(tmp_path, out_dir, doc, "--reports-filter", "a", "empty")
+    body = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 1
+    assert body["status"] == "partial"
+    assert body["processed"] == 1 and body["failed"] == ["empty"]
+    assert not (out_dir / "010_warner_dl_lf_empty").exists()
+    assert spark.read.parquet(str(out_dir / "010_warner_dl_lf_a")).count() == 1

@@ -233,30 +233,3 @@ def test_fk_check_orphans_and_null_fks(spark):
 
     clean = fk_check(child.where(F.col("fk") < 50), parent, "fk", "pk").collect()[0]
     assert clean["n_orphans"] == 0 and clean["orphan_min"] is None
-
-
-def test_compression_ratio_signal(spark):
-    from social_warner_spark.functions.text import compression_ratio
-
-    rows = [
-        (1, "a" * 400),                                   # degenerate: tiny ratio
-        (2, "the quick brown fox jumps over the lazy dog " * 10),  # repetitive
-        (3, None),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, ["id", "t"]).select(
-        "id", compression_ratio(F.col("t")).alias("cr")
-    )
-    got = {r["id"]: r["cr"] for r in df.collect()}
-    import zlib
-
-    expect1 = round(len(zlib.compress(b"a" * 400, 6)) / 400, 6)
-    assert got[1] == expect1 and got[1] < 0.1
-    assert got[2] < 0.2  # repetition compresses far below prose
-    assert got[3] is None and got[4] is None
-
-    natural = "many different words appear here with visible variety overall"
-    one = spark.createDataFrame([(9, natural)], ["id", "t"]).select(
-        compression_ratio(F.col("t")).alias("cr")
-    )
-    assert one.collect()[0]["cr"] > 0.5

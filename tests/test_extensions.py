@@ -19,7 +19,6 @@ from social_warner_spark.operators.multimodal import (
     FEATURE_DIM,
     decode_stub,
     featurize_binary,
-    with_binary_payload,
 )
 from social_warner_spark.operators.similarity import (
     cosine_topk,
@@ -28,6 +27,13 @@ from social_warner_spark.operators.similarity import (
 )
 
 THRESH = 0.5  # tolerance-test threshold: low enough to yield pairs on synthetic docs
+
+
+def with_binary_payload(df, text_col: str = "text"):
+    """Synthesize a binary payload column from text content."""
+    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
+        "media_type", F.lit("text/plain")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -528,38 +534,6 @@ def test_decode_stub_real_and_gated_paths():
     assert len(feat) == FEATURE_DIM and all(0 <= x <= 1 for x in feat)
 
 
-def test_resize_images_plumbing(spark, docs):
-    from social_warner_spark.operators.multimodal import resize_images
-
-    src = with_binary_payload(docs.limit(5).withColumnRenamed("doc_id", "item_id"))
-    out = resize_images(src, 16, 8).collect()
-    assert len(out) == 5
-    assert all(len(r.payload) == 16 * 8 for r in out)
-    assert all((r.width, r.height) == (16, 8) for r in out)
-    # gated real path
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        resize_images(src, 16, 8, fake_decode=False).collect()
-
-
-def test_sample_video_frames_plumbing(spark, docs):
-    from social_warner_spark.operators.multimodal import sample_video_frames
-
-    src = with_binary_payload(docs.limit(5).withColumnRenamed("doc_id", "item_id"))
-    out = sample_video_frames(src, every_ms=500, max_frames=4).collect()
-    by_item: dict[int, list] = {}
-    for r in out:
-        by_item.setdefault(r.item_id, []).append(r)
-    assert len(by_item) == 5
-    for frames in by_item.values():
-        assert 1 <= len(frames) <= 4
-        assert [f.frame_index for f in sorted(frames, key=lambda x: x.frame_index)] == list(
-            range(len(frames))
-        )
-        assert all(f.frame_ts_ms == f.frame_index * 500 for f in frames)
-
-
 def test_featurize_binary_mapinpandas(spark, docs):
     src = with_binary_payload(docs.limit(20).withColumnRenamed("doc_id", "item_id"))
     out = featurize_binary(src).collect()
@@ -747,6 +721,21 @@ def test_pq_ann_rerank_recall_vs_exact(spark, emb):
     assert len(reranked & exact) > len(adc_only & exact), (
         "exact re-rank must add recall over ADC-only ranking"
     )
+
+
+def test_pq_encode_fails_on_missing_subspace(spark, emb):
+    """pq_encode's precondition: books cover every subspace.  Full books
+    give m in-range codes per vector; books missing a subspace fail the
+    encode query instead of emitting NULL codes."""
+    from social_warner_spark.operators.similarity import pq_codebooks, pq_encode
+
+    corpus = emb.where(F.col("vec_id") < 40)
+    books = pq_codebooks(corpus, m=4, k=4, sublen=16)
+    codes = pq_encode(corpus, books, m=4, sublen=16).collect()
+    assert len(codes) == corpus.count()
+    assert all(len(r.codes) == 4 and all(0 <= c < 4 for c in r.codes) for r in codes)
+    with pytest.raises(Exception, match="no codewords for subspace 2"):
+        pq_encode(corpus, books.where(F.col("sub") != 2), m=4, sublen=16).collect()
 
 
 def test_gif_lzw_roundtrip_stress():
@@ -1013,7 +1002,7 @@ def test_resize_real_path_roundtrips_through_png():
 
     src = synth_png_content(9)
     w0, h0, ch, vals = decode_png(src)
-    out = _resize_stub(src, 10, 6, fake=False)
+    out = _resize_stub(src, 10, 6)
     w, h, ch2, rvals = decode_png(out)
     assert (w, h, ch2) == (10, 6, ch)
     for y in range(6):
@@ -1039,7 +1028,7 @@ def test_frame_sample_real_path_extracts_gif_frames_as_png():
 
     gif = synth_gif_content(17)  # 4 frames
     w, h, colors, frames = decode_gif_frames(gif)
-    sampled = _frame_sample_stub(gif, every_ms=250, max_frames=3, fake=False)
+    sampled = _frame_sample_stub(gif, every_ms=250, max_frames=3)
     assert [s[0] for s in sampled] == [0, 1, 2]
     assert [s[1] for s in sampled] == [0, 250, 500]
     for i, (_, _, png) in enumerate(sampled):
@@ -1052,7 +1041,7 @@ def test_frame_sample_real_path_extracts_gif_frames_as_png():
     import pytest as _pytest
 
     with _pytest.raises(NotImplementedError):
-        _frame_sample_stub(b"mp4-bytes", 250, 3, fake=False)
+        _frame_sample_stub(b"mp4-bytes", 250, 3)
 
 
 def test_neardup_clusters_no_edges_all_singletons(spark):

@@ -1,4 +1,4 @@
-"""applyInPandas, UDTF, and salting operator tests."""
+"""applyInPandas and UDTF operator tests."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from social_warner_spark.catalog import load_table
 from social_warner_spark.operators.grouped import (
     HAS_UDTF,
     ParseKVListUDTF,
-    salted_aggregate,
     user_session_features,
 )
 
@@ -57,16 +56,3 @@ def test_parse_kv_udtf(spark):
     ).collect()
     got = {(r.key, r.value) for r in rows}
     assert got == {("genre", "drama"), ("untitled", "oops"), ("a_b", "c")}
-
-
-def test_salted_aggregate_equals_plain_groupby(spark, sf_smoke):
-    ev = load_table(spark, sf_smoke, "events")
-    plain = {
-        r.user_id: r.s
-        for r in ev.groupBy("user_id").agg(F.round(F.sum("value"), 4).alias("s")).collect()
-    }
-    salted = {
-        r.user_id: round(r.sum_value, 4)
-        for r in salted_aggregate(ev, "user_id", "value").collect()
-    }
-    assert plain == salted

@@ -1,5 +1,5 @@
 """Paginated REST source tests (A1): Spark 4 Python DataSource with one
-partition per page + driver-side fallback."""
+partition per page."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import json
 
 from pyspark.sql.types import StructType
 
-from social_warner_spark.sources import PagedRestDataSource, read_paged
+from social_warner_spark.sources import PagedRestDataSource
 
 SCHEMA_DDL = "page int, item_id int, name string"
 
@@ -33,19 +33,6 @@ def test_datasource_one_partition_per_page(spark):
     assert len(rows) == 12
     assert {r.page for r in rows} == {0, 1, 2, 3}
     assert any(r.item_id == 301 for r in rows)
-
-
-def test_driver_side_fallback_union(spark):
-    def pages():
-        yield [{"page": 0, "item_id": 1, "name": "a"}]
-        yield [{"page": 1, "item_id": 2, "name": "b"}, {"page": 1, "item_id": 3, "name": "c"}]
-
-    df = read_paged(spark, pages, SCHEMA_DDL)
-    assert df.count() == 3
-
-
-def test_driver_side_fallback_empty_returns_none(spark):
-    assert read_paged(spark, lambda: iter(()), SCHEMA_DDL) is None
 
 
 def test_credentials_resolved_into_options(monkeypatch):

@@ -126,52 +126,3 @@ def test_cms_stream_epochs_merge_to_batch_sketch(spark, tmp_path):
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("token"))
     batch = {(r.r, r.bucket): r.cnt for r in cms_cells(tok, "token", 4, 64).collect()}
     assert merged == batch
-
-
-def test_hist_stream_epochs_merge_to_batch_cells(spark, tmp_path):
-    """Quantile-histogram twin of the CMS parity test: the epoch-merged
-    log-bucket cells must equal the batch cells over the whole input
-    exactly (cells are additive)."""
-    from social_warner_spark.operators.sketch import log_histogram_cells
-    from social_warner_spark.streaming.corpus import (
-        hist_cells_stream,
-        merged_hist_cells,
-    )
-
-    li = (
-        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .select("l_returnflag", "l_extendedprice")
-        .limit(3000)
-    )
-    src = str(tmp_path / "src")
-    li.repartition(3).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    cells_path = str(tmp_path / "cells")
-    hist_cells_stream(
-        spark,
-        stream,
-        cells_path,
-        str(tmp_path / "ckpt"),
-        value_col="l_extendedprice",
-        group_col="l_returnflag",
-    )
-
-    epochs = spark.read.parquet(cells_path).select("epoch").distinct().count()
-    assert epochs >= 2, epochs
-
-    merged = {
-        (r.grp, r.bucket): r.cnt
-        for r in merged_hist_cells(spark, cells_path).collect()
-    }
-    batch = {
-        (r.grp, r.bucket): r.cnt
-        for r in log_histogram_cells(
-            li, "l_extendedprice", "l_returnflag"
-        ).collect()
-    }
-    assert merged == batch

@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 
 from social_warner_spark.catalog import load_table
 from social_warner_spark.operators.drift import merge_cells, two_sample_ks, value_cells
-from social_warner_spark.streaming.corpus import stream_ks_vs_base, value_cells_stream
+from social_warner_spark.streaming.corpus import value_cells_stream
 
 
 def _stream(spark, src_dir, schema):
@@ -52,14 +52,13 @@ def test_stream_cells_parity_and_ks_match_batch(spark, sf_smoke, tmp_path):
         "n_chars",
     )
 
-    merged = {
-        (r["v"], r["c"]) for r in merge_cells(spark.read.parquet(cells).select("v", "c")).collect()
-    }
+    stream_cells = merge_cells(spark.read.parquet(cells).select("v", "c"))
+    merged = {(r["v"], r["c"]) for r in stream_cells.collect()}
     batch = {(r["v"], r["c"]) for r in value_cells(arriving, "n_chars").collect()}
     assert merged == batch
 
     base_cells = value_cells(base, "n_chars")
-    got = stream_ks_vs_base(spark, cells, base_cells).first().asDict()
+    got = two_sample_ks(stream_cells, base_cells).first().asDict()
     want = two_sample_ks(value_cells(arriving, "n_chars"), base_cells).first().asDict()
     assert got == want
     assert not got["drifted"]  # same underlying distribution → no drift
@@ -78,5 +77,5 @@ def test_shifted_stream_flags_drift(spark, tmp_path):
     value_cells_stream(
         spark, _stream(spark, src, shifted.schema), cells, str(tmp_path / "ckpt"), "n"
     )
-    r = stream_ks_vs_base(spark, cells, base).first()
+    r = two_sample_ks(merge_cells(spark.read.parquet(cells).select("v", "c")), base).first()
     assert r["drifted"] and r["ks"] == 1.0  # disjoint supports → KS = 1

@@ -46,72 +46,6 @@ def test_stateful_running_totals_converge_to_batch(spark, sf_smoke, tmp_path):
     assert (joined.eval("abs(total_value - exp_tv)") < 1e-3).all()
 
 
-def test_streaming_ewma_resumes_state_across_checkpointed_runs(spark, sf_smoke, tmp_path):
-    """streaming_ewma across TWO checkpointed availableNow runs —
-    time-split batches so the recurrence state must survive a restart —
-    must equal the batch closed-form EWMA (x75's operator) row-for-row
-    at 6dp."""
-    import shutil
-
-    import pandas as pd
-
-    from social_warner_spark.operators.timeseries import ewma
-    from social_warner_spark.streaming.stateful import streaming_ewma
-
-    events = load_table(spark, sf_smoke, "events").where(F.col("user_id") < 20)
-    # median ts as the time split (ts is TIMESTAMP_NTZ — no double cast);
-    # tiny test relation, driver-side median is fine
-    ts_sorted = sorted(r.ts for r in events.select("ts").collect())
-    cutoff = ts_sorted[len(ts_sorted) // 2]
-    early = events.where(F.col("ts") <= F.lit(cutoff))
-    late = events.where(F.col("ts") > F.lit(cutoff))
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        # durable file sink: the memory sink refuses checkpoint recovery,
-        # and cross-run state resume is exactly what this test pins
-        q = (
-            streaming_ewma(
-                spark.readStream.schema(events.schema).parquet(src)
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert not q.isActive
-
-    early.write.mode("overwrite").parquet(src)
-    run_once()
-    # second run sees only the NEW files; state must resume from ckpt
-    late.write.mode("append").parquet(src)
-    run_once()
-
-    got = (
-        spark.read.parquet(out)
-        .toPandas()
-        .set_index("event_id")["ewma"]
-        .round(6)
-        .sort_index()
-    )
-    exp = (
-        ewma(events)
-        .select("event_id", F.round("ewma", 6).alias("ewma"))
-        .toPandas()
-        .set_index("event_id")["ewma"]
-        .sort_index()
-    )
-    assert len(got) == len(exp)
-    pd.testing.assert_series_equal(got, exp, rtol=0, atol=1e-5)
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_streaming_heavy_hitters_guarantees_vs_exact(spark, sf_smoke, tmp_path):
     """Misra-Gries guarantees after the stream drains: every user with
     true per-type frequency > n/k is tracked, and every tracked

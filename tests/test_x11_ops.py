@@ -119,11 +119,41 @@ def test_stratified_sample_sizes_and_determinism(spark, sf_correct):
     assert per_source and all(n == STRATUM_K for n in per_source.values())
 
 
+def bpe_reference(corpus: list[list[str]], rounds: int) -> list[tuple[int, str, str, int]]:
+    """Pure-Python reference BPE (greedy left-to-right merge): the oracle
+    for learn_merges."""
+    from social_warner_spark.operators.tokenizer import MERGE_SEP
+
+    seqs = [list(doc) for doc in corpus]
+    out = []
+    for r in range(1, rounds + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for s in seqs:
+            for a, b in zip(s, s[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + 1
+        if not counts:
+            break
+        (p1, p2), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        out.append((r, p1, p2, n))
+        merged_sym = p1 + MERGE_SEP + p2
+        for idx, s in enumerate(seqs):
+            ns, i = [], 0
+            while i < len(s):
+                if i + 1 < len(s) and s[i] == p1 and s[i + 1] == p2:
+                    ns.append(merged_sym)
+                    i += 2
+                else:
+                    ns.append(s[i])
+                    i += 1
+            seqs[idx] = ns
+    return out
+
+
 def test_bpe_learn_merges_matches_reference(spark):
     """The distributed merge loop reproduces reference BPE (greedy
     left-to-right merge, frequency-then-lexicographic rule choice)
     including consecutive-occurrence and self-pair (p1==p2) geometry."""
-    from social_warner_spark.operators.tokenizer import bpe_reference, learn_merges
+    from social_warner_spark.operators.tokenizer import learn_merges
 
     texts = [
         "the cat sat on the mat",
