@@ -3,10 +3,8 @@
 from social_warner_spark.functions.vectors import dot, l2_norm, cosine
 from social_warner_spark.functions.text import (
     tokens,
-    word_shingles,
     token_count_ws,
     token_count_bpe,
-    stopword_ratio,
     fingerprint,
 )
 
@@ -15,9 +13,7 @@ __all__ = [
     "l2_norm",
     "cosine",
     "tokens",
-    "word_shingles",
     "token_count_ws",
     "token_count_bpe",
-    "stopword_ratio",
     "fingerprint",
 ]

@@ -69,15 +69,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """n-gram word shingles → array<string> (empty if < n tokens).
-
-    Convenience form over raw text; for hot paths prefer staging tokens
-    into a column and calling shingles_from_tokens (see its perf note).
-    """
-    return shingles_from_tokens(tokens(text), n)
-
-
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(text))
@@ -86,13 +77,6 @@ def token_count_ws(text: Column) -> Column:
 def token_count_bpe(text: Column) -> Column:
     """BPE-ish regex token count (see BPE_TOKEN_RE)."""
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), 0))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are high-frequency markers of `lang`."""
-    t = tokens(text)
-    hits = F.size(F.filter(t, lambda x: x.isin(*LANG_MARKERS[lang])))
-    return hits / F.greatest(F.size(t), F.lit(1))
 
 
 def quality_score(text: Column) -> Column:

@@ -5,9 +5,6 @@ All helpers promote elements to double and reduce sequentially
 reference implementation.  Staying in `F.aggregate`/`F.zip_with` keeps the
 whole computation JVM-side (whole-stage codegen) — no Python, no Arrow hop —
 so brute-force scoring scales with the cluster, not the driver.
-
-For very wide vectors (≫1k dims) a vectorized pandas UDF over Arrow batches
-becomes competitive; see operators/similarity.py:cosine_topk_pandas.
 """
 
 from __future__ import annotations

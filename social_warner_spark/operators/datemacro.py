@@ -4,20 +4,14 @@ Reference: ``format_date`` parses ``{{nDaysAgo N}}`` → ``today - N days`` as
 ``YYYY-MM-DD`` (data_extract.py:109-126).  The reference returns None on
 parse failure; we raise (documented deviation, SURVEY.md §2.a quirks).
 
-Two surfaces:
-- `eval_date_macro`: driver-side (configs are tiny; this feeds filter
-  literals, which keeps the filter a constant → partition-prunable).
-- `date_macro_col`: the same semantics as a Catalyst expression, for when
-  macro strings live in a data column.
+Evaluation is driver-side: configs are tiny, and the result feeds filter
+literals, which keeps the filter a constant → partition-prunable.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import re
-
-import pyspark.sql.functions as F
-from pyspark.sql import Column
 
 _MACRO_RE = re.compile(r"\{\{\s*nDaysAgo\s+(\d+)\s*\}\}")
 
@@ -35,15 +29,3 @@ def eval_date_macro(value: str, anchor: dt.date | None = None) -> str:
         return dt.date.fromisoformat(value.strip()).isoformat()
     except ValueError as exc:
         raise ValueError(f"unparseable date macro: {value!r}") from exc
-
-
-def macro_days_col(col: Column) -> Column:
-    """Extract N from a `{{nDaysAgo N}}` column (NULL if no match)."""
-    n = F.regexp_extract(col, r"\{\{\s*nDaysAgo\s+(\d+)\s*\}\}", 1)
-    return F.when(n == "", F.lit(None)).otherwise(n).try_cast("int")
-
-
-def date_macro_col(col: Column, anchor: Column | None = None) -> Column:
-    """Column-wise macro eval: anchor - N days, formatted yyyy-MM-dd."""
-    base = anchor if anchor is not None else F.current_date()
-    return F.date_format(F.date_sub(base, macro_days_col(col)), "yyyy-MM-dd")

@@ -132,10 +132,11 @@ def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", 
 # (5.2-5.9 s vs 4.7-5.4 s baseline): persisting the single-consumer
 # 4-gram rows alongside the 3-gram ones doubles the cached relation the
 # prune's self-join + sizes re-read.  Rejected and removed; evidence in
-# OPTIMIZATION_r11.md (x31 section).  Porting hazard discovered there,
-# recorded for the next attempt: a two-parameter Python lambda passed to
-# F.transform is bound as (element, INDEX) — a `lambda s, _n=n:` closure
-# tags rows with the array position, not the captured width.
+# PERF.md ("Rounds 10–11 — optimization record").  Porting hazard found
+# there, recorded for the next attempt: a two-parameter Python lambda
+# passed to F.transform is bound as (element, INDEX) — a
+# `lambda s, _n=n:` closure tags rows with the array position, not the
+# captured width.
 
 
 def exact_jaccard_pairs(

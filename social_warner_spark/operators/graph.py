@@ -204,9 +204,9 @@ def lpa_fixed(nodes: DataFrame, edges: DataFrame, iters: int = 3) -> DataFrame:
     keyed the same way can share one exchange").  The r10 shape paid
     three keyed shuffles per round ((src,lbl) votes, node top-1, node
     join); measured interleaved on x239's graph: 4.0 → 3.2 s at sf0.1
-    (plans/r11/ab_lpa.out), identical output.  The label relation (one
-    row per node) is persisted per round so round k joins a
-    materialisation, not round k-1's lineage.
+    (PERF.md, "Rounds 10–11 — optimization record"), identical output.
+    The label relation (one row per node) is persisted per round so
+    round k joins a materialisation, not round k-1's lineage.
     """
     from social_warner_spark.caching import register_persisted
 

@@ -2,7 +2,7 @@
 
 Contract: media travels as an opaque ``binary`` payload column plus typed
 metadata (media_type, width/height/duration, codec).  All per-item work
-(decode, resize, frame-sample, feature-extract) runs as Arrow-batched
+(header probe, decode, pixel/sample statistics) runs as Arrow-batched
 Pandas iteration via ``mapInPandas`` — the ONLY sanctioned Python row path —
 so each task processes whole record batches and the cluster scales the
 decode horizontally.
@@ -13,12 +13,9 @@ DECODES FOR REAL in pure stdlib(+numpy for the IDCT) — `decode_png`
 (integer PCM and G.711 μ-law expansion, x216/x236), `decode_gif_frames`
 (full LZW incl. KwKwK and the 4096 reset — the multi-frame/video
 sampling shape, x232), `decode_jpeg_gray` (canonical Huffman, DPCM,
-run-length AC, dequant, generic IDCT, x235).  `decode_stub` dispatches
-to these real paths at fake=False (fake=True keeps the deterministic
-plumbing-test path); `_resize_stub` (decode→nearest-neighbor→`encode_png`)
-and `_frame_sample_stub` (GIF frames → PNG) always take them.
-NotImplementedError remains ONLY for formats declared out of scope (wild
-chroma JPEG, psychoacoustic audio, true video containers).
+run-length AC, dequant, generic IDCT, x235).  Formats declared out of
+scope (wild chroma JPEG, psychoacoustic audio, true video containers)
+have no decoder.
 
 Container METADATA needs no codec at all: `parse_media_header` reads
 real PNG/JPEG/GIF dimensions and WAV format/duration straight from the
@@ -28,7 +25,6 @@ standard mapInPandas shape.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -53,133 +49,6 @@ def _pickle_module_by_value() -> None:
     except Exception:
         pass  # older Spark: fall back to by-reference (works when the
         # package is installed on executors)
-
-
-#: Output schema of featurize_binary
-FEATURE_SCHEMA = (
-    "item_id long, media_type string, n_bytes int, "
-    "digest string, feature array<float>"
-)
-
-FEATURE_DIM = 8
-
-
-def decode_stub(payload: bytes, media_type: str, fake: bool = False) -> list[float]:
-    """Decode + feature-extract one media payload.
-
-    With fake=True, returns a deterministic pseudo-feature derived from
-    the content digest — stable across engines and runs (the original
-    plumbing contract; kept for the fixture-driven tests/oracles).
-
-    With fake=False the REAL in-repo decoders dispatch on media_type:
-    PNG (zlib+filters), GIF (LZW), baseline JPEG (Huffman+IDCT), WAV
-    (PCM + G.711 μ-law) — an 8-dim content descriptor comes back from
-    actual decoded pixels/samples.  Types with no in-repo decoder
-    (perceptual codecs: chroma JPEG in the wild, MP3, MP4…) raise
-    NotImplementedError; malformed payloads of a supported type raise
-    ValueError from the decoder itself.
-    """
-    if fake:
-        digest = hashlib.sha256(payload).digest()
-        return [b / 255.0 for b in digest[:FEATURE_DIM]]
-    if media_type == "image/png":
-        w, h, ch, vals = decode_png(payload)
-        n = max(len(vals), 1)
-        return [
-            w / 4096.0,
-            h / 4096.0,
-            ch / 4.0,
-            min(n / 2**20, 1.0),
-            sum(vals) / n / 255.0,
-            min(vals) / 255.0,
-            max(vals) / 255.0,
-            (sum(vals) % 997) / 997.0,
-        ]
-    if media_type == "image/gif":
-        w, h, colors, frames = decode_gif_frames(payload)
-        first = frames[0] if frames else [0]
-        n = max(len(first), 1)
-        return [
-            w / 4096.0,
-            h / 4096.0,
-            min(len(frames) / 64.0, 1.0),
-            min(len(colors) / 256.0, 1.0),
-            sum(first) / n / 255.0,
-            min(first) / 255.0,
-            max(first) / 255.0,
-            (sum(sum(f) for f in frames) % 997) / 997.0,
-        ]
-    if media_type == "image/jpeg":
-        w, h, px = decode_jpeg_gray(payload)
-        n = max(len(px), 1)
-        return [
-            w / 4096.0,
-            h / 4096.0,
-            0.25,
-            min(n / 2**20, 1.0),
-            sum(px) / n / 255.0,
-            min(px) / 255.0,
-            max(px) / 255.0,
-            (sum(px) % 997) / 997.0,
-        ]
-    if media_type in ("audio/wav", "audio/x-wav"):
-        rate, nch, samples = decode_wav_samples(payload)
-        n = max(len(samples), 1)
-        scale = 32768.0
-        return [
-            min(rate / 96000.0, 1.0),
-            nch / 4.0,
-            min(n / 2**20, 1.0),
-            sum(abs(v) for v in samples) / n / scale,
-            max(min(samples) / scale, -1.0),
-            min(max(samples) / scale, 1.0),
-            min((sum(v * v for v in samples) / n) ** 0.5 / scale, 1.0),
-            (sum(abs(v) for v in samples) % 997) / 997.0,
-        ]
-    raise NotImplementedError(
-        f"no in-repo decoder for {media_type!r} (perceptual codecs are out "
-        "of scope); pass fake=True for deterministic test features"
-    )
-
-
-def featurize_binary(
-    df: DataFrame,
-    id_col: str = "item_id",
-    payload_col: str = "payload",
-    media_type_col: str = "media_type",
-    fake_decode: bool = True,
-    batch_note_col: str | None = None,
-) -> DataFrame:
-    """mapInPandas featurization over binary payloads.
-
-    Partitioning note (100 TB): payloads should be stored size-bucketed so
-    Arrow batches have bounded memory; repartition by a size bucket before
-    calling if payload sizes are heavy-tailed.
-    """
-
-    _pickle_module_by_value()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "item_id": pdf[id_col].astype("int64"),
-                    "media_type": pdf[media_type_col].astype(str),
-                    "n_bytes": pdf[payload_col].map(len).astype("int32"),
-                    "digest": pdf[payload_col].map(
-                        lambda b: hashlib.sha256(b).hexdigest()
-                    ),
-                    "feature": pdf.apply(
-                        lambda r: decode_stub(
-                            r[payload_col], r[media_type_col], fake=fake_decode
-                        ),
-                        axis=1,
-                    ),
-                }
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 # --- header probing (real metadata, no codec libraries) ----------------------
@@ -280,7 +149,7 @@ def probe_media(
 ) -> DataFrame:
     """Real header metadata per item, as a mapInPandas batch map.
 
-    Same 100 TB shape as featurize_binary — opaque binary in, typed
+    The standard mapInPandas shape — opaque binary in, typed
     metadata out, zero shuffle; only the first KBs of each payload are
     touched, so column-pruned scans that keep payloads out of other
     operators matter more than the parse itself.
@@ -362,9 +231,8 @@ def synth_media_payload(doc_id: int, n_chars: int) -> tuple[bytes, str]:
 #
 # Round-3 upgrade of the codec boundary: PNG (8-bit gray/RGB/RGBA, all five
 # row filters, zlib IDAT) and WAV (integer PCM 8/16/32-bit) now decode for
-# real — no image/audio libraries, just the container specs.  Everything
-# else (JPEG entropy decode, lossy audio) stays behind the documented
-# NotImplementedError gate below.
+# real — no image/audio libraries, just the container specs.  GIF and
+# baseline JPEG follow further down.
 
 #: PNG color type → samples per pixel (spec §11.2.2; palette unsupported).
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
@@ -1184,28 +1052,6 @@ def with_synth_jpeg_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.withColumn("payload", make_payload(F.col(id_col)))
 
 
-def _png_filter_row(ftype: int, row: bytes, prior: bytes, channels: int) -> bytes:
-    """Apply PNG filter `ftype` to a raw row (encoder side of decode_png)."""
-    stride = len(row)
-    out = bytearray(row)
-    if ftype == 1:
-        for k in range(stride - 1, channels - 1, -1):
-            out[k] = (row[k] - row[k - channels]) & 0xFF
-    elif ftype == 2:
-        for k in range(stride):
-            out[k] = (row[k] - prior[k]) & 0xFF
-    elif ftype == 3:
-        for k in range(stride):
-            left = row[k - channels] if k >= channels else 0
-            out[k] = (row[k] - (left + prior[k]) // 2) & 0xFF
-    elif ftype == 4:
-        for k in range(stride):
-            left = row[k - channels] if k >= channels else 0
-            ul = prior[k - channels] if k >= channels else 0
-            out[k] = (row[k] - _paeth(left, prior[k], ul)) & 0xFF
-    return bytes(out)
-
-
 def synth_png_content(doc_id: int) -> bytes:
     """A REAL, fully-decodable RGB PNG: dimensions from the x49 formulas,
     pixel (x,y,c) = (7·doc_id + 31·y + 13·x + 5·c) mod 256, row filter
@@ -1225,8 +1071,8 @@ def synth_png_content(doc_id: int) -> bytes:
     # filter PREDICTION depend only on ORIGINAL sample values (encode
     # side has no output recurrence, unlike decode), so all five
     # filtered variants compute as whole-image integer array ops and
-    # each row picks its y%5 variant.  Bit-identical to the per-byte
-    # _png_filter_row loop (pinned by test_decode_png_full_roundtrip).
+    # each row picks its y%5 variant (decode_png reproduces the pixel
+    # formula exactly: test_decode_png_full_roundtrip).
     yv = np.arange(height).reshape(-1, 1, 1)
     xv = np.arange(width).reshape(1, -1, 1)
     cv = np.arange(channels).reshape(1, 1, -1)
@@ -1512,78 +1358,3 @@ def with_synth_media(
         )
 
     return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
-
-
-# --- per-payload resize / frame-sample codecs ---------------------------------
-#
-# Pure functions over one payload, ready to run inside the standard
-# mapInPandas shape (binary in → (metadata, binary) out).
-
-def encode_png(width: int, height: int, channels: int, values: list[int]) -> bytes:
-    """Assemble a real PNG (8-bit gray/RGB/RGBA, filter-0 rows, zlib
-    IDAT, CRCs) from row-major sample values — the re-encode half of the
-    decode→transform→re-encode pipeline."""
-    import zlib
-
-    color_type = {1: 0, 3: 2, 4: 6}[channels]
-    stream = bytearray()
-    stride = width * channels
-    for y in range(height):
-        stream.append(0)
-        stream += bytes(values[y * stride : (y + 1) * stride])
-    ihdr_body = (
-        width.to_bytes(4, "big")
-        + height.to_bytes(4, "big")
-        + bytes([8, color_type, 0, 0, 0])
-    )
-    idat_body = zlib.compress(bytes(stream), 6)
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            len(body).to_bytes(4, "big") + ctype + body
-            + (zlib.crc32(ctype + body) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr_body)
-        + chunk(b"IDAT", idat_body)
-        + chunk(b"IEND", b"")
-    )
-
-
-def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Resize one PNG payload: decode_png → deterministic nearest-neighbor
-    resample → encode_png.  The decoder's ValueError propagates for
-    non-PNG payloads."""
-    w0, h0, ch, vals = decode_png(payload)
-    out = []
-    for y in range(height):
-        sy = (y * h0) // height
-        for x in range(width):
-            sx = (x * w0) // width
-            base = (sy * w0 + sx) * ch
-            out.extend(vals[base : base + ch])
-    return encode_png(width, height, ch, out)
-
-
-def _frame_sample_stub(
-    payload: bytes, every_ms: int, max_frames: int
-) -> list[tuple[int, int, bytes]]:
-    """Sample frames from one multi-frame GIF payload — decode_gif_frames
-    (full LZW) with each sampled frame re-encoded as an RGB PNG via the
-    global color table; true video containers (MP4/AVI…) raise
-    NotImplementedError (perceptual codecs are out of scope)."""
-    if payload[:3] != b"GIF":
-        raise NotImplementedError(
-            "no in-repo decoder for this container (GIF is the supported "
-            "multi-frame format; true video codecs are out of scope)"
-        )
-    w, h, colors, frames = decode_gif_frames(payload)
-    out = []
-    for i, frame in enumerate(frames[:max_frames]):
-        rgb: list[int] = []
-        for idx in frame:
-            rgb.extend(colors[idx])
-        out.append((i, i * every_ms, encode_png(w, h, 3, rgb)))
-    return out

@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (north-star C3; SURVEY.md L3).
 
-Three tiers:
+Exact and approximate top-k tiers, each recall-checked against the exact
+one:
 
 - cosine_topk: exact brute force.  Probes are broadcast (they're the small
   side by construction); scoring is a JVM-side map over the full corpus —
@@ -12,19 +13,15 @@ Three tiers:
 - cosine_topk_bucketed: sign-bit LSH (axis hyperplanes) — corpus and probes
   bucketed by the sign pattern of the first `planes` dimensions; candidates
   share a bucket.  Recall measured against cosine_topk in tests.
-- cosine_topk_pandas: the same exact scoring as an Arrow-vectorized pandas
-  UDF (numpy matmul per batch) — demonstrates the sanctioned Python escape
-  hatch for very wide vectors; results identical to cosine_topk.
+- cosine_topk_ivf: inverted-file probing over seeded k-means centroids.
+- l2_topk_pq: product-quantized asymmetric distances with an optional
+  exact re-rank of the shortlist.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql.types import DoubleType
-
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -592,53 +589,6 @@ def l2_topk_pq(
         .where(F.col("rk") <= k)
         .select("probe_id", "neighbor_id", "edist", "rk")
     )
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k with numpy-vectorized scoring via a pandas UDF.
-
-    The probe matrix is closed over (broadcast with the serialized UDF);
-    each Arrow batch of corpus vectors is scored as one matmul.
-    """
-    import numpy as np
-
-    p_rows = probes.select(id_col, vec_col).collect()  # bounded: probe set is small
-    p_ids = [r[id_col] for r in p_rows]
-    P = np.array([r[vec_col] for r in p_rows], dtype="float64")
-    P = P / np.linalg.norm(P, axis=1, keepdims=True)
-
-    @F.pandas_udf("array<struct<probe_id: long, cos: double>>")
-    def score(batch: pd.Series) -> pd.Series:
-        M = np.array(batch.tolist(), dtype="float64")
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        S = M @ P.T  # (batch, probes)
-        return pd.Series(
-            [
-                [
-                    {"probe_id": int(p_ids[j]), "cos": round(float(S[i, j]), 6)}
-                    for j in range(len(p_ids))
-                ]
-                for i in range(S.shape[0])
-            ]
-        )
-
-    scored = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), score(F.col(vec_col)).alias("s"))
-        .select("neighbor_id", F.explode("s").alias("s"))
-        .select(
-            F.col("s.probe_id").alias("probe_id"),
-            "neighbor_id",
-            F.col("s.cos").alias("cos"),
-        )
-        .where(F.col("probe_id") != F.col("neighbor_id"))
-    )
-    return _ranked_topk(scored, k)
 
 
 def quantize_embeddings(

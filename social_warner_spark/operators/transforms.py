@@ -126,71 +126,3 @@ def union_pages(pages: Iterable[DataFrame]) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), pages
     )
-
-
-def global_index(
-    df: DataFrame,
-    order_exprs: list[Column],
-    out_col: str = "gidx",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Dense global row numbering 1..N in total (order_exprs) order WITHOUT
-    the single-partition window anti-pattern.
-
-    ``row_number() OVER (ORDER BY …)`` with no partition moves the whole
-    table through ONE task — the canonical scale-killer.  This operator
-    instead: range-partitions on the order expressions (disjoint, ordered
-    key ranges), ranks WITHIN each partition, computes per-partition row
-    counts (a |partitions|-row relation), turns them into cumulative
-    offsets with a window over that tiny relation, and broadcasts the
-    offsets back: gidx = offset(partition) + local rank.
-
-    The result is identical for ANY disjoint ordered partitioning, so the
-    range sampler's boundary choices never affect values.  order_exprs
-    must be a total order (include a unique tiebreak column).
-
-    The staged relation is PERSISTED (registered for host release):
-    the offsets branch and the rank branch are two separate range
-    exchanges in the physical plan (verified: Catalyst does NOT reuse
-    them — column pruning makes the subtrees differ), so without the
-    pin the two branches could in principle sample different partition
-    bounds and the offsets would label the wrong partitions.  Spark's
-    samplers happen to be deterministic per input today; the persist
-    makes the single-materialization guarantee explicit instead of
-    relying on that implementation detail (same discipline as
-    operators/ordered.py).
-
-    Cost: the range exchange, the per-partition sort, and one extra hash
-    exchange on the partition id (Catalyst can't see that range
-    partitioning already satisfies the window's clustering).  At 100 TB
-    fuse rank+offset into mapInPandas over sortWithinPartitions if that
-    exchange matters; the offsets relation stays |partitions| rows either
-    way.
-    """
-    from pyspark.sql import Window
-
-    num = int(
-        partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    from social_warner_spark.caching import register_persisted
-
-    staged = register_persisted(
-        df.repartitionByRange(num, *order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = staged.groupBy("_pid").agg(F.count("*").alias("_c"))
-    # window over |partitions| rows — bounded, not a data-volume window
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_c").over(wo), F.lit(0)).alias("_off")
-    )
-    ranked = staged.withColumn(
-        "_r", F.row_number().over(Window.partitionBy("_pid").orderBy(*order_exprs))
-    )
-    return (
-        ranked.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_off") + F.col("_r")).cast("long"))
-        .drop("_pid", "_r", "_off")
-    )

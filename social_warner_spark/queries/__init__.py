@@ -143,8 +143,7 @@ NO_ORACLE = frozenset()
 #:   x229, x269.
 #: - r10 bounded-array graph rewrites (2): x81, x259.
 #: - r11-only code moves (1): x220 (fused PQ fit/encode aggregates).
-#: - composite/dedup anchors filling the window (4): x54, l1, x100,
-#:   x176.
+#: - ordered.with_global_rank consumers (4): x56, x223, x228, x230.
 #: Everything previously verified stays green via the local DuckDB
 #: mirror (tests/test_correctness.py `-m ""`, all queries,
 #: serialization-strict like the driver's hash) — and the DEFAULT pytest
@@ -206,11 +205,11 @@ CHECK_PRIORITY = (
     "x259_adamic_adar",
     # r11 code moves without an r10 slot above:
     "x220_pq_ann",
-    # composite pipelines that ride the jaccard/dedup core:
-    "x54_segment_dedup",
-    "l1_exact_dedup",
-    "x100_hierarchy_depth",
-    "x176_source_set_cover",
+    # global-rank consumers (ordered.with_global_rank):
+    "x56_global_index",
+    "x223_quantile_normalize",
+    "x228_padding_efficiency",
+    "x230_vocab_budget_sweep",
 )
 
 #: The driver verifies a window of this size in iteration order; the

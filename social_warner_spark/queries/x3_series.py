@@ -393,7 +393,7 @@ def x31_full_pipeline(spark, sf_dir):
     # scan and re-split of documents.  surv4 covers a superset of
     # prepared's docs; the left_anti below keys on prepared's doc_ids, so
     # the extra rows are inert.  Sharing one (3, 4)-width shingle relation
-    # with the near-dup prune is slower (OPTIMIZATION_r11.md, x31): it
+    # with the near-dup prune is slower (PERF.md, rejected experiments): it
     # doubles the cached relation the prune's self-join re-reads.
     prepared, survivors = prepare_corpus(docs)
     prepared = register_persisted(prepared.persist())

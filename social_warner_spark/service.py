@@ -35,7 +35,8 @@ def handle_request(
 ) -> tuple[dict, int]:
     """Process one batch request; returns (response_json, http_status).
 
-    - `reports_filter`: optional list/str of config ids to run (main.py:64-65)
+    - `reports_filter`: optional list/str of config ids to run (main.py:64-65);
+      any other type is a 400
     - `start_date`/`end_date`: literal YYYY-MM-DD or {{nDaysAgo N}} macros,
       resolved here (data_extract.py:70, 109-126); defaults: 7 days ago → today.
     """
@@ -44,6 +45,11 @@ def handle_request(
         reports_filter = payload.get("reports_filter")
         if isinstance(reports_filter, str):
             reports_filter = [reports_filter]
+        if reports_filter is not None and not (
+            isinstance(reports_filter, list)
+            and all(isinstance(r, str) for r in reports_filter)
+        ):
+            raise ValueError("reports_filter must be a string or a list of strings")
         start = eval_date_macro(
             str(payload.get("start_date", "{{nDaysAgo 7}}")), anchor
         )

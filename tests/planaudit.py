@@ -281,8 +281,9 @@ def plan_shape_counts(
 
 
 def _regenerate() -> None:
-    """Regenerate tests/plan_shapes_baseline.json (run after consciously
-    accepting a plan-shape change): python -m social_warner_spark.planaudit"""
+    """Regenerate tests/plan_shapes_baseline.json (run from the repo root
+    after consciously accepting a plan-shape change):
+    python -m tests.planaudit"""
     import json
     import os
 
@@ -292,7 +293,7 @@ def _regenerate() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sf = os.environ.get("SPARK_GRAFT_SF_DIR_SMOKE", "/root/testdata/sf0.001")
     counts = plan_shape_counts(spark, sf)
-    path = os.path.join(os.path.dirname(__file__), "..", "tests", "plan_shapes_baseline.json")
+    path = os.path.join(os.path.dirname(__file__), "plan_shapes_baseline.json")
     with open(path, "w") as f:
         json.dump(counts, f, indent=0, sort_keys=True)
     print(f"wrote {len(counts)} baselines to {path}")

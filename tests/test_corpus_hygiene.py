@@ -105,21 +105,6 @@ def test_quantize_plan_no_shuffle(spark):
     assert "Exchange" not in buf.getvalue()
 
 
-def test_global_index_partition_invariance(spark):
-    from social_warner_spark.operators.transforms import global_index
-
-    rows = [(i, (i * 37) % 19) for i in range(200)]
-    df = spark.createDataFrame(rows, ["id", "key"])
-    order = [F.asc("key"), F.asc("id")]
-    a = {r["id"]: r["gidx"] for r in global_index(df, order, partitions=3).collect()}
-    b = {r["id"]: r["gidx"] for r in global_index(df, order, partitions=11).collect()}
-    assert a == b
-    # dense 1..N and consistent with the total order
-    assert sorted(a.values()) == list(range(1, 201))
-    ordered = sorted(rows, key=lambda r: (r[1], r[0]))
-    assert [a[i] for i, _ in ordered] == list(range(1, 201))
-
-
 def test_table_checksum_order_independent_and_sensitive(spark):
     from social_warner_spark.operators.audit import table_checksum
 

@@ -15,25 +15,9 @@ from social_warner_spark.operators.dedup import (
     minhash_neardup_pairs,
     minhash_signatures,
 )
-from social_warner_spark.operators.multimodal import (
-    FEATURE_DIM,
-    decode_stub,
-    featurize_binary,
-)
-from social_warner_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_bucketed,
-    cosine_topk_pandas,
-)
+from social_warner_spark.operators.similarity import cosine_topk, cosine_topk_bucketed
 
 THRESH = 0.5  # tolerance-test threshold: low enough to yield pairs on synthetic docs
-
-
-def with_binary_payload(df, text_col: str = "text"):
-    """Synthesize a binary payload column from text content."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8")).withColumn(
-        "media_type", F.lit("text/plain")
-    )
 
 
 @pytest.fixture(scope="module")
@@ -316,18 +300,6 @@ def test_repetition_metrics_edges(spark):
     assert got["allsame"] == (0.75, 1.0)
 
 
-def test_pandas_topk_equals_expression_topk(spark, emb):
-    probes = emb.where(F.col("vec_id") < 5)
-    a = sorted(
-        (r.probe_id, r.neighbor_id, r.rk) for r in cosine_topk(emb, probes, 5).collect()
-    )
-    b = sorted(
-        (r.probe_id, r.neighbor_id, r.rk)
-        for r in cosine_topk_pandas(emb, probes, 5).collect()
-    )
-    assert a == b
-
-
 # --- multimodal plumbing -----------------------------------------------------
 
 
@@ -501,13 +473,14 @@ def test_decode_wav_samples_roundtrip_and_gates():
         decode_wav_samples(wavf)
 
 
-def test_decode_stub_real_and_gated_paths():
-    """fake=False now runs the REAL in-repo decoders: a valid PNG
-    yields features derived from actual pixels, a malformed payload of
-    a supported type raises the decoder's ValueError, and only
-    out-of-scope formats raise NotImplementedError.  fake=True keeps
-    the original deterministic plumbing contract."""
+def test_real_decoders_are_deterministic_and_reject_malformed():
+    """Every in-repo decoder decodes its synthesized container the same
+    way twice, and a malformed payload raises the decoder's ValueError."""
     from social_warner_spark.operators.multimodal import (
+        decode_gif_frames,
+        decode_jpeg_gray,
+        decode_png,
+        decode_wav_samples,
         synth_gif_content,
         synth_jpeg_content,
         synth_mulaw_wav_content,
@@ -516,37 +489,16 @@ def test_decode_stub_real_and_gated_paths():
     )
 
     real_cases = [
-        (synth_png_content(7), "image/png"),
-        (synth_gif_content(7), "image/gif"),
-        (synth_jpeg_content(7), "image/jpeg"),
-        (synth_wav_content(7, 50), "audio/wav"),
-        (synth_mulaw_wav_content(7, 50), "audio/wav"),
+        (synth_png_content(7), decode_png),
+        (synth_gif_content(7), decode_gif_frames),
+        (synth_jpeg_content(7), decode_jpeg_gray),
+        (synth_wav_content(7, 50), decode_wav_samples),
+        (synth_mulaw_wav_content(7, 50), decode_wav_samples),
     ]
-    for payload, mt in real_cases:
-        feat = decode_stub(payload, mt, fake=False)
-        assert len(feat) == FEATURE_DIM
-        assert feat == decode_stub(payload, mt, fake=False)  # deterministic
+    for payload, decode in real_cases:
+        assert decode(payload) == decode(payload)
     with pytest.raises(ValueError):
-        decode_stub(b"img-bytes", "image/png", fake=False)
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"mp4-bytes", "video/mp4", fake=False)
-    feat = decode_stub(b"img-bytes", "image/png", fake=True)
-    assert len(feat) == FEATURE_DIM and all(0 <= x <= 1 for x in feat)
-
-
-def test_featurize_binary_mapinpandas(spark, docs):
-    src = with_binary_payload(docs.limit(20).withColumnRenamed("doc_id", "item_id"))
-    out = featurize_binary(src).collect()
-    assert len(out) == 20
-    r = out[0]
-    assert r.media_type == "text/plain"
-    assert len(r.feature) == FEATURE_DIM
-    assert r.n_bytes > 0 and len(r.digest) == 64
-    # deterministic: same payload → same feature
-    again = featurize_binary(src).collect()
-    assert sorted((x.item_id, tuple(x.feature)) for x in again) == sorted(
-        (x.item_id, tuple(x.feature)) for x in out
-    )
+        decode_png(b"img-bytes")
 
 
 def test_cms_estimate_is_one_sided(spark, docs):
@@ -988,60 +940,6 @@ def test_mulaw_expansion_reference_values():
     sr, nc, samples = decode_wav_samples(synth_mulaw_wav_content(3, 50))
     assert (sr, nc, len(samples)) == (8000, 1, 130)
     assert all(-32124 <= v <= 32124 for v in samples)
-
-
-def test_resize_real_path_roundtrips_through_png():
-    """Real resize: decode_png → nearest-neighbor → encode_png; the
-    output must be a decodable PNG of the target geometry whose pixels
-    equal the deterministic source-coordinate map."""
-    from social_warner_spark.operators.multimodal import (
-        _resize_stub,
-        decode_png,
-        synth_png_content,
-    )
-
-    src = synth_png_content(9)
-    w0, h0, ch, vals = decode_png(src)
-    out = _resize_stub(src, 10, 6)
-    w, h, ch2, rvals = decode_png(out)
-    assert (w, h, ch2) == (10, 6, ch)
-    for y in range(6):
-        sy = (y * h0) // 6
-        for x in range(10):
-            sx = (x * w0) // 10
-            for c in range(ch):
-                assert (
-                    rvals[(y * 10 + x) * ch + c]
-                    == vals[(sy * w0 + sx) * ch + c]
-                )
-
-
-def test_frame_sample_real_path_extracts_gif_frames_as_png():
-    """Real frame sampling: every sampled GIF frame re-encodes as a
-    decodable RGB PNG whose pixels equal the palette-mapped indices."""
-    from social_warner_spark.operators.multimodal import (
-        _frame_sample_stub,
-        decode_gif_frames,
-        decode_png,
-        synth_gif_content,
-    )
-
-    gif = synth_gif_content(17)  # 4 frames
-    w, h, colors, frames = decode_gif_frames(gif)
-    sampled = _frame_sample_stub(gif, every_ms=250, max_frames=3)
-    assert [s[0] for s in sampled] == [0, 1, 2]
-    assert [s[1] for s in sampled] == [0, 250, 500]
-    for i, (_, _, png) in enumerate(sampled):
-        pw, ph, pch, pvals = decode_png(png)
-        assert (pw, ph, pch) == (w, h, 3)
-        expect: list[int] = []
-        for idx in frames[i]:
-            expect.extend(colors[idx])
-        assert pvals == expect
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        _frame_sample_stub(b"mp4-bytes", 250, 3)
 
 
 def test_neardup_clusters_no_edges_all_singletons(spark):

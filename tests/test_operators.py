@@ -16,7 +16,6 @@ from social_warner_spark.operators import (
     scrub_sentinel_rows,
     union_pages,
 )
-from social_warner_spark.operators.datemacro import date_macro_col, macro_days_col
 from social_warner_spark.operators.nested import dynamic_pivot_map, parse_kv_list
 
 
@@ -103,18 +102,6 @@ def test_macro_malformed_raises():
     # deviation from the reference (returns None, data_extract.py:122): we raise
     with pytest.raises(ValueError):
         eval_date_macro("{{nDaysAgo soon}}", ANCHOR)
-
-
-def test_macro_column_form(spark):
-    df = spark.createDataFrame(
-        [("{{nDaysAgo 10}}",), ("{{nDaysAgo 0}}",), ("nope",)], "m string"
-    )
-    out = df.select(
-        macro_days_col(F.col("m")).alias("n"),
-        date_macro_col(F.col("m"), F.lit("2024-01-11").cast("date")).alias("d"),
-    ).collect()
-    assert [r.n for r in out] == [10, 0, None]
-    assert [r.d for r in out] == ["2024-01-01", "2024-01-11", None]
 
 
 # --- A8/A9 nested parse + pivot ---------------------------------------------

@@ -28,18 +28,21 @@ ORDER = ["g", "v", "id"]
 
 @pytest.mark.parametrize("p", [1, 4, 16])
 def test_global_rank_matches_window(spark, p):
+    """Both order shapes the callers pass: column names, and Column
+    expressions with a descending key."""
     df = _corpus(spark)
-    got = {
-        r["id"]: r["_grank"]
-        for r in with_global_rank(df, ORDER, num_partitions=p).collect()
-    }
-    want = {
-        r["id"]: r["rk"]
-        for r in df.withColumn(
-            "rk", F.row_number().over(Window.orderBy(*ORDER)).cast("long")
-        ).collect()
-    }
-    assert got == want
+    for order in (ORDER, [F.desc("g"), F.asc("id")]):
+        got = {
+            r["id"]: r["_grank"]
+            for r in with_global_rank(df, order, num_partitions=p).collect()
+        }
+        want = {
+            r["id"]: r["rk"]
+            for r in df.withColumn(
+                "rk", F.row_number().over(Window.orderBy(*order)).cast("long")
+            ).collect()
+        }
+        assert got == want
 
 
 @pytest.mark.parametrize("p,buckets", [(4, 10), (16, 10), (4, 7), (8, 200)])

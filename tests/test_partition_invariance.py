@@ -6,7 +6,7 @@ production would; any query whose output shifts with
 spark.sql.shuffle.partitions (a rank tied to physical row order, a
 range-sampler boundary leaking into values, a non-deterministic
 first()/collect_list survivorship) would flake the hash compare.  This
-sweep pins the most order-sensitive machinery: global_index consumers,
+sweep pins the most order-sensitive machinery: with_global_rank consumers,
 iterative argmax loops, TakeOrdered selections, and window-rank queues.
 """
 
@@ -21,9 +21,9 @@ QUERIES = all_queries()
 #: Queries whose plans leans hardest on ordering machinery.
 SENSITIVE = [
     "x56_global_index",        # the range-partitioned rank primitive itself
-    "x223_quantile_normalize", # global_index + two index joins
-    "x228_padding_efficiency", # global_index batch layout
-    "x230_vocab_budget_sweep", # global_index rank over the type relation
+    "x223_quantile_normalize", # global rank + two index joins
+    "x228_padding_efficiency", # global rank batch layout
+    "x230_vocab_budget_sweep", # global rank over the type relation
     "x221_kcenter_coreset",    # iterative top-1 argmax rounds
     "x234_uncertainty_sampling",  # TakeOrdered + bounded rank window
     "x176_source_set_cover",   # greedy argmax loop over broadcast picks

@@ -1,6 +1,6 @@
 """Plan-shape ratchet: no declared query may grow new shuffles or
 degrade an equi-join into a nested loop without a conscious baseline
-update (python -m social_warner_spark.planaudit regenerates)."""
+update (python -m tests.planaudit regenerates)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from social_warner_spark.planaudit import SHAPE_KEYS, plan_shape_counts
+from tests.planaudit import SHAPE_KEYS, plan_shape_counts
 from social_warner_spark.queries import CHECK_PRIORITY, all_queries
 
 BASELINE_PATH = os.path.join(os.path.dirname(__file__), "plan_shapes_baseline.json")
@@ -22,7 +22,7 @@ def _assert_no_regressions(spark, sf_smoke, names):
     missing = sorted(set(all_queries()) - set(baseline))
     assert not missing, (
         f"queries without a plan-shape baseline: {missing} — audit their "
-        "plans and regenerate (python -m social_warner_spark.planaudit)"
+        "plans and regenerate (python -m tests.planaudit)"
     )
 
     counts = plan_shape_counts(spark, sf_smoke, names)
@@ -59,7 +59,7 @@ def test_unpartitioned_window_classifier():
     (parens/commas in the first windowspecdefinition argument).  The
     balanced-paren classifier counts those, still skips partitioned
     specs, and raises on a spec it cannot delimit."""
-    from social_warner_spark.planaudit import _count_unpartitioned_windows
+    from tests.planaudit import _count_unpartitioned_windows
 
     bare = (
         "windowspecdefinition(x#3L ASC NULLS FIRST, specifiedwindowframe("
@@ -105,7 +105,7 @@ def test_lowcard_partition_window_classifier():
     """r07 metric: windows partitioned SOLELY by declared low-cardinality
     columns are counted; any extra (high-card) key exempts the spec, and
     expression-valued partition args are conservatively skipped."""
-    from social_warner_spark.planaudit import _count_lowcard_partition_windows
+    from tests.planaudit import _count_lowcard_partition_windows
 
     lang_only = (
         "windowspecdefinition(lang#7, doc_id#0L ASC NULLS FIRST, "
@@ -170,7 +170,7 @@ def test_lowcard_grouped_pandas_classifier():
     funnel that also MATERIALIZES each group in one pandas frame.  A
     high-card key in the set exempts the node; tree-section mentions
     (no Arguments block) are ignored; expression keys are skipped."""
-    from social_warner_spark.planaudit import _count_lowcard_grouped_pandas
+    from tests.planaudit import _count_lowcard_grouped_pandas
 
     lowcard = (
         "(7) FlatMapGroupsInPandas\n"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 import pyspark.sql.functions as F
 
 from social_warner_spark.config import parse_config
@@ -87,3 +88,26 @@ def test_bad_date_macro_gives_400(spark):
         anchor=ANCHOR,
     )
     assert code == 400 and body["status"] == "error"
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [5, [1, 2], {"a": 1}, ["a", None]],
+    ids=["int", "int_list", "dict", "list_with_null"],
+)
+def test_bad_reports_filter_gives_400_and_runs_nothing(spark, bad):
+    calls = []
+
+    def extract(cfg, start, end):
+        calls.append(cfg.config_id)
+
+    body, code = handle_request(
+        {"reports_filter": bad},
+        _configs(),
+        extract,
+        load=lambda df, cfg: 0,
+        anchor=ANCHOR,
+    )
+    assert code == 400 and body["status"] == "error"
+    assert "reports_filter" in body["message"]
+    assert calls == []

@@ -146,6 +146,12 @@ def test_wsgi_bad_macro_is_400(spark):
     assert r["status"] == 400 and r["body"]["status"] == "error"
 
 
+def test_wsgi_bad_reports_filter_is_400_json(spark):
+    r = _call(_app(spark), body={"reports_filter": 5})
+    assert r["status"] == 400 and r["body"]["status"] == "error"
+    assert r["headers"]["Content-Type"] == "application/json"
+
+
 def test_wsgi_method_not_allowed(spark):
     r = _call(_app(spark), method="DELETE", body={"start_date": "2024-01-01"})
     assert r["status"] == 405
