@@ -162,12 +162,12 @@ def skew_report(df: DataFrame, key_col: str, top_k: int = 3) -> DataFrame:
     (TakeOrderedAndProject), not single-partition sorts.  Gini uses the
     standard sorted-rank identity G = 2·Σ(i·cᵢ)/(n·Σcᵢ) − (n+1)/n with
     ties broken by key so both engines rank identically."""
-    from social_warner_spark.operators.ordered import with_global_rank
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     counts = df.groupBy(F.col(key_col).cast("string").alias("k")).agg(
         F.count("*").alias("c")
     )
-    ranked = with_global_rank(counts, [F.asc("c"), F.asc("k")], "i")
+    ranked = with_grouped_rank(counts, [], [F.asc("c"), F.asc("k")], "i")
     stats = ranked.agg(
         F.count("*").alias("n_keys"),
         F.sum("c").alias("n_rows"),

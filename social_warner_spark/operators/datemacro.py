@@ -22,9 +22,11 @@ def eval_date_macro(value: str, anchor: dt.date | None = None) -> str:
     """
     m = _MACRO_RE.fullmatch(value.strip())
     if m:
-        n = int(m.group(1))
         base = anchor or dt.date.today()
-        return (base - dt.timedelta(days=n)).isoformat()
+        try:
+            return (base - dt.timedelta(days=int(m.group(1)))).isoformat()
+        except OverflowError as exc:  # N reaches before 0001-01-01
+            raise ValueError(f"unparseable date macro: {value!r}") from exc
     try:
         return dt.date.fromisoformat(value.strip()).isoformat()
     except ValueError as exc:

@@ -5,7 +5,9 @@ metadata (media_type, width/height/duration, codec).  All per-item work
 (header probe, decode, pixel/sample statistics) runs as Arrow-batched
 Pandas iteration via ``mapInPandas`` — the ONLY sanctioned Python row path —
 so each task processes whole record batches and the cluster scales the
-decode horizontally.
+decode horizontally.  Every decoder runs through one scaffold
+(``_map_items``: a per-item function yields output tuples) and every
+synthetic payload builder through one pandas UDF (``_with_payload``).
 
 Codec boundary (retired over round 3): every declared media family now
 DECODES FOR REAL in pure stdlib(+numpy for the IDCT) — `decode_png`
@@ -25,7 +27,7 @@ standard mapInPandas shape.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -38,8 +40,9 @@ def _pickle_module_by_value() -> None:
     cloudpickle serializes module-level functions by reference (module path
     + name), which breaks on executors that don't have this package on
     their import path.  Registering the module switches to by-value for
-    everything the UDF closures pull in.  Idempotent; call at the top of
-    every operator that ships Python to executors.
+    everything the UDF closures pull in.  Idempotent; called by every
+    path that ships Python to executors (_map_items, _with_payload,
+    probe_media).
     """
     try:
         from pyspark import cloudpickle
@@ -49,6 +52,47 @@ def _pickle_module_by_value() -> None:
     except Exception:
         pass  # older Spark: fall back to by-reference (works when the
         # package is installed on executors)
+
+
+def _map_items(
+    df: DataFrame,
+    schema: str,
+    per_item: Callable[[bytes], Iterable[tuple]],
+    id_col: str,
+    payload_col: str,
+) -> DataFrame:
+    """The decoders' shared mapInPandas scaffold: ``per_item(payload)``
+    yields one or more output tuples per item, each prefixed here with
+    the item id to form a row of ``schema`` (whose first column is the
+    id).  Per-item work, zero shuffle."""
+    _pickle_module_by_value()
+    names = [f.split()[0] for f in schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (int(item_id), *cells)
+                for item_id, payload in zip(pdf[id_col], pdf[payload_col])
+                for cells in per_item(payload)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _with_payload(
+    df: DataFrame, build: Callable[..., bytes], *arg_cols: str
+) -> DataFrame:
+    """Attach a ``payload`` binary column, ``build(*ints)`` over the
+    integer values of ``arg_cols`` per row, in an Arrow-batched pandas
+    UDF (struct packing is Python work)."""
+    _pickle_module_by_value()
+
+    @F.pandas_udf("binary")
+    def make_payload(*cols: pd.Series) -> pd.Series:
+        return pd.Series([build(*map(int, vals)) for vals in zip(*cols)])
+
+    return df.withColumn("payload", make_payload(*[F.col(c) for c in arg_cols]))
 
 
 # --- header probing (real metadata, no codec libraries) ----------------------
@@ -445,19 +489,7 @@ def with_synth_mulaw_content(
     df: DataFrame, id_col: str = "doc_id", n_chars_col: str = "n_chars"
 ) -> DataFrame:
     """Attach a fully-decodable μ-law WAV payload per row."""
-
-    _pickle_module_by_value()
-
-    @F.pandas_udf("binary")
-    def make_payload(ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                synth_mulaw_wav_content(int(i), int(n))
-                for i, n in zip(ids, n_chars)
-            ]
-        )
-
-    return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
+    return _with_payload(df, synth_mulaw_wav_content, id_col, n_chars_col)
 
 
 def _gif_lzw_encode(indices: list[int], mcs: int) -> bytes:
@@ -669,38 +701,18 @@ def gif_frame_stats(
     100 TB: per-item decode, zero shuffle; frame fan-out is bounded by
     frames-per-item, and only integer cells leave Python."""
 
-    _pickle_module_by_value()
+    def frame_stats(payload: bytes):
+        w, h, colors, frames = decode_gif_frames(payload)
+        for fi, frame in enumerate(frames):
+            rgb_sum = sum(sum(colors[v]) for v in frame)
+            yield fi, w, h, len(frame), sum(frame), rgb_sum
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.split()[0]: [] for k in GIF_FRAME_SCHEMA.split(", ")
-            }
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, colors, frames = decode_gif_frames(payload)
-                for fi, frame in enumerate(frames):
-                    rows["item_id"].append(int(item_id))
-                    rows["frame_idx"].append(fi)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_px"].append(len(frame))
-                    rows["idx_sum"].append(sum(frame))
-                    rows["rgb_sum"].append(sum(sum(colors[v]) for v in frame))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=GIF_FRAME_SCHEMA)
+    return _map_items(df, GIF_FRAME_SCHEMA, frame_stats, id_col, payload_col)
 
 
 def with_synth_gif_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a fully-decodable multi-frame GIF payload per row."""
-
-    _pickle_module_by_value()
-
-    @F.pandas_udf("binary")
-    def make_payload(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gif_content(int(i)) for i in ids])
-
-    return df.withColumn("payload", make_payload(F.col(id_col)))
+    return _with_payload(df, synth_gif_content, id_col)
 
 
 # --- baseline JPEG (grayscale): real entropy decode + IDCT ------------------
@@ -1019,37 +1031,16 @@ def jpeg_pixel_stats(
     mapInPandas — same shape as png_pixel_stats: per-item decode, zero
     shuffle, exact integer cells out."""
 
-    _pickle_module_by_value()
+    def pixel_stats(payload: bytes):
+        w, h, px = decode_jpeg_gray(payload)
+        yield w, h, len(px), sum(px), min(px), max(px)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.split()[0]: [] for k in JPEG_STATS_SCHEMA.split(", ")
-            }
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = decode_jpeg_gray(payload)
-                rows["item_id"].append(int(item_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_px"].append(len(px))
-                rows["px_sum"].append(sum(px))
-                rows["px_min"].append(min(px))
-                rows["px_max"].append(max(px))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=JPEG_STATS_SCHEMA)
+    return _map_items(df, JPEG_STATS_SCHEMA, pixel_stats, id_col, payload_col)
 
 
 def with_synth_jpeg_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a fully-decodable baseline grayscale JPEG payload per row."""
-
-    _pickle_module_by_value()
-
-    @F.pandas_udf("binary")
-    def make_payload(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_jpeg_content(int(i)) for i in ids])
-
-    return df.withColumn("payload", make_payload(F.col(id_col)))
+    return _with_payload(df, synth_jpeg_content, id_col)
 
 
 def synth_png_content(doc_id: int) -> bytes:
@@ -1172,26 +1163,14 @@ def png_pixel_stats(
     probe_media: per-item work, zero shuffle, horizontal scale.
     """
 
-    _pickle_module_by_value()
+    def pixel_stats(payload: bytes):
+        # _decode_png_array: the reductions below run as exact int64
+        # numpy ops over the whole image, not per-byte Python (r10,
+        # guide §4.2)
+        w, h, ch, arr = _decode_png_array(payload)
+        yield w, h, int(arr.size), int(arr.sum()), int(arr.min()), int(arr.max())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.split()[0]: [] for k in PNG_STATS_SCHEMA.split(", ")}
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                # _decode_png_array: the reductions below run as exact
-                # int64 numpy ops over the whole image, not per-byte
-                # Python (r10, guide §4.2)
-                w, h, ch, arr = _decode_png_array(payload)
-                rows["item_id"].append(int(item_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_values"].append(int(arr.size))
-                rows["value_sum"].append(int(arr.sum()))
-                rows["value_min"].append(int(arr.min()))
-                rows["value_max"].append(int(arr.max()))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=PNG_STATS_SCHEMA)
+    return _map_items(df, PNG_STATS_SCHEMA, pixel_stats, id_col, payload_col)
 
 
 def wav_sample_stats(
@@ -1199,25 +1178,20 @@ def wav_sample_stats(
 ) -> DataFrame:
     """Real PCM sample statistics per clip via decode_wav_samples."""
 
-    _pickle_module_by_value()
+    def sample_stats(payload: bytes):
+        # exact int64 numpy reductions over the whole clip (r10)
+        rate, nch, samples = _decode_wav_array(payload)
+        yield (
+            rate,
+            nch,
+            int(samples.size) // nch,
+            int(samples.sum()),
+            int((samples * samples).sum()),
+            int(samples.min()),
+            int(samples.max()),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.split()[0]: [] for k in WAV_STATS_SCHEMA.split(", ")}
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                # exact int64 numpy reductions over the whole clip (r10)
-                rate, nch, samples = _decode_wav_array(payload)
-                rows["item_id"].append(int(item_id))
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(nch)
-                rows["n_samples"].append(int(samples.size) // nch)
-                rows["sample_sum"].append(int(samples.sum()))
-                rows["sample_sq_sum"].append(int((samples * samples).sum()))
-                rows["sample_min"].append(int(samples.min()))
-                rows["sample_max"].append(int(samples.max()))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=WAV_STATS_SCHEMA)
+    return _map_items(df, WAV_STATS_SCHEMA, sample_stats, id_col, payload_col)
 
 
 AHASH_SCHEMA = (
@@ -1248,36 +1222,25 @@ def png_ahash(
     embedding comparison in an image dedup pipeline.
     """
 
-    _pickle_module_by_value()
+    def ahash(payload: bytes):
+        # decode once to an int64 array; the 16 probe sums stay scalar
+        # (bounded count), the image-total sum is one vectorized exact
+        # reduction (r10)
+        w, h, ch, arr = _decode_png_array(payload)
+        total = int(arr.sum())
+        n_px = w * h
+        phash = 0
+        for k in range(AHASH_BITS):
+            x = (_AHASH_XSTRIDE * k) % w
+            y = (_AHASH_YSTRIDE * k) % h
+            base = (y * w + x) * ch
+            psum = int(arr[base : base + ch].sum())
+            # gray(p) > mean-gray  ⟺  psum·n_px > total (integers)
+            if psum * n_px > total:
+                phash |= 1 << k
+        yield w, h, n_px, total, phash
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.split()[0]: [] for k in AHASH_SCHEMA.split(", ")}
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                # decode once to an int64 array; the 16 probe sums stay
-                # scalar (bounded count), the image-total sum is one
-                # vectorized exact reduction (r10)
-                w, h, ch, arr = _decode_png_array(payload)
-                total = int(arr.sum())
-                n_px = w * h
-                phash = 0
-                for k in range(AHASH_BITS):
-                    x = (_AHASH_XSTRIDE * k) % w
-                    y = (_AHASH_YSTRIDE * k) % h
-                    base = (y * w + x) * ch
-                    psum = int(arr[base : base + ch].sum())
-                    # gray(p) > mean-gray  ⟺  psum·n_px > total (integers)
-                    if psum * n_px > total:
-                        phash |= 1 << k
-                rows["item_id"].append(int(item_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(n_px)
-                rows["gray_sum"].append(total)
-                rows["phash"].append(phash)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _map_items(df, AHASH_SCHEMA, ahash, id_col, payload_col)
 
 
 def wav_frame_rms_cells(
@@ -1293,31 +1256,20 @@ def wav_frame_rms_cells(
     energy), matching the k//frame grouping a SQL oracle states.
     """
 
-    _pickle_module_by_value()
+    def frame_cells(payload: bytes):
+        import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.split()[0]: [] for k in FRAME_RMS_SCHEMA.split(", ")
-            }
-            import numpy as np
+        _, _, samples = _decode_wav_array(payload)
+        # per-frame exact int64 Σv² via one reduceat over the squared
+        # stream (r10); frame boundaries every `frame` interleaved
+        # samples, identical to the k//frame oracle
+        sq = samples * samples
+        starts = np.arange(0, samples.size, frame)
+        sq_sums = np.add.reduceat(sq, starts) if samples.size else []
+        for fi, f0 in enumerate(starts.tolist()):
+            yield fi, int(min(frame, samples.size - f0)), int(sq_sums[fi])
 
-            for item_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _, _, samples = _decode_wav_array(payload)
-                # per-frame exact int64 Σv² via one reduceat over the
-                # squared stream (r10); frame boundaries every `frame`
-                # interleaved samples, identical to the k//frame oracle
-                sq = samples * samples
-                starts = np.arange(0, samples.size, frame)
-                sq_sums = np.add.reduceat(sq, starts) if samples.size else []
-                for fi, f0 in enumerate(starts.tolist()):
-                    rows["item_id"].append(int(item_id))
-                    rows["frame_idx"].append(fi)
-                    rows["n_in_frame"].append(int(min(frame, samples.size - f0)))
-                    rows["sq_sum"].append(int(sq_sums[fi]))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=FRAME_RMS_SCHEMA)
+    return _map_items(df, FRAME_RMS_SCHEMA, frame_cells, id_col, payload_col)
 
 
 def with_synth_media_content(
@@ -1327,20 +1279,10 @@ def with_synth_media_content(
     even ids → synth_wav_content (vs with_synth_media's header-only
     payloads, kept separate so x49's probe contract is unchanged)."""
 
-    _pickle_module_by_value()
+    def build(i: int, n: int) -> bytes:
+        return synth_png_content(i) if i % 2 == 1 else synth_wav_content(i, n)
 
-    @F.pandas_udf("binary")
-    def make_payload(ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                synth_png_content(int(i))
-                if int(i) % 2 == 1
-                else synth_wav_content(int(i), int(n))
-                for i, n in zip(ids, n_chars)
-            ]
-        )
-
-    return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
+    return _with_payload(df, build, id_col, n_chars_col)
 
 
 def with_synth_media(
@@ -1349,12 +1291,7 @@ def with_synth_media(
     """Attach a real PNG/WAV container payload per row (synth_media_payload),
     built in an Arrow-batched pandas UDF (struct packing is Python work)."""
 
-    _pickle_module_by_value()
+    def build(i: int, n: int) -> bytes:
+        return synth_media_payload(i, n)[0]
 
-    @F.pandas_udf("binary")
-    def make_payload(ids: pd.Series, n_chars: pd.Series) -> pd.Series:
-        return pd.Series(
-            [synth_media_payload(int(i), int(n))[0] for i, n in zip(ids, n_chars)]
-        )
-
-    return df.withColumn("payload", make_payload(F.col(id_col), F.col(n_chars_col)))
+    return _with_payload(df, build, id_col, n_chars_col)

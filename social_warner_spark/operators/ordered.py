@@ -14,6 +14,12 @@ two-pass layout instead:
    first k rows of each partition — is collected once, prefix-combined
    on the driver, and broadcast back to finish the global answer.
 
+Rank and running sum have ONE implementation each, the grouped one
+(``with_grouped_rank`` / ``with_grouped_cumsum``, range-staged on
+(group, order)); a global rank or running sum is that operator with
+``group_cols=[]``, and ``with_global_ntile`` takes its total from the
+same rank pass.  Running max and lead have only a global form.
+
 Results are pure functions of the data: partition BOUNDS vary with
 range sampling, but rank/neighbor arithmetic reconstructs the global
 order exactly wherever the boundaries fall (double-run determinism
@@ -75,50 +81,6 @@ def _range_staged(df: DataFrame, order_cols: list, num_partitions: int | None):
     return register_persisted(staged.persist())
 
 
-def _ranked_with_total(
-    df: DataFrame, order_cols: list, rank_col: str, num_partitions: int | None
-) -> tuple[DataFrame, int]:
-    staged = _range_staged(df, order_cols, num_partitions)
-    counts = {
-        r["_pid"]: r["c"]
-        for r in staged.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
-    acc = 0
-    offsets = []
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)],
-        StructType(
-            [StructField("_pid", IntegerType()), StructField("_off", LongType())]
-        ),
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = (
-        staged.join(F.broadcast(off), "_pid")
-        .withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("_off"))
-        .drop("_pid", "_off")
-    )
-    return ranked, acc
-
-
-def with_global_rank(
-    df: DataFrame,
-    order_cols: list,
-    rank_col: str = "_grank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Append the exact global ``row_number() over (ORDER BY order_cols)``
-    — the order key must be a total order (include a unique tiebreaker).
-
-    Two passes over the range shuffle: per-partition counts (P-row
-    collect → prefix offsets, broadcast) + per-partition row_number.
-    """
-    ranked, _ = _ranked_with_total(df, order_cols, rank_col, num_partitions)
-    return ranked
-
-
 def ntile_from_rank(rank: Column, total: int, buckets: int) -> Column:
     """Spark's exact ntile(buckets) bucket for a 1-based global rank over
     ``total`` rows: the first ``total % buckets`` buckets get one extra
@@ -144,88 +106,10 @@ def with_global_ntile(
     """Exact ``ntile(buckets) over (ORDER BY order_cols)`` without the
     single-partition sort: two-pass global rank + closed-form bucket
     (the total comes free from the rank pass's partition counts)."""
-    ranked, total = _ranked_with_total(df, order_cols, "_grank_nt", num_partitions)
+    ranked, totals = _grouped_ranked(df, [], order_cols, "_grank_nt", num_partitions)
     return ranked.withColumn(
-        tile_col, ntile_from_rank(F.col("_grank_nt"), total, buckets)
+        tile_col, ntile_from_rank(F.col("_grank_nt"), totals.get((), 0), buckets)
     ).drop("_grank_nt")
-
-
-def with_global_cumsum(
-    df: DataFrame,
-    order_cols: list,
-    sum_cols: dict[str, str],
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Append inclusive global running sums over the total order —
-    ``sum_cols`` maps output name → source column — without a
-    single-partition sort: per-partition cumulative window + broadcast
-    per-partition totals prefix (P-row collect).
-
-    EXACT for INTEGRAL sources only (byte/short/int/long): the running
-    sum and the prefix offsets are carried as longs.  Decimal sources
-    would silently truncate and float sources would re-associate the
-    summation across the partition boundary — both are rejected up
-    front (ADVICE r05: the old docstring claimed decimal support the
-    long-typed offsets could not deliver).
-
-    NULL sources match the window form exactly (r07): ``sum() over``
-    is NULL only while the group prefix holds NO non-null value, so the
-    offsets also carry the prior partitions' non-null COUNT and the
-    local frame's ``count(src)`` (same window spec — merged into the
-    same Window node) decides NULL vs carried sum.  Without it, a
-    partition whose LOCAL prefix is all-NULL went NULL even when
-    earlier partitions had values."""
-    srcs = sorted(set(sum_cols.values()))
-    _require_integral(df, srcs, "with_global_cumsum")
-    # the type check above needs only df.schema — running it first means
-    # the TypeError path never leaves a registered persisted staged
-    # relation behind (ADVICE r06).
-    staged = _range_staged(df, order_cols, num_partitions)
-    totals = {
-        r["_pid"]: r
-        for r in staged.groupBy("_pid")
-        .agg(
-            *[F.sum(c).alias(c) for c in srcs],
-            *[F.count(c).alias(f"_cnt_{c}") for c in srcs],
-        )
-        .collect()
-    }
-    acc = {c: 0 for c in srcs}
-    cnt = {c: 0 for c in srcs}
-    offsets = []
-    for pid in sorted(totals):
-        offsets.append((pid, *[acc[c] for c in srcs], *[cnt[c] for c in srcs]))
-        for c in srcs:
-            acc[c] += totals[pid][c] or 0
-            cnt[c] += totals[pid][f"_cnt_{c}"]
-    off_schema = StructType(
-        [StructField("_pid", IntegerType())]
-        + [StructField(f"_off_{c}", LongType()) for c in srcs]
-        + [StructField(f"_offcnt_{c}", LongType()) for c in srcs]
-    )
-    off = df.sparkSession.createDataFrame(
-        offsets or [(0, *[0] * (2 * len(srcs)))], off_schema
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = staged.join(F.broadcast(off), "_pid")
-    for name, src in sum_cols.items():
-        out = out.withColumn(
-            name,
-            F.when(
-                F.count(src).over(w) + F.col(f"_offcnt_{src}") > 0,
-                F.coalesce(F.sum(src).over(w).cast("long"), F.lit(0))
-                + F.col(f"_off_{src}"),
-            ),
-        )
-    return out.drop(
-        "_pid",
-        *[f"_off_{c}" for c in srcs],
-        *[f"_offcnt_{c}" for c in srcs],
-    )
 
 
 def with_global_cummax_excl(
@@ -276,29 +160,36 @@ def with_global_cummax_excl(
     )
 
 
-def _grouped_staged(df: DataFrame, group_cols: list[str], order_cols: list, num_partitions: int | None):
-    """Range-stage on (group, order): every group's rows are contiguous
-    across ascending partition ids, and a partition holds a contiguous
-    run of groups — so the per-(partition, group) boundary relation has
-    at most P + G − 1 rows (each partition adds one row per group it
-    touches; only the group straddling a boundary repeats).
-
-    This is the grouped counterpart of the global primitives above,
-    built for LOW-CARDINALITY group keys (lang/source): there,
-    ``Window.partitionBy(group)`` routes the whole corpus through ~G
-    reducer tasks — one dominant language at 100 TB is a single-task
-    sort in disguise (r06 verdict).  Range-partitioning on (group,
-    order) keeps every partition at ~|corpus|/P rows NO MATTER how
-    skewed the group mix is; the driver-side collect stays bounded by
-    P + G − 1.  (For high-cardinality groups a plain hash-partitioned
-    window is already balanced — use that instead.)
-
-    Contract: group keys must be NON-NULL — the offset join downstream
-    is an equi-join, so a NULL group would silently drop its rows
-    (where the window form would have formed a NULL group).  Every
-    current consumer groups on non-null catalog columns
-    (lang/source/status/flag/type)."""
-    return _range_staged(df, [*group_cols, *order_cols], num_partitions)
+def _grouped_ranked(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list,
+    rank_col: str,
+    num_partitions: int | None,
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """with_grouped_rank's core: the ranked frame plus each group's total
+    row count (keyed by the group-key tuple; ``()`` with no group keys),
+    both from the one boundary collect."""
+    staged = _range_staged(df, [*group_cols, *order_cols], num_partitions)
+    rows = staged.groupBy("_pid", *group_cols).agg(F.count("*").alias("c")).collect()
+    totals: dict[tuple, int] = {}
+    offsets = []
+    for r in sorted(rows, key=lambda r: r["_pid"]):
+        g = tuple(r[c] for c in group_cols)
+        offsets.append((r["_pid"], *g, totals.get(g, 0)))
+        totals[g] = totals.get(g, 0) + r["c"]
+    gtypes = [StructField(c, df.schema[c].dataType) for c in group_cols]
+    off_schema = StructType(
+        [StructField("_pid", IntegerType()), *gtypes, StructField("_off", LongType())]
+    )
+    off = df.sparkSession.createDataFrame(offsets, off_schema)
+    w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
+    ranked = (
+        staged.join(F.broadcast(off), ["_pid", *group_cols])
+        .withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("_off"))
+        .drop("_pid", "_off")
+    )
+    return ranked, totals
 
 
 def with_grouped_rank(
@@ -312,39 +203,39 @@ def with_grouped_rank(
     """Append the exact ``row_number() over (PARTITION BY group_cols
     ORDER BY order_cols)`` without routing each group through one task:
     range partition on (group, order), per-(partition, group) local
-    row_number, plus broadcast prefix offsets from a ≤(P+G−1)-row
-    boundary collect.  The (group, order) key must be a total order
-    (include a unique tiebreaker).
+    row_number, plus broadcast prefix offsets from the boundary collect.
+    The (group, order) key must be a total order (include a unique
+    tiebreaker).  With ``group_cols=[]`` this is the exact global
+    ``row_number() over (ORDER BY order_cols)`` from a P-row collect.
+
+    Every group's rows are contiguous across ascending partition ids and
+    a partition holds a contiguous run of groups, so the per-(partition,
+    group) boundary relation has at most P + G − 1 rows (only the group
+    straddling a boundary repeats).  Built for LOW-CARDINALITY group
+    keys (lang/source): there, ``Window.partitionBy(group)`` routes the
+    corpus through ~G reducer tasks — one dominant language at 100 TB is
+    a single-task sort in disguise (r06 verdict) — while the (group,
+    order) range stage keeps every partition at ~|corpus|/P rows however
+    skewed the group mix.  For high-cardinality groups a plain
+    hash-partitioned window is already balanced — use that instead.
+
+    Contract: group keys must be NON-NULL — the offset join is an
+    equi-join, so a NULL group would silently drop its rows (where the
+    window form would have formed a NULL group).  Every current consumer
+    groups on non-null catalog columns (lang/source/status/flag/type).
 
     ``count_col`` (optional) also appends the group's TOTAL row count —
     free from the same boundary collect (a G-row broadcast join), so
     rank-position math (rn−1)/(n−1) needs no second corpus aggregation
     and no ``count(*) over (partition by group)`` window."""
-    staged = _grouped_staged(df, group_cols, order_cols, num_partitions)
-    rows = staged.groupBy("_pid", *group_cols).agg(F.count("*").alias("c")).collect()
-    acc: dict[tuple, int] = {}
-    offsets = []
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        g = tuple(r[c] for c in group_cols)
-        offsets.append((r["_pid"], *g, acc.get(g, 0)))
-        acc[g] = acc.get(g, 0) + r["c"]
-    gtypes = [StructField(c, df.schema[c].dataType) for c in group_cols]
-    off_schema = StructType(
-        [StructField("_pid", IntegerType()), *gtypes, StructField("_off", LongType())]
-    )
-    off = df.sparkSession.createDataFrame(offsets or [], off_schema)
-    w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    out = (
-        staged.join(F.broadcast(off), ["_pid", *group_cols])
-        .withColumn(rank_col, F.row_number().over(w).cast("long") + F.col("_off"))
-        .drop("_pid", "_off")
-    )
+    out, totals = _grouped_ranked(df, group_cols, order_cols, rank_col, num_partitions)
     if count_col is not None:
-        totals = df.sparkSession.createDataFrame(
-            [(*g, n) for g, n in sorted(acc.items())] or [],
+        gtypes = [StructField(c, df.schema[c].dataType) for c in group_cols]
+        counts = df.sparkSession.createDataFrame(
+            [(*g, n) for g, n in sorted(totals.items())],
             StructType([*gtypes, StructField(count_col, LongType())]),
         )
-        out = out.join(F.broadcast(totals), group_cols)
+        out = out.join(F.broadcast(counts), group_cols)
     return out
 
 
@@ -359,16 +250,25 @@ def with_grouped_cumsum(
     total order — ``sum_cols`` maps output name → source column —
     without a per-group single-task sort: range partition on (group,
     order), per-(partition, group) cumulative window, broadcast
-    per-(partition, group) prefix totals (≤(P+G−1)-row collect).
+    per-(partition, group) prefix totals (≤(P+G−1)-row collect).  With
+    ``group_cols=[]`` these are the global running sums ``sum() over
+    (ORDER BY order_cols)``.  Same layout, balance and NON-NULL group-key
+    contract as with_grouped_rank.
 
-    EXACT for INTEGRAL sources only, same contract (and reason) as
-    with_global_cumsum — including the NULL-prefix parity rule (r07):
-    the offsets carry the prior partitions' per-group non-null COUNT so
-    a row goes NULL exactly when its whole GROUP prefix is non-null-free,
-    matching ``sum() over`` bit-for-bit on nullable sources."""
+    EXACT for INTEGRAL sources only (byte/short/int/long): the running
+    sum and the prefix offsets are carried as longs.  Decimal sources
+    would silently truncate and float sources would re-associate the
+    summation across the partition boundary — both are rejected up
+    front, before any staging (ADVICE r05/r06).
+
+    NULL sources match the window form exactly (r07): ``sum() over`` is
+    NULL only while the group prefix holds NO non-null value, so the
+    offsets also carry the prior partitions' per-group non-null COUNT
+    and the local frame's ``count(src)`` (same window spec — merged into
+    the same Window node) decides NULL vs carried sum."""
     srcs = sorted(set(sum_cols.values()))
     _require_integral(df, srcs, "with_grouped_cumsum")
-    staged = _grouped_staged(df, group_cols, order_cols, num_partitions)
+    staged = _range_staged(df, [*group_cols, *order_cols], num_partitions)
     rows = staged.groupBy("_pid", *group_cols).agg(
         *[F.sum(c).alias(c) for c in srcs],
         *[F.count(c).alias(f"_cnt_{c}") for c in srcs],
@@ -392,7 +292,7 @@ def with_grouped_cumsum(
         + [StructField(f"_off_{c}", LongType()) for c in srcs]
         + [StructField(f"_offcnt_{c}", LongType()) for c in srcs]
     )
-    off = df.sparkSession.createDataFrame(offsets or [], off_schema)
+    off = df.sparkSession.createDataFrame(offsets, off_schema)
     w = (
         Window.partitionBy("_pid", *group_cols)
         .orderBy(*order_cols)

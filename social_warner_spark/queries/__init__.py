@@ -143,7 +143,8 @@ NO_ORACLE = frozenset()
 #:   x229, x269.
 #: - r10 bounded-array graph rewrites (2): x81, x259.
 #: - r11-only code moves (1): x220 (fused PQ fit/encode aggregates).
-#: - ordered.with_global_rank consumers (4): x56, x223, x228, x230.
+#: - global-rank consumers (4): x56, x223, x228, x230 (ordered.
+#:   with_grouped_rank with no group keys).
 #: Everything previously verified stays green via the local DuckDB
 #: mirror (tests/test_correctness.py `-m ""`, all queries,
 #: serialization-strict like the driver's hash) — and the DEFAULT pytest
@@ -205,7 +206,7 @@ CHECK_PRIORITY = (
     "x259_adamic_adar",
     # r11 code moves without an r10 slot above:
     "x220_pq_ann",
-    # global-rank consumers (ordered.with_global_rank):
+    # global-rank consumers (ordered.with_grouped_rank, no group keys):
     "x56_global_index",
     "x223_quantile_normalize",
     "x228_padding_efficiency",

@@ -1985,15 +1985,16 @@ def x136_pareto_concentration(spark, sf_dir):
     partition boundaries, integer ones cannot; prices are 2dp so cents
     are exact), so the |customers| relation never passes through a
     single-partition sort."""
-    from social_warner_spark.operators.ordered import with_global_cumsum
+    from social_warner_spark.operators.ordered import with_grouped_cumsum
 
     o = T(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("_vc")
     )
     tot = per.agg(F.sum("_vc").alias("_t"))
-    cum = with_global_cumsum(
+    cum = with_grouped_cumsum(
         per.withColumn("_one", F.lit(1).cast("long")),
+        [],
         [F.desc("_vc"), F.asc("o_custkey")],
         {"_cumvc": "_vc", "rk": "_one"},
     )

@@ -1127,7 +1127,7 @@ def x184_rank_auc(spark, sf_dir):
     per-row global rank window this replaces).  No single-partition
     sort; the windowed relation is |distinct scores| grouped first.
     """
-    from social_warner_spark.operators.ordered import with_global_cumsum
+    from social_warner_spark.operators.ordered import with_grouped_cumsum
 
     e = T(spark, sf_dir, "embeddings").select(
         (F.col("label") >= AUC_POS_MIN).cast("int").alias("y"),
@@ -1136,7 +1136,7 @@ def x184_rank_auc(spark, sf_dir):
     per_score = e.groupBy("score").agg(
         F.count("*").alias("t"), F.sum("y").alias("ys")
     )
-    cum = with_global_cumsum(per_score, ["score"], {"cum_t": "t"})
+    cum = with_grouped_cumsum(per_score, [], ["score"], {"cum_t": "t"})
     ranked = cum.select(
         "t",
         "ys",
@@ -1327,11 +1327,12 @@ def x187_heaps_law(spark, sf_dir):
     # prefix-sum pass (operators/ordered.py) — the |docs| relation never
     # passes through a single-partition sort; the corpus size joins as a
     # broadcast 1-row stat.
-    from social_warner_spark.operators.ordered import with_global_cumsum
+    from social_warner_spark.operators.ordered import with_grouped_cumsum
 
     k1 = per_doc.agg(F.count("*").alias("k"))
-    cum = with_global_cumsum(
+    cum = with_grouped_cumsum(
         per_doc.withColumn("_one", F.lit(1).cast("long")),
+        [],
         ["doc_id"],
         {"nn": "n_toks", "vv": "new_types", "i": "_one"},
     ).crossJoin(F.broadcast(k1)).select("nn", "vv", "i", "k")

@@ -371,23 +371,20 @@ def x223_quantile_normalize(spark, sf_dir):
     p·(N−1)+1 hits exact integers at the endpoints.
 
     100 TB: the global order statistics come from operators/ordered.py
-    with_global_rank (range-partitioned ranks + broadcast offsets — NO
-    single-partition window); the lookup is two integer equi-joins
-    against that relation.  At real scale the exact ECDF would be
+    with_grouped_rank with no group keys (range-partitioned ranks +
+    broadcast offsets — NO single-partition window); the lookup is two
+    integer equi-joins against that relation.  At real scale the exact ECDF would be
     replaced by a bounded quantile grid (e.g. 10k knots) broadcast to
     the mappers; the exact form here is what makes the query
     hash-checkable end to end.
     """
     from social_warner_spark.functions.text import quality_score
-    from social_warner_spark.operators.ordered import (
-        with_global_rank,
-        with_grouped_rank,
-    )
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     d = T(spark, sf_dir, "documents").select(
         "doc_id", "source", quality_score(F.col("text")).alias("q")
     )
-    g = with_global_rank(d, [F.col("q"), F.col("doc_id")], "gidx")
+    g = with_grouped_rank(d, [], [F.col("q"), F.col("doc_id")], "gidx")
     nrow = g.agg(F.count("*").alias("n"))
     # r07: within-source ranks via the GROUPED distributed rank —
     # Window.partitionBy(source) is a per-source single-task corpus sort
@@ -852,21 +849,21 @@ def x228_padding_efficiency(spark, sf_dir):
     batches pad every sequence to the batch max, so batching in length
     order (the standard length-grouped / bucketed sampler) vs arrival
     order is pure saved compute.  Both layouts are formed relationally —
-    length order via operators/ordered.with_global_rank (range-partitioned
-    ranks, NO single-partition window), arrival order via doc_id blocks —
-    and each reports total real tokens, padded slots, waste, and the
-    waste ratio.
+    length order via operators/ordered.with_grouped_rank with no group
+    keys (range-partitioned ranks, NO single-partition window), arrival
+    order via doc_id blocks — and each reports total real tokens, padded
+    slots, waste, and the waste ratio.
 
     100 TB: two |docs|-row narrow maps + two |batches|-row aggregates;
     the comparison relation is 2 rows.
     """
     from social_warner_spark.functions.text import token_count_ws
-    from social_warner_spark.operators.ordered import with_global_rank
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     d = T(spark, sf_dir, "documents").select(
         "doc_id", token_count_ws(F.col("text")).alias("len")
     )
-    by_len = with_global_rank(d, [F.col("len"), F.col("doc_id")], "gidx")
+    by_len = with_grouped_rank(d, [], [F.col("len"), F.col("doc_id")], "gidx")
     layouts = {
         "length_grouped": by_len.withColumn(
             "batch", F.floor((F.col("gidx") - 1) / PACK_B)
@@ -1069,13 +1066,13 @@ def x230_vocab_budget_sweep(spark, sf_dir):
     coverage analyses in SentencePiece, arXiv:1808.06226).
 
     100 TB: frequencies are one map-side-combined groupBy; the rank over
-    the TYPE relation uses operators/ordered.with_global_rank (the type
-    relation is Heaps-law-bounded, but the machinery stays
-    range-partitioned anyway); the sweep is a |sizes|-way conditional
+    the TYPE relation uses operators/ordered.with_grouped_rank with no
+    group keys (the type relation is Heaps-law-bounded, but the
+    machinery stays range-partitioned anyway); the sweep is a |sizes|-way conditional
     aggregate over one broadcast-joined pass, not |sizes| scans.
     """
     from social_warner_spark.functions.text import tokens
-    from social_warner_spark.operators.ordered import with_global_rank
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     d = T(spark, sf_dir, "documents")
     counts = (
@@ -1083,7 +1080,7 @@ def x230_vocab_budget_sweep(spark, sf_dir):
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
     )
-    ranked = with_global_rank(counts, [(-F.col("c")), F.col("tok")], "rank")
+    ranked = with_grouped_rank(counts, [], [(-F.col("c")), F.col("tok")], "rank")
     total = ranked.agg(F.sum("c").alias("total"), F.count("*").alias("n_types"))
     swept = ranked.crossJoin(F.broadcast(total)).select(
         F.explode(F.array(*[F.lit(v) for v in VOCAB_SIZES])).alias("vocab_size"),

@@ -82,9 +82,9 @@ def x267_theil_sen(spark, sf_dir):
     r06), not a single-partition sort.  The rank keys carry the pair
     indices / day index as tiebreakers (r07, ADVICE r06): the median
     itself averages the two middle VALUES and is tie-insensitive, but
-    with_global_rank's contract wants a total order so the rank column
+    with_grouped_rank's contract wants a total order so the rank column
     stays deterministic for any later consumer."""
-    from social_warner_spark.operators.ordered import with_global_rank
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     idx = _daily(spark, sf_dir)
     a, b = idx.alias("a"), idx.alias("b")
@@ -96,7 +96,7 @@ def x267_theil_sen(spark, sf_dir):
         F.col("b.t").alias("_tj"),
     )
     m = slopes.agg(F.count("*").alias("m"))
-    ranked = with_global_rank(slopes, ["sl", "_ti", "_tj"], "r")
+    ranked = with_grouped_rank(slopes, [], ["sl", "_ti", "_tj"], "r")
     slope = (
         ranked.crossJoin(F.broadcast(m))
         .where(
@@ -112,7 +112,7 @@ def x267_theil_sen(spark, sf_dir):
         "t",
     )
     n = idx.agg(F.count("*").alias("n_days"))
-    rr = with_global_rank(resid, ["rs", "t"], "r").crossJoin(F.broadcast(n))
+    rr = with_grouped_rank(resid, [], ["rs", "t"], "r").crossJoin(F.broadcast(n))
     return (
         rr.where(
             (F.col("r") == F.floor((F.col("n_days") + 1) / 2))

@@ -92,15 +92,15 @@ def x55_embed_quantize(spark, sf_dir):
 
 
 def x56_global_index(spark, sf_dir):
-    """Dense global row numbering (operators/ordered.py:with_global_rank):
-    range-partitioned local ranks + broadcast cumulative offsets — total
-    order with NO single-partition window.  Ordered by (n_chars DESC,
+    """Dense global row numbering (operators/ordered.py:with_grouped_rank
+    with no group keys): range-partitioned local ranks + broadcast
+    cumulative offsets — total order with NO single-partition window.  Ordered by (n_chars DESC,
     doc_id) over documents."""
-    from social_warner_spark.operators.ordered import with_global_rank
+    from social_warner_spark.operators.ordered import with_grouped_rank
 
     d = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    out = with_global_rank(
-        d, [F.desc("n_chars"), F.asc("doc_id")], "gidx", num_partitions=8
+    out = with_grouped_rank(
+        d, [], [F.desc("n_chars"), F.asc("doc_id")], "gidx", num_partitions=8
     )
     return out.select("doc_id", "n_chars", "gidx")
 

@@ -13,15 +13,11 @@ ALLOW_FIELD_ADDITION maps to the connector's ``allowFieldAddition`` load-job
 option; on the parquet dev sink the equivalent is schema merging at READ
 time (see read_table) — parquet writes always carry their own file schema.
 The write action itself is the blocking barrier.
-
-The option assembly is a pure function (plan_write) so the connector
-contract stays unit-tested even where the connector jar is absent.
 """
 
 from __future__ import annotations
 
 import enum
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
@@ -37,56 +33,11 @@ class WriteDisposition(str, enum.Enum):
         return "overwrite" if self is WriteDisposition.WRITE_TRUNCATE else "append"
 
 
-@dataclass(frozen=True)
-class WritePlan:
-    """Everything a DataFrameWriter needs, assembled without touching Spark."""
-
-    mode: str
-    fmt: str
-    options: dict[str, str] = field(default_factory=dict)
-    partition_by: tuple[str, ...] = ()
-
-
-def plan_write(
-    disposition: WriteDisposition | str = WriteDisposition.WRITE_APPEND,
-    fmt: str = "parquet",
-    allow_field_addition: bool = True,
-    partition_by: list[str] | None = None,
-) -> WritePlan:
-    """Map reference load semantics to Spark writer settings (pure).
-
-    - disposition → SaveMode: WRITE_TRUNCATE→overwrite, WRITE_APPEND→append.
-      For BigQuery the connector derives the load-job disposition from
-      SaveMode, so the mode is the ONLY disposition channel (an explicit
-      ``writeDisposition`` option is not part of the connector contract and
-      would be ignored).
-    - ALLOW_FIELD_ADDITION → connector option ``allowFieldAddition`` (adds
-      the SchemaUpdateOption to the load job).  File formats get no write
-      option: additive evolution is a read-side concern there (read_table
-      sets ``mergeSchema``).
-    - partitioning is a file-format concern (BigQuery partitioning is DDL).
-    """
-    if isinstance(disposition, str):
-        disposition = WriteDisposition(disposition)
-    if fmt == "bigquery":
-        options = {"allowFieldAddition": "true"} if allow_field_addition else {}
-        if partition_by:
-            raise ValueError("partition_by applies to file formats only")
-        return WritePlan(mode=disposition.spark_mode, fmt="bigquery", options=options)
-    return WritePlan(
-        mode=disposition.spark_mode,
-        fmt=fmt,
-        options={},
-        partition_by=tuple(partition_by or ()),
-    )
-
-
 def write_table(
     df: DataFrame,
     path_or_table: str,
     disposition: WriteDisposition | str = WriteDisposition.WRITE_APPEND,
     fmt: str = "parquet",
-    allow_field_addition: bool = True,
     partition_by: list[str] | None = None,
     connector_format: str | None = None,
 ) -> int:
@@ -97,33 +48,47 @@ def write_table(
     action itself — no separate count() scan (the reference's explicit
     record count, main.py:88-91, for free).
 
-    ``connector_format`` routes the assembled WritePlan through a
-    stand-in registered format while keeping the plan semantics of
-    ``fmt``: tests drive the fmt="bigquery" branch end to end through a
-    recording Python DataSource (tests/test_sinks.py) without the
-    connector jar, and a deployment can swap in a custom connector
-    build the same way.  The plan (mode, options) is identical either
-    way — only the `.format()` name differs.
+    Reference load semantics → Spark writer settings:
+
+    - disposition → SaveMode: WRITE_TRUNCATE→overwrite, WRITE_APPEND→append.
+      For BigQuery the connector derives the load-job disposition from
+      SaveMode, so the mode is the ONLY disposition channel (an explicit
+      ``writeDisposition`` option is not part of the connector contract and
+      would be ignored).
+    - ALLOW_FIELD_ADDITION (always on, as in the reference) → connector
+      option ``allowFieldAddition`` (adds the SchemaUpdateOption to the
+      load job).  File formats get no write option: additive evolution is
+      a read-side concern there (read_table sets ``mergeSchema``).
+    - partitioning is a file-format concern (BigQuery partitioning is
+      DDL), so ``partition_by`` with fmt="bigquery" raises ValueError.
+
+    ``connector_format`` writes through a stand-in registered format
+    while keeping the semantics of ``fmt``: tests drive the
+    fmt="bigquery" branch end to end through a recording Python
+    DataSource (tests/test_sinks.py) without the connector jar, and a
+    deployment can swap in a custom connector build the same way.  The
+    mode and options are identical either way — only the `.format()`
+    name differs.
     """
     from pyspark.sql import Observation
     import pyspark.sql.functions as F
 
-    if isinstance(disposition, str):
-        disposition = WriteDisposition(disposition)
-    plan = plan_write(disposition, fmt, allow_field_addition, partition_by)
+    disposition = WriteDisposition(disposition)
+    if fmt == "bigquery" and partition_by:
+        raise ValueError("partition_by applies to file formats only")
     if df.isEmpty():
         raise ValueError("no rows to load (reference raises on empty input)")
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    writer = df.write.mode(plan.mode).format(connector_format or plan.fmt)
-    for k, v in plan.options.items():
-        writer = writer.option(k, v)
-    if plan.partition_by:
-        writer = writer.partitionBy(*plan.partition_by)
+    writer = df.write.mode(disposition.spark_mode).format(connector_format or fmt)
+    if fmt == "bigquery":
+        writer = writer.option("allowFieldAddition", "true")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     writer.save(path_or_table)
     rows = int(obs.get["rows"])
     logu.info("sink write complete", target=path_or_table, rows=rows,
-              disposition=disposition.value, format=plan.fmt)
+              disposition=disposition.value, format=fmt)
     return rows
 
 

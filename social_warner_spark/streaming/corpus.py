@@ -18,12 +18,41 @@ periodically — it is plain partitioned parquet.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from social_warner_spark.operators.dedup import incremental_neardup_matches
 from social_warner_spark.streaming.sinks import stream_foreach_batch
+
+
+def _stream_epochs(
+    stream: DataFrame,
+    path: str,
+    build: Callable[[DataFrame, int], DataFrame],
+    checkpoint: str,
+    timeout_sec: float,
+) -> None:
+    """Drain ``stream`` through foreachBatch: skip an empty micro-batch,
+    else land ``build(batch_df, epoch_id)`` in the ``epoch=<id>``
+    partition of ``path`` with dynamic partition overwrite, so a retried
+    epoch replaces itself instead of duplicating."""
+
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.take(1):
+            return
+        (
+            build(batch_df, epoch_id)
+            .withColumn("epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch")
+            .parquet(path)
+        )
+
+    stream_foreach_batch(stream, write, checkpoint, timeout_sec)
 
 
 def screen_and_append_stream(
@@ -42,9 +71,7 @@ def screen_and_append_stream(
     previously-accepted epochs."""
     base_cols = [id_col, text_col]
 
-    def screen(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def screen(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         seen = corpus.select(*base_cols)
         try:
             prior = spark.read.parquet(accepted_path)
@@ -58,18 +85,11 @@ def screen_and_append_stream(
         matches = incremental_neardup_matches(
             batch_df, seen, threshold, text_col=text_col, id_col=id_col
         )
-        novel = batch_df.select(*base_cols).join(
+        return batch_df.select(*base_cols).join(
             matches.select(id_col), id_col, "left_anti"
         )
-        (
-            novel.withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(accepted_path)
-        )
 
-    stream_foreach_batch(new_docs, screen, checkpoint, timeout_sec)
+    _stream_epochs(new_docs, accepted_path, screen, checkpoint, timeout_sec)
 
 
 def cms_cells_stream(
@@ -99,20 +119,11 @@ def cms_cells_stream(
     from social_warner_spark.functions.text import tokens
     from social_warner_spark.operators.sketch import cms_cells
 
-    def build(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def build(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         tok = batch_df.select(F.explode(tokens(F.col(text_col))).alias("token"))
-        (
-            cms_cells(tok, "token", depth, width)
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(cells_path)
-        )
+        return cms_cells(tok, "token", depth, width)
 
-    stream_foreach_batch(docs_stream, build, checkpoint, timeout_sec)
+    _stream_epochs(docs_stream, cells_path, build, checkpoint, timeout_sec)
 
 
 def merged_cms_cells(spark: SparkSession, cells_path: str) -> DataFrame:
@@ -142,16 +153,7 @@ def value_cells_stream(
     CMS cell stream."""
     from social_warner_spark.operators.drift import value_cells
 
-    def build(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        (
-            value_cells(batch_df, value_col)
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(cells_path)
-        )
+    def build(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return value_cells(batch_df, value_col)
 
-    stream_foreach_batch(rows_stream, build, checkpoint, timeout_sec)
+    _stream_epochs(rows_stream, cells_path, build, checkpoint, timeout_sec)

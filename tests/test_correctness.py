@@ -33,13 +33,28 @@ def test_every_query_has_oracle():
 #: gate).
 from social_warner_spark.queries import CHECK_PRIORITY
 
-#: Composite/dedup anchors that left the window when the global-rank
-#: consumers (x56, x223, x228, x230) took their slots.
+#: Queries the default tier mirrors beyond the window:
+#: - composite/dedup anchors that left the window when the global-rank
+#:   consumers (x56, x223, x228, x230) took their slots;
+#: - queries outside the window whose operators were rebuilt on a shared
+#:   code path: the global rank / running sum / ntile callers now on the
+#:   grouped operators with no group keys (x87, x136, x137, x184, x187,
+#:   x267) and the media decoders and payload builders now on one
+#:   mapInPandas / pandas-UDF scaffold (x49, x232, x235).
 _KEPT_DEFAULT = {
     "l1_exact_dedup",
     "x54_segment_dedup",
     "x100_hierarchy_depth",
     "x176_source_set_cover",
+    "x49_media_probe",
+    "x87_skew_report",
+    "x136_pareto_concentration",
+    "x137_rfm_segments",
+    "x184_rank_auc",
+    "x187_heaps_law",
+    "x232_gif_frame_stats",
+    "x235_jpeg_pixels",
+    "x267_theil_sen",
 }
 _DEFAULT_TIER = set(CHECK_PRIORITY) | _KEPT_DEFAULT
 

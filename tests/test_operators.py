@@ -102,6 +102,10 @@ def test_macro_malformed_raises():
     # deviation from the reference (returns None, data_extract.py:122): we raise
     with pytest.raises(ValueError):
         eval_date_macro("{{nDaysAgo soon}}", ANCHOR)
+    # an N reaching before year 1 is a bad macro too, not an OverflowError
+    for huge in ("{{nDaysAgo 1000000}}", "{{nDaysAgo 99999999999}}"):
+        with pytest.raises(ValueError, match="unparseable date macro"):
+            eval_date_macro(huge, ANCHOR)
 
 
 # --- A8/A9 nested parse + pivot ---------------------------------------------

@@ -1,6 +1,9 @@
 """operators/ordered.py: distributed total-order primitives must equal
 their single-partition window counterparts exactly, for any partition
-count (including partitions smaller than the neighbor horizon)."""
+count (including partitions smaller than the neighbor horizon).  A
+global rank or running sum is the grouped operator with no group keys,
+so the global tests call with_grouped_rank / with_grouped_cumsum with
+``[]``."""
 
 from __future__ import annotations
 
@@ -9,11 +12,13 @@ import pytest
 from pyspark.sql import Window
 
 from social_warner_spark.operators.ordered import (
+    _range_staged,
     with_global_cummax_excl,
-    with_global_cumsum,
     with_global_lead_structs,
     with_global_ntile,
-    with_global_rank,
+    with_grouped_cumsum,
+    with_grouped_rank,
+    with_grouped_value_range,
 )
 
 
@@ -34,7 +39,7 @@ def test_global_rank_matches_window(spark, p):
     for order in (ORDER, [F.desc("g"), F.asc("id")]):
         got = {
             r["id"]: r["_grank"]
-            for r in with_global_rank(df, order, num_partitions=p).collect()
+            for r in with_grouped_rank(df, [], order, num_partitions=p).collect()
         }
         want = {
             r["id"]: r["rk"]
@@ -110,8 +115,8 @@ def test_global_cumsum_matches_window(spark, p):
     df = _corpus(spark).withColumn("c", (F.col("v") % 5 + 1).cast("long"))
     got = {
         r["id"]: r["cum_c"]
-        for r in with_global_cumsum(
-            df, ORDER, {"cum_c": "c"}, num_partitions=p
+        for r in with_grouped_cumsum(
+            df, [], ORDER, {"cum_c": "c"}, num_partitions=p
         ).collect()
     }
     w = Window.orderBy(*ORDER).rowsBetween(Window.unboundedPreceding, 0)
@@ -140,14 +145,17 @@ def test_global_cummax_excl_matches_window(spark, p):
 
 def test_global_rank_single_row(spark):
     df = spark.createDataFrame([(1, 1, 1)], "g INT, v INT, id INT")
-    out = with_global_rank(df, ORDER, num_partitions=4).collect()
+    out = with_grouped_rank(df, [], ORDER, num_partitions=4).collect()
     assert [r["_grank"] for r in out] == [1]
 
 
 def test_ordered_ops_empty_input(spark):
     df = spark.createDataFrame([], "g INT, v INT, id INT")
-    assert with_global_rank(df, ORDER, num_partitions=4).count() == 0
-    assert with_global_cumsum(df, ORDER, {"c": "v"}, num_partitions=4).count() == 0
+    assert with_grouped_rank(df, [], ORDER, num_partitions=4).count() == 0
+    assert (
+        with_grouped_cumsum(df, [], ORDER, {"c": "v"}, num_partitions=4).count()
+        == 0
+    )
     assert with_global_cummax_excl(df, ORDER, "v", num_partitions=4).count() == 0
     assert (
         with_global_lead_structs(df, ORDER, ["v", "id"], 3, num_partitions=4).count()
@@ -162,10 +170,10 @@ def test_global_cumsum_rejects_non_integral_sources(spark):
         "d", F.col("v").cast("decimal(12,2)")
     )
     with pytest.raises(TypeError, match="integral"):
-        with_global_cumsum(dec, ORDER, {"cum": "d"}, num_partitions=4)
+        with_grouped_cumsum(dec, [], ORDER, {"cum": "d"}, num_partitions=4)
     flt = dec.withColumn("f", F.col("v").cast("double"))
     with pytest.raises(TypeError, match="integral"):
-        with_global_cumsum(flt, ORDER, {"cum": "f"}, num_partitions=4)
+        with_grouped_cumsum(flt, [], ORDER, {"cum": "f"}, num_partitions=4)
 
 
 @pytest.mark.parametrize("p", [1, 4, 16])
@@ -189,11 +197,6 @@ def test_global_cummax_excl_all_null_partition(spark, p):
 
 
 # ---- grouped primitives (r07: the low-cardinality-key counterparts) ----
-
-from social_warner_spark.operators.ordered import (  # noqa: E402
-    with_grouped_cumsum,
-    with_grouped_rank,
-)
 
 GROUP = ["g"]
 GORDER = ["v", "id"]
@@ -274,11 +277,13 @@ def test_grouped_ops_empty_and_single(spark):
 
 
 def test_grouped_cumsum_rejects_non_integral_sources(spark):
-    flt = spark.createDataFrame([(1, 1, 1)], "g INT, v INT, id INT").withColumn(
-        "f", F.col("v").cast("double")
+    dec = spark.createDataFrame([(1, 1, 1)], "g INT, v INT, id INT").withColumn(
+        "d", F.col("v").cast("decimal(12,2)")
     )
-    with pytest.raises(TypeError, match="integral"):
-        with_grouped_cumsum(flt, GROUP, GORDER, {"cum": "f"}, num_partitions=4)
+    flt = dec.withColumn("f", F.col("v").cast("double"))
+    for src in ("d", "f"):
+        with pytest.raises(TypeError, match="integral"):
+            with_grouped_cumsum(flt, GROUP, GORDER, {"cum": src}, num_partitions=4)
 
 
 def test_grouped_stage_balanced_under_dominant_group(spark):
@@ -288,13 +293,11 @@ def test_grouped_stage_balanced_under_dominant_group(spark):
     across partitions by the order key — assert no partition receives
     more than 2x the mean row count (the hot-shingle-cap test pattern).
     A Window.partitionBy(g) plan would put 90% of rows in ONE task."""
-    from social_warner_spark.operators.ordered import _grouped_staged
-
     n = 4000
     rows = [("en" if i % 10 != 0 else f"l{i % 7}", i * 37 % n, i) for i in range(n)]
     df = spark.createDataFrame(rows, "g STRING, v INT, id INT")
     p = 16
-    staged = _grouped_staged(df, ["g"], ["v", "id"], num_partitions=p)
+    staged = _range_staged(df, ["g", "v", "id"], num_partitions=p)
     sizes = [r["c"] for r in staged.groupBy("_pid").agg(F.count("*").alias("c")).collect()]
     assert sum(sizes) == n
     mean = n / len(sizes)
@@ -325,8 +328,6 @@ def test_grouped_value_range_matches_window(spark, p):
     window exactly — including frames that span MULTIPLE range-partition
     boundaries (the halo band join is not limited to the immediate
     predecessor partition)."""
-    from social_warner_spark.operators.ordered import with_grouped_value_range
-
     n = 300
     # dense value field so a 25-wide band crosses several of 16 partitions
     rows = [((i * 7919) % 3, float((i * 37) % 100) + i * 0.001, i) for i in range(n)]
@@ -359,8 +360,6 @@ def test_grouped_value_range_matches_window(spark, p):
 
 
 def test_grouped_value_range_empty_and_single(spark):
-    from social_warner_spark.operators.ordered import with_grouped_value_range
-
     empty = spark.createDataFrame([], "g INT, v DOUBLE, id INT")
     assert (
         with_grouped_value_range(
@@ -440,15 +439,16 @@ def test_grouped_primitives_random_equivalence(spark, rows, p):
 )
 @given(rows=_rand_rows, p=st.sampled_from([1, 4, 16]))
 def test_global_cumsum_random_equivalence_with_nulls(spark, rows, p):
-    """with_global_cumsum ≡ sum() over (ORDER BY) on random inputs with
-    NULL runs anywhere — including an all-NULL prefix spanning several
-    range partitions (the case the r07 parity rule fixed)."""
+    """Global running sums (with_grouped_cumsum, no group keys) ≡ sum()
+    over (ORDER BY) on random inputs with NULL runs anywhere — including
+    an all-NULL prefix spanning several range partitions (the case the
+    r07 parity rule fixed)."""
     data = [(v * 7 + g, i, c) for i, (g, v, c) in enumerate(rows)]
     df = spark.createDataFrame(data, "v int, id int, c long")
     got = {
         r["id"]: r["cum"]
-        for r in with_global_cumsum(
-            df, ["v", "id"], {"cum": "c"}, num_partitions=p
+        for r in with_grouped_cumsum(
+            df, [], ["v", "id"], {"cum": "c"}, num_partitions=p
         ).collect()
     }
     w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
@@ -481,8 +481,6 @@ def test_grouped_value_range_random_equivalence(spark, rows, p, off):
     random inputs: duplicate values (RANGE ties share frames), groups
     that vanish, offsets smaller/larger than the value spacing, and
     partition counts far above the row count."""
-    from social_warner_spark.operators.ordered import with_grouped_value_range
-
     data = [(f"g{g}", float(v), i) for i, (g, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "g string, v double, id int")
     got = {
@@ -523,8 +521,6 @@ def test_global_ntile_random_equivalence(spark, n, buckets, p):
     """The closed-form ntile bucket ≡ Spark's ntile() for random row
     counts around and below the bucket count (the q == 0 branch) and
     partition counts above the row count."""
-    from social_warner_spark.operators.ordered import with_global_ntile
-
     df = spark.createDataFrame(
         [((i * 13) % 97, i) for i in range(n)], "v int, id int"
     )

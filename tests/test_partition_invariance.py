@@ -6,8 +6,9 @@ production would; any query whose output shifts with
 spark.sql.shuffle.partitions (a rank tied to physical row order, a
 range-sampler boundary leaking into values, a non-deterministic
 first()/collect_list survivorship) would flake the hash compare.  This
-sweep pins the most order-sensitive machinery: with_global_rank consumers,
-iterative argmax loops, TakeOrdered selections, and window-rank queues.
+sweep pins the most order-sensitive machinery: global rank and running-sum
+consumers, iterative argmax loops, TakeOrdered selections, and window-rank
+queues.
 """
 
 from __future__ import annotations
@@ -24,6 +25,10 @@ SENSITIVE = [
     "x223_quantile_normalize", # global rank + two index joins
     "x228_padding_efficiency", # global rank batch layout
     "x230_vocab_budget_sweep", # global rank over the type relation
+    "x136_pareto_concentration",  # global running sums under a DESC key
+    "x137_rfm_segments",       # three chained global ntiles
+    "x184_rank_auc",           # global running sum over distinct scores
+    "x187_heaps_law",          # global running sums over doc order
     "x221_kcenter_coreset",    # iterative top-1 argmax rounds
     "x234_uncertainty_sampling",  # TakeOrdered + bounded rank window
     "x176_source_set_cover",   # greedy argmax loop over broadcast picks

@@ -79,9 +79,14 @@ def test_partial_failure_gives_500(spark):
     assert body["processed"] == 1  # isolation: 'a' still loaded
 
 
-def test_bad_date_macro_gives_400(spark):
+@pytest.mark.parametrize(
+    "macro",
+    ["{{nDaysAgo never}}", "{{nDaysAgo 1000000}}"],
+    ids=["never", "huge"],
+)
+def test_bad_date_macro_gives_400(spark, macro):
     body, code = handle_request(
-        {"start_date": "{{nDaysAgo never}}"},
+        {"start_date": macro},
         _configs(),
         _extract_factory(spark),
         load=lambda df, cfg: df.count(),

@@ -75,36 +75,6 @@ def test_partitioned_write_enables_partition_pruning(
     assert df.count() == src.where(pred).count() > 0
 
 
-def test_plan_write_bigquery_contract():
-    """The connector contract, unit-tested without the jar: disposition
-    rides SaveMode only (no writeDisposition option — the connector derives
-    the load-job disposition from SaveMode), ALLOW_FIELD_ADDITION maps to
-    allowFieldAddition."""
-    from social_warner_spark.sinks.writers import plan_write
-
-    p = plan_write("WRITE_TRUNCATE", fmt="bigquery")
-    assert (p.mode, p.fmt) == ("overwrite", "bigquery")
-    assert p.options == {"allowFieldAddition": "true"}
-    assert "writeDisposition" not in p.options
-
-    p = plan_write(WriteDisposition.WRITE_APPEND, fmt="bigquery",
-                   allow_field_addition=False)
-    assert (p.mode, p.options) == ("append", {})
-
-    with pytest.raises(ValueError, match="file formats"):
-        plan_write("WRITE_APPEND", fmt="bigquery", partition_by=["day"])
-
-
-def test_plan_write_parquet_contract():
-    """File formats carry no write-side schema-evolution option (mergeSchema
-    is read-side; see read_table) and keep partitioning."""
-    from social_warner_spark.sinks.writers import plan_write
-
-    p = plan_write("WRITE_APPEND", fmt="parquet", partition_by=["day"])
-    assert (p.mode, p.fmt, p.partition_by) == ("append", "parquet", ("day",))
-    assert p.options == {}
-
-
 def test_bigquery_branch_end_to_end_via_recording_datasource(spark, tmp_path):
     """Drive write_table's fmt="bigquery" branch through a REAL .save()
     without the connector jar: a Python DataSource registered under a
@@ -172,9 +142,20 @@ def test_bigquery_branch_end_to_end_via_recording_datasource(spark, tmp_path):
     target = str(tmp_path / "append_receipt.json")
     rows = write_table(
         df, target, disposition="WRITE_APPEND", fmt="bigquery",
-        allow_field_addition=False, connector_format="recording_bq",
+        connector_format="recording_bq",
     )
     got = json.load(open(target))
     assert rows == 7 and got["rows"] == 7
     assert got["overwrite"] is False  # WRITE_APPEND → SaveMode.append
-    assert not any(k.lower() == "allowfieldaddition" for k in got["options"])
+    assert {k.lower(): v for k, v in got["options"].items()} == {
+        "allowfieldaddition": "true"
+    }
+
+    # partitioning is a file-format concern: rejected before any write
+    target = str(tmp_path / "partitioned_receipt.json")
+    with pytest.raises(ValueError, match="file formats"):
+        write_table(
+            df, target, fmt="bigquery", partition_by=["s"],
+            connector_format="recording_bq",
+        )
+    assert not (tmp_path / "partitioned_receipt.json").exists()
