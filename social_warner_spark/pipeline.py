@@ -76,18 +76,22 @@ def transform_config_frame(
     # The tags array is handled by the nested parse below, never cast:
     # the reference's "string" cast branch only null-fills, it does not
     # stringify list values (data_transform.py:44).
-    dtypes = dict(out.dtypes)
+    array_tags = dict(out.dtypes).get(TAGS_COLUMN, "").startswith("array")
     cast_map = {
         c: t
         for c, t in config.dtype_map.items()
-        if not (c == TAGS_COLUMN and dtypes.get(c, "").startswith("array"))
+        if not (c == TAGS_COLUMN and array_tags)
     }
     out = cast_with_fill(out, cast_map)
-    if TAGS_COLUMN in out.columns:
+    if array_tags:
         out = out.withColumn(
             TAGS_COLUMN, parse_kv_list(F.col(f"`{TAGS_COLUMN}`"), TAGS_COLUMN)
         )
         out = dynamic_pivot_map(out, TAGS_COLUMN, keys=pivot_keys)
+    elif TAGS_COLUMN in out.columns:
+        # Non-list tags parse to an empty map in the reference
+        # (data_transform.py:102-150): no pivot columns, source dropped.
+        out = out.drop(TAGS_COLUMN)
     out = format_date_columns(out, [c for c in DATE_STR_COLUMNS if c in out.columns])
     out = format_timestamp_columns(out, [c for c in ISO_TS_COLUMNS if c in out.columns])
     return sanitize_column_names(out)

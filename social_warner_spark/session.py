@@ -13,6 +13,17 @@ knob is chosen so the same logical pipeline scales out:
 - Sane local shuffle parallelism for tests; on a real cluster AQE coalesces
   from `spark.sql.shuffle.partitions` down, so we leave it modest locally
   and document 2-3× core count for cluster deploys.
+- C1-only JIT for the driver JVM (``-XX:TieredStopAtLevel=1``).  The
+  product's processes are short-lived (one export request, one benchmark
+  run) and none lives long enough to amortize HotSpot's C2 compiler, whose
+  threads were measured at 35-46% of the JVM's CPU per export request,
+  still several requests after warm-up (PERF.md "JIT tier").  In local mode
+  the driver JVM is also the executor, so every job runs C1-only.
+  Long-lived processes pay in wall time instead: a whole test session runs
+  about 47% longer.  Executor JVMs on a cluster are therefore left alone on
+  purpose: they are long-lived, so C2 pays for itself there, and the saving
+  was measured only on short-lived local processes.  Pass ``extra_conf`` to
+  override it, as any key.
 """
 
 from __future__ import annotations
@@ -60,6 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SWS_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraJavaOptions", "-XX:TieredStopAtLevel=1")
         # Small dims (region/nation/customer at test SF) should always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

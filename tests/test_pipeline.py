@@ -117,6 +117,21 @@ def test_transform_config_frame_end_to_end(spark):
     assert fb["lfm&content&tags&genre"] is None   # empty tag list → all-null pivots
 
 
+@pytest.mark.parametrize("tags_type", ["string", "bigint"])
+def test_transform_non_array_tags_pivot_to_nothing(spark, tags_type):
+    # The reference maps non-list tags to {} (data_transform.py:102-150):
+    # no pivot columns and no tags column, every other column as usual.
+    cfg = parse_config("cfg1", CONFIG_DOC)
+    raw = _raw_fixture(spark).withColumn(
+        "lfm.content.tags", F.size("`lfm.content.tags`").cast(tags_type)
+    )
+    out = transform_config_frame(raw, cfg)
+    assert not [c for c in out.columns if c.startswith("lfm&content&tags")]
+    rows = {r["lfm&post&channel"]: r for r in out.collect()}
+    assert sorted(rows) == ["fb", "pin", "tw", "yt"]
+    assert rows["yt"]["metric&impressions"] == 1200
+
+
 def test_run_configs_isolation_and_skip(spark):
     cfg_ok = parse_config("ok", CONFIG_DOC)
     cfg_empty = parse_config("empty", CONFIG_DOC)
