@@ -114,7 +114,8 @@ def run_configs(
     """Per-config orchestration with the reference's isolation semantics
     (main.py:61-116): one config's failure logs and continues; an optional
     reports_filter restricts the run (main.py:64-65); empty extracts warn
-    and skip (main.py:80-85).
+    and skip (main.py:80-85).  Each extract is persisted for the duration
+    of its config, so the source is read once.
     """
     wanted = set(reports_filter) if reports_filter is not None else None
     results: list[ConfigRunResult] = []
@@ -128,8 +129,14 @@ def run_configs(
                 logu.warning("empty extract; skipping", config_id=config_id)
                 results.append(ConfigRunResult(config_id, "skipped_empty"))
                 continue
-            transformed = transform_config_frame(raw, config)
-            rows = load(transformed, config)
+            # The pivot-key discovery, the sink's empty check and the write
+            # each scan the extract; persisted, the source is fetched once
+            # and all three see the same rows.
+            raw = raw.persist()
+            try:
+                rows = load(transform_config_frame(raw, config), config)
+            finally:
+                raw.unpersist()
             logu.info("loaded", config_id=config_id, rows=rows)
             results.append(ConfigRunResult(config_id, "loaded", rows=rows))
         except Exception as exc:  # isolation: continue to next config

@@ -24,6 +24,17 @@ knob is chosen so the same logical pipeline scales out:
   purpose: they are long-lived, so C2 pays for itself there, and the saving
   was measured only on short-lived local processes.  Pass ``extra_conf`` to
   override it, as any key.
+- 1 MB Tungsten pages and broadcast blocks (``spark.buffer.pageSize``,
+  ``spark.broadcast.blockSize``), so neither is a G1 humongous object
+  (half a region or more; regions are 4 MB at the 8g driver heap).  Left
+  to Spark, the 8g heap gets 64 MB pages and 4 MB blocks.  A few pooled
+  64 MB aggregation pages then held ~190 MB of a ~540 MB heap, above
+  G1's 45% marking threshold, and every humongous allocation started a
+  concurrent mark: 0.2-1.8 GC CPU-s per export request C1-only, varying
+  from run to run with how far G1 had grown the heap (PERF.md "JIT tier").
+  1 MB is the floor Spark itself picks for small executors; with 8192
+  page-table entries it caps a task at 8 GB of Tungsten memory, so raise
+  the page size for executors that give one task more than that.
 """
 
 from __future__ import annotations
@@ -72,6 +83,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SWS_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-XX:TieredStopAtLevel=1")
+        .config("spark.buffer.pageSize", "1m")
+        .config("spark.broadcast.blockSize", "1m")
         # Small dims (region/nation/customer at test SF) should always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

@@ -158,6 +158,40 @@ def test_run_configs_isolation_and_skip(spark):
     assert loads == {"ok": 4}
 
 
+def logged_fetch_page(page_index: int, options: dict):
+    """Two fixture rows per page; appends the page index to ``options["log"]``
+    on every fetch."""
+    with open(options["log"], "a") as fh:
+        fh.write(f"{page_index}\n")
+    for i in range(2):
+        yield {"lfm.fact.date_str": "2024-01-05", "lfm.post.channel": f"c{page_index}{i}",
+               "lfm.brand.name": "acme", "lfm.content.tags": ["genre: drama"],
+               "metric.impressions": "1", "metric.engagement_rate": "0.5"}
+
+
+def test_run_configs_fetches_each_page_once(spark, tmp_path):
+    # Pivot-key discovery, the sink's empty check and the write all scan
+    # the extract; the source must still be read once per config.
+    from social_warner_spark.sinks import write_table
+    from social_warner_spark.sources import PagedRestDataSource
+
+    spark.dataSource.register(PagedRestDataSource)
+    log = tmp_path / "fetch.log"
+
+    def extract(cfg):
+        return (spark.read.format("paged_rest")
+                .schema("`lfm.fact.date_str` string, `lfm.post.channel` string, "
+                        "`lfm.brand.name` string, `lfm.content.tags` array<string>, "
+                        "`metric.impressions` string, `metric.engagement_rate` string")
+                .option("fetcher", "tests.test_pipeline:logged_fetch_page")
+                .option("num_pages", "3").option("log", str(log)).load())
+
+    results = run_configs({"cfg1": parse_config("cfg1", CONFIG_DOC)}, extract,
+                          lambda df, cfg: write_table(df, str(tmp_path / "sink")))
+    assert [(r.status, r.rows) for r in results] == [("loaded", 6)]
+    assert sorted(log.read_text().split()) == ["0", "1", "2"]
+
+
 def test_transform_missing_config_columns_fail_fast(spark):
     cfg = parse_config(
         "cfg1", dict(CONFIG_DOC, metrics={"metric.not_in_extract": "int64"})
