@@ -1,11 +1,12 @@
 """Distribution-drift operators.
 
 ``two_sample_ks`` is the general two-sample Kolmogorov-Smirnov test over
-COUNT CELLS — (value, count) relations rather than raw rows — so the
-same operator serves batch comparisons and the streaming monitor (whose
-per-epoch cells are additive and merge by summation, like the CMS and
-histogram sketches in operators/sketch.py).  The per-source query form
-(each source vs rest-of-corpus) is queries/x11_series.py:x172_ks_drift.
+COUNT CELLS — (value, count) relations rather than raw rows.  Cells are
+additive and merge by summation (``merge_cells``), like the CMS and
+histogram sketches in operators/sketch.py, so per-day cell relations
+fold into one distribution without a rescan (queries/x39_series.py:
+x378_drift_cells).  The per-source query form (each source vs
+rest-of-corpus) is queries/x11_series.py:x172_ks_drift.
 
 Scale: everything happens on the value GRID — bounded by the value
 domain, not the row count.  Producing cells from raw rows is one
@@ -22,13 +23,8 @@ from pyspark.sql import DataFrame, Window
 KS_COEF_05 = 1.3581015157406195
 
 
-def value_cells(rows: DataFrame, value_col: str) -> DataFrame:
-    """Exact (v, c) count cells for a value column — additive/mergeable."""
-    return rows.groupBy(F.col(value_col).alias("v")).agg(F.count("*").alias("c"))
-
-
 def merge_cells(cells: DataFrame) -> DataFrame:
-    """Merge cell relations (e.g. per-epoch partitions) by summation."""
+    """Merge cell relations (e.g. per-day cells) by summation."""
     return cells.groupBy("v").agg(F.sum("c").alias("c"))
 
 

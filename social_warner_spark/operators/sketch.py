@@ -83,8 +83,8 @@ def cms_cells(
     cardinality, and it reduces via map-side partial aggregation — the
     shuffle carries ≤ depth·width pre-combined rows per task.  Cells are
     mergeable by addition, which is what makes the sketch the right
-    heavy-hitter structure for streaming ingestion (sum cells across
-    epochs) and for 100 TB batch (sum cells across partitions).
+    heavy-hitter structure for incremental ingestion (sum cells across
+    loads) and for 100 TB batch (sum cells across partitions).
 
     md5 positions (audit.py:row_hash60 idiom) keep the construction
     engine-portable: any SQL engine reproduces the exact cells.
@@ -271,7 +271,7 @@ def hll_distinct(
 
     Registers are (group, bucket, max-rank) rows: ≤ m per group, reduced
     by map-side partial aggregation, and mergeable across partitions or
-    streaming epochs by the same groupBy-max — the distinct-count twin
+    incremental loads by the same groupBy-max — the distinct-count twin
     of cms_cells.
     """
     h = F.conv(F.substring(F.md5(F.col(item_col)), 1, 15), 16, 10).cast("long")

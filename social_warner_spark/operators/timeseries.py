@@ -23,8 +23,8 @@ Scale notes
   construction.
 - ``sessionize`` is one shuffle on ``user_id``; both the lag and the
   running sum reuse that single (user_id / ts) sort — Catalyst plans one
-  Window over one Exchange.  This is the batch twin of the
-  session_window streaming aggregation (queries/s_series.py s3).
+  Window over one Exchange.  This is the explicit-gap twin of the
+  session_window aggregation (queries/s_series.py s3).
 """
 
 from __future__ import annotations

@@ -64,7 +64,11 @@ _CAST_RULES: dict[str, tuple[str, object | None]] = {
 def cast_with_fill(df: DataFrame, dtype_map: Mapping[str, str]) -> DataFrame:
     """Per-column typed cast with the reference's null-fill semantics.
 
-    - int64:  unparsable/null → 0   (data_transform.py:38)
+    - int64:  unparsable/null → 0   (data_transform.py:38); decimal and
+      exponent strings ("3.0", "-2.7", "1e3") parse as a double and
+      truncate toward zero, as ``pd.to_numeric(...).astype("int64")``
+      does; values outside the long range → 0 (pandas' result there is
+      platform-defined)
     - float64: unparsable/null → 0.0 (data_transform.py:40)
     - datetime64[ns]: unparsable → NULL (data_transform.py:42)
     - string: nullable string (data_transform.py:44)
@@ -82,6 +86,9 @@ def cast_with_fill(df: DataFrame, dtype_map: Mapping[str, str]) -> DataFrame:
             raise ValueError(f"unsupported config dtype {dtype!r} for column {name!r}")
         spark_type, fill = _CAST_RULES[dtype]
         casted = qcol(name).try_cast(spark_type)
+        if spark_type == "long":
+            # try_cast(string AS bigint) rejects "1.5" and "1e3"
+            casted = F.coalesce(casted, qcol(name).try_cast("double").try_cast("long"))
         if fill is not None:
             casted = F.coalesce(casted, F.lit(fill).cast(spark_type))
         exprs.append(casted.alias(name))

@@ -1,10 +1,9 @@
-"""S-series — streaming semantics, batch-equivalent forms (SURVEY.md §2.d).
+"""S-series — streaming window semantics, batch forms (SURVEY.md §2.d).
 
-These run the SAME window expressions Structured Streaming uses
-(`window()`, `session_window()`), evaluated in batch so the DuckDB oracle
-can check them.  The streaming executions themselves (readStream + watermark
-+ availableNow) are parity-tested against these in tests/test_streaming.py
-(S4/S5) — stream output ≡ batch output is the contract.
+These run the window expressions Structured Streaming uses (`window()`,
+`session_window()`), evaluated in batch so the DuckDB oracle can check
+them.  The product is a request-scoped batch export, so no streaming
+execution of them is kept (SURVEY.md §2.d: S4/S5 removed).
 """
 
 from __future__ import annotations

@@ -378,8 +378,8 @@ def x346_partition_advisor(spark, sf_dir):
     layouts — event_type, day, hour, user_id%32 — the partition
     count, mean/max partition rows, skew ratio, and the small-
     partition share (under 1/4 of the mean) — the
-    small-files-vs-skew trade-off behind date-partitioned sink
-    writes (`write_table(partition_by=...)`), measured per key.
+    small-files-vs-skew trade-off behind a date-partitioned file
+    layout, measured per key.
 
     Scale: one counting aggregation per candidate key; reports are
     |partitions|-sized."""

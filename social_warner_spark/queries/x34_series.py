@@ -182,7 +182,7 @@ def x354_ivm_merge(spark, sf_dir):
     BASE partials (orders with key % 10 != 0) merged with DELTA
     partials (the rest) must equal the full recompute — the
     distributive-aggregate property (Gray's cube algebra) that every
-    streaming epoch-merge in this repo (CMS/hist cells) relies on,
+    cell merge in this repo (CMS/hist/drift cells) relies on,
     verified on the batch side with the match flag IN the result.
 
     Scale: two partial aggregations + one merge-by-key; the full

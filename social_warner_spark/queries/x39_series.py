@@ -1,36 +1,28 @@
-"""x39 series — round-4 stateful-twin anchors (x377–x378): hard driver
-rows for the `applyInPandasWithState` surface (streaming/stateful.py)
-and the streaming drift-cell monitor (streaming/corpus.py +
-operators/drift.py), per the round-3 verdict task 7.
+"""x39 series — stateful-fold anchors (x377–x378): hard driver rows for
+a pandas Misra–Gries fold and for the additive drift-cell monitor
+(operators/drift.py), per the round-3 verdict task 7.
 
-x377 is the deterministic BATCH twin of
-streaming/stateful.py:streaming_heavy_hitters — the same textbook
-Misra–Gries fold, run per event_type over a totally-ordered
-(ts, event_id) pass via ``applyInPandas``.  Feeding the whole table as
-one micro-batch to the streaming operator produces the identical
-summary (parity-tested in tests/test_streaming_state.py), so this query
-gives the stateful path a hard driver signal.  The raw summary is
-sequential by nature — not SQL-expressible — so the DECLARED output is
-the theorem-anchored projection of it: the guaranteed-present set
-(users with exact_count·k > n_processed, which Misra–Gries provably
+x377 runs the Misra–Gries heavy-hitter fold per event_type in pandas
+(partial folds merged by ``applyInPandas``; see Scale below).  The raw
+summary is sequential by nature — not SQL-expressible — so the DECLARED
+output is the theorem-anchored projection of it: the guaranteed-present
+set (users with exact_count·k > n_processed, which Misra–Gries provably
 retains) with their exact counts, plus a ``bound_ok`` column computed
 FROM the fold's estimates asserting the theorem-true error bound
 0 ≤ exact_count − est_count ≤ n_processed/k.  That projection is a
 pure filtered aggregate for the DuckDB oracle (``bound_ok`` is
 constant TRUE by theorem), while the Spark side still runs the real
-``applyInPandas`` fold: a dropped heavy hitter surfaces as a missing
-row (the guaranteed set inner-joins the summary) and a broken counter
-surfaces as ``bound_ok = false`` — either way a hard hash mismatch.
+pandas fold: a dropped heavy hitter surfaces as a missing row (the
+guaranteed set inner-joins the summary) and a broken counter surfaces
+as ``bound_ok = false`` — either way a hard hash mismatch.
 
-x378 is the batch twin of the streaming drift monitor
-(streaming/corpus.py:value_cells_stream → merge_cells →
-accumulated_drift): per-epoch value cells are built day-by-day exactly
-as the stream's epoch partitions would land, merged by summation, and
-KS-tested against the frozen baseline half.  Fully SQL-expressible →
-full DuckDB oracle.
+x378 is the drift monitor over per-day cells: daily value cells are
+built day-by-day, merged by summation (operators/drift.py:merge_cells)
+and KS-tested against the frozen baseline half.  Fully
+SQL-expressible → full DuckDB oracle.
 
 Reference scope note: the reference ETL (main.py, data_*.py) has no
-streaming surface; these queries anchor the north-star C6 extension
+stateful-fold surface; these queries anchor the north-star C6 extension
 (SURVEY.md §2.c) exactly where Spark's built-in windows end.
 
 Scale: the DECLARED x377 runs the mergeable-summaries layout (Agarwal,
@@ -42,12 +34,10 @@ over the BOUNDED partial-summary relation (≤ partitions·k rows per
 event_type).  Merged MG carries the same theorems as the sequential
 fold — every item with frequency > n/k is retained and
 0 ≤ exact − est ≤ n/k — so the declared guaranteed-set projection is
-bit-identical to the sequential fold's and invariant to partition
-layout, even though internal est_counts differ.  The k=20 sequential
-twin (`_mg_summary`) is kept solely as the streaming operator's parity
-anchor (one group per event_type IS that operator's state contract).
-x378 runs entirely on count cells — the only corpus-sized step is one
-map-side-combined groupBy.
+bit-identical to a sequential fold's and invariant to partition
+layout, even though internal est_counts differ.  x378 runs entirely
+on count cells — the only corpus-sized step is one map-side-combined
+groupBy.
 """
 
 from __future__ import annotations
@@ -59,9 +49,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from social_warner_spark.queries.common import T
-
-#: Misra–Gries capacity — matches streaming_heavy_hitters' default.
-MG_K = 20
 
 #: Capacity of the DECLARED x377 fold.  The guarantee theorem only
 #: surfaces users with frequency > n/k, so k must sit below the
@@ -75,68 +62,6 @@ MG_DECLARED_K = 1024
 
 #: x378 — baseline/current split and the daily epoch grain.
 DRIFT_SPLIT = "2024-01-16"
-
-
-def _mg_summary(spark, sf_dir, k: int = MG_K):
-    """Full Misra–Gries summary joined with exact counts (internal —
-    the declared x377 projects its guaranteed set from this; the
-    parity/guarantee tests in tests/test_streaming_state.py consume it
-    directly).
-
-    Per event_type the rows are sorted by (ts, event_id) — a total
-    order, event_id is unique — and folded through the textbook update:
-    increment if tracked, insert if fewer than k-1 counters, else
-    decrement all (dropping zeros).  The summary is therefore a pure
-    function of the data, reproducible across runs and engines.
-    """
-    ev = T(spark, sf_dir, "events").select(
-        "event_type", "user_id", "ts", "event_id"
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        table: dict[int, int] = {}
-        n = 0
-        for uid in pdf["user_id"]:
-            uid = int(uid)
-            n += 1
-            if uid in table:
-                table[uid] += 1
-            elif len(table) < k - 1:
-                table[uid] = 1
-            else:
-                table = {u: c - 1 for u, c in table.items() if c > 1}
-        ids = sorted(table)
-        return pd.DataFrame(
-            {
-                "event_type": [pdf["event_type"].iloc[0]] * len(ids),
-                "user_id": ids,
-                "est_count": [table[u] for u in ids],
-                "n_processed": [n] * len(ids),
-            }
-        )
-
-    summary = ev.groupBy("event_type").applyInPandas(
-        fold,
-        schema=(
-            "event_type string, user_id long, est_count long,"
-            " n_processed long"
-        ),
-    )
-    exact = ev.groupBy("event_type", "user_id").agg(
-        F.count("*").alias("exact_count")
-    )
-    return (
-        summary.join(exact, ["event_type", "user_id"])
-        .select(
-            "event_type",
-            "user_id",
-            "est_count",
-            "exact_count",
-            "n_processed",
-        )
-        .orderBy("event_type", "user_id")
-    )
 
 
 def _mg_summary_merged(spark, sf_dir, k: int = MG_DECLARED_K):
@@ -164,10 +89,9 @@ def _mg_summary_merged(spark, sf_dir, k: int = MG_DECLARED_K):
     values, so the merge is deterministic given the partials.
 
     The |docs|-scale work is therefore one embarrassingly-parallel scan
-    pass; nothing corpus-sized ever crosses into a single task (the
-    sequential `_mg_summary` routes each event_type's ENTIRE row set
-    through one pandas group — fine as the streaming twin's parity
-    anchor, wrong as a 100 TB layout).
+    pass; nothing corpus-sized ever crosses into a single task (a
+    sequential fold would route each event_type's ENTIRE row set
+    through one pandas group — wrong as a 100 TB layout).
     """
     ev = (
         T(spark, sf_dir, "events")
@@ -294,14 +218,13 @@ def x377_misra_gries_twin(spark, sf_dir):
 
     Runs the MERGEABLE fold (`_mg_summary_merged`: per-scan-partition
     partials + bounded PODS'12 merge — the 100 TB layout; no
-    corpus-sized pandas group) at MG_DECLARED_K (1024, vs the streaming
-    default 20) so the guaranteed set is non-trivial at every test
-    scale — see the MG_DECLARED_K note.  Merged est_counts differ from
-    the sequential fold's, but the declared projection is a theorem
-    invariant of BOTH (guaranteed set from exact counts; bound_ok holds
-    for any valid MG summary), so the oracle hash is unchanged and
-    partition-layout independent.  The k=20 sequential twin parity with
-    the streaming operator stays covered by tests/test_streaming_state.py.
+    corpus-sized pandas group) at MG_DECLARED_K (1024) so the
+    guaranteed set is non-trivial at every test scale — see the
+    MG_DECLARED_K note.  Merged est_counts differ from a sequential
+    fold's, but the declared projection is a theorem invariant of BOTH
+    (guaranteed set from exact counts; bound_ok holds for any valid MG
+    summary), so the oracle hash is unchanged and partition-layout
+    independent (tests/test_x39_invariants.py).
     """
     full = _mg_summary_merged(spark, sf_dir, k=MG_DECLARED_K)
     return (
@@ -327,8 +250,7 @@ def x377_misra_gries_twin(spark, sf_dir):
 
 
 def x378_drift_cells(spark, sf_dir):
-    """Batch twin of the streaming drift monitor: daily epoch cell
-    relations (exactly the stream's ``epoch=<id>`` partitions) merged by
+    """Drift monitor over daily cell relations: per-day cells merged by
     summation, KS-tested against the frozen first-half baseline.
 
     Cells bin ``value`` by floor() — the additive (v, c) relation of
@@ -341,12 +263,11 @@ def x378_drift_cells(spark, sf_dir):
         F.to_date("ts").alias("day"),
         F.floor("value").cast("long").alias("vbin"),
     )
-    # ONE corpus scan: daily cells keyed (day, v) — exactly the stream's
-    # per-epoch partitions.  Both halves then derive at CELL granularity
-    # (days x bins rows), so baseline assembly exercises the same
-    # additive merge the streaming monitor relies on.  The cell relation
-    # is persisted because it has two consumers — without it Catalyst
-    # re-expands the corpus scan per consumer.
+    # ONE corpus scan: daily cells keyed (day, v).  Both halves then
+    # derive at CELL granularity (days x bins rows) through the additive
+    # merge.  The cell relation is persisted because it has two
+    # consumers — without it Catalyst re-expands the corpus scan per
+    # consumer.
     from social_warner_spark.caching import register_persisted
 
     daily = register_persisted(

@@ -137,7 +137,7 @@ def x35_bm25_search(spark, sf_dir):
 def x36_sessionize(spark, sf_dir):
     """Gap-based sessionization (operators/timeseries.py): per-user
     sessions split at >30 min of inactivity, with per-session stats.
-    The batch twin of the s3 session_window streaming aggregation."""
+    The explicit-gap twin of the s3 session_window aggregation."""
     from social_warner_spark.operators.timeseries import sessionize
 
     s = sessionize(T(spark, sf_dir, "events"), gap_minutes=SESSION_GAP_MIN)

@@ -38,7 +38,6 @@ def write_table(
     path_or_table: str,
     disposition: WriteDisposition | str = WriteDisposition.WRITE_APPEND,
     fmt: str = "parquet",
-    partition_by: list[str] | None = None,
     connector_format: str | None = None,
 ) -> int:
     """Write with reference dispositions; returns row count written.
@@ -59,8 +58,6 @@ def write_table(
       option ``allowFieldAddition`` (adds the SchemaUpdateOption to the
       load job).  File formats get no write option: additive evolution is
       a read-side concern there (read_table sets ``mergeSchema``).
-    - partitioning is a file-format concern (BigQuery partitioning is
-      DDL), so ``partition_by`` with fmt="bigquery" raises ValueError.
 
     ``connector_format`` writes through a stand-in registered format
     while keeping the semantics of ``fmt``: tests drive the
@@ -74,8 +71,6 @@ def write_table(
     import pyspark.sql.functions as F
 
     disposition = WriteDisposition(disposition)
-    if fmt == "bigquery" and partition_by:
-        raise ValueError("partition_by applies to file formats only")
     if df.isEmpty():
         raise ValueError("no rows to load (reference raises on empty input)")
     obs = Observation()
@@ -83,8 +78,6 @@ def write_table(
     writer = df.write.mode(disposition.spark_mode).format(connector_format or fmt)
     if fmt == "bigquery":
         writer = writer.option("allowFieldAddition", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     writer.save(path_or_table)
     rows = int(obs.get["rows"])
     logu.info("sink write complete", target=path_or_table, rows=rows,

@@ -58,6 +58,15 @@ def test_cast_with_fill_semantics(spark):
     assert types["i"] == "bigint" and types["f"] == "double"
 
 
+def test_cast_with_fill_int64_parses_like_pandas_to_numeric(spark):
+    """int64 follows pd.to_numeric(errors="coerce").fillna(0).astype("int64"):
+    decimal and exponent strings truncate toward zero instead of zeroing."""
+    vals = ["1.5", "3.0", "1e3", "-2.7", " 7 ", "abc", None, "NaN", "42"]
+    df = spark.createDataFrame([(v,) for v in vals], "i string")
+    got = [r.i for r in cast_with_fill(df, {"i": "int64"}).collect()]
+    assert got == [1, 3, 1000, -2, 7, 0, 0, 0, 42]
+
+
 def test_cast_unknown_dtype_raises(spark):
     df = spark.createDataFrame([("1",)], "x string")
     with pytest.raises(ValueError, match="unsupported config dtype"):
@@ -224,6 +233,45 @@ def test_kmv_small_group_is_exact(spark):
     df = spark.range(10).select(F.lit("g").alias("g"), F.col("id").alias("k"))
     est = kmv_estimate(kmv_sketch(df, "k", "g", 64), 64, "g").collect()[0]
     assert est.est_distinct == 10.0
+
+
+def _value_cells(df, col):
+    """Exact (v, c) count cells of one column."""
+    return df.groupBy(F.col(col).alias("v")).agg(F.count("*").alias("c"))
+
+
+def test_two_sample_ks_hand_checked(spark):
+    """a={1,2}, b={2,3}: F_a=(.5,1,1), F_b=(0,.5,1) → KS=0.5; and a
+    distribution compared with itself gives KS=0."""
+    from social_warner_spark.operators.drift import two_sample_ks
+
+    a = _value_cells(spark.createDataFrame([(1,), (2,)], ["x"]), "x")
+    b = _value_cells(spark.createDataFrame([(2,), (3,)], ["x"]), "x")
+    r = two_sample_ks(a, b).first()
+    assert r["ks"] == 0.5 and r["n_a"] == 2 and r["n_b"] == 2
+    same = two_sample_ks(a, a).first()
+    assert same["ks"] == 0.0 and not same["drifted"]
+
+
+def test_shifted_distribution_flags_drift(spark):
+    """Cells of a distribution shifted far from the baseline, built as two
+    halves and merged by summation, equal the cells of the whole and
+    exceed the critical value with KS = 1 (disjoint supports)."""
+    from social_warner_spark.operators.drift import merge_cells, two_sample_ks
+
+    base = _value_cells(
+        spark.range(0, 300).select((F.col("id") % 20 + 10).alias("n")), "n"
+    )
+    shifted = spark.range(0, 300).select("id", (F.col("id") % 20 + 40).alias("n"))
+    merged = merge_cells(
+        _value_cells(shifted.where(F.col("id") < 150), "n").unionAll(
+            _value_cells(shifted.where(F.col("id") >= 150), "n")
+        )
+    )
+    whole = _value_cells(shifted, "n")
+    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
+    r = two_sample_ks(merged, base).first()
+    assert r["drifted"] and r["ks"] == 1.0
 
 
 def test_triangle_count_known_graph(spark):

@@ -447,11 +447,14 @@ def test_duplicated_spans_matches_bruteforce(spark, docs):
 def test_two_sample_ks_matches_bruteforce(spark, a, b):
     """Random integer samples: KS from the cell operator must equal the
     directly-computed sup |F_a - F_b| over the union grid."""
-    from social_warner_spark.operators.drift import two_sample_ks, value_cells
+    from social_warner_spark.operators.drift import two_sample_ks
 
-    da = spark.createDataFrame([(v,) for v in a], ["x"])
-    db = spark.createDataFrame([(v,) for v in b], ["x"])
-    r = two_sample_ks(value_cells(da, "x"), value_cells(db, "x")).first()
+    da = spark.createDataFrame([(v,) for v in a], ["v"])
+    db = spark.createDataFrame([(v,) for v in b], ["v"])
+    r = two_sample_ks(
+        da.groupBy("v").agg(F.count("*").alias("c")),
+        db.groupBy("v").agg(F.count("*").alias("c")),
+    ).first()
 
     grid = sorted(set(a) | set(b))
     fa = fb = 0.0

@@ -34,47 +34,6 @@ def test_empty_input_guard(spark, tmp_path):
         write_table(empty, str(tmp_path / "t2"))
 
 
-@pytest.mark.parametrize(
-    "table, part_col, part_expr, pred, literals",
-    [
-        ("events", "day", "date_format(ts, 'yyyy-MM-dd')",
-         "day = '2024-01-05'", ["2024-01-05"]),
-        ("events", "day", "date_format(ts, 'yyyy-MM-dd')",
-         "day BETWEEN '2024-01-03' AND '2024-01-04'", ["2024-01-03", "2024-01-04"]),
-        ("lineitem", "ship_month", "date_format(l_shipdate, 'yyyy-MM')",
-         "ship_month = '1995-03'", ["1995-03"]),
-    ],
-    ids=["events_day", "events_day_range", "lineitem_ship_month"],
-)
-def test_partitioned_write_enables_partition_pruning(
-    spark, sf_smoke, tmp_path, table, part_col, part_expr, pred, literals
-):
-    """The 100 TB layout contract (PERF.md): facts partitioned by date →
-    date filters (point or range) become partition pruning, not data scans."""
-    import io, contextlib
-    import pyspark.sql.functions as F
-    from social_warner_spark.catalog import load_table
-
-    target = str(tmp_path / f"{table}_by_{part_col}")
-    src = load_table(spark, sf_smoke, table).withColumn(part_col, F.expr(part_expr))
-    write_table(src, target, WriteDisposition.WRITE_TRUNCATE, partition_by=[part_col])
-
-    part = spark.read.parquet(target)
-    assert part.select(part_col).distinct().count() > 3, "fixture must span partitions"
-    df = part.where(pred)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    # the filter lands in PartitionFilters (directory pruning), NOT as a
-    # data filter the scan has to evaluate per row
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and part_col in pf[0], plan
-    assert all(lit in pf[0] for lit in literals), pf[0]
-    # pruned read returns exactly the unpartitioned filter's rows
-    assert df.count() == src.where(pred).count() > 0
-
-
 def test_bigquery_branch_end_to_end_via_recording_datasource(spark, tmp_path):
     """Drive write_table's fmt="bigquery" branch through a REAL .save()
     without the connector jar: a Python DataSource registered under a
@@ -151,11 +110,3 @@ def test_bigquery_branch_end_to_end_via_recording_datasource(spark, tmp_path):
         "allowfieldaddition": "true"
     }
 
-    # partitioning is a file-format concern: rejected before any write
-    target = str(tmp_path / "partitioned_receipt.json")
-    with pytest.raises(ValueError, match="file formats"):
-        write_table(
-            df, target, fmt="bigquery", partition_by=["s"],
-            connector_format="recording_bq",
-        )
-    assert not (tmp_path / "partitioned_receipt.json").exists()
