@@ -25,22 +25,25 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: star join revenue by region on sf0.001."""
     from social_warner_spark.queries.c_series import c3_star_join
+    from social_warner_spark.session import prepare_session
 
-    return c3_star_join(spark, SF0001)
+    return c3_star_join(prepare_session(spark), SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from social_warner_spark.caching import release_persisted_intermediates
     from social_warner_spark.queries import all_queries
+    from social_warner_spark.session import prepare_session
 
     def sequenced(fn: Callable[[SparkSession, str], DataFrame]):
-        # The grading driver runs queries back to back; releasing the
-        # PREVIOUS query's registered persisted intermediates (shingle
-        # relations, centroids, edge tables) at each call keeps memory
-        # flat across the run — the same lifecycle bench.py applies.
+        # Callers run queries back to back on a session they built;
+        # each call prepares it and releases the PREVIOUS query's registered
+        # persisted intermediates (shingle relations, centroids, edge
+        # tables), which keeps memory flat across the run — the same
+        # lifecycle bench.py applies.
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             release_persisted_intermediates()
-            return fn(spark, sf_dir)
+            return fn(prepare_session(spark), sf_dir)
 
         return run
 

@@ -6,8 +6,12 @@
 # change:
 #
 #   scripts/full_suite_gate.sh
+#
+# Extra arguments go to pytest, e.g. `-x`, `-rf` or a test path relative to
+# the repo root.  With no path given, pytest runs its `testpaths` (tests/,
+# pytest.ini); a path narrows the run to that path.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 export SPARK_LOCAL_DIRS=/tmp/spark-local
-exec python -m pytest tests/ -m "" -q --continue-on-collection-errors -p no:cacheprovider
+exec python -m pytest -m "" -q --continue-on-collection-errors -p no:cacheprovider "$@"

@@ -36,12 +36,12 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
-import importlib
 import json
 import sys
 from typing import Any, Callable
 
 from social_warner_spark import logging_util as logu
+from social_warner_spark.sources.rest import resolve_callable
 
 
 def _make_server(host: str, port: int, app):
@@ -49,26 +49,6 @@ def _make_server(host: str, port: int, app):
     from wsgiref.simple_server import make_server
 
     return make_server(host, port, app)
-
-
-def resolve_callable(ref: str) -> Callable:
-    """Resolve a ``module.path:callable`` reference with loud errors."""
-    mod_name, sep, attr = ref.partition(":")
-    if not sep or not mod_name or not attr:
-        raise ValueError(
-            f"callable reference {ref!r} must look like 'package.module:function'"
-        )
-    try:
-        mod = importlib.import_module(mod_name)
-    except ImportError as exc:
-        raise ValueError(f"cannot import module {mod_name!r}: {exc}") from exc
-    try:
-        fn = getattr(mod, attr)
-    except AttributeError as exc:
-        raise ValueError(f"module {mod_name!r} has no attribute {attr!r}") from exc
-    if not callable(fn):
-        raise ValueError(f"{ref!r} resolved to a non-callable {type(fn).__name__}")
-    return fn
 
 
 def _build_parser() -> argparse.ArgumentParser:

@@ -34,33 +34,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs required for deterministic testdata reads.
-
-    - ``nanosAsLong``: events.parquet carries TIMESTAMP(NANOS), which the
-      vectorized parquet reader rejects; read as long and convert below.
-    - UTC session timezone: deterministic rendering regardless of who built
-      the session (the driver passes us its own).
-    - shuffle-partition right-sizing: a session still at Spark's static
-      default (200) pays ~6× task-scheduling overhead on the multi-stage /
-      iterative pipelines at test SF (measured: x31 57s → 9s).  A session
-      whose builder/spark-submit conf set the key explicitly is never
-      touched (detected via the SparkContext conf) — the 200-default check
-      alone can't distinguish a deliberate runtime set of exactly 200,
-      which is the one case this heuristic would override.  At cluster
-      scale the equivalent knob is 2-3× total cores with AQE coalescing
-      down (session.py).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = "spark.sql.shuffle.partitions"
-    explicitly_built = spark.sparkContext.getConf().contains(key)
-    if not explicitly_built and spark.conf.get(key, "200") == "200":
-        cores = spark.sparkContext.defaultParallelism
-        spark.conf.set(key, str(max(8, min(64, 2 * cores))))
-    return spark
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Distributed parquet scan for one logical table.
 
@@ -71,9 +44,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS); Spark has no nanos
     timestamp, so it is read as long and truncated to microseconds — the
     same truncation DuckDB applies on read, so both engines see identical
-    values.
+    values.  The long read is a session setting, made once per session by
+    ``get_spark`` and ``__spark_entry__``; loading a table changes no
+    session setting.
     """
-    prepare_session(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: truncate nanos→micros exactly as DuckDB does

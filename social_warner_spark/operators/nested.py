@@ -82,7 +82,7 @@ def distinct_map_keys(df: DataFrame, map_col: str) -> list[str]:
 
 
 def dynamic_pivot_map(
-    df: DataFrame, map_col: str, drop_source: bool = True, keys: list[str] | None = None
+    df: DataFrame, map_col: str, keys: list[str] | None = None
 ) -> DataFrame:
     """Pass 2: one top-level column per key; absent keys → NULL
     (reference data_transform.py:55 ``.where(notna(), None)``).
@@ -93,7 +93,7 @@ def dynamic_pivot_map(
 
     if keys is None:
         keys = distinct_map_keys(df, map_col)
-    others = [c for c in df.columns if c != map_col or not drop_source]
+    others = [c for c in df.columns if c != map_col]
     return df.select(
         *[qcol(c).alias(c) for c in others],
         *[qcol(map_col).getItem(k).alias(k) for k in keys],

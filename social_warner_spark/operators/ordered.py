@@ -63,8 +63,9 @@ def _require_integral(df: DataFrame, cols: list[str], who: str) -> None:
             )
 
 
-def _range_staged(df: DataFrame, order_cols: list, num_partitions: int | None):
-    """repartitionByRange + ascending partition id column ``_pid``.
+def _range_staged(df: DataFrame, order_cols: list):
+    """repartitionByRange into the session's ``spark.sql.shuffle.partitions``
+    ranges + ascending partition id column ``_pid``.
 
     PERSISTED (and registered for host release): the boundary-relation
     collect and the final compute must read the SAME materialization —
@@ -73,8 +74,7 @@ def _range_staged(df: DataFrame, order_cols: list, num_partitions: int | None):
     offsets would label the wrong rows."""
     from social_warner_spark.caching import register_persisted
 
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     staged = df.repartitionByRange(p, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -101,12 +101,11 @@ def with_global_ntile(
     order_cols: list,
     buckets: int,
     tile_col: str = "_tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact ``ntile(buckets) over (ORDER BY order_cols)`` without the
     single-partition sort: two-pass global rank + closed-form bucket
     (the total comes free from the rank pass's partition counts)."""
-    ranked, totals = _grouped_ranked(df, [], order_cols, "_grank_nt", num_partitions)
+    ranked, totals = _grouped_ranked(df, [], order_cols, "_grank_nt")
     return ranked.withColumn(
         tile_col, ntile_from_rank(F.col("_grank_nt"), totals.get((), 0), buckets)
     ).drop("_grank_nt")
@@ -117,7 +116,6 @@ def with_global_cummax_excl(
     order_cols: list,
     val_col: str,
     out_col: str = "_cummax",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append the EXCLUSIVE global running max (frame UNBOUNDED
     PRECEDING .. 1 PRECEDING) over the total order — the
@@ -125,7 +123,7 @@ def with_global_cummax_excl(
     sort: per-partition exclusive running max, combined with the
     broadcast max over all EARLIER partitions (P-row collect).  NULL
     for the global first row, exactly like the window form."""
-    staged = _range_staged(df, order_cols, num_partitions)
+    staged = _range_staged(df, order_cols)
     maxes = {
         r["_pid"]: r["m"]
         for r in staged.groupBy("_pid").agg(F.max(val_col).alias("m")).collect()
@@ -165,12 +163,11 @@ def _grouped_ranked(
     group_cols: list[str],
     order_cols: list,
     rank_col: str,
-    num_partitions: int | None,
 ) -> tuple[DataFrame, dict[tuple, int]]:
     """with_grouped_rank's core: the ranked frame plus each group's total
     row count (keyed by the group-key tuple; ``()`` with no group keys),
     both from the one boundary collect."""
-    staged = _range_staged(df, [*group_cols, *order_cols], num_partitions)
+    staged = _range_staged(df, [*group_cols, *order_cols])
     rows = staged.groupBy("_pid", *group_cols).agg(F.count("*").alias("c")).collect()
     totals: dict[tuple, int] = {}
     offsets = []
@@ -198,7 +195,6 @@ def with_grouped_rank(
     order_cols: list,
     rank_col: str = "_grank",
     count_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append the exact ``row_number() over (PARTITION BY group_cols
     ORDER BY order_cols)`` without routing each group through one task:
@@ -228,7 +224,7 @@ def with_grouped_rank(
     free from the same boundary collect (a G-row broadcast join), so
     rank-position math (rn−1)/(n−1) needs no second corpus aggregation
     and no ``count(*) over (partition by group)`` window."""
-    out, totals = _grouped_ranked(df, group_cols, order_cols, rank_col, num_partitions)
+    out, totals = _grouped_ranked(df, group_cols, order_cols, rank_col)
     if count_col is not None:
         gtypes = [StructField(c, df.schema[c].dataType) for c in group_cols]
         counts = df.sparkSession.createDataFrame(
@@ -244,7 +240,6 @@ def with_grouped_cumsum(
     group_cols: list[str],
     order_cols: list,
     sum_cols: dict[str, str],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append inclusive per-group running sums over the (group, order)
     total order — ``sum_cols`` maps output name → source column —
@@ -268,7 +263,7 @@ def with_grouped_cumsum(
     the same Window node) decides NULL vs carried sum."""
     srcs = sorted(set(sum_cols.values()))
     _require_integral(df, srcs, "with_grouped_cumsum")
-    staged = _range_staged(df, [*group_cols, *order_cols], num_partitions)
+    staged = _range_staged(df, [*group_cols, *order_cols])
     rows = staged.groupBy("_pid", *group_cols).agg(
         *[F.sum(c).alias(c) for c in srcs],
         *[F.count(c).alias(f"_cnt_{c}") for c in srcs],
@@ -321,7 +316,6 @@ def with_grouped_value_range(
     val_col: str,
     lower_offset: int,
     agg_builders: dict,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-group RANGE-frame window aggregates (``RANGE BETWEEN
     |lower_offset| PRECEDING AND CURRENT ROW`` over ``val_col``;
@@ -352,7 +346,7 @@ def with_grouped_value_range(
     Halo volume is bounded by the value density of a band per boundary
     (P bands total), the same assumption the gap-fill halo documents.
     """
-    staged = _range_staged(df, [*group_cols, val_col], num_partitions)
+    staged = _range_staged(df, [*group_cols, val_col])
     mins = (
         staged.groupBy("_pid")
         .agg(F.min(F.struct(*group_cols, val_col)).alias("_k"))
@@ -398,7 +392,6 @@ def with_global_lead_structs(
     payload_cols: list,
     k: int,
     out_col: str = "_next",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append ``out_col`` = array of the next ``k`` rows' payload structs
     in the GLOBAL (order_cols) order — the sorted-neighborhood primitive
@@ -409,7 +402,7 @@ def with_global_lead_structs(
     from the first ``k`` rows of every later partition (P·k-row
     collect).  Entries past the global end are NULL (same as lead()).
     """
-    staged = _range_staged(df, order_cols, num_partitions)
+    staged = _range_staged(df, order_cols)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     rn = F.row_number().over(w)
     cnt = F.count("*").over(Window.partitionBy("_pid"))

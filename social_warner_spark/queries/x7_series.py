@@ -99,9 +99,7 @@ def x56_global_index(spark, sf_dir):
     from social_warner_spark.operators.ordered import with_grouped_rank
 
     d = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    out = with_grouped_rank(
-        d, [], [F.desc("n_chars"), F.asc("doc_id")], "gidx", num_partitions=8
-    )
+    out = with_grouped_rank(d, [], [F.desc("n_chars"), F.asc("doc_id")], "gidx")
     return out.select("doc_id", "n_chars", "gidx")
 
 

@@ -8,8 +8,6 @@ knob is chosen so the same logical pipeline scales out:
   wrong for at least one stage.
 - Arrow on — every Python-boundary crossing (pandas UDFs, toPandas) is
   vectorized columnar batches, not pickled rows.
-- UTC session timezone — deterministic timestamp semantics regardless of
-  host timezone (matches the DuckDB/naive-timestamp oracle).
 - Sane local shuffle parallelism for tests; on a real cluster AQE coalesces
   from `spark.sql.shuffle.partitions` down, so we leave it modest locally
   and document 2-3× core count for cluster deploys.
@@ -50,7 +48,8 @@ def get_spark(
     shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the configured SparkSession.
+    """Build (or fetch) the configured SparkSession, prepared by
+    ``prepare_session``.
 
     Honors ``SPARK_GRAFT_CPUS`` for local core count (driver contract).
     """
@@ -79,8 +78,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SWS_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-XX:TieredStopAtLevel=1")
         .config("spark.buffer.pageSize", "1m")
@@ -90,4 +88,36 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return prepare_session(builder.getOrCreate())
+
+
+def prepare_session(spark: SparkSession) -> SparkSession:
+    """Apply the runtime SQL confs every session needs; the one place that
+    sets them.  ``get_spark`` applies it once, when it builds the session;
+    ``__spark_entry__`` applies it to the session its caller passes in, on
+    each call, since it never built that session.
+
+    - parquet nanos read as long: events.parquet may carry
+      TIMESTAMP(NANOS), which the vectorized parquet reader rejects; it is
+      read as long and converted in ``catalog.load_table``.
+    - UTC session timezone: deterministic timestamp semantics regardless
+      of host timezone or of who built the session (matches the
+      DuckDB/naive-timestamp oracle).
+    - shuffle-partition right-sizing: a session still at Spark's static
+      default (200) pays ~6× task-scheduling overhead on the multi-stage /
+      iterative pipelines at test SF (measured: x31 57s → 9s).  A session
+      whose builder/spark-submit conf set the key explicitly is never
+      touched (detected via the SparkContext conf) — the 200-default check
+      alone can't distinguish a deliberate runtime set of exactly 200,
+      which is the one case this heuristic would override.  At cluster
+      scale the equivalent knob is 2-3× total cores with AQE coalescing
+      down.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    key = "spark.sql.shuffle.partitions"
+    explicitly_built = spark.sparkContext.getConf().contains(key)
+    if not explicitly_built and spark.conf.get(key, "200") == "200":
+        cores = spark.sparkContext.defaultParallelism
+        spark.conf.set(key, str(max(8, min(64, 2 * cores))))
+    return spark

@@ -73,11 +73,26 @@ def resolve_credentials(
     return out
 
 
-def resolve_fetcher(path: str) -> PageFetcher:
-    """'package.module:function' → callable (executor-side import)."""
-    mod_name, _, fn_name = path.partition(":")
-    mod = importlib.import_module(mod_name)
-    return getattr(mod, fn_name)
+def resolve_callable(ref: str) -> Callable:
+    """Resolve a ``module.path:callable`` reference with loud errors — the
+    CLI's ``--extract``/``--load`` and this source's ``fetcher`` option
+    (imported executor-side)."""
+    mod_name, sep, attr = ref.partition(":")
+    if not sep or not mod_name or not attr:
+        raise ValueError(
+            f"callable reference {ref!r} must look like 'package.module:function'"
+        )
+    try:
+        mod = importlib.import_module(mod_name)
+    except ImportError as exc:
+        raise ValueError(f"cannot import module {mod_name!r}: {exc}") from exc
+    try:
+        fn = getattr(mod, attr)
+    except AttributeError as exc:
+        raise ValueError(f"module {mod_name!r} has no attribute {attr!r}") from exc
+    if not callable(fn):
+        raise ValueError(f"{ref!r} resolved to a non-callable {type(fn).__name__}")
+    return fn
 
 
 class _PagePartition(InputPartition):
@@ -95,7 +110,7 @@ class _PagedRestReader(DataSourceReader):
         return [_PagePartition(i) for i in range(n)]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        fetch = resolve_fetcher(self._options["fetcher"])
+        fetch: PageFetcher = resolve_callable(self._options["fetcher"])
         names = [f.name for f in self._schema.fields]
         for row in fetch(partition.index, self._options):
             yield tuple(row.get(name) for name in names)
@@ -116,8 +131,6 @@ class PagedRestDataSource(DataSource):
         return "paged_rest"
 
     def schema(self) -> str | StructType:
-        if "schema_json" in self.options:
-            return StructType.fromJson(json.loads(self.options["schema_json"]))
         raise ValueError("paged_rest requires an explicit .schema(...)")
 
     def reader(self, schema: StructType) -> DataSourceReader:

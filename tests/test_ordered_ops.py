@@ -7,6 +7,8 @@ so the global tests call with_grouped_rank / with_grouped_cumsum with
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
@@ -20,6 +22,20 @@ from social_warner_spark.operators.ordered import (
     with_grouped_rank,
     with_grouped_value_range,
 )
+
+
+@contextmanager
+def shuffle_partitions(spark, p):
+    """Run the block with the session at ``p`` shuffle partitions: every
+    range stage partitions into the session's
+    ``spark.sql.shuffle.partitions`` ranges."""
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    spark.conf.set(key, str(p))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, original)
 
 
 def _corpus(spark, n=97):
@@ -37,10 +53,11 @@ def test_global_rank_matches_window(spark, p):
     expressions with a descending key."""
     df = _corpus(spark)
     for order in (ORDER, [F.desc("g"), F.asc("id")]):
-        got = {
-            r["id"]: r["_grank"]
-            for r in with_grouped_rank(df, [], order, num_partitions=p).collect()
-        }
+        with shuffle_partitions(spark, p):
+            got = {
+                r["id"]: r["_grank"]
+                for r in with_grouped_rank(df, [], order).collect()
+            }
         want = {
             r["id"]: r["rk"]
             for r in df.withColumn(
@@ -53,10 +70,11 @@ def test_global_rank_matches_window(spark, p):
 @pytest.mark.parametrize("p,buckets", [(4, 10), (16, 10), (4, 7), (8, 200)])
 def test_global_ntile_matches_window(spark, p, buckets):
     df = _corpus(spark)
-    got = {
-        r["id"]: r["_tile"]
-        for r in with_global_ntile(df, ORDER, buckets, num_partitions=p).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["_tile"]
+            for r in with_global_ntile(df, ORDER, buckets).collect()
+        }
     want = {
         r["id"]: r["nt"]
         for r in df.withColumn(
@@ -71,12 +89,11 @@ def test_global_lead_structs_matches_window(spark, p, k):
     # k=11 with 16 partitions over 97 rows: partitions hold ~6 rows, so
     # most neighbors cross MULTIPLE partition boundaries — the stream path.
     df = _corpus(spark)
-    got = {
-        r["id"]: [None if e is None else (e["v"], e["id"]) for e in r["_next"]]
-        for r in with_global_lead_structs(
-            df, ORDER, ["v", "id"], k, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: [None if e is None else (e["v"], e["id"]) for e in r["_next"]]
+            for r in with_global_lead_structs(df, ORDER, ["v", "id"], k).collect()
+        }
     w = Window.orderBy(*ORDER)
     lead_cols = [
         F.lead(F.struct(F.col("v"), F.col("id")), j).over(w).alias(f"_l{j}")
@@ -97,10 +114,11 @@ def test_global_ntile_desc_order(spark, p):
     flow through repartitionByRange and the per-partition window alike."""
     df = _corpus(spark)
     order = [F.desc("v"), F.asc("id")]
-    got = {
-        r["id"]: r["_tile"]
-        for r in with_global_ntile(df, order, 10, num_partitions=p).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["_tile"]
+            for r in with_global_ntile(df, order, 10).collect()
+        }
     want = {
         r["id"]: r["nt"]
         for r in df.withColumn(
@@ -113,12 +131,11 @@ def test_global_ntile_desc_order(spark, p):
 @pytest.mark.parametrize("p", [1, 4, 16])
 def test_global_cumsum_matches_window(spark, p):
     df = _corpus(spark).withColumn("c", (F.col("v") % 5 + 1).cast("long"))
-    got = {
-        r["id"]: r["cum_c"]
-        for r in with_grouped_cumsum(
-            df, [], ORDER, {"cum_c": "c"}, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["cum_c"]
+            for r in with_grouped_cumsum(df, [], ORDER, {"cum_c": "c"}).collect()
+        }
     w = Window.orderBy(*ORDER).rowsBetween(Window.unboundedPreceding, 0)
     want = {
         r["id"]: r["cc"]
@@ -130,12 +147,11 @@ def test_global_cumsum_matches_window(spark, p):
 @pytest.mark.parametrize("p", [1, 4, 16])
 def test_global_cummax_excl_matches_window(spark, p):
     df = _corpus(spark).withColumn("m", ((F.col("v") * 13) % 29).cast("long"))
-    got = {
-        r["id"]: r["pm"]
-        for r in with_global_cummax_excl(
-            df, ORDER, "m", "pm", num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["pm"]
+            for r in with_global_cummax_excl(df, ORDER, "m", "pm").collect()
+        }
     w = Window.orderBy(*ORDER).rowsBetween(Window.unboundedPreceding, -1)
     want = {
         r["id"]: r["pm"] for r in df.withColumn("pm", F.max("m").over(w)).collect()
@@ -145,22 +161,18 @@ def test_global_cummax_excl_matches_window(spark, p):
 
 def test_global_rank_single_row(spark):
     df = spark.createDataFrame([(1, 1, 1)], "g INT, v INT, id INT")
-    out = with_grouped_rank(df, [], ORDER, num_partitions=4).collect()
+    with shuffle_partitions(spark, 4):
+        out = with_grouped_rank(df, [], ORDER).collect()
     assert [r["_grank"] for r in out] == [1]
 
 
 def test_ordered_ops_empty_input(spark):
     df = spark.createDataFrame([], "g INT, v INT, id INT")
-    assert with_grouped_rank(df, [], ORDER, num_partitions=4).count() == 0
-    assert (
-        with_grouped_cumsum(df, [], ORDER, {"c": "v"}, num_partitions=4).count()
-        == 0
-    )
-    assert with_global_cummax_excl(df, ORDER, "v", num_partitions=4).count() == 0
-    assert (
-        with_global_lead_structs(df, ORDER, ["v", "id"], 3, num_partitions=4).count()
-        == 0
-    )
+    with shuffle_partitions(spark, 4):
+        assert with_grouped_rank(df, [], ORDER).count() == 0
+        assert with_grouped_cumsum(df, [], ORDER, {"c": "v"}).count() == 0
+        assert with_global_cummax_excl(df, ORDER, "v").count() == 0
+        assert with_global_lead_structs(df, ORDER, ["v", "id"], 3).count() == 0
 
 
 def test_global_cumsum_rejects_non_integral_sources(spark):
@@ -170,10 +182,10 @@ def test_global_cumsum_rejects_non_integral_sources(spark):
         "d", F.col("v").cast("decimal(12,2)")
     )
     with pytest.raises(TypeError, match="integral"):
-        with_grouped_cumsum(dec, [], ORDER, {"cum": "d"}, num_partitions=4)
+        with_grouped_cumsum(dec, [], ORDER, {"cum": "d"})
     flt = dec.withColumn("f", F.col("v").cast("double"))
     with pytest.raises(TypeError, match="integral"):
-        with_grouped_cumsum(flt, [], ORDER, {"cum": "f"}, num_partitions=4)
+        with_grouped_cumsum(flt, [], ORDER, {"cum": "f"})
 
 
 @pytest.mark.parametrize("p", [1, 4, 16])
@@ -183,12 +195,11 @@ def test_global_cummax_excl_all_null_partition(spark, p):
     crash the driver-side prefix fold on max(long, None)."""
     rows = [(0, i, i, None if 20 <= i < 40 else i * 7 % 13) for i in range(60)]
     df = spark.createDataFrame(rows, "g INT, v INT, id INT, m INT")
-    got = {
-        r["id"]: r["pm"]
-        for r in with_global_cummax_excl(
-            df, ORDER, "m", "pm", num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["pm"]
+            for r in with_global_cummax_excl(df, ORDER, "m", "pm").collect()
+        }
     w = Window.orderBy(*ORDER).rowsBetween(Window.unboundedPreceding, -1)
     want = {
         r["id"]: r["pm"] for r in df.withColumn("pm", F.max("m").over(w)).collect()
@@ -205,12 +216,11 @@ GORDER = ["v", "id"]
 @pytest.mark.parametrize("p", [1, 4, 16])
 def test_grouped_rank_matches_window(spark, p):
     df = _corpus(spark)
-    got = {
-        r["id"]: (r["_grank"], r["_n"])
-        for r in with_grouped_rank(
-            df, GROUP, GORDER, count_col="_n", num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: (r["_grank"], r["_n"])
+            for r in with_grouped_rank(df, GROUP, GORDER, count_col="_n").collect()
+        }
     w = Window.partitionBy(*GROUP).orderBy(*GORDER)
     want = {
         r["id"]: (r["rk"], r["n"])
@@ -224,12 +234,11 @@ def test_grouped_rank_matches_window(spark, p):
 @pytest.mark.parametrize("p", [1, 4, 16])
 def test_grouped_cumsum_matches_window(spark, p):
     df = _corpus(spark).withColumn("c", (F.col("v") % 5 + 1).cast("long"))
-    got = {
-        r["id"]: r["cum_c"]
-        for r in with_grouped_cumsum(
-            df, GROUP, GORDER, {"cum_c": "c"}, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["cum_c"]
+            for r in with_grouped_cumsum(df, GROUP, GORDER, {"cum_c": "c"}).collect()
+        }
     w = (
         Window.partitionBy(*GROUP)
         .orderBy(*GORDER)
@@ -248,12 +257,11 @@ def test_grouped_cumsum_desc_order(spark, p):
     must flow through the grouped range stage and window alike."""
     df = _corpus(spark).withColumn("c", (F.col("v") % 5 + 1).cast("long"))
     order = [F.desc("v"), F.asc("id")]
-    got = {
-        r["id"]: r["cum_c"]
-        for r in with_grouped_cumsum(
-            df, GROUP, order, {"cum_c": "c"}, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["cum_c"]
+            for r in with_grouped_cumsum(df, GROUP, order, {"cum_c": "c"}).collect()
+        }
     w = (
         Window.partitionBy(*GROUP)
         .orderBy(F.desc("v"), F.asc("id"))
@@ -268,11 +276,10 @@ def test_grouped_cumsum_desc_order(spark, p):
 
 def test_grouped_ops_empty_and_single(spark):
     empty = spark.createDataFrame([], "g INT, v INT, id INT")
-    assert with_grouped_rank(empty, GROUP, GORDER, num_partitions=4).count() == 0
     one = spark.createDataFrame([(1, 1, 1)], "g INT, v INT, id INT")
-    rows = with_grouped_rank(
-        one, GROUP, GORDER, count_col="_n", num_partitions=4
-    ).collect()
+    with shuffle_partitions(spark, 4):
+        assert with_grouped_rank(empty, GROUP, GORDER).count() == 0
+        rows = with_grouped_rank(one, GROUP, GORDER, count_col="_n").collect()
     assert [(r["_grank"], r["_n"]) for r in rows] == [(1, 1)]
 
 
@@ -283,7 +290,7 @@ def test_grouped_cumsum_rejects_non_integral_sources(spark):
     flt = dec.withColumn("f", F.col("v").cast("double"))
     for src in ("d", "f"):
         with pytest.raises(TypeError, match="integral"):
-            with_grouped_cumsum(flt, GROUP, GORDER, {"cum": src}, num_partitions=4)
+            with_grouped_cumsum(flt, GROUP, GORDER, {"cum": src})
 
 
 def test_grouped_stage_balanced_under_dominant_group(spark):
@@ -296,20 +303,21 @@ def test_grouped_stage_balanced_under_dominant_group(spark):
     n = 4000
     rows = [("en" if i % 10 != 0 else f"l{i % 7}", i * 37 % n, i) for i in range(n)]
     df = spark.createDataFrame(rows, "g STRING, v INT, id INT")
-    p = 16
-    staged = _range_staged(df, ["g", "v", "id"], num_partitions=p)
-    sizes = [r["c"] for r in staged.groupBy("_pid").agg(F.count("*").alias("c")).collect()]
+    dfc = df.withColumn("c", F.lit(1).cast("long"))
+    with shuffle_partitions(spark, 16):
+        staged = _range_staged(df, ["g", "v", "id"])
+        sizes = [
+            r["c"]
+            for r in staged.groupBy("_pid").agg(F.count("*").alias("c")).collect()
+        ]
+        # and the grouped cumsum built on that stage is still exact
+        got = {
+            r["id"]: r["cum"]
+            for r in with_grouped_cumsum(dfc, ["g"], ["v", "id"], {"cum": "c"}).collect()
+        }
     assert sum(sizes) == n
     mean = n / len(sizes)
     assert max(sizes) <= 2 * mean, f"partition sizes skewed: max={max(sizes)} mean={mean:.0f} sizes={sorted(sizes, reverse=True)[:5]}"
-    # and the grouped cumsum built on that stage is still exact
-    dfc = df.withColumn("c", F.lit(1).cast("long"))
-    got = {
-        r["id"]: r["cum"]
-        for r in with_grouped_cumsum(
-            dfc, ["g"], ["v", "id"], {"cum": "c"}, num_partitions=p
-        ).collect()
-    }
     w = (
         Window.partitionBy("g")
         .orderBy("v", "id")
@@ -332,20 +340,20 @@ def test_grouped_value_range_matches_window(spark, p):
     # dense value field so a 25-wide band crosses several of 16 partitions
     rows = [((i * 7919) % 3, float((i * 37) % 100) + i * 0.001, i) for i in range(n)]
     df = spark.createDataFrame(rows, "g INT, v DOUBLE, id INT")
-    got = {
-        (r["g"], r["id"]): (round(r["s"], 6), r["c"])
-        for r in with_grouped_value_range(
-            df,
-            ["g"],
-            "v",
-            -25,
-            {
-                "s": lambda w: F.sum("v").over(w),
-                "c": lambda w: F.count("*").over(w),
-            },
-            num_partitions=p,
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            (r["g"], r["id"]): (round(r["s"], 6), r["c"])
+            for r in with_grouped_value_range(
+                df,
+                ["g"],
+                "v",
+                -25,
+                {
+                    "s": lambda w: F.sum("v").over(w),
+                    "c": lambda w: F.count("*").over(w),
+                },
+            ).collect()
+        }
     w = Window.partitionBy("g").orderBy("v").rangeBetween(-25, Window.currentRow)
     want = {
         (r["g"], r["id"]): (round(r["s"], 6), r["c"])
@@ -361,18 +369,11 @@ def test_grouped_value_range_matches_window(spark, p):
 
 def test_grouped_value_range_empty_and_single(spark):
     empty = spark.createDataFrame([], "g INT, v DOUBLE, id INT")
-    assert (
-        with_grouped_value_range(
-            empty, ["g"], "v", -5, {"c": lambda w: F.count("*").over(w)},
-            num_partitions=4,
-        ).count()
-        == 0
-    )
     one = spark.createDataFrame([(1, 2.0, 1)], "g INT, v DOUBLE, id INT")
-    rows = with_grouped_value_range(
-        one, ["g"], "v", -5, {"c": lambda w: F.count("*").over(w)},
-        num_partitions=4,
-    ).collect()
+    count = {"c": lambda w: F.count("*").over(w)}
+    with shuffle_partitions(spark, 4):
+        assert with_grouped_value_range(empty, ["g"], "v", -5, count).count() == 0
+        rows = with_grouped_value_range(one, ["g"], "v", -5, count).collect()
     assert [r["c"] for r in rows] == [1]
 
 
@@ -407,19 +408,18 @@ def test_grouped_primitives_random_equivalence(spark, rows, p):
     data = [(f"g{g}", v, i, c) for i, (g, v, c) in enumerate(rows)]
     df = spark.createDataFrame(data, "g string, v int, id int, c long")
 
-    got = {
-        r["id"]: (r["rk"], r["n"], r["cum"])
-        for r in with_grouped_cumsum(
-            with_grouped_rank(
-                df, ["g"], ["v", "id"], rank_col="rk", count_col="n",
-                num_partitions=p,
-            ),
-            ["g"],
-            ["v", "id"],
-            {"cum": "c"},
-            num_partitions=p,
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: (r["rk"], r["n"], r["cum"])
+            for r in with_grouped_cumsum(
+                with_grouped_rank(
+                    df, ["g"], ["v", "id"], rank_col="rk", count_col="n"
+                ),
+                ["g"],
+                ["v", "id"],
+                {"cum": "c"},
+            ).collect()
+        }
     wr = Window.partitionBy("g").orderBy("v", "id")
     wc = wr.rowsBetween(Window.unboundedPreceding, 0)
     want = {
@@ -445,12 +445,11 @@ def test_global_cumsum_random_equivalence_with_nulls(spark, rows, p):
     r07 parity rule fixed)."""
     data = [(v * 7 + g, i, c) for i, (g, v, c) in enumerate(rows)]
     df = spark.createDataFrame(data, "v int, id int, c long")
-    got = {
-        r["id"]: r["cum"]
-        for r in with_grouped_cumsum(
-            df, [], ["v", "id"], {"cum": "c"}, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["cum"]
+            for r in with_grouped_cumsum(df, [], ["v", "id"], {"cum": "c"}).collect()
+        }
     w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
     want = {
         r["id"]: r["cc"]
@@ -483,20 +482,20 @@ def test_grouped_value_range_random_equivalence(spark, rows, p, off):
     partition counts far above the row count."""
     data = [(f"g{g}", float(v), i) for i, (g, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "g string, v double, id int")
-    got = {
-        r["id"]: (round(r["s"], 6) if r["s"] is not None else None, r["c"])
-        for r in with_grouped_value_range(
-            df,
-            ["g"],
-            "v",
-            off,
-            {
-                "s": lambda w: F.sum("v").over(w),
-                "c": lambda w: F.count("*").over(w),
-            },
-            num_partitions=p,
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: (round(r["s"], 6) if r["s"] is not None else None, r["c"])
+            for r in with_grouped_value_range(
+                df,
+                ["g"],
+                "v",
+                off,
+                {
+                    "s": lambda w: F.sum("v").over(w),
+                    "c": lambda w: F.count("*").over(w),
+                },
+            ).collect()
+        }
     w = Window.partitionBy("g").orderBy("v").rangeBetween(off, Window.currentRow)
     want = {
         r["id"]: (round(r["s"], 6) if r["s"] is not None else None, r["c"])
@@ -524,12 +523,11 @@ def test_global_ntile_random_equivalence(spark, n, buckets, p):
     df = spark.createDataFrame(
         [((i * 13) % 97, i) for i in range(n)], "v int, id int"
     )
-    got = {
-        r["id"]: r["_tile"]
-        for r in with_global_ntile(
-            df, ["v", "id"], buckets, num_partitions=p
-        ).collect()
-    }
+    with shuffle_partitions(spark, p):
+        got = {
+            r["id"]: r["_tile"]
+            for r in with_global_ntile(df, ["v", "id"], buckets).collect()
+        }
     w = Window.orderBy("v", "id")
     want = {
         r["id"]: r["t"] for r in df.withColumn("t", F.ntile(buckets).over(w)).collect()

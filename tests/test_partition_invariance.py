@@ -13,6 +13,8 @@ queues.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from social_warner_spark.queries import all_queries
@@ -75,3 +77,20 @@ def test_result_invariant_to_shuffle_partitions(spark, sf_smoke, name):
     finally:
         spark.conf.set(key, original)
     assert a == b, f"{name} output depends on shuffle partition count"
+
+
+def test_x56_range_stage_follows_session_partitions(spark, sf_smoke):
+    """x56 checks the range-partitioned rank primitive above only if its
+    range stage partitions by the session's count, not a fixed one."""
+    from social_warner_spark.caching import release_persisted_intermediates
+
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "17")
+        df = QUERIES["x56_global_index"](spark, sf_smoke)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, original)
+        release_persisted_intermediates()
+    assert set(re.findall(r"rangepartitioning\(.*, (\d+)\)", plan)) == {"17"}

@@ -35,6 +35,23 @@ def test_datasource_one_partition_per_page(spark):
     assert any(r.item_id == 301 for r in rows)
 
 
+def test_fetcher_reference_must_name_module_and_function(spark):
+    """The fetcher option goes through the one ``module:callable``
+    resolver: a dotted path with no colon fails with its message, not an
+    import or attribute error."""
+    import pytest
+
+    spark.dataSource.register(PagedRestDataSource)
+    df = (
+        spark.read.format("paged_rest")
+        .schema(SCHEMA_DDL)
+        .option("fetcher", "perfbench.etl_input.fetch_page")
+        .load()
+    )
+    with pytest.raises(Exception, match="must look like 'package.module:function'"):
+        df.collect()
+
+
 def test_credentials_resolved_into_options(monkeypatch):
     """A17: the provider runs once driver-side; options carry materialized
     credentials as JSON (DataSource options are strings)."""
