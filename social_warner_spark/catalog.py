@@ -41,10 +41,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     filter/select on the returned DataFrame and the scan narrows itself
     (verify with .explain(): PushedFilters / ReadSchema).
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS); Spark has no nanos
-    timestamp, so it is read as long and truncated to microseconds — the
-    same truncation DuckDB applies on read, so both engines see identical
-    values.  The long read is a session setting, made once per session by
+    An ``events.ts`` stored as parquet TIMESTAMP(NANOS), as pandas writes
+    a datetime64[ns] column (the x27 and x36 invariant tests do), is read
+    as long and truncated to microseconds, since Spark has no nanos
+    timestamp — the same truncation DuckDB applies on read, so both
+    engines see identical values.  The generated testdata stores it as
+    TIMESTAMP(MICROS), which Spark reads as a timestamp directly.  The
+    long read is a session setting, made once per session by
     ``get_spark`` and ``__spark_entry__``; loading a table changes no
     session setting.
     """

@@ -21,7 +21,7 @@ Validation mirrors the reference's required-field check
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Mapping
 
 REQUIRED_FIELDS = ("dataset_id", "metrics", "group_by", "meta_dimensions", "brands")
@@ -37,7 +37,6 @@ class ExportConfig:
     group_by: Mapping[str, str]
     meta_dimensions: Mapping[str, str]
     brands: tuple[int, ...]
-    extra: Mapping[str, Any] = field(default_factory=dict)
 
     @property
     def columns(self) -> list[str]:
@@ -104,7 +103,6 @@ def parse_config(config_id: str, doc: Mapping[str, Any]) -> ExportConfig:
         group_by=dict(doc["group_by"]),
         meta_dimensions=dict(doc["meta_dimensions"]),
         brands=tuple(doc["brands"]),
-        extra={k: v for k, v in doc.items() if k not in REQUIRED_FIELDS},
     )
 
 

@@ -145,7 +145,6 @@ def exact_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with shingle-Jaccard ≥ threshold, exactly.
 
@@ -172,20 +171,8 @@ def exact_jaccard_pairs(
     never scale-correct for a self-join, and measured ~1 s slower even
     locally.
 
-    ``max_doc_freq`` is the hot-shingle skew knob: shingles appearing in
-    more than that many documents (stopword runs, boilerplate) are dropped
-    from CANDIDATE GENERATION only — each surviving candidate pair is then
-    re-scored against the FULL shingle relation (equi-join on (id,
-    shingle)), so reported Jaccard values are exact and unchanged.  A pair
-    is missed only if *every* shingle it shares is hot — the boilerplate-
-    only case a near-dup pass wants excluded anyway (no-false-negative
-    property on the test corpus is asserted in tests/test_extensions.py).
-    At 100 TB a single stopword shingle otherwise lands one straggler
-    partition with df² join rows; the cap turns worst-case skew into a
-    bounded per-shingle cost of max_doc_freq².
-
-    The shingle relation is consumed multiple times (join sides + sizes
-    + re-score); persisting it turns the explode recomputations into
+    The shingle relation is consumed multiple times (join sides +
+    sizes); persisting it turns the explode recomputations into
     one.  At cluster scale the equivalent is staging it to a temp
     table — the lineage cut matters more than the storage level.  The
     persisted handle is registered for host-controlled release (see
@@ -208,55 +195,17 @@ def exact_jaccard_pairs(
     ratio_ok = (
         F.col("sz_b") >= F.col("sz_a") * threshold - F.lit(1e-9)
     ) & (F.col("sz_a") >= F.col("sz_b") * threshold - F.lit(1e-9))
-    if max_doc_freq is None:
-        a = sh.select(F.col(id_col).alias("a"), "shingle")
-        b = sh.select(F.col(id_col).alias("b"), "shingle")
-        shared = (
-            a.join(b.hint("shuffle_merge"), "shingle")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("shared"))
-            .join(sz_a, "a")
-            .join(sz_b, "b")
-            .where(ratio_ok)
-        )
-    else:
-        # hot set is tiny by construction (only ultra-frequent shingles) →
-        # broadcast anti-join; candidates come from the cooled relation.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        # explicit selects: USING joins put the key column first, so
-        # positional toDF renaming would swap (shingle, id) here.
-        cooled = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        cands = (
-            cooled.select(F.col(id_col).alias("a"), "shingle")
-            .join(
-                cooled.select(F.col(id_col).alias("b"), "shingle").hint(
-                    "shuffle_merge"
-                ),
-                "shingle",
-            )
-            .where(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-            .join(sz_a, "a")
-            .join(sz_b, "b")
-            .where(ratio_ok)
-            .select("a", "b", "sz_a", "sz_b")
-        )
-        # exact re-score: shared = |A ∩ B| over the FULL shingle sets.
-        # (b, shingle) is an equi-join key, so no row explosion beyond
-        # |cands| · |A|.
-        shared = (
-            cands.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-            .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
-            .groupBy("a", "b", "sz_a", "sz_b")
-            .agg(F.count("*").alias("shared"))
-        )
+    a = sh.select(F.col(id_col).alias("a"), "shingle")
+    b = sh.select(F.col(id_col).alias("b"), "shingle")
+    shared = (
+        a.join(b.hint("shuffle_merge"), "shingle")
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("shared"))
+        .join(sz_a, "a")
+        .join(sz_b, "b")
+        .where(ratio_ok)
+    )
     out = (
         shared.withColumn(
             "jaccard",
@@ -507,8 +456,7 @@ def minhash_neardup_pairs(
     """MinHash+LSH candidates, verified with exact Jaccard (so output is
     exact-precision; recall is the approximate part, tested by tolerance).
 
-    r07: verification RE-SCORES THE CANDIDATE PAIRS ONLY — the same
-    shape as exact_jaccard_pairs' max_doc_freq branch (join the pair
+    r07: verification RE-SCORES THE CANDIDATE PAIRS ONLY (join the pair
     relation to the full shingle relation twice on equi-keys, count
     shared shingles).  The old form joined candidates against the FULL
     exact_jaccard_pairs output, so the corpus-wide shingle self-join ran
@@ -857,7 +805,6 @@ def containment_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: pairs where the smaller document's
     shingle set is ≥ ``threshold`` contained in the larger's —
@@ -867,22 +814,12 @@ def containment_pairs(
     candidate prefilter — deliberately ignores.
 
     Same persisted-shingle machinery as exact_jaccard_pairs, but NO
-    size-ratio pruning (size-mismatched pairs are the whole point); the
-    optional ``max_doc_freq`` hot-shingle drop is the skew knob here
-    too.  Shuffle ∝ shared-shingle candidate pairs.
+    size-ratio pruning (size-mismatched pairs are the whole point).
+    Shuffle ∝ shared-shingle candidate pairs.
     """
     from social_warner_spark.caching import register_persisted
 
-    sh = doc_shingles(df, text_col, id_col, n)
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sh = register_persisted(sh.persist())
+    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
@@ -935,7 +872,8 @@ def prefix_filter_jaccard_pairs(
     the prefix rows (≈(1−t) of them), AND the frequency-ascending order
     puts the rarest shingles in prefixes, so hot shingles (the skew
     killers) rarely generate candidates at all — the prefix order is the
-    principled version of the max_doc_freq cap.  Verification uses
+    package's hot-shingle skew defence, with no frequency cap to tune
+    (PERF.md "Hot-shingle skew").  Verification uses
     sorted per-doc shingle arrays (array_intersect per candidate, like
     triangle_count's adjacency intersect) — per-pair cost O(|A|+|B|),
     no second shingle shuffle."""

@@ -113,12 +113,12 @@ def format_timestamp_columns(
     return format_date_columns(df, columns, fmt)
 
 
-def sanitize_column_names(df: DataFrame, old: str = ".", new: str = "&") -> DataFrame:
+def sanitize_column_names(df: DataFrame) -> DataFrame:
     """Bulk rename: every column name `.` → `&` (data_transform.py:152-173).
 
     Single ``toDF`` — a pure metadata operation, no job.
     """
-    return df.toDF(*[c.replace(old, new) for c in df.columns])
+    return df.toDF(*[c.replace(".", "&") for c in df.columns])
 
 
 def union_pages(pages: Iterable[DataFrame]) -> DataFrame:

@@ -34,7 +34,8 @@ from social_warner_spark.queries.common import T, r6
 #: x262 — winnowing over 3-token shingles (the repo-wide gram unit):
 #: window of WIN_W consecutive gram hashes, min per window; fingerprints
 #: shared by more than WIN_MAX_DF docs leave candidate generation (the
-#: l2/`max_doc_freq` hot-key discipline); top WIN_TOPK pairs reported.
+#: hot-key cap that bounds the self-equi-join per fingerprint); top
+#: WIN_TOPK pairs reported.
 WIN_W = 4
 WIN_MAX_DF = 50
 WIN_TOPK = 20
@@ -64,8 +65,7 @@ def x262_winnowing_overlap(spark, sf_dir):
     Scale: only (doc_id, pos, 32-hex hash) rows shuffle, never text; the
     per-doc window is a narrow partitionBy(doc) frame; fingerprints
     with doc-frequency > 50 are dropped from candidate generation
-    (hot-key cap, same discipline as l2's max_doc_freq) so the
-    self-equi-join is bounded per fingerprint."""
+    (hot-key cap) so the self-equi-join is bounded per fingerprint."""
     d = T(spark, sf_dir, "documents")
     tk = d.select("doc_id", tokens(F.col("text")).alias("t")).where(
         F.size("t") >= 3

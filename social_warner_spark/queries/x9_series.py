@@ -2807,9 +2807,8 @@ def x161_pair_budget_forecast(spark, sf_dir):
     shingles of C(df, 2) — the EXACT row count the l2/x86 join will
     shuffle, computed from the |shingles|-sized document-frequency table
     BEFORE running the join — plus the hottest shingle's df and its
-    share of the budget (the evidence behind the max_doc_freq cap and
-    the x121 prefix ordering).  One aggregate over df; no pair is ever
-    materialized."""
+    share of the budget (the evidence behind the x121 prefix ordering).
+    One aggregate over df; no pair is ever materialized."""
     from social_warner_spark.operators.dedup import doc_shingles
 
     sh = doc_shingles(T(spark, sf_dir, "documents"), n=3)

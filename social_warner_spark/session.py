@@ -5,7 +5,8 @@ knob is chosen so the same logical pipeline scales out:
 
 - AQE on (runtime partition coalescing, skew-join splitting, dynamic join
   strategy switch) — at 100 TB static shuffle-partition counts are always
-  wrong for at least one stage.
+  wrong for at least one stage.  Spark enables all of it by default, so
+  the builder sets none of it.
 - Arrow on — every Python-boundary crossing (pandas UDFs, toPandas) is
   vectorized columnar batches, not pickled rows.
 - Sane local shuffle parallelism for tests; on a real cluster AQE coalesces
@@ -39,20 +40,28 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
 def get_spark(
     app_name: str = "social-warner-spark",
     master: str | None = None,
-    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the configured SparkSession, prepared by
-    ``prepare_session``.
+    """Build the configured SparkSession, prepared by ``prepare_session``.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local core count (driver contract).
+    A session already running in the process is prepared and returned as
+    it is: the builder's settings, ``extra_conf`` included, apply only to
+    the session this call builds.  Honors ``SPARK_GRAFT_CPUS`` for the
+    local core count.
     """
+    try:
+        running = SparkSession.active()
+    except PySparkRuntimeError:  # no session yet: build one below
+        pass
+    else:
+        return prepare_session(running)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -60,23 +69,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r11 bounded experiment (r10 verdict task 5, the local[32]>local[8]
-        # inversion): parallelismFirst=false — the Spark-docs-recommended
-        # size-derived coalescing — was measured on a steal-quiet host and
-        # REJECTED as the default: byte-based targets cannot see
-        # interpreted-CPU density, so the pair-scoring/vote stages
-        # under-parallelize (l2 3.5 vs 2.4 s, x7 4.9 vs 3.8, x239 5.0 vs
-        # 4.1 at sf0.1; only stage-count-bound x220 improved ~0.4 s, and
-        # advisory=4m recovered l2 but not x7/x239).  The default (true)
-        # already derives the target from max(bytes/parallelism,
-        # minPartitionSize=1m), i.e. KB-scale stages coalesce to one task
-        # either way — the r10 "inversion" was mostly the polluted 32-core
-        # sweep.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
@@ -93,13 +86,13 @@ def get_spark(
 
 def prepare_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime SQL confs every session needs; the one place that
-    sets them.  ``get_spark`` applies it once, when it builds the session;
-    ``__spark_entry__`` applies it to the session its caller passes in, on
-    each call, since it never built that session.
+    sets them.  ``get_spark`` applies it to the session it builds or finds
+    running; ``__spark_entry__`` applies it to the session its caller
+    passes in, on each call, since it never built that session.
 
-    - parquet nanos read as long: events.parquet may carry
-      TIMESTAMP(NANOS), which the vectorized parquet reader rejects; it is
-      read as long and converted in ``catalog.load_table``.
+    - parquet nanos read as long: an events.parquet written by pandas
+      carries TIMESTAMP(NANOS), which the vectorized parquet reader
+      rejects; it is read as long and converted in ``catalog.load_table``.
     - UTC session timezone: deterministic timestamp semantics regardless
       of host timezone or of who built the session (matches the
       DuckDB/naive-timestamp oracle).

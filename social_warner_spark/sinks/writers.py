@@ -85,7 +85,7 @@ def write_table(
     return rows
 
 
-def read_table(spark, path: str, fmt: str = "parquet") -> DataFrame:
+def read_table(spark, path: str) -> DataFrame:
     """Read a dev-sink table with schema merging.
 
     ``mergeSchema`` here — at READ time — is the parquet-side equivalent of
@@ -93,4 +93,4 @@ def read_table(spark, path: str, fmt: str = "parquet") -> DataFrame:
     file schemas, so rows written before a column was added surface with
     NULLs in the new column.
     """
-    return spark.read.option("mergeSchema", "true").format(fmt).load(path)
+    return spark.read.option("mergeSchema", "true").parquet(path)

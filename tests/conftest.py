@@ -15,7 +15,11 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="sws-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(
+        app_name="sws-tests",
+        master="local[8]",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
     s.stop()
 

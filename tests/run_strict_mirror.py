@@ -177,8 +177,10 @@ def run_sparkparts(sf_dir: str) -> int:
         {
             "app_name": "sparkparts-b",
             "master": "local[5]",
-            "shuffle_partitions": 7,
-            "extra_conf": {"spark.sql.files.maxPartitionBytes": "1m"},
+            "extra_conf": {
+                "spark.sql.shuffle.partitions": "7",
+                "spark.sql.files.maxPartitionBytes": "1m",
+            },
         }
     )
     fails = 0

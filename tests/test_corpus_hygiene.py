@@ -149,17 +149,6 @@ def test_salted_join_equals_plain_join(spark):
     )
     assert salted == plain and plain
 
-    left_plain = sorted(
-        tuple(r) for r in big.join(small, "k", "left").select("k", "v", "s").collect()
-    )
-    left_salted = sorted(
-        tuple(r)
-        for r in salted_join(big, small, "k", salts=4, how="left")
-        .select("k", "v", "s")
-        .collect()
-    )
-    assert left_salted == left_plain
-
 
 def test_salted_join_spreads_hot_key(spark):
     import pyspark.sql.functions as SF

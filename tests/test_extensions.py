@@ -14,6 +14,7 @@ from social_warner_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_neardup_pairs,
     minhash_signatures,
+    prefix_filter_jaccard_pairs,
 )
 from social_warner_spark.operators.similarity import cosine_topk, cosine_topk_bucketed
 
@@ -51,41 +52,15 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     assert recall >= 0.9, f"LSH recall too low: {recall}"
 
 
-def test_jaccard_max_doc_freq_exact_rescore(spark, docs):
-    """The hot-shingle cap must not change the result at this corpus's
-    thresholds: candidates shrink, but surviving pairs are re-scored on the
-    full shingle relation, so pairs AND jaccard values are identical.
-    The cap is verified non-vacuous (it actually drops shingles)."""
-    from social_warner_spark.operators.dedup import doc_shingles
-
-    cap = 5
-    sh = doc_shingles(docs)
-    n_hot = (
-        sh.groupBy("shingle").count().where(F.col("count") > cap).count()
-    )
-    assert n_hot > 0, "cap must actually drop shingles for this test to bite"
-
-    base = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in exact_jaccard_pairs(docs, THRESH).collect()
-    }
-    capped = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in exact_jaccard_pairs(docs, THRESH, max_doc_freq=cap).collect()
-    }
-    assert base, "anchor must be non-empty"
-    assert capped == base
-
-
-def test_jaccard_cap_no_false_negatives_on_hot_shingle_corpus(spark):
+def test_prefix_filter_matches_exact_on_hot_shingle_corpus(spark):
     """The PERF.md skew fixture, correctness half: a corpus where EVERY
     document shares an 8-shingle boilerplate run (each hot shingle hits
-    all N docs → N² candidate rows uncapped) plus unique content, with
-    100 true dup pairs embedded.  At max_doc_freq=100 the hot shingles
-    leave candidate generation entirely, yet the pair set AND jaccard
-    values must be identical — the dup pairs share plenty of cool
-    shingles.  (The measured 4k/8k/16k-doc timing curve lives in
-    PERF.md "hot-shingle cap" — quadratic uncapped, flat capped.)"""
+    all N docs → N² rows in the full self-join) plus unique content, with
+    100 true dup pairs embedded.  Prefix filtering puts the rarest
+    shingles first, so the hot ones fall outside every prefix, yet its
+    pair set AND jaccard values must equal the exact self-join's — the
+    dup pairs share plenty of rare shingles.  (The measured
+    4k/8k/16k-doc timing curve lives in PERF.md "Hot-shingle skew".)"""
     boiler = "terms of service apply all rights reserved contact us today"
     n = 1000
     docs = spark.range(n).select(
@@ -110,12 +85,12 @@ def test_jaccard_cap_no_false_negatives_on_hot_shingle_corpus(spark):
         (r.doc_id_a, r.doc_id_b): r.jaccard
         for r in exact_jaccard_pairs(docs, 0.5).collect()
     }
-    capped = {
+    pf = {
         (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in exact_jaccard_pairs(docs, 0.5, max_doc_freq=100).collect()
+        for r in prefix_filter_jaccard_pairs(docs, 0.5).collect()
     }
     assert len(base) == 100, "fixture must embed exactly the 100 dup pairs"
-    assert capped == base
+    assert pf == base
 
 
 def test_minhash_signature_determinism(spark, docs):

@@ -1,5 +1,6 @@
 """Package hygiene: no top-level def outside ``queries/`` may be reachable
-only from ``tests/``.
+only from ``tests/``, and none may keep a code path that only ``tests/``
+select.
 
 Pure AST, no Spark.  Every top-level binding (def, class, assignment) of
 the package, the entry scripts and ``perfbench/`` is a node; an edge runs
@@ -12,6 +13,11 @@ modules (CLI and WSGI), ``__spark_entry__.py``, ``bench.py`` and
 Docstrings are strings, not names, so they never count as uses; nor does
 a def naming itself, a same-module sibling that is itself unreached, or
 an ``__init__`` re-export (it forwards the name to its origin).
+
+The second check reads the same graph's calls: a defaulted parameter that
+a def's body tests in an ``if``, ``while`` or conditional expression, and
+that no call outside ``tests/`` passes by position or keyword, selects a
+path only tests reach.  An option with one value in use is a constant.
 """
 
 from __future__ import annotations
@@ -42,6 +48,16 @@ ALLOWED = {
         "SURVEY A17: called by a deployment's --extract callable",
     f"{PKG}.sources.rest.env_credential_provider":
         "SURVEY A17: called by a deployment's --extract callable",
+}
+
+
+#: Defaulted parameters that select a branch although no call outside
+#: tests/ passes them, one reason each.
+ALLOWED_PARAMS = {
+    f"{PKG}.session.get_spark.master":
+        "deployment master URL; a cluster deployment passes it",
+    f"{PKG}.sinks.writers.write_table.fmt":
+        "SURVEY A14: the BigQuery sink passes fmt='bigquery'",
 }
 
 
@@ -131,35 +147,81 @@ class _Graph:
             qual = self.forwards[qual]
         return None
 
-    def uses(self, mod: str, node: ast.AST) -> set[str]:
-        """Qualified bindings the code under ``node`` names."""
+    def _scope(self, mod: str, node: ast.AST) -> tuple[dict[str, str], set[str]]:
+        """Local name -> target under ``node`` (module imports plus the ones
+        inside it), and the targets its from-imports name."""
         is_pkg = self.mods[mod][0].name == "__init__.py"
         scope = dict(self.aliases[mod])
-        out: set[str] = set()
+        imported: set[str] = set()
         for sub in ast.walk(node):
             if isinstance(sub, (ast.Import, ast.ImportFrom)):
                 local = _import_aliases(mod, is_pkg, sub)
                 scope.update(local)
                 if isinstance(sub, ast.ImportFrom):
-                    out.update(local.values())
+                    imported.update(local.values())
+        return scope, imported
+
+    def _chain(self, mod: str, scope: dict[str, str], expr: ast.AST) -> list[str]:
+        """Qualified prefixes of a ``name.attr...`` chain, shortest first."""
+        attrs = []
+        while isinstance(expr, ast.Attribute):
+            attrs.append(expr.attr)
+            expr = expr.value
+        if not isinstance(expr, ast.Name):
+            return []
+        if expr.id in self.defs[mod]:
+            base = f"{mod}.{expr.id}"
+        elif expr.id in scope:
+            base = scope[expr.id]
+        else:
+            return []
+        out = [base]
+        for attr in reversed(attrs):
+            base = f"{base}.{attr}"
+            out.append(base)
+        return out
+
+    def uses(self, mod: str, node: ast.AST) -> set[str]:
+        """Qualified bindings the code under ``node`` names."""
+        scope, out = self._scope(mod, node)
         for sub in ast.walk(node):
-            chain = []
-            while isinstance(sub, ast.Attribute):
-                chain.append(sub.attr)
-                sub = sub.value
-            if not isinstance(sub, ast.Name):
-                continue
-            if sub.id in self.defs[mod]:
-                base = f"{mod}.{sub.id}"
-            elif sub.id in scope:
-                base = scope[sub.id]
-            else:
-                continue
-            out.add(base)
-            for attr in reversed(chain):
-                base = f"{base}.{attr}"
-                out.add(base)
+            out.update(self._chain(mod, scope, sub))
         return {r for q in out if (r := self.resolve(q))}
+
+    def function(self, qual: str) -> ast.FunctionDef | None:
+        """The top-level def bound to ``qual``, or None."""
+        return next((st for _, st in self.bodies.get(qual, ())
+                     if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef))), None)
+
+    def passed(self) -> dict[str, set[str]]:
+        """Def -> the parameters some call in the walked modules passes it,
+        by position or keyword (``*args``/``**kwargs`` pass all they can)."""
+        out: dict[str, set[str]] = {}
+        for mod, (_, tree) in self.mods.items():
+            for st in tree.body:
+                scope, _ = self._scope(mod, st)
+                for call in ast.walk(st):
+                    if not isinstance(call, ast.Call):
+                        continue
+                    chain = self._chain(mod, scope, call.func)
+                    callee = chain and self.resolve(chain[-1])
+                    fn = self.function(callee) if callee else None
+                    if fn is None:
+                        continue
+                    a = fn.args
+                    positional = [p.arg for p in a.posonlyargs + a.args]
+                    names = out.setdefault(callee, set())
+                    for i, arg in enumerate(call.args):
+                        if isinstance(arg, ast.Starred):
+                            names.update(positional[i:])
+                            break
+                        names.update(positional[i:i + 1])
+                    for kw in call.keywords:
+                        if kw.arg is None:
+                            names.update(positional + [p.arg for p in a.kwonlyargs])
+                        else:
+                            names.add(kw.arg)
+        return out
 
     def reachable(self) -> set[str]:
         todo = [q for q in self.bodies if _is_root(q.rpartition(".")[0])]
@@ -191,3 +253,43 @@ def test_no_package_def_is_reachable_only_from_tests():
     # so the list cannot go stale
     assert set(ALLOWED) <= graph.checked
     assert not set(ALLOWED) & reached
+
+
+def _branch_params(fn: ast.FunctionDef) -> set[str]:
+    """Defaulted parameters ``fn``'s body names in an if, while or
+    conditional-expression test."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    defaulted = {p.arg for p in positional[len(positional) - len(a.defaults):]}
+    defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    tested = {
+        n.id
+        for st in fn.body
+        for sub in ast.walk(st)
+        if isinstance(sub, (ast.If, ast.While, ast.IfExp))
+        for n in ast.walk(sub.test)
+        if isinstance(n, ast.Name)
+    }
+    return defaulted & tested
+
+
+def test_no_branch_parameter_is_set_only_by_tests():
+    """An option with one value in use is a constant: a defaulted parameter
+    that picks a code path no call outside tests/ selects keeps a second
+    path alive for tests alone."""
+    graph = _Graph()
+    passed = graph.passed()
+    found = {
+        f"{q}.{p}"
+        for q in graph.checked
+        if q.startswith(f"{PKG}.") and not q.startswith(f"{PKG}.queries.")
+        and (fn := graph.function(q)) is not None
+        for p in _branch_params(fn) - passed.get(q, set())
+    }
+    assert not found - set(ALLOWED_PARAMS), (
+        "defaulted branch parameters no call outside tests/ passes (make the "
+        "used value a constant and delete the other path, or allowlist them "
+        f"with a reason): {sorted(found - set(ALLOWED_PARAMS))}"
+    )
+    # every allowlist entry is still a branch parameter nothing passes
+    assert set(ALLOWED_PARAMS) <= found

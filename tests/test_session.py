@@ -33,6 +33,32 @@ def test_tungsten_pages_and_broadcast_blocks_are_not_humongous(spark):
     assert block < region // 2
 
 
+def test_adaptive_execution_is_on(spark):
+    # Spark's defaults turn on AQE, its partition coalescing and skew-join
+    # splitting; the builder leaves them to Spark (session.py docstring).
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+
+
+def test_get_spark_leaves_a_running_session_as_is(spark):
+    # A bare get_spark(), as an --extract callable makes on each request,
+    # must not re-apply the builder's confs to the session already running.
+    from social_warner_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        get_spark()
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, before)
+
+
 def _assert_prepared(session):
     assert session.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert session.conf.get("spark.sql.session.timeZone") == "UTC"
