@@ -24,9 +24,9 @@ import json
 from dataclasses import dataclass
 from typing import Any, Mapping
 
-REQUIRED_FIELDS = ("dataset_id", "metrics", "group_by", "meta_dimensions", "brands")
+from social_warner_spark.operators.transforms import CAST_RULES
 
-VALID_DTYPES = {"int64", "float64", "datetime64[ns]", "string"}
+REQUIRED_FIELDS = ("dataset_id", "metrics", "group_by", "meta_dimensions", "brands")
 
 
 @dataclass(frozen=True)
@@ -91,10 +91,10 @@ def parse_config(config_id: str, doc: Mapping[str, Any]) -> ExportConfig:
                 f"{{column: dtype}} object, got {type(doc[section]).__name__}"
             )
         for col, dtype in doc[section].items():
-            if dtype not in VALID_DTYPES:
+            if dtype not in CAST_RULES:
                 raise ValueError(
                     f"config {config_id!r}: column {col!r} has unsupported "
-                    f"dtype {dtype!r} (valid: {sorted(VALID_DTYPES)})"
+                    f"dtype {dtype!r} (valid: {sorted(CAST_RULES)})"
                 )
     return ExportConfig(
         config_id=config_id,

@@ -47,10 +47,6 @@ class ExtractQuery:
     start_date: str
     end_date: str
 
-    @property
-    def analysis_window(self) -> tuple[str, str]:
-        return (self.start_date, self.end_date)
-
 
 def build_extract_query(
     config: ExportConfig,

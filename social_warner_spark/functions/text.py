@@ -136,14 +136,14 @@ def top_token_ratio(toks: Column) -> Column:
     return F.array_max(counts) / F.greatest(n, F.lit(1.0))
 
 
-def fingerprint(text: Column, bits: int = 64) -> Column:
+def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: hex digest prefix of the
     normalized text (whitespace-collapsed, lowercased).  16 hex chars = 64
     bits.  Hash-based rather than a hand-rolled rolling hash so the exact
     same value is computable by any engine with md5().
     """
     norm = F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
-    return F.substring(F.md5(norm), 1, bits // 4)
+    return F.substring(F.md5(norm), 1, 16)
 
 
 #: The Gopher-rules stopword list (Rae et al. 2021, arXiv:2112.11446,

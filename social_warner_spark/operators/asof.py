@@ -40,10 +40,7 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     value_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left as-of join: every left row, plus the most recent right values.
 
@@ -52,7 +49,7 @@ def asof_join(
     single right row (see module docstring: row atomicity).
     """
     if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, right_ts)]
+        value_cols = [c for c in right.columns if c not in (on, "ts")]
 
     # The whole carried payload is ONE struct column: NULL on left rows
     # (so last(ignorenulls) skips them), the value tuple on right rows.
@@ -63,14 +60,14 @@ def asof_join(
     )
     l_tag = left.select(
         F.col(on),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),  # left sorts after right at equal ts
         F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"),
         F.lit(None).cast(_rrow_type).alias("_rrow"),
     )
     r_tag = right.select(
         F.col(on),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(
             l_tag.schema["_lrow"].dataType.simpleString()
@@ -95,5 +92,5 @@ def asof_join(
     ).where(F.col("_lrow").isNotNull())
     return carried.select(
         *[F.col(f"_lrow.{c}").alias(c) for c in left.columns],
-        *[F.col(f"_asof.{c}").alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(f"_asof.{c}").alias(f"{c}_asof") for c in value_cols],
     )

@@ -81,9 +81,7 @@ def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def fk_check(
-    child: DataFrame, parent: DataFrame, fk: str, pk: str
-) -> DataFrame:
+def fk_check(child: DataFrame, parent: DataFrame, fk: str, pk: str) -> DataFrame:
     """Referential-integrity audit: one row with (n_child, n_orphans,
     orphan_min, orphan_max) — orphans are child rows whose ``fk`` has no
     match in parent's ``pk`` (NULL fks are not orphans, per SQL FK
@@ -110,9 +108,7 @@ def fk_check(
     )
 
 
-def expectations(
-    df: DataFrame, rules: list[tuple[str, Column, float]]
-) -> DataFrame:
+def expectations(df: DataFrame, rules: list[tuple[str, Column, float]]) -> DataFrame:
     """Deequ-style declarative data-quality suite: every rule is
     (name, metric aggregate in [0,1], pass threshold); the result is one
     long-format row per rule — ``rule, metric_value, threshold,
@@ -148,7 +144,11 @@ def expectations(
     )
 
 
-def skew_report(df: DataFrame, key_col: str, top_k: int = 3) -> DataFrame:
+#: Heavy keys `skew_report` lists.
+SKEW_TOP_K = 3
+
+
+def skew_report(df: DataFrame, key_col: str) -> DataFrame:
     """One-row skew diagnosis for a prospective shuffle key: key count,
     row count, the hottest key's share, max/mean skew ratio, Gini
     coefficient of the per-key distribution, and the top-k heavy keys —
@@ -176,7 +176,7 @@ def skew_report(df: DataFrame, key_col: str, top_k: int = 3) -> DataFrame:
     )
     top = (
         counts.orderBy(F.desc("c"), F.asc("k"))
-        .limit(top_k)
+        .limit(SKEW_TOP_K)
         # collect_list arrival order is nondeterministic — sort
         # (-count, key) structs inside the aggregate to pin the
         # (desc count, asc key) display order

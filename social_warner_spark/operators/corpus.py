@@ -2,10 +2,10 @@
 (north-star: dedup + quality + text analysis as one coherent flow).
 
 Stages (all deterministic, each individually oracle-checked elsewhere):
-1. quality gate   — keep docs with quality_score ≥ min_quality (x4 formula)
+1. quality gate   — keep docs with quality_score ≥ MIN_QUALITY (x4 formula)
 2. exact dedup    — keep min-doc_id survivor per normalized content hash (l1)
 3. near-dup prune — drop the HIGHER doc_id of every exact-Jaccard pair
-                    ≥ jaccard_threshold among survivors (l2 pairs); the
+                    ≥ JACCARD_THRESHOLD among survivors (l2 pairs); the
                     lower id always survives, so the rule needs no
                     transitive closure to be deterministic
 4. stats          — token count + quality per surviving doc
@@ -23,12 +23,15 @@ from pyspark.sql import DataFrame
 from social_warner_spark.functions.text import quality_score, token_count_ws
 from social_warner_spark.operators.dedup import content_hash, exact_jaccard_pairs
 
+#: Stage 1's quality gate and stage 3's near-dup Jaccard threshold.
+MIN_QUALITY = 0.3
+JACCARD_THRESHOLD = 0.8
 
-def prepare_corpus(
-    docs: DataFrame,
-    min_quality: float = 0.3,
-    jaccard_threshold: float = 0.8,
-) -> tuple[DataFrame, DataFrame]:
+#: Hashed-unigram feature buckets of `dsir_select`.
+DSIR_BUCKETS = 1024
+
+
+def prepare_corpus(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """documents(doc_id, text, lang, …) → ``(prepared, survivors)``.
 
     ``prepared`` is the deduplicated, quality-filtered corpus with per-doc
@@ -38,7 +41,7 @@ def prepare_corpus(
     x31's decontamination shingles — without re-scanning and re-splitting
     the corpus."""
     scored = docs.withColumn("quality", quality_score(F.col("text")))
-    gated = scored.where(F.col("quality") >= min_quality)
+    gated = scored.where(F.col("quality") >= MIN_QUALITY)
 
     # exact dedup survivors (min doc_id per content hash)
     survivors = (
@@ -57,7 +60,7 @@ def prepare_corpus(
 
     # near-dup prune: drop the b side of every (a < b) pair
     dropped = (
-        exact_jaccard_pairs(kept, jaccard_threshold)
+        exact_jaccard_pairs(kept, JACCARD_THRESHOLD)
         .select(F.col("doc_id_b").alias("doc_id"))
         .distinct()
     )
@@ -96,26 +99,19 @@ def per_group_cap(
     return df.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= cap)
 
 
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    n_select: int = 50,
-    buckets: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_select(raw: DataFrame, target: DataFrame, n_select: int = 50) -> DataFrame:
     """DSIR-style importance-weighted data selection (Xie et al. 2023,
     arXiv:2302.03169): score every raw document by the mean
     log-importance-ratio of its tokens under hashed-unigram language
     models of the target domain vs the raw corpus, then keep the top
     ``n_select``.  Returns (id, n_tokens, logratio, rk).
 
-    Hashing (md5 mod ``buckets``, the audit.py idiom) bounds BOTH feature
-    tables at ``buckets`` rows regardless of vocabulary size — that is
-    DSIR's trick, and it is exactly what makes the 100 TB plan work: the
-    two smoothed distributions collapse to ≤``buckets``-row broadcasts,
-    so the corpus token stream is joined map-side and shuffles only once,
-    partially aggregated, for the per-doc mean.  Add-1 smoothing keeps
+    Hashing (md5 mod ``DSIR_BUCKETS``, the audit.py idiom) bounds BOTH
+    feature tables at ``DSIR_BUCKETS`` rows regardless of vocabulary size
+    — that is DSIR's trick, and it is exactly what makes the 100 TB plan
+    work: the two smoothed distributions collapse to ≤``DSIR_BUCKETS``-row
+    broadcasts, so the corpus token stream is joined map-side and shuffles
+    only once, partially aggregated, for the per-doc mean.  Add-1 smoothing keeps
     unseen buckets finite; 6dp rounding keeps the ranking cross-engine
     stable.
     """
@@ -126,15 +122,15 @@ def dsir_select(
         # explode is a generator — it must sit at the select's top level;
         # the md5 bucketing is applied to the materialized token attribute
         tok = df.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+            F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
         )
         return tok.select(
-            id_col,
+            "doc_id",
             (
                 F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast(
                     "long"
                 )
-                % buckets
+                % DSIR_BUCKETS
             ).cast("int").alias("bk"),
         )
 
@@ -148,7 +144,7 @@ def dsir_select(
             cnt.crossJoin(F.broadcast(tot))
             .select(
                 "bk",
-                ((F.col("c") + 1) / (F.col("total") + buckets)).alias(p_name),
+                ((F.col("c") + 1) / (F.col("total") + DSIR_BUCKETS)).alias(p_name),
             )
         )
 
@@ -160,11 +156,11 @@ def dsir_select(
         .join(F.broadcast(p_raw), "bk", "left")
     )
     tgt_floor = tgt_tok.groupBy().agg(
-        (F.lit(1.0) / (F.count("*") + buckets)).alias("floor_t")
+        (F.lit(1.0) / (F.count("*") + DSIR_BUCKETS)).alias("floor_t")
     )
     per_doc = (
         scored.crossJoin(F.broadcast(tgt_floor))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
             F.round(
@@ -178,8 +174,8 @@ def dsir_select(
     )
     from pyspark.sql import Window
 
-    top = per_doc.orderBy(F.desc("logratio"), id_col).limit(n_select)
-    w = Window.orderBy(F.desc("logratio"), id_col)
+    top = per_doc.orderBy(F.desc("logratio"), "doc_id").limit(n_select)
+    w = Window.orderBy(F.desc("logratio"), "doc_id")
     return top.select(
-        id_col, "n_tokens", "logratio", F.row_number().over(w).cast("int").alias("rk")
+        "doc_id", "n_tokens", "logratio", F.row_number().over(w).cast("int").alias("rk")
     )

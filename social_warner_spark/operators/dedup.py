@@ -30,13 +30,22 @@ from pyspark.sql import Column, DataFrame, Window
 from social_warner_spark.functions.text import tokens
 from social_warner_spark.functions.vectors import dot, l2_norm
 
+#: Label-propagation rounds before `propagate_min_labels` gives up.
+MAX_ITERS = 20
+
+#: MinHash banding of `incremental_neardup_matches`: 8 hashes in 4 bands
+#: of 2 rows (x51's oracle mirrors it).
+INCREMENTAL_HASHES = 8
+INCREMENTAL_BANDS = 4
+INCREMENTAL_ROWS = 2
+
 
 def content_hash(text: Column) -> Column:
     """sha256 of lower(trim(text)) — the exact-dedup key (SURVEY.md L1)."""
     return F.sha2(F.lower(F.trim(text)), 256)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Deterministic exact dedup: one row per content hash, min(id) wins.
 
     Single hash-shuffle on the content hash; partial aggregation (min) is
@@ -44,18 +53,13 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     shuffle.
     """
     return (
-        df.select(content_hash(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        df.select(content_hash(F.col("text")).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
 
 
-def segment_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_tokens: int = 4,
-) -> DataFrame:
+def segment_dedup(df: DataFrame, seg_tokens: int = 4) -> DataFrame:
     """Segment-level exact dedup with document reassembly (the
     paragraph-dedup pass of web-crawl pipelines, done at fixed
     ``seg_tokens``-token granularity since the corpus has no paragraph
@@ -72,7 +76,7 @@ def segment_dedup(
     nothing can absorb since ordering matters) and the regroup by id.
     The segment explode is ~|tokens|/seg_tokens rows per doc, never n².
     """
-    d = df.select(F.col(id_col).alias("_id"), F.split(F.col(text_col), " ").alias("_t"))
+    d = df.select(F.col("doc_id").alias("_id"), F.split(F.col("text"), " ").alias("_t"))
     n_seg = F.ceil(F.size("_t") / F.lit(float(seg_tokens))).cast("int")
     seg_at = lambda i: F.array_join(
         F.slice(F.col("_t"), (i - 1) * seg_tokens + 1, seg_tokens), " "
@@ -95,11 +99,11 @@ def segment_dedup(
                 F.transform(F.array_sort(F.collect_list(kept)), lambda s: s["para"]), " "
             ).alias("clean_text"),
         )
-        .withColumnRenamed("_id", id_col)
+        .withColumnRenamed("_id", "doc_id")
     )
 
 
-def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
+def doc_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """(id, shingle) distinct pairs — the input to Jaccard and MinHash.
 
     ``array_distinct`` runs INSIDE the generator expression, so (id,
@@ -119,9 +123,9 @@ def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", 
     """
     from social_warner_spark.functions.text import shingles_from_tokens
 
-    staged = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+    staged = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array_distinct(shingles_from_tokens(F.col("_toks"), n))).alias("shingle"),
     )
 
@@ -139,13 +143,7 @@ def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", 
 # captured width.
 
 
-def exact_jaccard_pairs(
-    df: DataFrame,
-    threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def exact_jaccard_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """All pairs (a < b) with shingle-Jaccard ≥ threshold, exactly.
 
     Plan: per-doc-distinct (id, shingle) rows → self equi-join on
@@ -180,23 +178,23 @@ def exact_jaccard_pairs(
     """
     from social_warner_spark.caching import register_persisted
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
+    sh = register_persisted(doc_shingles(df).persist())
     # Per-doc sizes are a |docs|-row relation — CORPUS-sized at 100 TB,
     # so the join side choice belongs to AQE (an explicit F.broadcast
     # here would bypass autoBroadcastJoinThreshold and OOM where AQE
     # would demote to a shuffle join.  At small SF AQE still broadcasts
     # them on its own size estimate).  Joined onto the PAIR relation
     # post-agg, never onto the join inputs — see docstring.
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sz_a = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sz_a = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a"))
+    sz_b = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b"))
     # necessary condition for J ≥ t (tiny epsilon only ever LOOSENS it, so
     # no boundary pair is lost to float representation of t·sz)
     ratio_ok = (
         F.col("sz_b") >= F.col("sz_a") * threshold - F.lit(1e-9)
     ) & (F.col("sz_a") >= F.col("sz_b") * threshold - F.lit(1e-9))
-    a = sh.select(F.col(id_col).alias("a"), "shingle")
-    b = sh.select(F.col(id_col).alias("b"), "shingle")
+    a = sh.select(F.col("doc_id").alias("a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("b"), "shingle")
     shared = (
         a.join(b.hint("shuffle_merge"), "shingle")
         .where(F.col("a") < F.col("b"))
@@ -221,14 +219,7 @@ def exact_jaccard_pairs(
     return out
 
 
-def neardup_clusters(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_iters: int = 20,
-) -> DataFrame:
+def neardup_clusters(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Transitive near-dup clusters: label every document with the MIN id
     reachable through Jaccard-≥-threshold pairs (its connected-component
     representative).  Pairwise pruning alone under-merges A~B~C chains
@@ -259,21 +250,21 @@ def neardup_clusters(
     ``checkpoint()`` to a reliable dir for fault-tolerance; local mode
     has no executor loss to survive.
     """
-    pairs = exact_jaccard_pairs(df, threshold, text_col, id_col, n).select(
+    pairs = exact_jaccard_pairs(df, threshold).select(
         "doc_id_a", "doc_id_b"
     )
-    labels = propagate_min_labels(pairs, max_iters)
+    labels = propagate_min_labels(pairs)
 
     # labels is materialized by the final round's localCheckpoint (or the
     # initial one when there are no edges); singleton docs — never in any
     # pair — are their own cluster and rejoin with one left join.
-    return df.select(F.col(id_col).alias("id")).join(labels, "id", "left").select(
-        F.col("id").alias(id_col),
+    return df.select(F.col("doc_id").alias("id")).join(labels, "id", "left").select(
+        F.col("id").alias("doc_id"),
         F.coalesce(F.col("lab"), F.col("id")).alias("cluster_id"),
     )
 
 
-def propagate_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     """Connected-component labels over an undirected pair relation:
     ``(id, lab)`` for every EDGE-INCIDENT node, where ``lab`` is the
     component's minimum id.  The min-label propagation core of
@@ -282,10 +273,10 @@ def propagate_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     union-find sweep) can drive it without synthesizing document text.
 
     ``pairs`` is any 2-column (a, b) edge relation; both orientations
-    are added internally.  Raises RuntimeError if ``max_iters`` rounds
+    are added internally.  Raises RuntimeError if ``MAX_ITERS`` rounds
     pass without convergence.  The folded initialization (r10) already
-    performs round 1, so the ``max_iters`` loop rounds cover components
-    of diameter up to ``max_iters + 1`` — one more than the pre-fold
+    performs round 1, so the ``MAX_ITERS`` loop rounds cover components
+    of diameter up to ``MAX_ITERS + 1`` — one more than the pre-fold
     bound."""
     a_col, b_col = pairs.columns[:2]
     und = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -312,7 +303,7 @@ def propagate_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         neigh = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
@@ -340,7 +331,7 @@ def propagate_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         if changed == 0:
             break
     else:
-        raise RuntimeError(f"label propagation did not converge in {max_iters} rounds")
+        raise RuntimeError(f"label propagation did not converge in {MAX_ITERS} rounds")
     return labels
 
 
@@ -359,26 +350,20 @@ def minhash_signature_cols(num_hashes: int) -> list[Column]:
 
 
 def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 12,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    shingles: DataFrame | None = None,
+    df: DataFrame, num_hashes: int = 12, shingles: DataFrame | None = None
 ) -> DataFrame:
     """One row per doc: id + mh_0..mh_{k-1}.  Single shuffle on id; the k
     mins are partial-aggregated map-side.  Pass a precomputed (persisted)
     ``shingles`` relation when the caller also consumes it elsewhere —
     avoids re-running the explode+distinct lineage."""
-    sh = shingles if shingles is not None else doc_shingles(df, text_col, id_col, n)
-    return sh.groupBy(id_col).agg(*minhash_signature_cols(num_hashes))
+    sh = shingles if shingles is not None else doc_shingles(df)
+    return sh.groupBy("doc_id").agg(*minhash_signature_cols(num_hashes))
 
 
 def minhash_band_keys(
     signatures: DataFrame,
     bands: int,
     rows_per_band: int,
-    id_col: str = "doc_id",
     out_id: str | None = None,
 ) -> DataFrame:
     """(id, band_0..band_{bands-1}): band key = '#'-joined slice of the
@@ -389,7 +374,7 @@ def minhash_band_keys(
     mh_cols = [c for c in signatures.columns if c.startswith("mh_")]
     assert len(mh_cols) >= bands * rows_per_band
     return signatures.select(
-        F.col(id_col).alias(out_id or id_col),
+        F.col("doc_id").alias(out_id or "doc_id"),
         *[
             F.concat_ws("#", *mh_cols[b * rows_per_band : (b + 1) * rows_per_band]).alias(
                 f"band_{b}"
@@ -421,7 +406,7 @@ def band_keys_long(
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int, rows_per_band: int, id_col: str = "doc_id"
+    signatures: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
     """Band the signature into `bands` buckets of `rows_per_band` hashes;
     docs sharing any band bucket are candidates.
@@ -431,8 +416,8 @@ def lsh_candidate_pairs(
     n², and the signature aggregation runs once (not per band; Catalyst
     reuses the exchange across the self-join's two sides).
     """
-    banded = minhash_band_keys(signatures, bands, rows_per_band, id_col)
-    long = band_keys_long(banded, bands, id_col, "a")
+    banded = minhash_band_keys(signatures, bands, rows_per_band)
+    long = band_keys_long(banded, bands, "doc_id", "a")
     pairs = (
         long.join(long.withColumnRenamed("a", "b"), ["band", "bk"])
         .where(F.col("a") < F.col("b"))
@@ -449,9 +434,6 @@ def minhash_neardup_pairs(
     num_hashes: int = 12,
     bands: int = 4,
     rows_per_band: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """MinHash+LSH candidates, verified with exact Jaccard (so output is
     exact-precision; recall is the approximate part, tested by tolerance).
@@ -470,27 +452,26 @@ def minhash_neardup_pairs(
     persisted once (registered for host release, caching.py)."""
     from social_warner_spark.caching import register_persisted
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
+    sh = register_persisted(doc_shingles(df).persist())
     cands = lsh_candidate_pairs(
-        minhash_signatures(df, num_hashes, text_col, id_col, n, shingles=sh),
+        minhash_signatures(df, num_hashes, shingles=sh),
         bands,
         rows_per_band,
-        id_col,
     ).select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     # exact re-score over the FULL shingle sets: (b, shingle) is an
     # equi-join key, so no row explosion beyond |cands| · |A|.  Every
     # LSH candidate shares its banding shingle, so the inner join loses
     # no pair with J > 0 (and a shared-nothing pair has J = 0 < t).
     shared = (
-        cands.join(sh.select(F.col(id_col).alias("a"), "shingle"), "a")
-        .join(sh.select(F.col(id_col).alias("b"), "shingle"), ["b", "shingle"])
+        cands.join(sh.select(F.col("doc_id").alias("a"), "shingle"), "a")
+        .join(sh.select(F.col("doc_id").alias("b"), "shingle"), ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
     )
     return (
-        shared.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b")), "b")
+        shared.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b")), "b")
         .withColumn(
             "jaccard",
             F.round(
@@ -505,15 +486,7 @@ def minhash_neardup_pairs(
 
 
 def incremental_neardup_matches(
-    new: DataFrame,
-    corpus: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
+    new: DataFrame, corpus: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Screen a NEW batch against an EXISTING corpus: for each new doc with
     any corpus near-dup (Jaccard ≥ threshold), return its best match
@@ -532,39 +505,39 @@ def incremental_neardup_matches(
 
     # each shingle relation feeds three consumers (signatures, verification
     # join, sizes) — persist once, same as exact_jaccard_pairs
-    sh_n = register_persisted(doc_shingles(new, text_col, id_col, n).persist())
-    sh_c = register_persisted(doc_shingles(corpus, text_col, id_col, n).persist())
-    sig_n = minhash_signatures(new, num_hashes, text_col, id_col, n, shingles=sh_n)
-    sig_c = minhash_signatures(corpus, num_hashes, text_col, id_col, n, shingles=sh_c)
+    sh_n = register_persisted(doc_shingles(new).persist())
+    sh_c = register_persisted(doc_shingles(corpus).persist())
+    sig_n = minhash_signatures(new, INCREMENTAL_HASHES, shingles=sh_n)
+    sig_c = minhash_signatures(corpus, INCREMENTAL_HASHES, shingles=sh_c)
 
-    bn = minhash_band_keys(sig_n, bands, rows_per_band, id_col, out_id="new_id")
-    bc = minhash_band_keys(sig_c, bands, rows_per_band, id_col, out_id="corpus_id")
+    bn = minhash_band_keys(sig_n, INCREMENTAL_BANDS, INCREMENTAL_ROWS, out_id="new_id")
+    bc = minhash_band_keys(sig_c, INCREMENTAL_BANDS, INCREMENTAL_ROWS, out_id="corpus_id")
     # ONE equi-join on (band, band key) over the melted band relations —
     # the corpus signature aggregation runs once, not per band, and the
     # (small) new batch's keys broadcast so the corpus side never shuffles
     cands = (
-        band_keys_long(bc, bands, "corpus_id", "corpus_id")
-        .join(F.broadcast(band_keys_long(bn, bands, "new_id", "new_id")), ["band", "bk"])
+        band_keys_long(bc, INCREMENTAL_BANDS, "corpus_id", "corpus_id")
+        .join(F.broadcast(band_keys_long(bn, INCREMENTAL_BANDS, "new_id", "new_id")), ["band", "bk"])
         .select("new_id", "corpus_id")
         .distinct()
     )
 
     shared = (
-        cands.join(sh_n.select(F.col(id_col).alias("new_id"), "shingle"), "new_id")
+        cands.join(sh_n.select(F.col("doc_id").alias("new_id"), "shingle"), "new_id")
         .join(
-            sh_c.select(F.col(id_col).alias("corpus_id"), "shingle"),
+            sh_c.select(F.col("doc_id").alias("corpus_id"), "shingle"),
             ["corpus_id", "shingle"],
         )
         .groupBy("new_id", "corpus_id")
         .agg(F.count("*").alias("shared"))
     )
-    sizes_n = sh_n.groupBy(id_col).agg(F.count("*").alias("sz_n"))
-    sizes_c = sh_c.groupBy(id_col).agg(F.count("*").alias("sz_c"))
+    sizes_n = sh_n.groupBy("doc_id").agg(F.count("*").alias("sz_n"))
+    sizes_c = sh_c.groupBy("doc_id").agg(F.count("*").alias("sz_c"))
     scored = (
         # new-batch sizes broadcast (small side by construction); corpus
         # sizes stay a plain equi-join — |corpus| rows must never broadcast
-        shared.join(F.broadcast(sizes_n.withColumnRenamed(id_col, "new_id")), "new_id")
-        .join(sizes_c.withColumnRenamed(id_col, "corpus_id"), "corpus_id")
+        shared.join(F.broadcast(sizes_n.withColumnRenamed("doc_id", "new_id")), "new_id")
+        .join(sizes_c.withColumnRenamed("doc_id", "corpus_id"), "corpus_id")
         .withColumn(
             "jaccard",
             F.round(
@@ -580,7 +553,7 @@ def incremental_neardup_matches(
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") == 1)
         .select(
-            F.col("new_id").alias(id_col),
+            F.col("new_id").alias("doc_id"),
             F.col("corpus_id").alias("match_id"),
             "jaccard",
         )
@@ -612,10 +585,8 @@ def simhash_bits(text: Column, bits: int = 16) -> Column:
     return F.concat(*bit_terms)
 
 
-def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
-    return df.select(F.col(id_col), simhash_bits(F.col(text_col), bits).alias("simhash"))
+def simhash_fingerprints(df: DataFrame, bits: int = 16) -> DataFrame:
+    return df.select(F.col("doc_id"), simhash_bits(F.col("text"), bits).alias("simhash"))
 
 
 def sign_band_key(vec: Column, band: int, planes_per_band: int) -> Column:
@@ -632,8 +603,6 @@ def sign_band_key(vec: Column, band: int, planes_per_band: int) -> Column:
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bands: int | None = 6,
     planes_per_band: int = 3,
 ) -> DataFrame:
@@ -659,14 +628,14 @@ def embedding_neardup_pairs(
         from social_warner_spark.functions.vectors import cosine_prenormed, scoring_vec
 
         a = df.select(
-            F.col(id_col).alias("a"),
-            scoring_vec(F.col(vec_col)).alias("va"),
-            l2_norm(F.col(vec_col)).alias("na"),
+            F.col("vec_id").alias("a"),
+            scoring_vec(F.col("embedding")).alias("va"),
+            l2_norm(F.col("embedding")).alias("na"),
         )
         b = df.select(
-            F.col(id_col).alias("b"),
-            scoring_vec(F.col(vec_col)).alias("vb"),
-            l2_norm(F.col(vec_col)).alias("nb"),
+            F.col("vec_id").alias("b"),
+            scoring_vec(F.col("embedding")).alias("vb"),
+            l2_norm(F.col("embedding")).alias("nb"),
         )
         joined = a.join(F.broadcast(b), F.col("a") < F.col("b"))
         scored = joined.withColumn(
@@ -678,9 +647,9 @@ def embedding_neardup_pairs(
         )
     else:
         keyed = df.select(
-            F.col(id_col),
+            F.col("vec_id"),
             *[
-                sign_band_key(F.col(vec_col), b, planes_per_band).alias(f"band_{b}")
+                sign_band_key(F.col("embedding"), b, planes_per_band).alias(f"band_{b}")
                 for b in range(bands)
             ],
         )
@@ -688,7 +657,7 @@ def embedding_neardup_pairs(
         # per-band join loop (the banding map is narrow and cheap, so no
         # persist is needed; Catalyst reuses the exchange across the
         # self-join's sides)
-        long = band_keys_long(keyed, bands, id_col, "a")
+        long = band_keys_long(keyed, bands, "vec_id", "a")
         pairs = (
             long.join(long.withColumnRenamed("a", "b"), ["band", "bk"])
             .where(F.col("a") < F.col("b"))
@@ -701,14 +670,14 @@ def embedding_neardup_pairs(
         from social_warner_spark.functions.vectors import scoring_vec
 
         va = df.select(
-            F.col(id_col).alias("a"),
-            scoring_vec(F.col(vec_col)).alias("va"),
-            l2_norm(F.col(vec_col)).alias("na"),
+            F.col("vec_id").alias("a"),
+            scoring_vec(F.col("embedding")).alias("va"),
+            l2_norm(F.col("embedding")).alias("na"),
         )
         vb = df.select(
-            F.col(id_col).alias("b"),
-            scoring_vec(F.col(vec_col)).alias("vb"),
-            l2_norm(F.col(vec_col)).alias("nb"),
+            F.col("vec_id").alias("b"),
+            scoring_vec(F.col("embedding")).alias("vb"),
+            l2_norm(F.col("embedding")).alias("nb"),
         )
         scored = (
             pairs.distinct()
@@ -736,8 +705,6 @@ def semantic_dedup(
     threshold: float = 0.35,
     nlist: int = 8,
     iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with the deterministic IVF
@@ -764,24 +731,24 @@ def semantic_dedup(
     from social_warner_spark.operators.similarity import ivf_assign, ivf_centroids
 
     centroids = register_persisted(
-        ivf_centroids(corpus, nlist, iters, vec_col, id_col).persist()
+        ivf_centroids(corpus, nlist, iters).persist()
     )
     assigned = register_persisted(
-        ivf_assign(corpus, centroids, vec_col, id_col).persist()
+        ivf_assign(corpus, centroids).persist()
     )
     from social_warner_spark.functions.vectors import cosine_prenormed, scoring_vec
 
     a = assigned.select(
-        F.col(id_col).alias("a"),
+        F.col("vec_id").alias("a"),
         "cluster",
-        scoring_vec(F.col(vec_col)).alias("va"),
-        l2_norm(F.col(vec_col)).alias("na"),
+        scoring_vec(F.col("embedding")).alias("va"),
+        l2_norm(F.col("embedding")).alias("na"),
     )
     b = assigned.select(
-        F.col(id_col).alias("b"),
+        F.col("vec_id").alias("b"),
         "cluster",
-        scoring_vec(F.col(vec_col)).alias("vb"),
-        l2_norm(F.col(vec_col)).alias("nb"),
+        scoring_vec(F.col("embedding")).alias("vb"),
+        l2_norm(F.col("embedding")).alias("nb"),
     )
     dupes = (
         a.join(b, "cluster")
@@ -793,19 +760,13 @@ def semantic_dedup(
             )
             >= threshold
         )
-        .select(F.col("b").alias(id_col))
+        .select(F.col("b").alias("vec_id"))
         .distinct()
     )
-    return assigned.join(dupes, id_col, "left_anti").select(id_col, "cluster")
+    return assigned.join(dupes, "vec_id", "left_anti").select("vec_id", "cluster")
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """ASYMMETRIC near-dup detection: pairs where the smaller document's
     shingle set is ≥ ``threshold`` contained in the larger's —
     C = |A∩B| / min(|A|,|B|).  Containment catches excerpts/quotations
@@ -819,23 +780,23 @@ def containment_pairs(
     """
     from social_warner_spark.caching import register_persisted
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sh = register_persisted(doc_shingles(df).persist())
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_id_a"),
-            F.col(f"b.{id_col}").alias("doc_id_b"),
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
         )
         .agg(F.count("*").alias("shared"))
     )
-    sa = sizes.withColumnsRenamed({id_col: "doc_id_a", "sz": "_sa"})
-    sb = sizes.withColumnsRenamed({id_col: "doc_id_b", "sz": "_sb"})
+    sa = sizes.withColumnsRenamed({"doc_id": "doc_id_a", "sz": "_sa"})
+    sb = sizes.withColumnsRenamed({"doc_id": "doc_id_b", "sz": "_sb"})
     return (
         # sizes is |docs|-scaled: no explicit broadcast hint — the side
         # choice belongs to AQE (r05 verdict: a hint bypasses the size
@@ -854,13 +815,7 @@ def containment_pairs(
     )
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT Jaccard pairs via PREFIX FILTERING (Chaudhuri et al. 2006 /
     PPJoin): identical results to exact_jaccard_pairs, but the candidate
     self-join runs only on each document's ⌊(1−t)·|A|⌋+1 globally RAREST
@@ -879,16 +834,16 @@ def prefix_filter_jaccard_pairs(
     no second shingle shuffle."""
     from social_warner_spark.caching import register_persisted
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sh = register_persisted(doc_shingles(df).persist())
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (
         sh.join(freq, "shingle")
-        .join(sizes, id_col)
+        .join(sizes, "doc_id")
         .withColumn(
             "_rn",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("shingle"))
+                Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("shingle"))
             ),
         )
     )
@@ -901,26 +856,26 @@ def prefix_filter_jaccard_pairs(
     t_eff = threshold - 1e-6
     prefix = ranked.where(
         F.col("_rn") <= F.floor((1 - t_eff) * F.col("sz")) + 1
-    ).select(id_col, "shingle")
+    ).select("doc_id", "shingle")
     cand = (
         prefix.alias("a")
         .join(
             prefix.alias("b"),
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_id_a"),
-            F.col(f"b.{id_col}").alias("doc_id_b"),
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
         )
         .distinct()
     )
-    arrs = sh.groupBy(id_col).agg(F.array_sort(F.collect_list("shingle")).alias("_arr"))
+    arrs = sh.groupBy("doc_id").agg(F.array_sort(F.collect_list("shingle")).alias("_arr"))
     scored = (
         cand.join(
-            arrs.withColumnsRenamed({id_col: "doc_id_a", "_arr": "_aa"}), "doc_id_a"
+            arrs.withColumnsRenamed({"doc_id": "doc_id_a", "_arr": "_aa"}), "doc_id_a"
         )
-        .join(arrs.withColumnsRenamed({id_col: "doc_id_b", "_arr": "_ab"}), "doc_id_b")
+        .join(arrs.withColumnsRenamed({"doc_id": "doc_id_b", "_arr": "_ab"}), "doc_id_b")
         .select(
             "doc_id_a",
             "doc_id_b",
@@ -941,13 +896,7 @@ def prefix_filter_jaccard_pairs(
     return scored.where(F.col("jaccard") >= threshold)
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    *,
-    w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, *, w: int = 8) -> DataFrame:
     """Maximal cross-document duplicated token spans (ExactSubstr
     complement — Lee et al., arXiv:2107.06499).
 
@@ -964,7 +913,7 @@ def duplicated_spans(
     """
     from social_warner_spark.functions.text import shingles_from_tokens
 
-    d = docs.select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
+    d = docs.select(F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks"))
     d = d.select("_id", F.size("_toks").alias("_n"), "_toks")
     sh = d.select(
         "_id",
@@ -993,7 +942,7 @@ def duplicated_spans(
             F.sum(F.col("_s1") - F.col("_s0") + 1).alias("dup_tokens"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_dup_spans",
             "dup_tokens",
             F.round(F.col("dup_tokens") / F.col("_n").cast("double"), 6).alias("dup_frac"),

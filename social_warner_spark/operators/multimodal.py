@@ -59,7 +59,6 @@ def _map_items(
     schema: str,
     per_item: Callable[[bytes], Iterable[tuple]],
     id_col: str,
-    payload_col: str,
 ) -> DataFrame:
     """The decoders' shared mapInPandas scaffold: ``per_item(payload)``
     yields one or more output tuples per item, each prefixed here with
@@ -72,7 +71,7 @@ def _map_items(
         for pdf in batches:
             rows = [
                 (int(item_id), *cells)
-                for item_id, payload in zip(pdf[id_col], pdf[payload_col])
+                for item_id, payload in zip(pdf[id_col], pdf["payload"])
                 for cells in per_item(payload)
             ]
             yield pd.DataFrame(rows, columns=names)
@@ -188,9 +187,7 @@ def parse_media_header(payload: bytes) -> dict:
     return out
 
 
-def probe_media(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def probe_media(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Real header metadata per item, as a mapInPandas batch map.
 
     The standard mapInPandas shape — opaque binary in, typed
@@ -203,12 +200,12 @@ def probe_media(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            parsed = [parse_media_header(b) for b in pdf[payload_col]]
+            parsed = [parse_media_header(b) for b in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "item_id": pdf[id_col].astype("int64"),
                     "media_type": [p["media_type"] for p in parsed],
-                    "n_bytes": pdf[payload_col].map(len).astype("int32"),
+                    "n_bytes": pdf["payload"].map(len).astype("int32"),
                     "width": pd.array([p["width"] for p in parsed], dtype="Int32"),
                     "height": pd.array([p["height"] for p in parsed], dtype="Int32"),
                     "sample_rate": pd.array(
@@ -379,8 +376,7 @@ def decode_png(payload: bytes) -> tuple[int, int, int, list[int]]:
     for the vectorized reversal.  Supports bit depth 8, color types
     0/2/4/6 (gray, RGB, gray+alpha, RGBA), no interlace — the slice a
     training pipeline's synthetic/screenshot imagery lives in.  Raises
-    ValueError on anything else so callers fall back to the env-gated
-    codec stub rather than silently mis-decoding.
+    ValueError on anything else rather than silently mis-decoding.
     """
     width, height, channels, arr = _decode_png_array(payload)
     return width, height, channels, arr.tolist()
@@ -447,7 +443,7 @@ def decode_wav_samples(payload: bytes) -> tuple[int, int, list[int]]:
     Chunk walk + one numpy buffer view (see _decode_wav_array): PCM
     (format tag 1) at 8 (unsigned), 16 or 32 (signed little-endian)
     bits, interleaved channel order preserved.  Raises ValueError on
-    compressed/float formats — those stay behind the codec gate.
+    compressed/float formats.
     """
     sample_rate, n_channels, samples = _decode_wav_array(payload)
     return sample_rate, n_channels, samples.tolist()
@@ -485,11 +481,9 @@ def synth_mulaw_wav_content(doc_id: int, n_chars: int) -> bytes:
     )
 
 
-def with_synth_mulaw_content(
-    df: DataFrame, id_col: str = "doc_id", n_chars_col: str = "n_chars"
-) -> DataFrame:
+def with_synth_mulaw_content(df: DataFrame) -> DataFrame:
     """Attach a fully-decodable μ-law WAV payload per row."""
-    return _with_payload(df, synth_mulaw_wav_content, id_col, n_chars_col)
+    return _with_payload(df, synth_mulaw_wav_content, "doc_id", "n_chars")
 
 
 def _gif_lzw_encode(indices: list[int], mcs: int) -> bytes:
@@ -599,8 +593,7 @@ def decode_gif_frames(
     Supports what the synthesizer and common non-interlaced GIFs emit:
     global color table, any number of image descriptors (frames),
     extension blocks skipped structurally.  Raises ValueError on
-    interlaced or locally-tabled frames — those stay behind the codec
-    gate."""
+    interlaced or locally-tabled frames."""
     if payload[:3] != b"GIF" or payload[3:6] not in (b"87a", b"89a"):
         raise ValueError("not a GIF")
     width = int.from_bytes(payload[6:8], "little")
@@ -690,9 +683,7 @@ GIF_FRAME_SCHEMA = (
 )
 
 
-def gif_frame_stats(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def gif_frame_stats(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Per-FRAME statistics via decode_gif_frames inside mapInPandas —
     the frame-sampling shape for video-like media: one input row fans
     out to one output row per decoded frame, all sums exact integers so
@@ -707,12 +698,12 @@ def gif_frame_stats(
             rgb_sum = sum(sum(colors[v]) for v in frame)
             yield fi, w, h, len(frame), sum(frame), rgb_sum
 
-    return _map_items(df, GIF_FRAME_SCHEMA, frame_stats, id_col, payload_col)
+    return _map_items(df, GIF_FRAME_SCHEMA, frame_stats, id_col)
 
 
-def with_synth_gif_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def with_synth_gif_content(df: DataFrame) -> DataFrame:
     """Attach a fully-decodable multi-frame GIF payload per row."""
-    return _with_payload(df, synth_gif_content, id_col)
+    return _with_payload(df, synth_gif_content, "doc_id")
 
 
 # --- baseline JPEG (grayscale): real entropy decode + IDCT ------------------
@@ -934,8 +925,7 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, list[int]]:
     from DHT, DPCM DC, run-length AC incl. ZRL/EOB, 0xFF00 unstuffing)
     followed by dequantization and a genuine 2-D IDCT (numpy matrix
     form) with level shift and clamping.  Raises ValueError on
-    progressive/chroma/16-bit-quant variants — those stay behind the
-    codec gate."""
+    progressive/chroma/16-bit-quant variants."""
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -1024,9 +1014,7 @@ JPEG_STATS_SCHEMA = (
 )
 
 
-def jpeg_pixel_stats(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def jpeg_pixel_stats(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Grayscale pixel statistics per image via decode_jpeg_gray inside
     mapInPandas — same shape as png_pixel_stats: per-item decode, zero
     shuffle, exact integer cells out."""
@@ -1035,12 +1023,12 @@ def jpeg_pixel_stats(
         w, h, px = decode_jpeg_gray(payload)
         yield w, h, len(px), sum(px), min(px), max(px)
 
-    return _map_items(df, JPEG_STATS_SCHEMA, pixel_stats, id_col, payload_col)
+    return _map_items(df, JPEG_STATS_SCHEMA, pixel_stats, id_col)
 
 
-def with_synth_jpeg_content(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def with_synth_jpeg_content(df: DataFrame) -> DataFrame:
     """Attach a fully-decodable baseline grayscale JPEG payload per row."""
-    return _with_payload(df, synth_jpeg_content, id_col)
+    return _with_payload(df, synth_jpeg_content, "doc_id")
 
 
 def synth_png_content(doc_id: int) -> bytes:
@@ -1153,9 +1141,7 @@ WAV_STATS_SCHEMA = (
 )
 
 
-def png_pixel_stats(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def png_pixel_stats(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Real pixel statistics per image via decode_png inside mapInPandas.
 
     Sums stay integer (engine-exact); callers derive means/RMS with one
@@ -1170,12 +1156,10 @@ def png_pixel_stats(
         w, h, ch, arr = _decode_png_array(payload)
         yield w, h, int(arr.size), int(arr.sum()), int(arr.min()), int(arr.max())
 
-    return _map_items(df, PNG_STATS_SCHEMA, pixel_stats, id_col, payload_col)
+    return _map_items(df, PNG_STATS_SCHEMA, pixel_stats, id_col)
 
 
-def wav_sample_stats(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def wav_sample_stats(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Real PCM sample statistics per clip via decode_wav_samples."""
 
     def sample_stats(payload: bytes):
@@ -1191,7 +1175,7 @@ def wav_sample_stats(
             int(samples.max()),
         )
 
-    return _map_items(df, WAV_STATS_SCHEMA, sample_stats, id_col, payload_col)
+    return _map_items(df, WAV_STATS_SCHEMA, sample_stats, id_col)
 
 
 AHASH_SCHEMA = (
@@ -1208,9 +1192,7 @@ AHASH_BITS = 16
 _AHASH_XSTRIDE, _AHASH_YSTRIDE = 7, 13
 
 
-def png_ahash(
-    df: DataFrame, id_col: str = "item_id", payload_col: str = "payload"
-) -> DataFrame:
+def png_ahash(df: DataFrame, id_col: str = "item_id") -> DataFrame:
     """Average-hash perceptual fingerprint per image, integer-exact.
 
     Decodes the real PNG, grays each probe point p_k = ((7k) mod w,
@@ -1240,14 +1222,13 @@ def png_ahash(
                 phash |= 1 << k
         yield w, h, n_px, total, phash
 
-    return _map_items(df, AHASH_SCHEMA, ahash, id_col, payload_col)
+    return _map_items(df, AHASH_SCHEMA, ahash, id_col)
 
 
 def wav_frame_rms_cells(
     df: DataFrame,
     frame: int = 100,
     id_col: str = "item_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Row-expanding audio framing: one row per `frame`-sample window
     with EXACT integer (count, Σv²) cells — the engine derives RMS and
@@ -1269,12 +1250,10 @@ def wav_frame_rms_cells(
         for fi, f0 in enumerate(starts.tolist()):
             yield fi, int(min(frame, samples.size - f0)), int(sq_sums[fi])
 
-    return _map_items(df, FRAME_RMS_SCHEMA, frame_cells, id_col, payload_col)
+    return _map_items(df, FRAME_RMS_SCHEMA, frame_cells, id_col)
 
 
-def with_synth_media_content(
-    df: DataFrame, id_col: str = "doc_id", n_chars_col: str = "n_chars"
-) -> DataFrame:
+def with_synth_media_content(df: DataFrame) -> DataFrame:
     """Attach FULLY-DECODABLE media per row: odd ids → synth_png_content,
     even ids → synth_wav_content (vs with_synth_media's header-only
     payloads, kept separate so x49's probe contract is unchanged)."""
@@ -1282,16 +1261,14 @@ def with_synth_media_content(
     def build(i: int, n: int) -> bytes:
         return synth_png_content(i) if i % 2 == 1 else synth_wav_content(i, n)
 
-    return _with_payload(df, build, id_col, n_chars_col)
+    return _with_payload(df, build, "doc_id", "n_chars")
 
 
-def with_synth_media(
-    df: DataFrame, id_col: str = "doc_id", n_chars_col: str = "n_chars"
-) -> DataFrame:
+def with_synth_media(df: DataFrame) -> DataFrame:
     """Attach a real PNG/WAV container payload per row (synth_media_payload),
     built in an Arrow-batched pandas UDF (struct packing is Python work)."""
 
     def build(i: int, n: int) -> bytes:
         return synth_media_payload(i, n)[0]
 
-    return _with_payload(df, build, id_col, n_chars_col)
+    return _with_payload(df, build, "doc_id", "n_chars")

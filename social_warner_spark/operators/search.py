@@ -29,9 +29,7 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_scores(
-    docs: DataFrame, terms: list[str], text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
     """(doc_id, score) for every doc containing at least one query term."""
     def _is(term: str):
         # a 2-arg lambda would make F.filter pass the element INDEX as
@@ -39,9 +37,9 @@ def bm25_scores(
         return lambda x: x == F.lit(term)
 
     staged = docs.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), tokens(F.col("text")).alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_toks").cast("double").alias("dl"),
         *[
             F.size(F.filter("_toks", _is(t))).cast("double").alias(f"tf_{i}")
@@ -72,5 +70,5 @@ def bm25_scores(
     for i in range(1, len(terms)):
         total = total + term_score(i)
     return scored.select(
-        F.col(id_col), F.round(total, 6).alias("score")
+        F.col("doc_id"), F.round(total, 6).alias("score")
     ).where(F.col("score") > 0)

@@ -35,13 +35,7 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each probe (self-matches excluded).
 
     Norms are staged per VECTOR (not per pair): the fold lambdas run
@@ -50,14 +44,14 @@ def cosine_topk(
     from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        scoring_vec(F.col(vec_col)).alias("vc"),
-        l2_norm(F.col(vec_col)).alias("nc"),
+        F.col("vec_id").alias("neighbor_id"),
+        scoring_vec(F.col("embedding")).alias("vc"),
+        l2_norm(F.col("embedding")).alias("nc"),
     )
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        scoring_vec(F.col(vec_col)).alias("vp"),
-        l2_norm(F.col(vec_col)).alias("np"),
+        F.col("vec_id").alias("probe_id"),
+        scoring_vec(F.col("embedding")).alias("vp"),
+        l2_norm(F.col("embedding")).alias("np"),
     )
     scored = c.join(F.broadcast(p), F.col("probe_id") != F.col("neighbor_id")).withColumn(
         "cos",
@@ -97,8 +91,6 @@ def cosine_topk_bucketed(
     k: int = 5,
     planes: int = 4,
     multiprobe: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the probe's LSH bucket
     (plus, with ``multiprobe=1``, every bucket one sign-flip away).
@@ -113,16 +105,16 @@ def cosine_topk_bucketed(
     from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        scoring_vec(F.col(vec_col)).alias("vc"),
-        l2_norm(F.col(vec_col)).alias("nc"),
-        sign_bucket(F.col(vec_col), planes).alias("bk"),
+        F.col("vec_id").alias("neighbor_id"),
+        scoring_vec(F.col("embedding")).alias("vc"),
+        l2_norm(F.col("embedding")).alias("nc"),
+        sign_bucket(F.col("embedding"), planes).alias("bk"),
     )
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        scoring_vec(F.col(vec_col)).alias("vp"),
-        l2_norm(F.col(vec_col)).alias("np"),
-        F.explode(sign_bucket_variants(F.col(vec_col), planes, multiprobe)).alias("bk"),
+        F.col("vec_id").alias("probe_id"),
+        scoring_vec(F.col("embedding")).alias("vp"),
+        l2_norm(F.col("embedding")).alias("np"),
+        F.explode(sign_bucket_variants(F.col("embedding"), planes, multiprobe)).alias("bk"),
     )
     scored = (
         c.join(F.broadcast(p), "bk")
@@ -138,12 +130,7 @@ def cosine_topk_bucketed(
     return _ranked_topk(scored, k)
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every corpus vector to its nearest centroid by rounded cosine
     (ties → lowest cluster id).  Centroids are broadcast (nlist is small by
     construction); the argmax is a `max_by` HASH AGGREGATE over the nlist
@@ -156,14 +143,14 @@ def ivf_assign(
     from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
 
     # _vd: the double-promoted scoring copy (cast n times, not n·nlist —
-    # see scoring_vec); the original vec_col rides through untouched so
-    # the output schema keeps its declared type.
+    # see scoring_vec); the original embedding column rides through
+    # untouched so the output schema keeps its declared type.
     scored = (
         corpus.select(
-            id_col,
-            vec_col,
-            scoring_vec(F.col(vec_col)).alias("_vd"),
-            l2_norm(F.col(vec_col)).alias("_vn"),
+            "vec_id",
+            "embedding",
+            scoring_vec(F.col("embedding")).alias("_vd"),
+            l2_norm(F.col("embedding")).alias("_vn"),
         )
         .join(
             F.broadcast(
@@ -186,24 +173,18 @@ def ivf_assign(
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
-            F.first(vec_col).alias(vec_col),  # constant within the group
+            F.first("embedding").alias("embedding"),  # constant within the group
             F.max_by(
                 "cluster", F.struct(F.col("ccos"), (-F.col("cluster")).alias("nc"))
             ).alias("cluster"),
         )
-        .select(id_col, vec_col, "cluster")
+        .select("vec_id", "embedding", "cluster")
     )
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    nlist: int = 8,
-    iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_centroids(corpus: DataFrame, nlist: int = 8, iters: int = 1) -> DataFrame:
     """Deterministic IVF centroids: seed with the vectors of the `nlist`
     lowest ids, then `iters` Lloyd steps (assign → per-dimension mean).
 
@@ -213,20 +194,20 @@ def ivf_centroids(
     (cluster, dim, value), partial-aggregated avg per (cluster, dim), then
     re-assembled — no vectors ever sit on the driver.
     """
-    w = Window.orderBy(id_col)
+    w = Window.orderBy("vec_id")
     centroids = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
+        corpus.select("vec_id", "embedding")
+        .orderBy("vec_id")
         .limit(nlist)
         .select(
             (F.row_number().over(w) - 1).alias("cluster"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
+            F.col("embedding").cast("array<double>").alias("cvec"),
         )
     )
     for _ in range(iters):
-        assigned = ivf_assign(corpus, centroids, vec_col, id_col)
+        assigned = ivf_assign(corpus, centroids)
         centroids = (
-            assigned.select("cluster", F.posexplode(F.col(vec_col).cast("array<double>")))
+            assigned.select("cluster", F.posexplode(F.col("embedding").cast("array<double>")))
             .groupBy("cluster", "pos")
             .agg(F.round(F.avg("col"), 6).alias("m"))
             .groupBy("cluster")
@@ -246,8 +227,6 @@ def cosine_topk_ivf(
     nlist: int = 8,
     nprobe: int = 2,
     iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF approximate top-k: search only the `nprobe` clusters whose
     centroids are nearest each probe.
@@ -265,18 +244,18 @@ def cosine_topk_ivf(
     # — persist so the two consumers (corpus assignment, probe routing)
     # don't each re-run the Lloyd fit
     centroids = register_persisted(
-        ivf_centroids(corpus, nlist, iters, vec_col, id_col).persist()
+        ivf_centroids(corpus, nlist, iters).persist()
     )
-    assigned = ivf_assign(corpus, centroids, vec_col, id_col)
+    assigned = ivf_assign(corpus, centroids)
 
     from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
 
     wp = Window.partitionBy("probe_id").orderBy(F.desc("ccos"), F.asc("cluster"))
     probe_clusters = (
         probes.select(
-            F.col(id_col).alias("probe_id"),
-            scoring_vec(F.col(vec_col)).alias("vp"),
-            l2_norm(F.col(vec_col)).alias("np"),
+            F.col("vec_id").alias("probe_id"),
+            scoring_vec(F.col("embedding")).alias("vp"),
+            l2_norm(F.col("embedding")).alias("np"),
         )
         .join(F.broadcast(centroids), how="cross")
         .withColumn(
@@ -294,9 +273,9 @@ def cosine_topk_ivf(
     )
     scored = (
         assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            scoring_vec(F.col(vec_col)).alias("vc"),
-            l2_norm(F.col(vec_col)).alias("nc"),
+            F.col("vec_id").alias("neighbor_id"),
+            scoring_vec(F.col("embedding")).alias("vc"),
+            l2_norm(F.col("embedding")).alias("nc"),
             "cluster",
         )
         .join(F.broadcast(probe_clusters), "cluster")
@@ -312,14 +291,7 @@ def cosine_topk_ivf(
     return _ranked_topk(scored, k)
 
 
-def _subvectors(
-    df: DataFrame,
-    m: int,
-    sublen: int,
-    vec_col: str,
-    id_col: str,
-    out_id: str,
-) -> DataFrame:
+def _subvectors(df: DataFrame, m: int, sublen: int, out_id: str) -> DataFrame:
     """Explode each vector into its `m` contiguous subspace slices:
     (id, sub, sv: array<double>).  Pure narrow map — the explode keeps a
     vector's m rows in the same partition, so downstream per-id partial
@@ -329,13 +301,13 @@ def _subvectors(
             F.struct(
                 F.lit(s).alias("sub"),
                 F.slice(
-                    F.col(vec_col).cast("array<double>"), s * sublen + 1, sublen
+                    F.col("embedding").cast("array<double>"), s * sublen + 1, sublen
                 ).alias("sv"),
             )
             for s in range(m)
         ]
     )
-    return df.select(F.col(id_col).alias(out_id), F.explode(pieces).alias("x")).select(
+    return df.select(F.col("vec_id").alias(out_id), F.explode(pieces).alias("x")).select(
         out_id, F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv")
     )
 
@@ -373,8 +345,6 @@ def pq_codebooks(
     k: int = 4,
     sublen: int = 16,
     iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Deterministic product-quantization codebooks: per subspace, seed the
     `k` codewords from the sub-vectors of the k lowest ids, then run
@@ -387,11 +357,11 @@ def pq_codebooks(
     """
     w = Window.partitionBy("sub").orderBy("sid")
     seeds = _subvectors(
-        corpus.orderBy(id_col).limit(k), m, sublen, vec_col, id_col, "sid"
+        corpus.orderBy("vec_id").limit(k), m, sublen, "sid"
     ).select(
         "sub", (F.row_number().over(w) - 1).alias("code"), F.col("sv").alias("cw")
     )
-    subs = _subvectors(corpus, m, sublen, vec_col, id_col, id_col)
+    subs = _subvectors(corpus, m, sublen, "vec_id")
     books = seeds
     for _ in range(iters):
         assigned = _pq_assign(subs, books, sublen)
@@ -440,8 +410,6 @@ def pq_encode(
     books: DataFrame,
     m: int = 4,
     sublen: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Encode every vector as its m-byte PQ code array: (id, codes:
     array<int>).  This is the 100 TB storage form — m small ints instead
@@ -460,7 +428,7 @@ def pq_encode(
     ``range(m)``.  A missing subspace leaves its ``min`` NULL; the code
     assembly fails the query with ``raise_error`` on that NULL inside the
     same projection (no extra Spark job) instead of emitting corrupt codes."""
-    subs = _subvectors(corpus, m, sublen, vec_col, id_col, id_col)
+    subs = _subvectors(corpus, m, sublen, "vec_id")
     scored = subs.join(F.broadcast(books), "sub").withColumn(
         "d", F.round(_l2sq(F.col("sv"), F.col("cw"), sublen), 6)
     )
@@ -471,10 +439,10 @@ def pq_encode(
         for s in range(m)
     ]
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(*per_sub)
         .select(
-            id_col,
+            "vec_id",
             F.array(*[
                 F.coalesce(F.col(f"_c{s}"), F.raise_error(
                     F.lit(f"pq_encode: books has no codewords for subspace {s}")
@@ -494,8 +462,6 @@ def l2_topk_pq(
     sublen: int = 16,
     iters: int = 1,
     rerank: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """PQ/ADC approximate nearest neighbors: per-probe top-k by asymmetric
     distance (probe sub-vector vs corpus codeword) — the classic
@@ -522,16 +488,16 @@ def l2_topk_pq(
     from social_warner_spark.caching import register_persisted
 
     books = register_persisted(
-        pq_codebooks(corpus, m, ncode, sublen, iters, vec_col, id_col).persist()
+        pq_codebooks(corpus, m, ncode, sublen, iters).persist()
     )
-    codes = pq_encode(corpus, books, m, sublen, vec_col, id_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
+    codes = pq_encode(corpus, books, m, sublen).select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
     # Per-probe ADC lookup table as a map keyed by sub*ncode + code —
     # a map (not a positional array) so a codeword left unused by Lloyd
     # cannot shift the slots of the ones that remain.
     luts = (
-        _subvectors(probes, m, sublen, vec_col, id_col, "probe_id")
+        _subvectors(probes, m, sublen, "probe_id")
         .join(F.broadcast(books), "sub")
         .select(
             "probe_id",
@@ -571,12 +537,12 @@ def l2_topk_pq(
     # only — the shortlist is broadcast against the corpus scan, so the
     # full-precision distance work is R/|corpus| of brute force.
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("vc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("vc"),
     )
     pv = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("vp"),
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").cast("array<double>").alias("vp"),
     )
     exact = (
         cv.join(F.broadcast(shortlist), "neighbor_id")
@@ -591,9 +557,7 @@ def l2_topk_pq(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization — the storage path
     for vector corpora at 100 TB (4× smaller than float32, 8× than
     float64, before encoding).
@@ -607,8 +571,8 @@ def quantize_embeddings(
     arithmetic in double with half-away-from-zero rounding, which both
     Spark and the SQL oracle implement identically.
     """
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    staged = df.select(F.col(id_col), vd.alias("_v"))
+    vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    staged = df.select(F.col("vec_id"), vd.alias("_v"))
     amax = F.array_max(F.transform(F.col("_v"), F.abs))
     scaled = staged.withColumn("_scale", F.lit(127.0) / F.greatest(amax, F.lit(1e-12)))
     quant = lambda x: F.least(
@@ -623,7 +587,7 @@ def quantize_embeddings(
     err = F.sqrt(F.aggregate(sqerr, F.lit(0.0), lambda acc, x: acc + x))
     n_sat = F.size(F.filter(F.col("_q"), lambda x: F.abs(x) == 127))
     return q.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(F.col("_scale"), 6).alias("scale"),
         n_sat.cast("long").alias("n_sat"),
         F.round(err, 6).alias("recon_err"),

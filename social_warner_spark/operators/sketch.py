@@ -34,14 +34,14 @@ from pyspark.sql import Column, DataFrame, Window
 _NIBBLES = 3
 
 
-def bloom_position(key: Column, seed: int, nibbles: int = _NIBBLES) -> Column:
+def bloom_position(key: Column, seed: int) -> Column:
     """Tagged hash position of ``key`` under hash function ``seed``.
 
     The seed participates in the md5 input AND the output tag, so the k
     sub-filters occupy disjoint position namespaces in one table.
     """
     h = F.md5(F.concat(F.lit(f"{seed}|"), key.cast("string")))
-    return F.concat(F.lit(f"{seed}|"), F.substring(h, 1, nibbles))
+    return F.concat(F.lit(f"{seed}|"), F.substring(h, 1, _NIBBLES))
 
 
 def bloom_filter_table(build: DataFrame, key_col: str, k: int = 3) -> DataFrame:
@@ -112,7 +112,6 @@ def cms_cells(
 
 def cms_heavy_hitters(
     df: DataFrame,
-    text_col: str = "text",
     depth: int = 4,
     width: int = 64,
     k: int = 20,
@@ -133,7 +132,7 @@ def cms_heavy_hitters(
     from social_warner_spark.functions.text import tokens
 
     tok = register_persisted(
-        df.select(F.explode(tokens(F.col(text_col))).alias("token")).persist()
+        df.select(F.explode(tokens(F.col("text"))).alias("token")).persist()
     )
     cells = cms_cells(tok, "token", depth, width)
     exact = tok.groupBy("token").agg(F.count("*").alias("exact"))
@@ -242,7 +241,8 @@ def log_histogram_quantiles(
     )
 
 
-#: HLL bias constant for m=64 registers (Flajolet et al. 2007, §4).
+#: HLL register count, and its bias constant (Flajolet et al. 2007, §4).
+_HLL_M = 64
 _HLL_ALPHA_64 = 0.709
 
 
@@ -250,14 +250,13 @@ def hll_distinct(
     items: DataFrame,
     item_col: str = "token",
     group_col: str = "source",
-    m: int = 64,
 ) -> DataFrame:
     """HyperLogLog distinct-count estimate per group (Flajolet et al.
     2007), built relationally so ANY engine reproduces the exact
     registers — unlike ``approx_count_distinct``, whose HLL++ register
     layout is engine-internal and therefore un-oracle-able.
 
-    Per item: a 60-bit md5 hash; low 6 bits pick one of ``m``=64
+    Per item: a 60-bit md5 hash; low 6 bits pick one of ``_HLL_M``=64
     registers, the remaining 54 bits' leading-zero rank (computed
     EXACTLY as ``55 - length(bin(w))`` — no float log2, whose rounding
     at the 2^53 boundary could diverge between engines) updates the
@@ -277,7 +276,7 @@ def hll_distinct(
     h = F.conv(F.substring(F.md5(F.col(item_col)), 1, 15), 16, 10).cast("long")
     hashed = items.select(
         F.col(group_col).alias("grp"),
-        (h % m).cast("int").alias("bucket"),
+        (h % _HLL_M).cast("int").alias("bucket"),
         F.shiftright(h, 6).alias("w"),
     )
     regs = (
@@ -300,11 +299,12 @@ def hll_distinct(
             "sum_scaled"
         ),
     )
-    denom = F.col("sum_scaled") / F.lit(float(2**55)) + (m - F.col("n_present"))
-    e_raw = F.lit(_HLL_ALPHA_64 * m * m) / denom
-    v = m - F.col("n_present")
+    v = _HLL_M - F.col("n_present")
+    denom = F.col("sum_scaled") / F.lit(float(2**55)) + v
+    e_raw = F.lit(_HLL_ALPHA_64 * _HLL_M * _HLL_M) / denom
     est = F.when(
-        (v > 0) & (e_raw <= 2.5 * m), F.lit(float(m)) * F.log(F.lit(m) / v)
+        (v > 0) & (e_raw <= 2.5 * _HLL_M),
+        F.lit(float(_HLL_M)) * F.log(F.lit(_HLL_M) / v),
     ).otherwise(e_raw)
     return per.select(
         F.col("grp").alias(group_col),
@@ -370,7 +370,11 @@ def kmv_estimate(sketch: DataFrame, k: int, group_col: str = "group") -> DataFra
     )
 
 
-def twopass_median(df: DataFrame, value_col: str, bucket_width: float = 1024.0) -> DataFrame:
+#: Value range per pass-1 cell of `twopass_median`.
+MEDIAN_BUCKET_WIDTH = 1024.0
+
+
+def twopass_median(df: DataFrame, value_col: str) -> DataFrame:
     """EXACT median without a global sort: the two-pass locate-and-rank
     recipe that scales where `percentile_cont` (full sort) cannot.
 
@@ -390,7 +394,9 @@ def twopass_median(df: DataFrame, value_col: str, bucket_width: float = 1024.0) 
 
     v = F.col(value_col).cast("double")
     rows = register_persisted(
-        df.select(v.alias("_v"), F.floor(v / bucket_width).cast("long").alias("_b")).persist()
+        df.select(
+            v.alias("_v"), F.floor(v / MEDIAN_BUCKET_WIDTH).cast("long").alias("_b")
+        ).persist()
     )
     cells = rows.groupBy("_b").agg(F.count("*").alias("c"))
     w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, 0)

@@ -138,25 +138,19 @@ def gapfill_interpolate(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assign each event a per-user session index: a new session starts
     when the gap to the previous event exceeds ``gap_minutes``.
 
     Returns the input plus ``session_id`` (0-based per user).  Ties on
-    ``ts`` are ordered by ``tiebreak_col`` so the running sum is
+    ``ts`` are ordered by ``event_id`` so the running sum is
     deterministic.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    prev_ts = F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
     new_sess = F.when(
         prev_ts.isNull()
-        | (F.col(ts_col) > prev_ts + F.expr(f"INTERVAL {gap_minutes} MINUTES")),
+        | (F.col("ts") > prev_ts + F.expr(f"INTERVAL {gap_minutes} MINUTES")),
         F.lit(1),
     ).otherwise(F.lit(0))
     # the flag is staged into its own projection (window functions can't
@@ -169,13 +163,7 @@ def sessionize(
     ).drop("_new_sess")
 
 
-def ewma(
-    events: DataFrame,
-    decay: float = 0.9,
-    key_col: str = "user_id",
-    val_col: str = "value",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-) -> DataFrame:
+def ewma(events: DataFrame, decay: float = 0.9) -> DataFrame:
     """Exponentially-weighted moving average per key:
     ``s_t = x_t + decay·s_{t-1}`` over each key's ordered history, as a
     closed-form cumulative sum — ``s_t = decay^t · Σ_{i≤t} x_i/decay^i``
@@ -190,28 +178,28 @@ def ewma(
     accumulate the cumsum in the SAME sort order, so results are
     bit-reproducible.
     """
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pos = F.row_number().over(Window.partitionBy(key_col).orderBy(*order_cols)) - 1
+    ordered = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    pos = F.row_number().over(ordered) - 1
     staged = events.select(
-        key_col,
-        *order_cols,
-        F.col(val_col).alias("_x"),
+        "user_id",
+        "ts",
+        "event_id",
+        F.col("value").alias("_x"),
         pos.alias("_pos"),
     )
     scaled = staged.select(
-        key_col,
-        *order_cols,
+        "user_id",
+        "ts",
+        "event_id",
         "_pos",
         "_x",
         (F.col("_x") / F.pow(F.lit(decay), F.col("_pos"))).alias("_xs"),
     )
     return scaled.select(
-        key_col,
-        *order_cols,
+        "user_id",
+        "ts",
+        "event_id",
         "_x",
         (F.pow(F.lit(decay), F.col("_pos")) * F.sum("_xs").over(w)).alias("ewma"),
     )

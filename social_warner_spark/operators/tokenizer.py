@@ -40,49 +40,35 @@ from social_warner_spark.functions.text import tokens
 MERGE_SEP = "\x01"
 
 
-def learn_merges(
-    docs: DataFrame,
-    *,
-    rounds: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def learn_merges(docs: DataFrame, *, rounds: int = 5) -> DataFrame:
     """Learn `rounds` BPE merge rules; returns (round, p1, p2, n) rows."""
-    best_rows, _ = _merge_loop(docs, rounds=rounds, id_col=id_col, text_col=text_col)
+    best_rows, _ = _merge_loop(docs, rounds=rounds)
     return reduce(DataFrame.unionAll, best_rows)
 
 
-def encoded_lengths(
-    docs: DataFrame,
-    *,
-    rounds: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def encoded_lengths(docs: DataFrame, *, rounds: int = 5) -> DataFrame:
     """Apply the `rounds` learned merges; per doc returns the symbol
     count before/after and the count of merge applications (saved)."""
-    _, seq = _merge_loop(docs, rounds=rounds, id_col=id_col, text_col=text_col)
+    _, seq = _merge_loop(docs, rounds=rounds)
     n_after = F.size(F.split(F.btrim(F.col("s"), F.lit("|")), r"\|\|"))
-    before = docs.where(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col).alias("_id"), F.size(tokens(F.col(text_col))).alias("n_before")
+    before = docs.where(F.trim(F.col("text")) != "").select(
+        F.col("doc_id").alias("_id"), F.size(tokens(F.col("text"))).alias("n_before")
     )
     after = seq.select("_id", n_after.alias("n_after"))
     return before.join(after, "_id").select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_before",
         "n_after",
         (F.col("n_before") - F.col("n_after")).alias("n_merged"),
     )
 
 
-def _merge_loop(
-    docs: DataFrame, *, rounds: int, id_col: str, text_col: str
-) -> tuple[list[DataFrame], DataFrame]:
+def _merge_loop(docs: DataFrame, *, rounds: int) -> tuple[list[DataFrame], DataFrame]:
     from social_warner_spark.caching import register_persisted
 
-    toks = tokens(F.col(text_col))
-    seq = docs.where(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col).alias("_id"),
+    toks = tokens(F.col("text"))
+    seq = docs.where(F.trim(F.col("text")) != "").select(
+        F.col("doc_id").alias("_id"),
         F.concat(F.lit("||"), F.concat_ws("||", toks), F.lit("||")).alias("s"),
     )
     best_rows: list[DataFrame] = []

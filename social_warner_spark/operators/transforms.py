@@ -53,7 +53,7 @@ def project_columns(df: DataFrame, columns: Iterable[str]) -> DataFrame:
 
 #: config dtype → (spark type, fill value) per the reference cast table
 #: (data_transform.py:34-44; SURVEY.md §1.2)
-_CAST_RULES: dict[str, tuple[str, object | None]] = {
+CAST_RULES: dict[str, tuple[str, object | None]] = {
     "int64": ("long", 0),
     "float64": ("double", 0.0),
     "datetime64[ns]": ("timestamp", None),
@@ -82,9 +82,9 @@ def cast_with_fill(df: DataFrame, dtype_map: Mapping[str, str]) -> DataFrame:
         if dtype is None:
             exprs.append(qcol(name))
             continue
-        if dtype not in _CAST_RULES:
+        if dtype not in CAST_RULES:
             raise ValueError(f"unsupported config dtype {dtype!r} for column {name!r}")
-        spark_type, fill = _CAST_RULES[dtype]
+        spark_type, fill = CAST_RULES[dtype]
         casted = qcol(name).try_cast(spark_type)
         if spark_type == "long":
             # try_cast(string AS bigint) rejects "1.5" and "1e3"
@@ -106,11 +106,9 @@ def format_date_columns(
     return out
 
 
-def format_timestamp_columns(
-    df: DataFrame, columns: Iterable[str], fmt: str = "yyyy-MM-dd'T'HH:mm:ss"
-) -> DataFrame:
+def format_timestamp_columns(df: DataFrame, columns: Iterable[str]) -> DataFrame:
     """Timestamp → ISO-8601 string (reference data_transform.py:73-76)."""
-    return format_date_columns(df, columns, fmt)
+    return format_date_columns(df, columns, "yyyy-MM-dd'T'HH:mm:ss")
 
 
 def sanitize_column_names(df: DataFrame) -> DataFrame:

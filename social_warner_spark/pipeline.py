@@ -92,8 +92,8 @@ def transform_config_frame(
         # Non-list tags parse to an empty map in the reference
         # (data_transform.py:102-150): no pivot columns, source dropped.
         out = out.drop(TAGS_COLUMN)
-    out = format_date_columns(out, [c for c in DATE_STR_COLUMNS if c in out.columns])
-    out = format_timestamp_columns(out, [c for c in ISO_TS_COLUMNS if c in out.columns])
+    out = format_date_columns(out, DATE_STR_COLUMNS)
+    out = format_timestamp_columns(out, ISO_TS_COLUMNS)
     return sanitize_column_names(out)
 
 

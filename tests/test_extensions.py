@@ -204,32 +204,34 @@ def test_neardup_clusters_deep_chain_converges(spark):
     """A diameter-7 path graph: the min label crosses one hop per round,
     so the loop must run ~7 rounds — each gated by the r08 checkpointed
     `_chg` flag probe (not a labels⋈labels join) — before converging.
-    Sliding 6-word windows at threshold 0.6 give J(adjacent)=5/7 ≥ 0.6
-    and J(skip-one)=4/8 < 0.6, so the graph is exactly the path."""
+    Sliding 8-word windows (6 word 3-shingles each) at threshold 0.6
+    give J(adjacent)=5/7 ≥ 0.6 and J(skip-one)=4/8 < 0.6, so the graph
+    is exactly the path."""
     from social_warner_spark.operators.dedup import neardup_clusters
 
     words = [f"w{i}" for i in range(20)]
-    rows = [(i + 1, " ".join(words[i : i + 6])) for i in range(8)]
+    rows = [(i + 1, " ".join(words[i : i + 8])) for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r.doc_id: r.cluster_id
-        for r in neardup_clusters(df, threshold=0.6, n=1).collect()
+        for r in neardup_clusters(df, threshold=0.6).collect()
     }
     assert got == {i: 1 for i in range(1, 9)}
 
 
-def test_neardup_clusters_nonconvergence_raises(spark):
-    """max_iters below the component diameter must raise loudly (the
+def test_neardup_clusters_nonconvergence_raises(spark, monkeypatch):
+    """MAX_ITERS below the component diameter must raise loudly (the
     for-else guard), never return partially-propagated labels."""
     import pytest as _pytest
 
-    from social_warner_spark.operators.dedup import neardup_clusters
+    from social_warner_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "MAX_ITERS", 2)
     words = [f"w{i}" for i in range(20)]
-    rows = [(i + 1, " ".join(words[i : i + 6])) for i in range(8)]
+    rows = [(i + 1, " ".join(words[i : i + 8])) for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        neardup_clusters(df, threshold=0.6, n=1, max_iters=2).collect()
+        dedup.neardup_clusters(df, threshold=0.6).collect()
 
 
 def test_redact_pii_fixtures(spark):

@@ -234,7 +234,7 @@ def test_content_dataset_window_widen():
     assert between[0]["values"] == ["2024-02-23", "2024-03-01"]
     # the widen happened AFTER the filter captured the caller dates
     assert q.start_date == CONTENT_WIDENED_START
-    assert q.analysis_window != ("2024-02-23", "2024-03-01")
+    assert (q.start_date, q.end_date) != ("2024-02-23", "2024-03-01")
     assert q.end_date == "{{nDaysAgo 0}}"
 
 
@@ -244,7 +244,7 @@ def test_non_content_dataset_no_widen():
     cfg = parse_config("cfg2", dict(CONFIG_DOC, dataset_id="dataset_brand_warner"))
     assert not cfg.is_content_dataset
     q = build_extract_query(cfg, "2024-01-01", "2024-01-31")
-    assert q.analysis_window == ("2024-01-01", "2024-01-31")
+    assert (q.start_date, q.end_date) == ("2024-01-01", "2024-01-31")
     assert not [f for f in q.filters if f["field"] == DATE_STR_FIELD]
     # brand IN filter is always present
     assert q.filters[0]["operator"] == "IN" and q.filters[0]["values"] == [101, 102, 103]

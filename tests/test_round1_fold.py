@@ -16,11 +16,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
-def _labels(spark, edges_py, max_iters=20):
+def _labels(spark, edges_py):
     from social_warner_spark.operators.dedup import propagate_min_labels
 
     df = spark.createDataFrame(edges_py, "a long, b long")
-    return {r.id: r.lab for r in propagate_min_labels(df, max_iters).collect()}
+    return {r.id: r.lab for r in propagate_min_labels(df).collect()}
 
 
 def test_fold_is_already_fixpoint_on_stars_and_pairs(spark):

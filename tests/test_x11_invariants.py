@@ -6,18 +6,18 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
-def test_twopass_median_bucket_width_invariant(spark, sf_correct):
+def test_twopass_median_bucket_width_invariant(spark, sf_correct, monkeypatch):
     """The exact median cannot depend on the bucketing: three very
     different widths must produce the identical (n, median) row, and it
     must equal percentile_cont(0.5) computed directly."""
-    from social_warner_spark.operators.sketch import twopass_median
+    from social_warner_spark.operators import sketch
     from social_warner_spark.queries.common import T
 
     li = T(spark, sf_correct, "lineitem")
-    rows = {
-        w: twopass_median(li, "l_extendedprice", bucket_width=w).first().asDict()
-        for w in (64.0, 1024.0, 50000.0)
-    }
+    rows = {}
+    for w in (64.0, 1024.0, 50000.0):
+        monkeypatch.setattr(sketch, "MEDIAN_BUCKET_WIDTH", w)
+        rows[w] = sketch.twopass_median(li, "l_extendedprice").first().asDict()
     assert rows[64.0] == rows[1024.0] == rows[50000.0], rows
     direct = li.agg(
         F.round(F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice)"), 6)
