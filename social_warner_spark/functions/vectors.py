@@ -40,9 +40,7 @@ def cosine(a: Column, b: Column) -> Column:
     per pair, bit-identical result (measured 3× on the x229 all-pairs
     scorer).  This inline form is fine for per-row (n×1) uses.
     """
-    d = dot(a, b)
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb))
+    return cosine_prenormed(a, b, l2_norm(a), l2_norm(b))
 
 
 def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:

@@ -40,16 +40,14 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row, plus the most recent right values.
 
-    `value_cols`: right columns to carry (default: all except key/ts).
-    Carried columns are renamed with `suffix` and always come from one
-    single right row (see module docstring: row atomicity).
+    Every right column except ``on`` and ``ts`` is carried, renamed
+    ``<col>_asof``; the carried values always come from one single right
+    row (see module docstring: row atomicity).
     """
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, "ts")]
+    value_cols = [c for c in right.columns if c not in (on, "ts")]
 
     # The whole carried payload is ONE struct column: NULL on left rows
     # (so last(ignorenulls) skips them), the value tuple on right rows.

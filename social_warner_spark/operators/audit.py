@@ -24,21 +24,17 @@ def row_hash60(*cols: Column) -> Column:
     ).cast("long")
 
 
-def table_checksum(
-    df: DataFrame, cols: list[str], group_col: str | None = None
-) -> DataFrame:
-    """(group, n_rows, xor60) per group plus the grand-total row (ROLLUP;
-    group = NULL on the total).  Pass columns whose string rendering is
-    engine-stable (strings/ints — avoid raw doubles; round or format them
-    first).
+def table_checksum(df: DataFrame, cols: list[str], group_col: str) -> DataFrame:
+    """(group, n_rows, xor60) per ``group_col`` value plus the grand-total
+    row (ROLLUP; group = NULL on the total).  Pass columns whose string
+    rendering is engine-stable (strings/ints — avoid raw doubles; round or
+    format them first).
 
     One pass, map-side partial aggregation; the shuffle carries |groups|
     pre-reduced rows regardless of table size.
     """
     h = row_hash60(*[F.col(c) for c in cols]).alias("_h")
-    keyed = df.select(*([group_col] if group_col else []), h)
-    grouped = keyed.rollup(group_col) if group_col else keyed.groupBy()
-    return grouped.agg(
+    return df.select(group_col, h).rollup(group_col).agg(
         F.count("*").alias("n_rows"), F.bit_xor("_h").alias("xor60")
     )
 

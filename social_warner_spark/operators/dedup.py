@@ -16,8 +16,8 @@ Five families, each designed for 100 TB:
   fingerprints → near-dup bucket.  A single groupBy.
 - embedding near-dup: cosine ≥ τ pairs; candidates pre-bucketed with
   sign-bit LSH (operators/similarity.py) and equi-joined on the bucket key
-  so the cross product never goes n² (exact all-pairs form available as the
-  small-SF recall anchor via ``planes=None``).
+  so the cross product never goes n² (the exact all-pairs recall anchor
+  lives in the tests).
 
 Every variant is expressible in ANSI SQL (see queries/l_series.py oracles).
 """
@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from social_warner_spark.functions.text import tokens
-from social_warner_spark.functions.vectors import dot, l2_norm
+from social_warner_spark.functions.vectors import l2_norm
 
 #: Label-propagation rounds before `propagate_min_labels` gives up.
 MAX_ITERS = 20
@@ -603,7 +603,7 @@ def sign_band_key(vec: Column, band: int, planes_per_band: int) -> Column:
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float,
-    bands: int | None = 6,
+    bands: int = 6,
     planes_per_band: int = 3,
 ) -> DataFrame:
     """Pairs (a < b) with cosine ≥ threshold, candidates from banded
@@ -619,81 +619,52 @@ def embedding_neardup_pairs(
     production τ (≥0.9) raise planes_per_band to sharpen buckets.  Distinct
     candidates are scored once: two id equi-joins pull the vectors, then
     one JVM-side cosine per pair.
-
-    ``bands=None`` opts into the exact all-pairs broadcast form — the
-    small-SF recall anchor for tests only, never the query path (it is a
-    BroadcastNestedLoopJoin scoring all n² pairs).
     """
-    if bands is None:
-        from social_warner_spark.functions.vectors import cosine_prenormed, scoring_vec
+    from social_warner_spark.functions.vectors import cosine_prenormed, scoring_vec
 
-        a = df.select(
-            F.col("vec_id").alias("a"),
-            scoring_vec(F.col("embedding")).alias("va"),
-            l2_norm(F.col("embedding")).alias("na"),
-        )
-        b = df.select(
-            F.col("vec_id").alias("b"),
-            scoring_vec(F.col("embedding")).alias("vb"),
-            l2_norm(F.col("embedding")).alias("nb"),
-        )
-        joined = a.join(F.broadcast(b), F.col("a") < F.col("b"))
-        scored = joined.withColumn(
+    keyed = df.select(
+        F.col("vec_id"),
+        *[
+            sign_band_key(F.col("embedding"), b, planes_per_band).alias(f"band_{b}")
+            for b in range(bands)
+        ],
+    )
+    # melt to (id, band, key) rows — one equi-join instead of a
+    # per-band join loop (the banding map is narrow and cheap, so no
+    # persist is needed; Catalyst reuses the exchange across the
+    # self-join's sides)
+    long = band_keys_long(keyed, bands, "vec_id", "a")
+    pairs = (
+        long.join(long.withColumnRenamed("a", "b"), ["band", "bk"])
+        .where(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+    # norms computed ONCE per vector (n rows), not per candidate pair —
+    # per-pair work is the dot product alone (cosine_prenormed evaluates
+    # the identical float expression tree as cosine(), so oracle rounding
+    # is unaffected).
+    va = df.select(
+        F.col("vec_id").alias("a"),
+        scoring_vec(F.col("embedding")).alias("va"),
+        l2_norm(F.col("embedding")).alias("na"),
+    )
+    vb = df.select(
+        F.col("vec_id").alias("b"),
+        scoring_vec(F.col("embedding")).alias("vb"),
+        l2_norm(F.col("embedding")).alias("nb"),
+    )
+    scored = (
+        pairs.distinct()
+        .join(va, "a")
+        .join(vb, "b")
+        .withColumn(
             "cos",
             F.round(
                 cosine_prenormed(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
                 6,
             ),
         )
-    else:
-        keyed = df.select(
-            F.col("vec_id"),
-            *[
-                sign_band_key(F.col("embedding"), b, planes_per_band).alias(f"band_{b}")
-                for b in range(bands)
-            ],
-        )
-        # melt to (id, band, key) rows — one equi-join instead of a
-        # per-band join loop (the banding map is narrow and cheap, so no
-        # persist is needed; Catalyst reuses the exchange across the
-        # self-join's sides)
-        long = band_keys_long(keyed, bands, "vec_id", "a")
-        pairs = (
-            long.join(long.withColumnRenamed("a", "b"), ["band", "bk"])
-            .where(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        # norms computed ONCE per vector (n rows), not per candidate pair —
-        # per-pair work is the dot product alone.  dot/(na·nb) evaluates the
-        # identical float expression tree as cosine(), so oracle rounding is
-        # unaffected.
-        from social_warner_spark.functions.vectors import scoring_vec
-
-        va = df.select(
-            F.col("vec_id").alias("a"),
-            scoring_vec(F.col("embedding")).alias("va"),
-            l2_norm(F.col("embedding")).alias("na"),
-        )
-        vb = df.select(
-            F.col("vec_id").alias("b"),
-            scoring_vec(F.col("embedding")).alias("vb"),
-            l2_norm(F.col("embedding")).alias("nb"),
-        )
-        scored = (
-            pairs.distinct()
-            .join(va, "a")
-            .join(vb, "b")
-            .withColumn(
-                "cos",
-                F.round(
-                    F.when(
-                        (F.col("na") > 0) & (F.col("nb") > 0),
-                        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                    ),
-                    6,
-                ),
-            )
-        )
+    )
     return (
         scored.where(F.col("cos") >= threshold)
         .select(F.col("a").alias("vec_id_a"), F.col("b").alias("vec_id_b"), "cos")

@@ -70,19 +70,19 @@ def sign_bucket(vec: Column, planes: int = 4) -> Column:
     return sign_bits(vec, 0, planes)
 
 
-def sign_bucket_variants(vec: Column, planes: int, multiprobe: int = 1) -> Column:
-    """Array of sign buckets within Hamming distance ≤ multiprobe of the
-    vector's own bucket (0 or 1 supported).  Multi-probe LSH: querying the
-    adjacent buckets recovers neighbors that fall just across a hyperplane
-    — the standard recall fix that keeps candidate generation an EQUI-join
-    (probe variants explode; no inequality join appears)."""
+def sign_bucket_variants(vec: Column, planes: int) -> Column:
+    """Array of the sign buckets within Hamming distance ≤ 1 of the
+    vector's own bucket: the own bucket first, then one per flipped plane.
+    Multi-probe LSH: querying the adjacent buckets recovers neighbors that
+    fall just across a hyperplane — the standard recall fix that keeps
+    candidate generation an EQUI-join (probe variants explode; no
+    inequality join appears)."""
     from social_warner_spark.functions.vectors import sign_bits
 
-    assert multiprobe in (0, 1)
-    variants = [sign_bits(vec, 0, planes)]
-    if multiprobe >= 1:
-        variants += [sign_bits(vec, 0, planes, flip=i) for i in range(planes)]
-    return F.array(*variants)
+    return F.array(
+        sign_bits(vec, 0, planes),
+        *[sign_bits(vec, 0, planes, flip=i) for i in range(planes)],
+    )
 
 
 def cosine_topk_bucketed(
@@ -90,10 +90,9 @@ def cosine_topk_bucketed(
     probes: DataFrame,
     k: int = 5,
     planes: int = 4,
-    multiprobe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the probe's LSH bucket
-    (plus, with ``multiprobe=1``, every bucket one sign-flip away).
+    and every bucket one sign-flip away (multi-probe, Hamming ≤ 1).
 
     The probe-corpus join is an equi-join on the bucket key — at scale this
     is the difference between a full cross product and a (1+planes)/2^planes
@@ -114,7 +113,7 @@ def cosine_topk_bucketed(
         F.col("vec_id").alias("probe_id"),
         scoring_vec(F.col("embedding")).alias("vp"),
         l2_norm(F.col("embedding")).alias("np"),
-        F.explode(sign_bucket_variants(F.col("embedding"), planes, multiprobe)).alias("bk"),
+        F.explode(sign_bucket_variants(F.col("embedding"), planes)).alias("bk"),
     )
     scored = (
         c.join(F.broadcast(p), "bk")
@@ -461,11 +460,13 @@ def l2_topk_pq(
     ncode: int = 4,
     sublen: int = 16,
     iters: int = 1,
-    rerank: int = 0,
+    *,
+    rerank: int,
 ) -> DataFrame:
-    """PQ/ADC approximate nearest neighbors: per-probe top-k by asymmetric
-    distance (probe sub-vector vs corpus codeword) — the classic
-    Jégou-Douze-Schmid PQ search (IEEE TPAMI 2011), relationally.
+    """PQ/ADC approximate nearest neighbors with an exact re-rank: per-probe
+    shortlist by asymmetric distance (probe sub-vector vs corpus codeword),
+    top-k by exact distance — the classic Jégou-Douze-Schmid PQ search
+    (IEEE TPAMI 2011), relationally.
 
     The 100 TB shape: the codebook fit touches the corpus `iters + 1`
     times with one small (m·k·sublen-row) shuffle each; encoding is one
@@ -477,8 +478,8 @@ def l2_topk_pq(
     codebooks, 6dp-rounded means/partials), hence oracle-checkable;
     recall vs the exact scorer is tolerance-tested separately.
 
-    With ``rerank=R > 0``, the ADC pass keeps a top-R shortlist per probe
-    and the final top-k is computed by EXACT distance over the shortlist
+    The ADC pass keeps a top-R (R = ``rerank``) shortlist per probe and
+    the final top-k is computed by EXACT distance over the shortlist
     only (the standard ADC+re-rank search): one broadcast-semi fetch of
     R·|probes| true vectors, so the full-precision work is R/|corpus| of
     brute force.  On distance-concentrated (near-iid) embeddings this is
@@ -522,12 +523,6 @@ def l2_topk_pq(
         .select("probe_id", "neighbor_id", "adist")
     )
     w = Window.partitionBy("probe_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    if not rerank:
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select("probe_id", "neighbor_id", "adist", "rk")
-        )
     shortlist = (
         scored.withColumn("srk", F.row_number().over(w))
         .where(F.col("srk") <= rerank)

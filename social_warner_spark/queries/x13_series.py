@@ -503,9 +503,7 @@ def x224_hard_negative_mining(spark, sf_dir):
         F.col("lang").alias("probe_lang"),
         scoring_vec(F.col("embedding")).alias("vp"),
         l2_norm(F.col("embedding")).alias("np"),
-        F.explode(
-            sign_bucket_variants(F.col("embedding"), HN_PLANES, multiprobe=1)
-        ).alias("bk"),
+        F.explode(sign_bucket_variants(F.col("embedding"), HN_PLANES)).alias("bk"),
     )
     scored = (
         c.join(F.broadcast(p), "bk")

@@ -23,7 +23,7 @@ def x10_asof_join(spark, sf_dir):
     purchases = e.where(F.col("event_type") == "purchase").select(
         "user_id", "ts", F.col("value").alias("purchase_value")
     )
-    joined = asof_join(clicks, purchases, on="user_id", value_cols=["purchase_value"])
+    joined = asof_join(clicks, purchases, on="user_id")
     return joined.select(
         "event_id",
         "user_id",

@@ -113,7 +113,7 @@ def x8_ann_bucketed(spark, sf_dir):
     the oracle mirrors the radius with a per-bit mismatch count."""
     emb = T(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") < ANN_PROBES)
-    return cosine_topk_bucketed(emb, probes, k=ANN_K, planes=ANN_PLANES, multiprobe=1)
+    return cosine_topk_bucketed(emb, probes, k=ANN_K, planes=ANN_PLANES)
 
 
 def x9_multimodal_binary(spark, sf_dir):

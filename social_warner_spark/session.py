@@ -9,9 +9,9 @@ knob is chosen so the same logical pipeline scales out:
   the builder sets none of it.
 - Arrow on — every Python-boundary crossing (pandas UDFs, toPandas) is
   vectorized columnar batches, not pickled rows.
-- Sane local shuffle parallelism for tests; on a real cluster AQE coalesces
-  from `spark.sql.shuffle.partitions` down, so we leave it modest locally
-  and document 2-3× core count for cluster deploys.
+- Shuffle parallelism from one rule, ``prepare_session``'s: 2× the
+  session's cores, clamped to [8, 64], for every session whose builder or
+  spark-submit conf did not set it.  AQE coalesces from there down.
 - C1-only JIT for the driver JVM (``-XX:TieredStopAtLevel=1``).  The
   product's processes are short-lived (one export request, one benchmark
   run) and none lives long enough to amortize HotSpot's C2 compiler, whose
@@ -69,7 +69,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
@@ -96,9 +95,11 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     - UTC session timezone: deterministic timestamp semantics regardless
       of host timezone or of who built the session (matches the
       DuckDB/naive-timestamp oracle).
-    - shuffle-partition right-sizing: a session still at Spark's static
-      default (200) pays ~6× task-scheduling overhead on the multi-stage /
-      iterative pipelines at test SF (measured: x31 57s → 9s).  A session
+    - shuffle-partition right-sizing, the one rule for every session
+      (``get_spark``'s builder sets no count): a session still at Spark's
+      static default (200) pays ~6× task-scheduling overhead on the
+      multi-stage / iterative pipelines at test SF (measured: x31 57s →
+      9s).  A session
       whose builder/spark-submit conf set the key explicitly is never
       touched (detected via the SparkContext conf) — the 200-default check
       alone can't distinguish a deliberate runtime set of exactly 200,

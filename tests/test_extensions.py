@@ -106,48 +106,63 @@ def test_lsh_candidates_are_pairs_not_self(spark, docs):
 
 
 def test_ann_bucketed_recall_vs_exact(spark, emb):
-    """Multi-probe (Hamming ≤ 1) is the recall knob: measured on this fixed
-    near-random corpus, planes=4 goes 0.18 → 0.56 with multiprobe=1 (the x8
-    config), and planes=2+multiprobe reaches 0.84 while still pruning 1/4 of
-    the corpus.  Floors are measured-minus-margin; real corpora (clustered,
-    not near-random) sit well above these."""
+    """Multi-probe (Hamming ≤ 1) bucketed ANN recall, measured on this
+    fixed near-random corpus: planes=4 (the x8 config) reaches 0.56, where
+    single-probe buckets reached 0.18, so the x8 floor also catches a
+    fall-back to single probing; planes=2 reaches 0.84 while still pruning
+    1/4 of the corpus.  Floors are measured-minus-margin; real corpora
+    (clustered, not near-random) sit well above these."""
     probes = emb.where(F.col("vec_id") < 20)
     exact = {
         (r.probe_id, r.neighbor_id) for r in cosine_topk(emb, probes, k=5).collect()
     }
     x8_cfg = {
         (r.probe_id, r.neighbor_id)
-        for r in cosine_topk_bucketed(emb, probes, k=5, planes=4, multiprobe=1).collect()
+        for r in cosine_topk_bucketed(emb, probes, k=5, planes=4).collect()
     }
     recall_x8 = len(x8_cfg & exact) / len(exact)
     assert recall_x8 >= 0.45, f"x8-config ANN recall too low: {recall_x8}"
 
     high_recall = {
         (r.probe_id, r.neighbor_id)
-        for r in cosine_topk_bucketed(emb, probes, k=5, planes=2, multiprobe=1).collect()
+        for r in cosine_topk_bucketed(emb, probes, k=5, planes=2).collect()
     }
     recall_hi = len(high_recall & exact) / len(exact)
     assert recall_hi >= 0.7, f"high-recall ANN config too low: {recall_hi}"
 
-    single_probe = {
-        (r.probe_id, r.neighbor_id)
-        for r in cosine_topk_bucketed(emb, probes, k=5, planes=4, multiprobe=0).collect()
+
+def _exact_neardup_pairs(emb, tau):
+    """The exact all-pairs anchor: every a < b pair in one broadcast
+    nested-loop join, scored by the same rounded cosine as the banded
+    operator."""
+    from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
+
+    def side(id_alias, vec_alias, norm_alias):
+        return emb.select(
+            F.col("vec_id").alias(id_alias),
+            scoring_vec(F.col("embedding")).alias(vec_alias),
+            l2_norm(F.col("embedding")).alias(norm_alias),
+        )
+
+    cos = F.round(cosine_prenormed(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6)
+    return {
+        (r.a, r.b)
+        for r in side("a", "va", "na")
+        .join(F.broadcast(side("b", "vb", "nb")), F.col("a") < F.col("b"))
+        .where(cos >= tau)
+        .collect()
     }
-    assert len(x8_cfg & exact) > len(single_probe & exact), "multi-probe must add recall"
 
 
 def test_embed_neardup_banded_vs_exact(spark, emb):
-    """Banded x7 form vs the exact all-pairs anchor (bands=None):
-    precision must be 1.0 (same scorer, candidates are a subset) and
-    recall within margin of the measured value on this fixed corpus
-    (0.79 at sf0.001 / 0.85 at sf0.01, τ=0.35, 6 bands × 3 planes)."""
+    """Banded x7 form vs the exact all-pairs anchor: precision must be 1.0
+    (same scorer, candidates are a subset) and recall within margin of the
+    measured value on this fixed corpus (0.79 at sf0.001 / 0.85 at sf0.01,
+    τ=0.35, 6 bands × 3 planes)."""
     from social_warner_spark.operators.dedup import embedding_neardup_pairs
 
     tau = 0.35
-    exact = {
-        (r.vec_id_a, r.vec_id_b)
-        for r in embedding_neardup_pairs(emb, tau, bands=None).collect()
-    }
+    exact = _exact_neardup_pairs(emb, tau)
     banded = {
         (r.vec_id_a, r.vec_id_b)
         for r in embedding_neardup_pairs(emb, tau, bands=6, planes_per_band=3).collect()
@@ -611,7 +626,9 @@ def test_pq_ann_rerank_recall_vs_exact(spark, emb):
     m=16 subspaces of 4 dims, 16 codewords, 50-candidate shortlist).
     Measured on this fixed near-random corpus: ADC-only ~0.34, with the
     exact re-rank 0.92 (sf0.001) / 0.84 (sf0.01, sf0.1).  Floors are
-    measured-minus-margin; clustered real corpora sit higher."""
+    measured-minus-margin; clustered real corpora sit higher.  ADC-only
+    ranking is ``rerank=k``: a k-row shortlist holds exactly the ADC top-k,
+    which the exact re-rank only reorders."""
     from pyspark.sql import Window
 
     from social_warner_spark.operators.similarity import _l2sq, l2_topk_pq
@@ -646,7 +663,7 @@ def test_pq_ann_rerank_recall_vs_exact(spark, emb):
     recall = len(reranked & exact) / len(exact)
     assert recall >= 0.8, f"PQ+rerank recall too low: {recall}"
 
-    adc_only = run(0)
+    adc_only = run(5)
     assert len(reranked & exact) > len(adc_only & exact), (
         "exact re-rank must add recall over ADC-only ranking"
     )

@@ -18,11 +18,16 @@ The second check reads the same graph's calls: a defaulted parameter of a
 def outside ``queries/`` that no call outside ``tests/`` passes by position
 or keyword has one value in use.  An option with one value in use is a
 constant.
+
+The third reads the values those calls pass: a defaulted parameter that
+selects a branch, although every call outside ``tests/`` gives it the
+same value, keeps a code path only tests run.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -73,6 +78,18 @@ ALLOWED_PARAMS = {
 }
 
 
+#: Branch parameters every call outside tests/ gives one value, kept as
+#: options all the same, one reason each.
+ALLOWED_BRANCHES = {
+    f"{PKG}.session.get_spark.master":
+        "deployment master URL; a cluster deployment passes it",
+    f"{PKG}.sinks.writers.write_table.fmt":
+        "SURVEY A14: the BigQuery sink passes fmt='bigquery'",
+    f"{PKG}.operators.nested.dynamic_pivot_map.keys":
+        "ROADMAP item 1: fed by the allowlisted transform_config_frame.pivot_keys",
+}
+
+
 def _is_root(mod: str) -> bool:
     return any(mod == r or mod.startswith(f"{r}.") for r in ROOT_MODULES)
 
@@ -98,6 +115,9 @@ def _absolute(mod: str, is_pkg: bool, node: ast.ImportFrom) -> str:
 
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+#: The value of an expression the AST does not tell.
+UNKNOWN = object()
 
 
 def _binds(st: ast.stmt) -> list[str] | None:
@@ -205,10 +225,9 @@ class _Graph:
         return next((st for _, st in self.bodies.get(qual, ())
                      if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef))), None)
 
-    def passed(self) -> dict[str, set[str]]:
-        """Def -> the parameters some call in the walked modules passes it,
-        by position or keyword (``*args``/``**kwargs`` pass all they can)."""
-        out: dict[str, set[str]] = {}
+    def calls(self):
+        """(module, scope, top-level statement, call, callee, callee def)
+        for every call of a top-level def in the walked modules."""
         for mod, (_, tree) in self.mods.items():
             for st in tree.body:
                 scope, _ = self._scope(mod, st)
@@ -218,22 +237,89 @@ class _Graph:
                     chain = self._chain(mod, scope, call.func)
                     callee = chain and self.resolve(chain[-1])
                     fn = self.function(callee) if callee else None
-                    if fn is None:
-                        continue
-                    a = fn.args
-                    positional = [p.arg for p in a.posonlyargs + a.args]
-                    names = out.setdefault(callee, set())
-                    for i, arg in enumerate(call.args):
-                        if isinstance(arg, ast.Starred):
-                            names.update(positional[i:])
-                            break
-                        names.update(positional[i:i + 1])
-                    for kw in call.keywords:
-                        if kw.arg is None:
-                            names.update(positional + [p.arg for p in a.kwonlyargs])
-                        else:
-                            names.add(kw.arg)
+                    if fn is not None:
+                        yield mod, scope, st, call, callee, fn
+
+    def passed(self) -> dict[str, set[str]]:
+        """Def -> the parameters some call in the walked modules passes it,
+        by position or keyword (``*args``/``**kwargs`` pass all they can)."""
+        out: dict[str, set[str]] = {}
+        for _, _, _, call, callee, fn in self.calls():
+            out.setdefault(callee, set()).update(
+                p for p, (_, default) in _arguments(fn, call).items() if not default)
         return out
+
+    def escaped(self) -> set[str]:
+        """Bindings named other than as a callee: a callback, a registry
+        entry.  Calls the walk cannot see may reach them."""
+        out = set()
+        for mod, (_, tree) in self.mods.items():
+            for st in tree.body:
+                scope, _ = self._scope(mod, st)
+                inner = {id(n.value) for n in ast.walk(st) if isinstance(n, ast.Attribute)}
+                inner |= {id(n.func) for n in ast.walk(st) if isinstance(n, ast.Call)}
+                for sub in ast.walk(st):
+                    if isinstance(sub, (ast.Name, ast.Attribute)) and id(sub) not in inner:
+                        chain = self._chain(mod, scope, sub)
+                        if chain and (q := self.resolve(chain[-1])):
+                            out.add(q)
+        return out
+
+    def constant(self, qual: str) -> object:
+        """The value key of a module constant bound once, or UNKNOWN."""
+        bound = self.bodies.get(qual, ())
+        if len(bound) != 1 or not isinstance(bound[0][1], (ast.Assign, ast.AnnAssign)):
+            return UNKNOWN
+        mod, st = bound[0]
+        if st.value is None:
+            return UNKNOWN
+        return self.value(mod, self.aliases[mod], st.value, frozenset(), "")
+
+    def value(self, mod: str, scope: dict[str, str], expr: ast.AST,
+              params: frozenset[str], caller: str) -> object:
+        """What ``expr`` evaluates to, as far as the AST says: the repr of a
+        literal, a module constant's value, ``(caller, param)`` for one of
+        the calling def's own parameters, or UNKNOWN."""
+        try:
+            return repr(ast.literal_eval(expr))
+        except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+            pass
+        if isinstance(expr, ast.Name) and expr.id in params:
+            return (caller, expr.id)
+        chain = self._chain(mod, scope, expr)
+        qual = chain and self.resolve(chain[-1])
+        return self.constant(qual) if qual else UNKNOWN
+
+    def values(self) -> dict[str, set[object]]:
+        """``def.param`` -> the value keys the calls in the walked modules
+        give it, an omitted parameter counting as its default, iterated to
+        a fixpoint through the calling defs' own parameters.  An escaped
+        def, or a call through ``*args`` or ``**kwargs``, gives UNKNOWN."""
+        given: dict[str, set[object]] = {}
+        for mod, scope, st, call, callee, fn in self.calls():
+            home = callee.rpartition(".")[0]
+            for p, (expr, default) in _arguments(fn, call).items():
+                if expr is None:
+                    v = UNKNOWN
+                elif default:
+                    v = self.value(home, self.aliases[home], expr, frozenset(), "")
+                else:
+                    v = self.value(mod, scope, expr, _own_params(st),
+                                   f"{mod}.{getattr(st, 'name', '')}")
+                given.setdefault(f"{callee}.{p}", set()).add(v)
+        escaped = self.escaped()
+        for key, vals in given.items():
+            if key.rpartition(".")[0] in escaped:
+                vals.add(UNKNOWN)
+        changed = True
+        while changed:
+            changed = False
+            for vals in given.values():
+                for ref in [v for v in vals if isinstance(v, tuple)]:
+                    more = given.get(".".join(ref), {UNKNOWN}) - vals
+                    changed |= bool(more)
+                    vals |= more
+        return {k: {v for v in vals if not isinstance(v, tuple)} for k, vals in given.items()}
 
     def reachable(self) -> set[str]:
         todo = [q for q in self.bodies if _is_root(q.rpartition(".")[0])]
@@ -267,12 +353,63 @@ def test_no_package_def_is_reachable_only_from_tests():
     assert not set(ALLOWED) & reached
 
 
-def _defaulted(fn: ast.FunctionDef) -> set[str]:
-    """Parameters of ``fn`` that have a default."""
+@functools.cache
+def _own_params(st: ast.stmt) -> frozenset[str]:
+    """Parameters of a top-level def that its body never rebinds, nor
+    shadows with a nested def's, lambda's or comprehension's own names."""
+    if not isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return frozenset()
+    rebound = {n.id for n in ast.walk(st)
+               if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load)}
+    rebound |= {p.arg for n in ast.walk(st)
+                if n is not st and isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                                  ast.Lambda))
+                for p in ast.walk(n.args) if isinstance(p, ast.arg)}
+    a = st.args
+    return frozenset(p.arg for p in a.posonlyargs + a.args + a.kwonlyargs
+                     if p.arg not in rebound)
+
+
+def _defaulted(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Parameters of ``fn`` that have a default -> the default."""
     a = fn.args
     positional = a.posonlyargs + a.args
-    defaulted = {p.arg for p in positional[len(positional) - len(a.defaults):]}
-    return defaulted | {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+    defaulted = dict(zip([p.arg for p in positional[len(positional) - len(a.defaults):]],
+                         a.defaults))
+    return defaulted | {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+
+
+def _arguments(fn: ast.FunctionDef, call: ast.Call) -> dict[str, tuple[ast.AST | None, bool]]:
+    """Parameter -> (the expression ``call`` gives it, whether that is the
+    def's default); None for what ``*args``/``**kwargs`` may carry, which
+    is every parameter they can reach."""
+    a = fn.args
+    positional = [p.arg for p in a.posonlyargs + a.args]
+    out: dict[str, tuple[ast.AST | None, bool]] = {}
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            out |= dict.fromkeys(positional[i:], (None, False))
+            break
+        out.update(dict.fromkeys(positional[i:i + 1], (arg, False)))
+    for kw in call.keywords:
+        if kw.arg is None:
+            out |= dict.fromkeys(positional + [p.arg for p in a.kwonlyargs], (None, False))
+        else:
+            out[kw.arg] = (kw.value, False)
+    return {p: (d, True) for p, d in _defaulted(fn).items()} | out
+
+
+def _branch_params(fn: ast.FunctionDef) -> set[str]:
+    """Names ``fn``'s body tests in an if, while or conditional expression
+    (``assert``s are input checks, not branches)."""
+    return {
+        n.id
+        for st in fn.body
+        for sub in ast.walk(st)
+        if isinstance(sub, (ast.If, ast.While, ast.IfExp))
+        for n in ast.walk(sub.test)
+        if isinstance(n, ast.Name)
+    }
 
 
 def test_no_defaulted_parameter_is_set_only_by_tests():
@@ -285,7 +422,7 @@ def test_no_defaulted_parameter_is_set_only_by_tests():
         for q in graph.checked
         if q.startswith(f"{PKG}.") and not q.startswith(f"{PKG}.queries.")
         and (fn := graph.function(q)) is not None
-        for p in _defaulted(fn) - passed.get(q, set())
+        for p in _defaulted(fn).keys() - passed.get(q, set())
     }
     assert not found - set(ALLOWED_PARAMS), (
         "defaulted parameters no call outside tests/ passes (write the "
@@ -294,3 +431,26 @@ def test_no_defaulted_parameter_is_set_only_by_tests():
     )
     # every allowlist entry is still a defaulted parameter nothing passes
     assert set(ALLOWED_PARAMS) <= found
+
+
+def test_no_branch_is_decided_by_one_value_outside_tests():
+    """A defaulted parameter that selects a branch, although every call
+    outside tests/ gives it the same known value, keeps a code path that
+    only tests run: delete the branch no product call selects."""
+    graph = _Graph()
+    values = graph.values()
+    found = {
+        f"{q}.{p}"
+        for q in graph.checked
+        if q.startswith(f"{PKG}.") and not q.startswith(f"{PKG}.queries.")
+        and (fn := graph.function(q)) is not None
+        for p in _defaulted(fn).keys() & _branch_params(fn)
+        if len(vals := values.get(f"{q}.{p}", ())) == 1 and UNKNOWN not in vals
+    }
+    assert not found - set(ALLOWED_BRANCHES), (
+        "branch parameters every call outside tests/ gives one value (delete "
+        "the branches that value never selects, or allowlist them with a "
+        f"reason): {sorted(found - set(ALLOWED_BRANCHES))}"
+    )
+    # every allowlist entry is still a branch decided by one value
+    assert set(ALLOWED_BRANCHES) <= found

@@ -184,9 +184,9 @@ def test_sign_bit_recipes_consistent(spark):
     rows = emb.select(
         sign_bucket(v, 4).alias("a"),
         sign_band_key(v, 0, 4).alias("b"),
-        sign_bucket_variants(v, 4, 1)[0].alias("c"),
+        sign_bucket_variants(v, 4)[0].alias("c"),
         sign_band_key(v, 1, 4).alias("band1"),
-        sign_bucket_variants(v, 4, 1)[1].alias("flip0"),
+        sign_bucket_variants(v, 4)[1].alias("flip0"),
     ).collect()
     for r in rows:
         assert r.a == r.b == r.c

@@ -4,6 +4,10 @@ the engine runs on, its own or the one a caller passes to
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from social_warner_spark.catalog import load_table
@@ -57,6 +61,26 @@ def test_get_spark_leaves_a_running_session_as_is(spark):
         assert spark.conf.get(key) == before
     finally:
         spark.conf.set(key, before)
+
+
+def test_fresh_session_takes_the_core_rule(spark):
+    # A session get_spark builds gets its shuffle-partition count from
+    # prepare_session's rule alone: 2 x 2 cores, clamped up to 8.  It needs
+    # a fresh JVM, since get_spark reuses a running session as it is.
+    child = (
+        "from social_warner_spark.session import get_spark\n"
+        "s = get_spark(master='local[2]')\n"
+        "print(s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", child], cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=600, check=True,
+    )
+    assert done.stdout.split()[-1] == "8"
+    # an explicit builder value still wins: conftest's local[8] session
+    # passes 8 where the rule would give 16
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 def _assert_prepared(session):
