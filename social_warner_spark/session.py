@@ -35,32 +35,24 @@ knob is chosen so the same logical pipeline scales out:
   page-table entries it caps a task at 8 GB of Tungsten memory, so raise
   the page size for executors that give one task more than that.
 - The driver JVM starts from a JDK 17 dynamic class-data-sharing archive
-  (``-XX:SharedArchiveFile``), so the ~15k Spark and library classes a
-  process uses are mapped pre-parsed and pre-verified instead of read from
-  jars: a benchmark run's set-up takes about 31% less CPU on
-  ``corpus_queries`` and 22% less on ``etl_export``, and ``get_spark``
-  about 2.6 s wall instead of 10.6 (PERF.md "Class-data archive").  The
-  archive lives under ``$XDG_CACHE_HOME`` (or ``~/.cache``)
-  ``/social_warner_spark/cds/``,
-  outside any checkout, keyed by the JDK (its home and ``release`` file)
-  and the listing of ``$SPARK_HOME/jars``; archives of other keys are
-  deleted.  The first process that finds none builds it, once, holding a
-  lock: its JVM starts with ``-XX:+RecordDynamicDumpInfo``, runs a fixed
-  training job (``_train``), links every class it loaded and dumps them
-  through ``jcmd`` to a temporary file that moves into place under its
-  CRC-32 (about 35 s, paid once; the JVM's exit is not held).  A launch
-  maps an archive only if its bytes match that CRC.  JDK 17 maps an
-  archive only when every directory on the classpath is empty, and
-  Spark's launcher puts the conf directory first, so the launch points
-  ``SPARK_CONF_DIR`` at an empty directory when the conf directory holds
-  nothing but ``*.template`` files (the effective configuration is the
-  same).  The archive is skipped, and the JVM starts exactly as without
-  it, when the conf directory holds anything else, when
-  ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH`` is
-  set, when ``extra_conf`` sets ``spark.driver.extraJavaOptions``, when
-  the driver JVM is already running, when the cache directory is not
-  writable, and when a build failed for the key (delete
-  ``<key>.failed`` to retry).
+  (``-XX:SharedArchiveFile``): the ~15k classes a process uses are mapped
+  pre-parsed and pre-verified instead of read from jars, and a benchmark
+  run's set-up takes 22-31% less CPU (PERF.md "Class-data archive").  It
+  lives in ``${XDG_CACHE_HOME:-~/.cache}/social_warner_spark/cds/``, keyed
+  by the JDK and the ``$SPARK_HOME/jars`` listing (archives of other keys
+  are deleted), under a name carrying its CRC-32, which every launch
+  checks.  The first process that finds none builds it, holding a lock: a
+  child process trains a JVM started with ``-XX:ArchiveClassesAtExit``
+  (``_train``) and waits for its exit dump; then the builder maps it too.
+  JDK 17 maps an archive only if every classpath directory is
+  empty, so the launches point ``SPARK_CONF_DIR`` at an empty directory
+  when the conf directory holds only ``*.template`` files.  No archive is
+  used, and the JVM starts as without it, when the conf directory holds
+  anything else, when ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or
+  ``SPARK_DIST_CLASSPATH`` is set, when ``extra_conf`` sets
+  ``spark.driver.extraJavaOptions``, when the driver JVM is already
+  running, when the cache is not writable, and when a build failed for
+  the key (delete ``<key>.failed`` to retry).
 """
 
 from __future__ import annotations
@@ -71,7 +63,9 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
+import sys
 import tempfile
 import time
 import zlib
@@ -84,8 +78,7 @@ from social_warner_spark import logging_util as logu
 
 _JIT = "-XX:TieredStopAtLevel=1"
 # With an archive in play the JVM's warnings go to stderr, not to the stdout
-# it shares with the CLI's JSON response, and the per-class "Skipping"
-# warnings of a dump (4k lines) are dropped.  Log files configured through
+# it shares with the CLI's JSON response.  Log files configured through
 # SPARK_SUBMIT_OPTS or JDK_JAVA_OPTIONS are kept.
 _CDS_LOG = "-Xlog:all=off -Xlog:all=warning,cds=off:stderr"
 
@@ -161,45 +154,32 @@ def prepare_session(spark: SparkSession) -> SparkSession:
 
 
 def _launch(builder: SparkSession.Builder, extra_conf: dict[str, str]) -> SparkSession:
-    """``getOrCreate()`` with the driver JVM started C1-only and from the
-    class-data archive, or, in the one process that finds none, started to
-    record one and then building it (module docstring).  ``extra_conf``
-    applies last, so it overrides these JVM options too.  Launches with
-    the C1 option alone when no archive applies."""
-    with contextlib.ExitStack() as held:
-        try:
-            plan = _archive_plan(held)
-        except OSError:
-            plan = None
-        options = _JIT
-        if plan is not None:
-            cache, key, jcmd, archive = plan
-            cds = f"-XX:SharedArchiveFile={archive}" if archive else "-XX:+RecordDynamicDumpInfo"
-            options = f"{_JIT} {_CDS_LOG} {cds}"
-        builder = builder.config("spark.driver.extraJavaOptions", options)
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
-        if plan is None:
-            return builder.getOrCreate()
-        before = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = str(cache / "conf")
-        try:
-            spark = builder.getOrCreate()
-        finally:
-            if before is None:
-                del os.environ["SPARK_CONF_DIR"]
-            else:
-                os.environ["SPARK_CONF_DIR"] = before
-        if archive is None:
-            _build_archive(spark, cache, key, jcmd)
-        return spark
+    """``getOrCreate()`` with the driver JVM started C1-only and, when one
+    applies, from the class-data archive, built first if there is none
+    (module docstring).  ``extra_conf`` applies last."""
+    archive = None
+    with contextlib.suppress(OSError):  # an unwritable cache
+        if "spark.driver.extraJavaOptions" not in extra_conf:
+            archive = _archive()
+    options = f"{_JIT} {_CDS_LOG} -XX:SharedArchiveFile={archive}" if archive else _JIT
+    builder = builder.config(map={"spark.driver.extraJavaOptions": options, **extra_conf})
+    if archive is None:
+        return builder.getOrCreate()
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = str(archive.parent / "conf")
+    try:
+        return builder.getOrCreate()
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+        if before is not None:
+            os.environ["SPARK_CONF_DIR"] = before
 
 
-def _archive_key() -> tuple[Path, str, str] | None:
-    """The archive's cache directory, its key and the JDK's ``jcmd``, or
-    None when this launch cannot map one: the driver JVM is already
-    running, or the launch puts a non-empty directory on the JVM's
-    classpath, which makes the JVM refuse any archive."""
+def _archive_key() -> tuple[Path, str] | None:
+    """The archive's cache directory and its key, or None when this launch
+    cannot map one: the driver JVM is already running, or the launch puts
+    a non-empty directory on the JVM's classpath, which makes the JVM
+    refuse any archive."""
     from pyspark import SparkContext
 
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
@@ -222,19 +202,17 @@ def _archive_key() -> tuple[Path, str, str] | None:
         st = jar.stat()
         digest.update(f"{jar.name} {st.st_size} {st.st_mtime_ns}\n".encode())
     cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
-    cache = cache / "social_warner_spark" / "cds"
-    return cache, digest.hexdigest()[:16], str(java_home / "bin" / "jcmd")
+    return cache / "social_warner_spark" / "cds", digest.hexdigest()[:16]
 
 
-def _archive_plan(held: contextlib.ExitStack) -> tuple[Path, str, str, Path | None] | None:
-    """``_archive_key()`` plus the checked archive to map, or None in its
-    place when this process is to build it, holding the key's build lock
-    in ``held``.  None when no archive applies: none can be built, or
+def _archive() -> Path | None:
+    """The checked archive to map, built first under the key's lock if
+    there is none.  None when no archive applies: none can be built, or
     another process is building it."""
     found = _archive_key()
     if found is None:
         return None
-    cache, key, jcmd = found
+    cache, key = found
     (cache / "conf").mkdir(parents=True, exist_ok=True)
     if any((cache / "conf").iterdir()):
         return None
@@ -242,16 +220,14 @@ def _archive_plan(held: contextlib.ExitStack) -> tuple[Path, str, str, Path | No
         if other.is_file() and not other.name.startswith(key):
             other.unlink(missing_ok=True)
     archive = _checked_archive(cache, key)
-    if archive is None:
-        if not os.access(jcmd, os.X_OK) or (cache / f"{key}.failed").exists():
-            return None
-        lock = held.enter_context(open(cache / f"{key}.lock", "w"))
+    if archive is not None or (cache / f"{key}.failed").exists():
+        return archive
+    with open(cache / f"{key}.lock", "w") as lock:
         try:
             fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
         except BlockingIOError:
             return None
-        archive = _checked_archive(cache, key)  # built while this one waited
-    return cache, key, jcmd, archive
+        return _checked_archive(cache, key) or _build_archive(cache, key)
 
 
 def _crc32(path: Path, fsync: bool = False) -> int:
@@ -275,83 +251,47 @@ def _checked_archive(cache: Path, key: str) -> Path | None:
     return None
 
 
-def _build_archive(spark: SparkSession, cache: Path, key: str, jcmd: str) -> None:
-    """Train the new JVM, have it dump its classes to a temporary file and
-    move that into place under its CRC-32.  On any failure the session
-    runs on as it is, and the key is marked so that no later launch pays
-    for another attempt (delete ``<key>.failed`` to retry)."""
+def _build_archive(cache: Path, key: str) -> Path | None:
+    """Have this module's child process (the end of this file) dump the
+    key's archive to a temporary file, from a JVM with the launch's
+    classpath, and move that into place under its CRC-32.  On any failure
+    the key is marked so that no later launch pays for another attempt."""
     t0 = time.perf_counter()
     tmp = cache / f"{key}.tmp"
-    jvm = spark.sparkContext._jvm
-    runtime = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    if "-XX:+RecordDynamicDumpInfo" not in list(runtime.getInputArguments()):
-        return  # extra_conf replaced the JVM options: nothing to dump from
-    pid = str(jvm.java.lang.ProcessHandle.current().pid())
-    system = jvm.java.lang.System
-    stdout = system.out
-    try:
-        _train(spark)
-        _link_loaded_classes(jvm, jcmd, pid)
-        system.setOut(system.err)  # the dump announces itself on stdout
-        try:
-            subprocess.run([jcmd, pid, "VM.cds", "dynamic_dump", str(tmp)],
-                           check=True, capture_output=True, timeout=120)
-        finally:
-            system.setOut(stdout)
+    path = [str(Path(__file__).resolve().parents[1]), os.environ.get("PYTHONPATH")]
+    env = {**os.environ, "SPARK_CONF_DIR": str(cache / "conf"),
+           "PYTHONPATH": os.pathsep.join(filter(None, path))}
+    try:  # in a session of its own, so that its JVM can be killed with it
+        with subprocess.Popen([sys.executable, "-m", __name__, str(tmp)], env=env,
+                              stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
+                              stderr=subprocess.STDOUT, text=True, errors="replace",
+                              start_new_session=True) as child:
+            try:
+                out = child.communicate(timeout=600)[0]  # a build takes about 50 s
+            finally:  # no process of the build outlives it, a failed one's JVM included
+                with contextlib.suppress(ProcessLookupError):
+                    os.killpg(child.pid, signal.SIGKILL)
+        if child.returncode or not tmp.is_file():
+            raise RuntimeError(f"exit status {child.returncode}: {out[-500:]}")
         archive = cache / f"{key}-{_crc32(tmp, fsync=True):08x}.jsa"
         os.replace(tmp, archive)
-    except Exception as exc:  # noqa: BLE001 - the session itself is fine
-        logu.warning("class-data archive not built", error=repr(exc)[:500])
+    except Exception as exc:  # noqa: BLE001 - the launch goes on without it
+        logu.warning("class-data archive not built", error=repr(exc)[:800])
         with contextlib.suppress(OSError):
             (cache / f"{key}.failed").touch()
             tmp.unlink(missing_ok=True)
-    else:
-        logu.info("class-data archive built", path=str(archive),
-                  mb=round(archive.stat().st_size / 2**20), s=round(time.perf_counter() - t0, 1))
-
-
-# Compiled in the driver JVM by Janino, which Spark ships for its codegen.
-_LINKER = r"""
-public void link(String names) {
-    for (String name : names.split("\n")) {
-        try {  // reflection links the class without initializing it
-            Class.forName(name, false, ClassLoader.getSystemClassLoader()).getDeclaredConstructors();
-        } catch (Throwable notOnTheClassPath) {
-        }
-    }
-}
-"""
-
-
-def _link_loaded_classes(jvm, jcmd: str, pid: str) -> None:
-    """Link every class the JVM has loaded, as a dump at exit would.  JDK
-    17's on-demand dump skips classes that are loaded but not linked
-    (verification loads thousands), and the JVMs that map the archive
-    then load those from the jars: 4.7k classes of a corpus run, against
-    1.3k with this pass (PERF.md "Class-data archive")."""
-    compiler = jvm.org.codehaus.janino.ClassBodyEvaluator()
-    compiler.cook(_LINKER)
-    linker = compiler.getClazz().newInstance()
-    done: set[str] = set()
-    for _ in range(5):  # linking loads more classes; three rounds settle it
-        listing = subprocess.run([jcmd, pid, "VM.class_hierarchy"], check=True,
-                                 capture_output=True, text=True, timeout=120).stdout
-        # lines read "|  |--name/loader", hidden classes "name/0x.../loader"
-        entries = (line.lstrip("|- ").partition("/") for line in listing.splitlines())
-        names = {name for name, _, loader in entries if loader and "/" not in loader} - done
-        if not names:
-            return
-        linker.link("\n".join(names))
-        done |= names
+        return None
+    logu.info("class-data archive built", path=str(archive),
+              mb=round(archive.stat().st_size / 2**20), s=round(time.perf_counter() - t0, 1))
+    return archive
 
 
 def _train(spark: SparkSession) -> None:
-    """Run, on a session of its own, the kinds of work the engine's
-    processes do, so that the archive holds the classes they load: a
-    Python data source, JSON and nested columns, parquet writes and scans
-    with an ``Observation``, caching, joins, windows, aggregations,
-    ``localCheckpoint``, Python and pandas UDFs and ``mapInPandas``.
-    Leaves no table, view, cache, conf or file behind."""
+    """Run the kinds of work the engine's processes do, so that the archive
+    holds the classes they load: a Python data source, JSON and nested
+    columns, parquet writes and scans with an ``Observation``, caching,
+    joins, windows, aggregations, sorts, ``localCheckpoint``, string ops,
+    Python and pandas UDFs and ``mapInPandas``."""
     import pandas as pd
     import pyspark.sql.functions as F
     from pyspark.sql import Observation, Window
@@ -391,13 +331,9 @@ def _train(spark: SparkSession) -> None:
         for b in batches:
             yield b.assign(n=b["n"] * 2)
 
-    jsc = spark.sparkContext._jsc
-    kept = set(jsc.getPersistentRDDs().keySet())
-    s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.dataSource.register(Pages)
+    spark.dataSource.register(Pages)
     body = "id long, text string, tags map<string, string>"
-    rows = (s.read.format("sws_train").load()
+    rows = (spark.read.format("sws_train").load()
             .select("page", F.from_json("body", body).alias("r")).select("page", "r.*")
             .withColumn("ts", F.timestamp_seconds(F.col("id") * 60))
             .withColumn("words", F.split("text", " ")))
@@ -405,7 +341,7 @@ def _train(spark: SparkSession) -> None:
         seen = Observation("seen")
         rows.observe(seen, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
         seen.get  # waits for the observed count
-        t = s.read.parquet(tmp).persist()
+        t = spark.read.parquet(tmp).persist()
         t.select(F.explode(F.map_keys("tags"))).distinct().collect()
         by = Window.partitionBy("page").orderBy("id")
         ranged = by.rangeBetween(-10, 0)
@@ -430,7 +366,20 @@ def _train(spark: SparkSession) -> None:
         t.groupBy("page", F.session_window("ts", "5 minutes")).count().collect()
         (t.select("page", "id").groupBy("page")
          .applyInPandas(lambda p: p.head(3), "page int, id long").collect())
+        t.orderBy("text", F.desc("id")).collect()  # range-partitioned
+        t.select(F.explode(F.sequence(F.lit(0), "page"))).collect()
+        t.withColumn("r", F.rank().over(by)).where("r <= 2").collect()  # a window group limit
+        t.select(F.lower("text").contains("w1"), F.initcap(F.trim("text")).endswith("y"),
+                 F.instr("text", "x"), F.replace("text", F.lit("x"))).collect()
         t.unpersist(blocking=True)
-    for rdd_id, rdd in jsc.getPersistentRDDs().items():  # the local checkpoint
-        if rdd_id not in kept:
-            rdd.unpersist(True)
+
+
+if __name__ == "__main__":  # _build_archive's child: train a JVM that dumps at exit
+    from pyspark import SparkContext
+
+    spark = get_spark(extra_conf={"spark.driver.extraJavaOptions":
+                                  f"{_JIT} -XX:ArchiveClassesAtExit={sys.argv[1]}"})
+    _train(spark)
+    spark.stop()
+    SparkContext._gateway.proc.stdin.close()  # the JVM exits, and dumps, at its stdin's end
+    sys.exit(SparkContext._gateway.proc.wait())

@@ -1,7 +1,8 @@
 """The driver JVM's class-data archive (session.py docstring): the process
-that builds it keeps its stdout and its session clean, the next process
-maps it, a damaged archive is rebuilt, and the archive never hides a
-deployment's Spark config or breaks a session when it cannot be used.
+that builds it keeps its stdout and its session clean and maps it, as the
+next process does, a damaged archive is rebuilt, a failed build is marked
+and leaves a plain session, and the archive never hides a deployment's
+Spark config or breaks a session when it cannot be used.
 
 Every test runs ``get_spark`` or the CLI in a child process with its own
 cache directory (``XDG_CACHE_HOME``), since an archive applies only to a
@@ -13,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -74,8 +76,10 @@ def _probe(sf: str, env: dict[str, str]) -> dict:
     return json.loads(done.stdout.strip().splitlines()[-1])
 
 
-def _batch(tmp: Path, env: dict[str, str]) -> tuple[dict, Path]:
-    """Run one CLI export and return its only stdout document."""
+def _batch(tmp: Path, env: dict[str, str]) -> tuple[subprocess.CompletedProcess, Path]:
+    """Run one CLI export, check that its stdout is one JSON document
+    reporting both configs done, and return the run and its output
+    directory."""
     configs = tmp / "configs.json"
     configs.write_text(json.dumps(CONFIG_DOC))
     out = tmp / "exports"
@@ -85,7 +89,11 @@ def _batch(tmp: Path, env: dict[str, str]) -> tuple[dict, Path]:
     # the JVM shares this stdout: it must hold exactly one JSON document
     body = json.loads(done.stdout)
     assert body["processed"] == 2 and body["failed"] == []
-    return body, out
+    return done, out
+
+
+#: JVM options that map, record or dump a class-data archive.
+_ARCHIVE_FLAGS = re.compile("SharedArchiveFile|RecordDynamic|ArchiveClassesAtExit")
 
 
 def _archives(cache: Path) -> list[Path]:
@@ -153,7 +161,7 @@ def test_truncated_archive_is_rebuilt_and_leaves_no_trace(built, tmp_path, spark
     report = _probe(sf_smoke, _env(cache, tmp_path / "tmp"))
     (rebuilt,) = _archives(cache)
     assert _valid(rebuilt)
-    assert str(rebuilt) not in report["mapped"]  # this JVM recorded it
+    assert str(rebuilt) in report["mapped"]  # the rebuilding JVM maps it too
     expected = sorted(map(list, all_queries()["c8_hash_agg"](spark, sf_smoke).collect()))
     assert report["rows"] == json.loads(json.dumps(expected, default=str))
     assert report["tables"] == [] and report["cache_empty"]
@@ -173,7 +181,7 @@ def test_deployment_spark_config_is_seen_and_no_archive_mapped(built, tmp_path, 
     report = _probe(sf_smoke, _env(built, tmp_path / "tmp", SPARK_CONF_DIR=str(conf)))
     assert report["confs"]["spark.sws.probe"] == "seen"
     assert not any("social_warner_spark" in m for m in report["mapped"])
-    assert not any("SharedArchiveFile" in a or "RecordDynamic" in a for a in report["args"])
+    assert not any(_ARCHIVE_FLAGS.search(a) for a in report["args"])
 
 
 def test_unwritable_cache_dir_gives_a_plain_session(tmp_path, sf_smoke):
@@ -187,6 +195,28 @@ def test_unwritable_cache_dir_gives_a_plain_session(tmp_path, sf_smoke):
     assert report["rows"]
     assert not any("social_warner_spark" in m for m in report["mapped"])
     assert "-XX:TieredStopAtLevel=1" in report["args"]
-    assert not any("SharedArchiveFile" in a or "RecordDynamic" in a for a in report["args"])
+    assert not any(_ARCHIVE_FLAGS.search(a) for a in report["args"])
     assert "class-data archive" not in done.stderr
     assert "Traceback" not in done.stderr
+
+
+def test_failed_build_is_marked_and_leaves_a_plain_export(built, tmp_path, spark):
+    # The build's dump cannot be written: its temporary file is a directory
+    # that is not empty (the JVM deletes an empty one first).  The export
+    # must run on without an archive and print one JSON document.
+    key = _archives(built)[0].name.rpartition("-")[0]
+    cache = tmp_path / "cache"
+    cds = cache / "social_warner_spark" / "cds"
+    (cds / f"{key}.tmp").mkdir(parents=True)
+    (cds / f"{key}.tmp" / "taken").touch()
+    # the launcher prints each JVM's command line on that JVM's stderr
+    env = _env(cache, tmp_path / "tmp", SPARK_PRINT_LAUNCH_COMMAND="1")
+    done, out = _batch(tmp_path, env)
+    assert spark.read.parquet(str(out / "010_warner_dl_lf_a")).count() == 1
+    assert (cds / f"{key}.failed").exists()
+    assert _archives(cache) == []
+    assert "class-data archive not built" in done.stderr
+    # only the export's own JVM prints on its stderr: the build's output is captured
+    (command,) = [ln for ln in done.stderr.splitlines() if ln.startswith("Spark Command:")]
+    assert "-XX:TieredStopAtLevel=1" in command
+    assert not _ARCHIVE_FLAGS.search(command)

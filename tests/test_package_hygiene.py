@@ -61,8 +61,6 @@ ALLOWED = {
 ALLOWED_PARAMS = {
     f"{PKG}.session.get_spark.master":
         "deployment master URL; a cluster deployment passes it",
-    f"{PKG}.session.get_spark.extra_conf":
-        "deployment Spark confs; a deployment passes its own",
     f"{PKG}.sinks.writers.write_table.fmt":
         "SURVEY A14: the BigQuery sink passes fmt='bigquery'",
     f"{PKG}.sinks.writers.write_table.connector_format":
