@@ -53,6 +53,17 @@ knob is chosen so the same logical pipeline scales out:
   ``spark.driver.extraJavaOptions``, when the driver JVM is already
   running, when the cache is not writable, and when a build failed for
   the key (delete ``<key>.failed`` to retry).
+- A zip archive on ``sys.path`` has its directory re-read only when the
+  archive changed (size, ``mtime_ns``, inode) since this process last
+  read it (``_invalidate_zip_directory``).  Spark's Python workers call
+  ``importlib.invalidate_caches()`` on every call, and on CPython 3.11
+  that re-reads the directory of every cached zip importer: about 15 of
+  them over ``pyspark.zip``'s 1,328 entries and the py4j zip, 110-230 ms
+  of CPU per call and ten calls per export request (PERF.md "Zip
+  importer caches").  The rule is installed when this module is
+  imported, which every worker that runs the engine's code does, since
+  Spark unpickles its data sources and UDFs by reference.  CPython 3.12
+  re-reads lazily (gh-103200) and keeps its own rule.
 """
 
 from __future__ import annotations
@@ -68,6 +79,7 @@ import subprocess
 import sys
 import tempfile
 import time
+import zipimport
 import zlib
 from pathlib import Path
 
@@ -151,6 +163,42 @@ def prepare_session(spark: SparkSession) -> SparkSession:
         cores = spark.sparkContext.defaultParallelism
         spark.conf.set(key, str(max(8, min(64, 2 * cores))))
     return spark
+
+
+#: Archive path -> its (size, mtime_ns, inode) when this process last read
+#: the archive's directory; None when it could not stat the archive.
+_zip_stamps: dict[str, tuple[int, int, int] | None] = {}
+
+
+def _invalidate_zip_directory(importer: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when the archive changed since this process last read
+    it (module docstring).  The importers of one archive share its
+    directory in ``zipimport._zip_directory_cache``: the first to see a
+    new stamp reads it, the others take what it read.  A removed archive
+    is forgotten, as the stdlib forgets it."""
+    archive, cache = importer.archive, zipimport._zip_directory_cache
+    try:
+        st = os.stat(archive)
+        stamp = (st.st_size, st.st_mtime_ns, st.st_ino)
+    except OSError:
+        stamp = None
+    if stamp is not None and stamp == _zip_stamps.get(archive) and archive in cache:
+        importer._files = cache[archive]
+        return
+    try:
+        files = zipimport._read_directory(archive)
+    except zipimport.ZipImportError:
+        cache.pop(archive, None)
+        _zip_stamps.pop(archive, None)
+        importer._files = {}
+        return
+    cache[archive] = importer._files = files
+    _zip_stamps[archive] = stamp
+
+
+if sys.version_info < (3, 12):  # 3.12 re-reads lazily (gh-103200)
+    zipimport.zipimporter.invalidate_caches = _invalidate_zip_directory
 
 
 def _launch(builder: SparkSession.Builder, extra_conf: dict[str, str]) -> SparkSession:

@@ -35,6 +35,33 @@ def test_datasource_one_partition_per_page(spark):
     assert any(r.item_id == 301 for r in rows)
 
 
+def rule_fetch_page(page_index: int, options: dict):
+    """Reports which ``zipimporter.invalidate_caches`` the reader's worker
+    runs."""
+    import zipimport
+
+    yield {"page": page_index, "item_id": 0,
+           "name": zipimport.zipimporter.invalidate_caches.__module__}
+
+
+def test_reader_workers_run_the_zip_directory_rule(spark):
+    """The workers that read a ``paged_rest`` source import the package,
+    and so re-read an unchanged zip archive's directory once per process,
+    not on every call (session.py docstring)."""
+    import sys
+
+    spark.dataSource.register(PagedRestDataSource)
+    df = (
+        spark.read.format("paged_rest")
+        .schema(SCHEMA_DDL)
+        .option("fetcher", "tests.test_sources:rule_fetch_page")
+        .option("num_pages", "2")
+        .load()
+    )
+    expected = "social_warner_spark.session" if sys.version_info < (3, 12) else "zipimport"
+    assert {r.name for r in df.collect()} == {expected}
+
+
 def test_fetcher_reference_must_name_module_and_function(spark):
     """The fetcher option goes through the one ``module:callable``
     resolver: a dotted path with no colon fails with its message, not an
