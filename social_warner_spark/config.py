@@ -41,8 +41,10 @@ class ExportConfig:
     @property
     def columns(self) -> list[str]:
         """Projection order: group_by ∪ meta_dimensions ∪ metrics, in config
-        order (reference data_transform.py:31-32)."""
-        return [*self.group_by, *self.meta_dimensions, *self.metrics]
+        order (reference data_transform.py:31-32).  A column named in two
+        sections appears once, at its first position; its dtype is the
+        one ``dtype_map`` resolves."""
+        return list(dict.fromkeys([*self.group_by, *self.meta_dimensions, *self.metrics]))
 
     @property
     def dtype_map(self) -> dict[str, str]:

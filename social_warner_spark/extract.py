@@ -20,7 +20,7 @@ IN-lists and BETWEENs on literal values, so the scan gets them pushed down
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 import datetime as dt
 from typing import Any, Mapping, Sequence
 

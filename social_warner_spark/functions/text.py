@@ -146,6 +146,17 @@ def fingerprint(text: Column) -> Column:
     return F.substring(F.md5(norm), 1, 16)
 
 
+def md5_int(key: Column, hex_chars: int) -> Column:
+    """The engine's one md5-to-integer hash: the first ``hex_chars`` hex
+    digits of md5(key) as a non-negative long.  Every bucket, split and
+    uniform draw derives from it rather than from Spark's ``hash()``, so
+    an oracle reproduces it as ``CAST(('0x' || substr(md5(key), 1, n))
+    AS UBIGINT)``.  At most 15 digits: 16 overflow a signed long."""
+    if not 1 <= hex_chars <= 15:
+        raise ValueError(f"hex_chars must be in [1, 15], got {hex_chars}")
+    return F.conv(F.substring(F.md5(key), 1, hex_chars), 16, 10).cast("long")
+
+
 #: The Gopher-rules stopword list (Rae et al. 2021, arXiv:2112.11446,
 #: table A1: "must contain ≥2 of the, be, to, of, and, that, have, with").
 GOPHER_STOPWORDS: tuple[str, ...] = (

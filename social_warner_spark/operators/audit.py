@@ -12,16 +12,16 @@ require adversarial input, not plausible drift.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
+
+from social_warner_spark.functions.text import md5_int
 
 
 def row_hash60(*cols: Column) -> Column:
     """60-bit integer hash of a row: first 15 hex chars of md5 over the
     '|'-joined column values.  15 hex digits fit a signed 64-bit int, and
     both Spark (conv) and ANSI engines (CAST '0x…') can parse them."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 15), 16, 10
-    ).cast("long")
+    return md5_int(F.concat_ws("|", *cols), 15)
 
 
 def table_checksum(df: DataFrame, cols: list[str], group_col: str) -> DataFrame:

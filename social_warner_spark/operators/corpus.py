@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from social_warner_spark.functions.text import quality_score, token_count_ws
+from social_warner_spark.functions.text import md5_int, quality_score, token_count_ws
 from social_warner_spark.operators.dedup import content_hash, exact_jaccard_pairs
 
 #: Stage 1's quality gate and stage 3's near-dup Jaccard threshold.
@@ -126,12 +126,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, n_select: int = 50) -> DataFr
         )
         return tok.select(
             "doc_id",
-            (
-                F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast(
-                    "long"
-                )
-                % DSIR_BUCKETS
-            ).cast("int").alias("bk"),
+            (md5_int(F.col("tok"), 15) % DSIR_BUCKETS).cast("int").alias("bk"),
         )
 
     raw_tok = register_persisted(bucketed(raw).persist())

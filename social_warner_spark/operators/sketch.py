@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from social_warner_spark.functions.text import md5_int
+
 #: 3 hex chars = 4096 slots per sub-filter.
 _NIBBLES = 3
 
@@ -72,6 +74,12 @@ def bloom_prune(
     return out
 
 
+def _cms_bucket(item: Column, width: int) -> Column:
+    """Bucket of ``item`` in count-min row ``r``: the cells and the probes
+    hash alike."""
+    return (md5_int(F.concat_ws("|", F.col("r"), item), 15) % width).cast("int")
+
+
 def cms_cells(
     items: DataFrame, item_col: str = "token", depth: int = 4, width: int = 64
 ) -> DataFrame:
@@ -86,25 +94,13 @@ def cms_cells(
     heavy-hitter structure for incremental ingestion (sum cells across
     loads) and for 100 TB batch (sum cells across partitions).
 
-    md5 positions (audit.py:row_hash60 idiom) keep the construction
+    md5 positions (functions.text.md5_int) keep the construction
     engine-portable: any SQL engine reproduces the exact cells.
     """
     rows = F.array(*[F.lit(r) for r in range(depth)])
     return (
         items.select(F.col(item_col).alias("item"), F.explode(rows).alias("r"))
-        .select(
-            "r",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("|", F.col("r"), F.col("item"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % width
-            ).cast("int").alias("bucket"),
-        )
+        .select("r", _cms_bucket(F.col("item"), width).alias("bucket"))
         .groupBy("r", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
@@ -141,16 +137,7 @@ def cms_heavy_hitters(
         "token",
         "exact",
         "r",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.col("r"), F.col("token"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-            % width
-        ).cast("int").alias("bucket"),
+        _cms_bucket(F.col("token"), width).alias("bucket"),
     )
     est = (
         probes.join(F.broadcast(cells), ["r", "bucket"])
@@ -273,7 +260,7 @@ def hll_distinct(
     incremental loads by the same groupBy-max — the distinct-count twin
     of cms_cells.
     """
-    h = F.conv(F.substring(F.md5(F.col(item_col)), 1, 15), 16, 10).cast("long")
+    h = md5_int(F.col(item_col), 15)
     hashed = items.select(
         F.col(group_col).alias("grp"),
         (h % _HLL_M).cast("int").alias("bucket"),
@@ -331,10 +318,7 @@ _KMV_DENOM = float(16**12)
 
 def kmv_hash(key: Column) -> Column:
     """Uniform-[0,1) deterministic hash of a key (12 hex chars of md5)."""
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 12), 16, 10).cast("double")
-        / F.lit(_KMV_DENOM)
-    )
+    return md5_int(key.cast("string"), 12).cast("double") / F.lit(_KMV_DENOM)
 
 
 def kmv_sketch(df: DataFrame, key_col: str, group_col: str, k: int) -> DataFrame:

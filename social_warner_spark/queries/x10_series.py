@@ -19,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r2t, r6, r6t
 
 #: x93 — the ordered stages.
@@ -582,12 +583,7 @@ def x103_partition_balance(spark, sf_dir):
     e = T(spark, sf_dir, "events")
 
     def report(key_col: str):
-        bucket = (
-            F.conv(
-                F.substring(F.md5(F.col(key_col).cast("string")), 1, 4), 16, 10
-            ).cast("long")
-            % BALANCE_BUCKETS
-        )
+        bucket = md5_int(F.col(key_col).cast("string"), 4) % BALANCE_BUCKETS
         per = e.groupBy(bucket.alias("b")).agg(F.count("*").alias("c"))
         return per.agg(
             F.lit(key_col).alias("dim"),
@@ -1412,10 +1408,7 @@ def x126_join_cardinality_estimate(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem").select(F.col("l_orderkey").alias("k"))
 
     def bucket(col):
-        return (
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 4), 16, 10).cast("long")
-            % CARD_BUCKETS
-        )
+        return md5_int(col.cast("string"), 4) % CARD_BUCKETS
 
     ho = o.groupBy(bucket(F.col("k")).alias("b")).agg(
         F.count("*").alias("ca"), F.count_distinct("k").alias("da")
@@ -1609,11 +1602,7 @@ def x131_fold_balance(spark, sf_dir):
     didn't accidentally cluster a language into one fold.  The
     contingency table is |folds|×|langs|; expectations broadcast."""
     d = T(spark, sf_dir, "documents")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % N_FOLDS
-    )
+    fold = md5_int(F.col("doc_id").cast("string"), 4) % N_FOLDS
     cells = d.groupBy(fold.alias("fold"), F.col("lang")).agg(
         F.count("*").alias("c")
     )
@@ -2795,14 +2784,9 @@ def x154_consistent_hash_rebalance(spark, sf_dir):
         ring_assign(SHARDS_BEFORE, "r8")
         .join(ring_assign(SHARDS_AFTER, "r9"), "doc_id")
     )
+    h = md5_int(F.col("doc_id").cast("string"), 4)
     mod = docs.select(
-        "doc_id",
-        (
-            F.conv(F.substring("_h", 1, 4), 16, 10).cast("long") % SHARDS_BEFORE
-        ).alias("m8"),
-        (
-            F.conv(F.substring("_h", 1, 4), 16, 10).cast("long") % SHARDS_AFTER
-        ).alias("m9"),
+        "doc_id", (h % SHARDS_BEFORE).alias("m8"), (h % SHARDS_AFTER).alias("m9")
     )
     j = ring.join(mod, "doc_id")
     return j.agg(

@@ -48,7 +48,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import LANG_MARKERS, tokens
+from social_warner_spark.functions.text import LANG_MARKERS, md5_int, tokens
 from social_warner_spark.queries.common import T, r2, r6, r6t
 
 #: x164 — width (in word tokens) of the duplicated-span shingle.  Spans
@@ -155,14 +155,7 @@ def x166_stratified_weighted_sample(spark, sf_dir):
     (TakeOrderedAndProject) is x72; this is the grouped physical shape.
     """
     d = T(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("sws|"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform_from_md5(F.concat(F.lit("sws|"), F.col("doc_id").cast("string")))
     key = F.log(u) / F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
     keyed = d.select("source", "doc_id", "n_chars", r6(key).alias("es_key"))
     w = Window.partitionBy("source").orderBy(F.desc("es_key"), "doc_id")
@@ -194,9 +187,7 @@ POISSON1_CUM = (
 
 def _uniform_from_md5(seed: F.Column) -> F.Column:
     """Deterministic u ∈ (0,1] from the first 8 md5 hex chars of `seed`."""
-    return (
-        F.conv(F.substring(F.md5(seed), 1, 8), 16, 10).cast("double") + 1.0
-    ) / F.lit(4294967296.0)
+    return (md5_int(seed, 8) + 1.0) / F.lit(4294967296.0)
 
 
 def poisson1_weight(u: F.Column) -> F.Column:
@@ -1276,12 +1267,7 @@ def x186_dp_noisy_counts(spark, sf_dir):
     scan to |types| rows; noise is a narrow map on those rows.
     """
     e = T(spark, sf_dir, "events").groupBy("event_type").agg(F.count("*").alias("n"))
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("dp|"), F.col("event_type"))), 1, 8), 16, 10
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform_from_md5(F.concat(F.lit("dp|"), F.col("event_type")))
     uu = u - 0.5
     b = 1.0 / DP_EPS
     noise = -F.lit(b) * F.signum(uu) * F.log(1 - 2 * F.abs(uu))
@@ -1877,14 +1863,7 @@ def x198_priority_sample(spark, sf_dir):
     1-row relations; top-(k+1) via TakeOrderedAndProject.
     """
     d = T(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ps|"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform_from_md5(F.concat(F.lit("ps|"), F.col("doc_id").cast("string")))
     prio = d.select(
         "doc_id",
         F.col("n_chars").cast("double").alias("w"),
@@ -1934,15 +1913,7 @@ def x199_capture_recapture(spark, sf_dir):
     )
 
     def sweep(tag):
-        return (
-            (
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(tag), F.col("t"))), 1, 8), 16, 10
-                ).cast("double")
-                + 1.0
-            )
-            / F.lit(4294967296.0)
-        ) < CR_P
+        return _uniform_from_md5(F.concat(F.lit(tag), F.col("t"))) < CR_P
 
     flagged = tok.select(
         sweep("cra|").cast("int").alias("a"), sweep("crb|").cast("int").alias("b")
@@ -2113,9 +2084,7 @@ def x202_cuped(spark, sf_dir):
         F.sum(F.when(F.col("ts") < F.lit(CUPED_SPLIT).cast("timestamp_ntz"), F.col("value")).otherwise(0.0)).alias("x"),
         F.sum(F.when(F.col("ts") >= F.lit(CUPED_SPLIT).cast("timestamp_ntz"), F.col("value")).otherwise(0.0)).alias("y"),
     )
-    grp = F.conv(
-        F.substring(F.md5(F.concat(F.lit("ab|"), F.col("user_id").cast("string"))), 1, 8), 16, 10
-    ).cast("long") % 2
+    grp = md5_int(F.concat(F.lit("ab|"), F.col("user_id").cast("string")), 8) % 2
     per = per.withColumn("g", grp)
     mo = per.agg(
         (F.covar_samp("x", "y") / F.var_samp("x")).alias("theta"),
@@ -2245,25 +2214,14 @@ def x204_span_corruption(spark, sf_dir):
     pos = d.select(
         "doc_id", F.size("toks").alias("n_toks"), F.posexplode("toks").alias("p", "tok")
     ).drop("tok")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("sc|"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("#"),
-                        F.col("p").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform_from_md5(
+        F.concat(
+            F.lit("sc|"),
+            F.col("doc_id").cast("string"),
+            F.lit("#"),
+            F.col("p").cast("string"),
+        )
+    )
     starts = pos.where(u < SC_P)
     w = Window.partitionBy("doc_id").orderBy("p")
     isl = starts.withColumn(
@@ -2843,14 +2801,7 @@ def x213_sequential_monitor(spark, sf_dir):
     qd = days.select("d", F.ntile(4).over(wq).alias("q")).localCheckpoint(
         eager=True
     )
-    g = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ab|"), F.col("user_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    g = md5_int(F.concat(F.lit("ab|"), F.col("user_id").cast("string")), 8) % 2
     tagged = e.join(F.broadcast(qd), "d").withColumn("g", g)
     looks = []
     for k in range(1, 5):

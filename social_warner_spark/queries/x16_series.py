@@ -27,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import shingles_from_tokens, tokens
+from social_warner_spark.functions.text import md5_int, shingles_from_tokens, tokens
 from social_warner_spark.functions.vectors import dot
 from social_warner_spark.queries.common import T, r6
 
@@ -233,21 +233,12 @@ def x264_permutation_test(spark, sf_dir):
         )
     )
     side = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"),
-                        F.lit("#"),
-                        F.col("r").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        md5_int(
+            F.concat(
+                F.col("event_id").cast("string"), F.lit("#"), F.col("r").cast("string")
             ),
-            16,
-            10,
-        ).cast("long")
+            8,
+        )
         % 2
     )
     rdiff = (

@@ -712,9 +712,6 @@ def _markov_oracle() -> str:
     """
 
 
-_IVF_CENT_SQL = None  # assembled lazily below from x3_series internals
-
-
 def _cluster_quality_oracle() -> str:
     from social_warner_spark.queries.x3_series import _IVF_COS
 

@@ -27,7 +27,7 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import shingles_from_tokens, tokens
+from social_warner_spark.functions.text import md5_int, shingles_from_tokens, tokens
 from social_warner_spark.queries.common import T, r6
 
 #: x277 — pair source: exact shingle-Jaccard pairs at the x27
@@ -151,13 +151,7 @@ def x278_logrank_test(spark, sf_dir):
     per-group cumulative windows."""
     e = T(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     arm = F.when(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("lr|"), F.col("user_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
+        md5_int(F.concat(F.lit("lr|"), F.col("user_id").cast("string")), 8) % 2 == 0,
         F.lit(LR_G1),
     ).otherwise(F.lit(LR_G2))
     first = (

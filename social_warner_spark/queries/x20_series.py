@@ -23,11 +23,10 @@ Literature grounding (public):
 
 from __future__ import annotations
 
-import math
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r6
 
 #: x282 — EM configuration: the modeled event type, component count
@@ -190,6 +189,11 @@ def x283_daily_correlation(spark, sf_dir):
     )
 
 
+def did_treated(user_id: F.Column) -> F.Column:
+    """The md5 arm of a user, true for treated: x284 and x347/x351 split alike."""
+    return md5_int(F.concat(F.lit(DID_SALT), user_id.cast("string")), 8) % 2 == 0
+
+
 def x284_diff_in_diffs(spark, sf_dir):
     """Difference-in-differences with a deterministic md5 hash split
     (arm A = treated) and the observed-midpoint pre/post boundary: per
@@ -202,20 +206,9 @@ def x284_diff_in_diffs(spark, sf_dir):
     Scale: one user-period aggregation; the 2x2 algebra runs on four
     rows."""
     ev = T(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(DID_SALT), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        F.lit("treated"),
-    ).otherwise(F.lit("control"))
+    arm = F.when(did_treated(F.col("user_id")), F.lit("treated")).otherwise(
+        F.lit("control")
+    )
     split = ev.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).select(

@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import tokens
+from social_warner_spark.functions.text import md5_int, tokens
 from social_warner_spark.queries.common import T, r6, r6t
 
 #: x287 — MMR: candidate pool (BM25 top-N), selections, trade-off.
@@ -350,6 +350,11 @@ def x288_rm3_expansion(spark, sf_dir):
     )
 
 
+def au_bucket(vec_id: F.Column) -> F.Column:
+    """The md5 bucket of a vector that x289 and x337 pair within."""
+    return md5_int(F.concat(F.lit("au|"), vec_id.cast("string")), 8) % AU_BUCKETS
+
+
 def x289_alignment_uniformity(spark, sf_dir):
     """Wang–Isola representation metrics over the labeled embeddings:
     alignment = mean squared L2 distance between unit-normalized
@@ -371,18 +376,7 @@ def x289_alignment_uniformity(spark, sf_dir):
         "label",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("au|"), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % AU_BUCKETS
-    )
+    bucket = au_bucket(F.col("vec_id"))
     staged = e.select(
         "vec_id",
         "label",

@@ -35,8 +35,6 @@ STUMP_LANG = "en"
 #: x299 — forecast bins of width 0.1 over the min-max-scaled score.
 BRIER_BINS = 10
 BRIER_LANG = "en"
-#: x300 — sources clustered by the x291 JSD distances.
-MST_SEED_RANK = 1
 #: x301 — seasonal period (days) and the centered-MA half-window.
 STL_PERIOD = 7
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import tokens
+from social_warner_spark.functions.text import md5_int, tokens
 from social_warner_spark.queries.common import T, r6
 
 #: x302 — tercile boundaries per language over add-one-smoothed
@@ -242,22 +242,15 @@ def x305_block_bootstrap(spark, sf_dir):
         )
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("bb|"),
-                        F.col("b").cast("string"),
-                        F.lit("#"),
-                        F.col("blk").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        md5_int(
+            F.concat(
+                F.lit("bb|"),
+                F.col("b").cast("string"),
+                F.lit("#"),
+                F.col("blk").cast("string"),
             ),
-            16,
-            10,
-        ).cast("double")
+            8,
+        )
         / 4294967296.0
     )
     starts = reps.select(

@@ -23,7 +23,6 @@ Literature grounding (public):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Window
 
 from social_warner_spark.queries.common import T, r6
 from social_warner_spark.queries.x14_series import LPA_ITERS

@@ -25,8 +25,6 @@ Literature grounding (public):
 
 from __future__ import annotations
 
-import math
-
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 

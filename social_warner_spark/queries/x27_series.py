@@ -27,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.queries.common import T, r2, r6
+from social_warner_spark.queries.common import T, r6
 
 #: x317 — SLO error-ratio budget and the two alert windows (hours),
 #: with the standard burn thresholds.

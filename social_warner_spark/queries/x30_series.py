@@ -25,7 +25,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r6
+from social_warner_spark.queries.x11_series import _uniform_from_md5
 
 #: x332 — the advisory threshold (bytes), Spark's default 10 MiB.
 BA_THRESHOLD = 10 * 1024 * 1024
@@ -155,15 +157,7 @@ def x334_shuffle_quality(spark, sf_dir):
         .cast("double")
         .alias("y"),
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("sq|"), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(F.concat(F.lit("sq|"), F.col("doc_id").cast("string")), 8)
     staged = d.select(
         "doc_id", "y", (h % SQ_SHARDS).alias("shard"), h.alias("pos")
     )
@@ -221,18 +215,7 @@ def x335_watermark_planner(spark, sf_dir):
     Scale: delay is a narrow map; the drop curve is |candidates|
     conditional aggregates over one scan."""
     ev = T(spark, sf_dir, "events")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("wm|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 1.0
-    ) / 4294967296.0
+    u = _uniform_from_md5(F.concat(F.lit("wm|"), F.col("event_id").cast("string")))
     delay_s = F.round(-F.lit(WM_MEAN_LATE_S) * F.log(u), 6)
     staged = ev.select(delay_s.alias("delay"))
     aggs = [F.count("*").alias("n_events")]

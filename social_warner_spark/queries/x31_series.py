@@ -22,8 +22,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r6
-from social_warner_spark.queries.x21_series import AU_BUCKETS
+from social_warner_spark.queries.x20_series import DID_SALT, did_treated
+from social_warner_spark.queries.x21_series import AU_BUCKETS, au_bucket
 
 #: x338 — within-bucket rank depth for the k-occurrence counts.
 HUB_K = 5
@@ -32,7 +34,6 @@ HUB_BUCKETS = 10
 PP_BINS = 10
 PP_LO = 0.1
 PP_HI = 0.9
-PP_SALT = "did|"
 #: x340 — reported pattern count.
 SS_TOP = 10
 #: x341 — detector thresholds: lexical Jaccard and simhash hamming.
@@ -63,18 +64,7 @@ def x337_anisotropy(spark, sf_dir):
         "label",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("au|"), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % AU_BUCKETS
-    )
+    bucket = au_bucket(F.col("vec_id"))
     staged = register_persisted(
         e.select(
             "vec_id",
@@ -111,6 +101,11 @@ def x337_anisotropy(spark, sf_dir):
     )
 
 
+def hub_bucket(vec_id: F.Column) -> F.Column:
+    """The md5 bucket of a vector that x338 and x350 rank within."""
+    return md5_int(F.concat(F.lit("hub|"), vec_id.cast("string")), 8) % HUB_BUCKETS
+
+
 def x338_hubness(spark, sf_dir):
     """kNN hubness: within md5 buckets, every vector's top-5 cosine
     neighbors; O_i counts how often vector i appears in other
@@ -126,18 +121,7 @@ def x338_hubness(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hub|"), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % HUB_BUCKETS
-    )
+    bucket = hub_bucket(F.col("vec_id"))
     staged = register_persisted(
         e.select(
             "vec_id", bucket.alias("b"), "v", l2_norm(F.col("v")).alias("nv")
@@ -206,19 +190,7 @@ def x339_positivity_check(spark, sf_dir):
     Scale: one user aggregation, decile cuts broadcast, bin-sized
     algebra."""
     ev = T(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(PP_SALT), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0
-    ).cast("long")
+    arm = did_treated(F.col("user_id")).cast("long")
     users = ev.groupBy("user_id").agg(
         F.count("*").alias("cnt"), F.max(arm).alias("treated")
     )
@@ -579,7 +551,7 @@ ORACLES = {
     "x339_positivity_check": f"""
         WITH users AS MATERIALIZED (
             SELECT user_id, COUNT(*) AS cnt,
-                   MAX(CASE WHEN CAST(('0x' || substr(md5('{PP_SALT}' ||
+                   MAX(CASE WHEN CAST(('0x' || substr(md5('{DID_SALT}' ||
                         CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT)
                         % 2 = 0 THEN 1 ELSE 0 END) AS treated
             FROM events GROUP BY 1

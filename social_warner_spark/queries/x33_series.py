@@ -21,9 +21,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r6
-from social_warner_spark.queries.x20_series import DID_SALT
-from social_warner_spark.queries.x31_series import HUB_BUCKETS
+from social_warner_spark.queries.x20_series import DID_SALT, did_treated
+from social_warner_spark.queries.x31_series import HUB_BUCKETS, hub_bucket
 
 #: x347 — score deciles for the uplift curve; outcome = heavy-buyer
 #: (the x281 threshold).
@@ -37,20 +38,6 @@ OOD_K = 5
 OOD_TOP = 10
 #: x351 — evaluated quantiles.
 QTE_QS = (0.1, 0.25, 0.5, 0.75, 0.9)
-
-
-def _arm(col):
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(DID_SALT), col.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0
-    ).cast("long")
 
 
 def x347_qini_uplift(spark, sf_dir):
@@ -80,7 +67,7 @@ def x347_qini_uplift(spark, sf_dir):
     )
     staged = with_global_ntile(
         users, [F.desc("cnt"), F.asc("user_id")], QU_BINS, "dec"
-    ).select("y", _arm(F.col("user_id")).alias("t"), "dec")
+    ).select("y", did_treated(F.col("user_id")).cast("long").alias("t"), "dec")
     from social_warner_spark.caching import register_persisted
 
     staged = register_persisted(staged.persist())
@@ -172,16 +159,7 @@ def x349_fpc_ci(spark, sf_dir):
         F.count("*").alias("pop_n"), r6(F.avg("x")).alias("true_mean")
     )
     samp = d.where(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fpc|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % FPC_MOD
+        md5_int(F.concat(F.lit("fpc|"), F.col("doc_id").cast("string")), 8) % FPC_MOD
         == 0
     ).agg(
         F.count("*").alias("n"),
@@ -220,18 +198,7 @@ def x350_knn_ood(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hub|"), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % HUB_BUCKETS
-    )
+    bucket = hub_bucket(F.col("vec_id"))
     staged = register_persisted(
         e.select(
             "vec_id", bucket.alias("b"), "v", l2_norm(F.col("v")).alias("nv")
@@ -279,7 +246,7 @@ def x351_quantile_effects(spark, sf_dir):
     Scale: one percentile-array aggregation per arm (both broadcast);
     the effect table is |quantiles|-sized."""
     ev = T(spark, sf_dir, "events").select(
-        _arm(F.col("user_id")).alias("t"), "value"
+        did_treated(F.col("user_id")).cast("long").alias("t"), "value"
     )
     qs = ", ".join(str(q) for q in QTE_QS)
     per = ev.groupBy("t").agg(

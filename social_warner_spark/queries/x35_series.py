@@ -24,6 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r2, r6
 
 #: x357 — keep probability (answer truthfully) over k=5 categories.
@@ -56,28 +57,12 @@ def x357_randomized_response(spark, sf_dir):
     types = sorted(["click", "signup", "purchase", "error", "view"])
     tarr = F.array(*[F.lit(t) for t in types])
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("rr|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
+        md5_int(F.concat(F.lit("rr|"), F.col("event_id").cast("string")), 8)
         / 4294967296.0
     )
     # keep if u < p, else replace with category floor(u' * k)
     u2 = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("rr2|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
+        md5_int(F.concat(F.lit("rr2|"), F.col("event_id").cast("string")), 8)
         / 4294967296.0
     )
     reported = F.when(u < RR_P, F.col("event_type")).otherwise(

@@ -20,8 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from social_warner_spark.functions.text import md5_int
 from social_warner_spark.queries.common import T, r6
-from social_warner_spark.queries.x14_series import DQL_TERMS
 
 #: x367 — pool and report sizes.
 RM_POOL = 100
@@ -34,7 +34,6 @@ TY_TOP = 5
 SW_MIN_DF_SHARE = 0.5
 #: x371 — labeling budgets (percent of docs, deterministic md5).
 LB_BUDGETS = (10, 25, 50, 100)
-LB_LANG = "en"
 
 
 def x367_rank_movers(spark, sf_dir):
@@ -303,20 +302,7 @@ def x371_label_budget_curve(spark, sf_dir):
             F.col("n_chars").alias("x"),
             (F.col("lang") == STUMP_LANG).cast("long").alias("y"),
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("lb|"),
-                                F.col("doc_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                md5_int(F.concat(F.lit("lb|"), F.col("doc_id").cast("string")), 8)
                 % 100
             ).alias("h"),
         )

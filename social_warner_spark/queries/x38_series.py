@@ -24,8 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.queries.common import T, r2, r6
-from social_warner_spark.queries.x20_series import DID_SALT
+from social_warner_spark.functions.text import md5_int
+from social_warner_spark.queries.common import T, r6
 from social_warner_spark.queries.x27_series import (
     BT_LAG_DAYS,
     BT_MOD,
@@ -68,23 +68,14 @@ def x372_lww_vs_arrival(spark, sf_dir):
         F.lit(1).alias("ver"),
     )
     ledger = orig.unionAll(amend)
-    arrival = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("arr|"),
-                        F.col("o_orderkey").cast("string"),
-                        F.lit("#"),
-                        F.col("ver").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+    arrival = md5_int(
+        F.concat(
+            F.lit("arr|"),
+            F.col("o_orderkey").cast("string"),
+            F.lit("#"),
+            F.col("ver").cast("string"),
+        ),
+        8,
     )
     staged = ledger.select(
         "o_orderkey", "price", "tx_date", arrival.alias("arr")
@@ -178,9 +169,7 @@ def x374_birthday_audit(spark, sf_dir):
     Scale: one hash histogram; collisions come from the histogram's
     C(c,2) sum, never a pair join."""
     d = T(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("text")), 1, BD_BITS // 4), 16, 10
-    ).cast("long")
+    h = md5_int(F.col("text"), BD_BITS // 4)
     hist = d.select(h.alias("h")).groupBy("h").agg(
         F.count("*").alias("c")
     )

@@ -4,7 +4,6 @@ functions, ordered string aggregation, deterministic sampling."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Window
 
 from social_warner_spark.queries.common import T, r6
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from social_warner_spark.functions.text import shingles_from_tokens, tokens
+from social_warner_spark.functions.text import md5_int, shingles_from_tokens, tokens
 from social_warner_spark.functions.vectors import l2_norm
 from social_warner_spark.queries.common import T, r6, r6t
 
@@ -324,7 +324,7 @@ def x72_weighted_sample(spark, sf_dir):
     narrow map, and the draw is reproducible row-for-row on any engine.
     """
     d = T(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.concat(F.lit("ws|"), F.col("doc_id").cast("string"))), 1, 15), 16, 10).cast("double")
+    h = md5_int(F.concat(F.lit("ws|"), F.col("doc_id").cast("string")), 15)
     u = (h + 1.0) / (2.0 ** 60 + 1.0)
     keyed = d.select(
         "doc_id",

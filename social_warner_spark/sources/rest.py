@@ -95,11 +95,6 @@ def resolve_callable(ref: str) -> Callable:
     return fn
 
 
-class _PagePartition(InputPartition):
-    def __init__(self, index: int):
-        self.index = index
-
-
 class _PagedRestReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
@@ -107,12 +102,12 @@ class _PagedRestReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         n = int(self._options.get("num_pages", "1"))
-        return [_PagePartition(i) for i in range(n)]
+        return [InputPartition(i) for i in range(n)]
 
-    def read(self, partition: _PagePartition) -> Iterator[tuple]:
+    def read(self, partition: InputPartition) -> Iterator[tuple]:
         fetch: PageFetcher = resolve_callable(self._options["fetcher"])
         names = [f.name for f in self._schema.fields]
-        for row in fetch(partition.index, self._options):
+        for row in fetch(partition.value, self._options):
             yield tuple(row.get(name) for name in names)
 
 

@@ -20,13 +20,24 @@ mirror3   the mirror at ALL THREE scales (sf0.001, sf0.01, sf0.1) in
           that sf0.01/sf0.1 never exposed — tiny groups make exact
           decimal rationals land on the rounding grid's midpoints.
 
-Usage: python -m tests.run_strict_mirror [mirror|mirror3|duckdet|sparkdet] [sf_dir]
+Usage: python -m tests.run_strict_mirror [mirror|mirror3|duckdet|sparkdet|sparkparts] [sf_dir] [query ...]
+Query names after the scale narrow any mode to those queries (mirror3
+ignores its scale argument, so pass any placeholder there:
+``mirror3 - x72_weighted_sample x289_alignment_uniformity``).
 Exit code 0 = clean; 1 = at least one failure (each printed as it lands).
 """
 
 from __future__ import annotations
 
 import sys
+
+
+def _selected(declared, names: tuple[str, ...]) -> list[str]:
+    """``names`` sorted, or every declared name when none are given."""
+    unknown = sorted(set(names) - set(declared))
+    if unknown:
+        raise SystemExit(f"unknown query name(s): {unknown}")
+    return sorted(names or declared)
 
 
 def _render_frame(df) -> list[str]:
@@ -37,19 +48,20 @@ def _render_frame(df) -> list[str]:
     return ["|".join(_render_cell(v) for v in row) for row in c.itertuples(index=False)]
 
 
-def run_mirror(sf_dir: str) -> int:
+def run_mirror(sf_dir: str, names: tuple[str, ...] = ()) -> int:
     from social_warner_spark.caching import release_persisted_intermediates
     from social_warner_spark.queries import all_oracles, all_queries
     from social_warner_spark.session import get_spark
 
     from tests.oracle_harness import compare, duck_connection
 
+    queries, oracles = all_queries(), all_oracles()
+    names = _selected(queries, names)
     spark = get_spark(app_name="strict-mirror")
     spark.sparkContext.setLogLevel("ERROR")
-    queries, oracles = all_queries(), all_oracles()
     con = duck_connection(sf_dir)
     fails = 0
-    for i, name in enumerate(sorted(queries)):
+    for i, name in enumerate(names):
         release_persisted_intermediates()
         try:
             sdf = queries[name](spark, sf_dir)
@@ -61,12 +73,12 @@ def run_mirror(sf_dir: str) -> int:
             fails += 1
             print(f"FAIL {name}: {msg}", flush=True)
         if (i + 1) % 50 == 0:
-            print(f"... {i + 1}/{len(queries)} ({fails} fails)", flush=True)
-    print(f"mirror {sf_dir}: {len(queries)} queries, {fails} fails", flush=True)
+            print(f"... {i + 1}/{len(names)} ({fails} fails)", flush=True)
+    print(f"mirror {sf_dir}: {len(names)} queries, {fails} fails", flush=True)
     return 1 if fails else 0
 
 
-def run_duckdet(sf_dir: str, threads=(2, 8, 32)) -> int:
+def run_duckdet(sf_dir: str, names: tuple[str, ...] = (), threads=(2, 8, 32)) -> int:
     import duckdb  # noqa: F401 - ensures import error surfaces early
 
     from social_warner_spark.queries import all_oracles
@@ -79,7 +91,7 @@ def run_duckdet(sf_dir: str, threads=(2, 8, 32)) -> int:
     for t in threads:
         con = duck_connection(sf_dir)
         con.execute(f"SET threads TO {t}")
-        for name in sorted(oracles):
+        for name in _selected(oracles, names):
             try:
                 rendered = _render_frame(con.execute(oracles[name]).df())
             except Exception as e:  # noqa: BLE001
@@ -91,11 +103,11 @@ def run_duckdet(sf_dir: str, threads=(2, 8, 32)) -> int:
                 print(f"FLAP {name} at threads={t}", flush=True)
         con.close()
         print(f"duckdet threads={t} done ({fails} flaps)", flush=True)
-    print(f"duckdet {sf_dir}: {len(oracles)} oracles, {fails} flaps", flush=True)
+    print(f"duckdet {sf_dir}: {len(baseline)} oracles, {fails} flaps", flush=True)
     return 1 if fails else 0
 
 
-def run_sparkdet(sf_dir: str) -> int:
+def run_sparkdet(sf_dir: str, names: tuple[str, ...] = ()) -> int:
     from social_warner_spark.caching import release_persisted_intermediates
     from social_warner_spark.queries import all_queries
     from social_warner_spark.session import get_spark
@@ -103,8 +115,9 @@ def run_sparkdet(sf_dir: str) -> int:
     spark = get_spark(app_name="spark-det")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
+    names = _selected(queries, names)
     fails = 0
-    for i, name in enumerate(sorted(queries)):
+    for i, name in enumerate(names):
         runs = []
         for _ in range(2):
             release_persisted_intermediates()
@@ -117,8 +130,8 @@ def run_sparkdet(sf_dir: str) -> int:
             fails += 1
             print(f"FLAP {name}", flush=True)
         if (i + 1) % 50 == 0:
-            print(f"... {i + 1}/{len(queries)} ({fails} flaps)", flush=True)
-    print(f"sparkdet {sf_dir}: {len(queries)} queries, {fails} flaps", flush=True)
+            print(f"... {i + 1}/{len(names)} ({fails} flaps)", flush=True)
+    print(f"sparkdet {sf_dir}: {len(names)} queries, {fails} flaps", flush=True)
     return 1 if fails else 0
 
 
@@ -131,25 +144,26 @@ GATE_SCALES = (
 )
 
 
-def run_mirror3(_sf_dir_ignored: str) -> int:
+def run_mirror3(_sf_dir_ignored: str, names: tuple[str, ...] = ()) -> int:
     rc = 0
     for d in GATE_SCALES:
-        rc |= run_mirror(d)
+        rc |= run_mirror(d, names)
     return rc
 
 
-def run_sparkparts(sf_dir: str) -> int:
+def run_sparkparts(sf_dir: str, names: tuple[str, ...] = ()) -> int:
     """Partitioning-invariance sweep (round 9): render every query under
     TWO different partitioning regimes and diff.  sparkdet double-runs
     inside ONE session, so it can never see order-dependence that only
     surfaces when union/shuffle/scan partitioning changes — the class
     the asof_join duplicate-ts defect belonged to (a window sort that
     is not total lets the carried value follow partitioning order).
-    Regime A: the standard session (local core count, 32 shuffle
-    partitions).  Regime B: 7 shuffle partitions, 5 cores, 1 MiB scan
-    splits — different scan partitioning, shuffle fan-in, AQE choices.
-    A diff here is ALWAYS a real defect: declared queries must be
-    functions of the data, not the physical plan."""
+    Regime A: the standard session (local core count, shuffle
+    partitions by ``prepare_session``'s rule).  Regime B: 7 shuffle
+    partitions, 5 cores, 1 MiB scan splits — different scan
+    partitioning, shuffle fan-in, AQE choices.  A diff here is ALWAYS a
+    real defect: declared queries must be functions of the data, not the
+    physical plan."""
     from social_warner_spark.caching import release_persisted_intermediates
     from social_warner_spark.queries import all_queries
     from social_warner_spark.session import get_spark
@@ -158,8 +172,9 @@ def run_sparkparts(sf_dir: str) -> int:
         spark = get_spark(**session_kwargs)
         spark.sparkContext.setLogLevel("ERROR")
         queries = all_queries()
+        selected = _selected(queries, names)
         out: dict[str, list[str]] = {}
-        for i, name in enumerate(sorted(queries)):
+        for i, name in enumerate(selected):
             release_persisted_intermediates()
             spark.catalog.clearCache()
             try:
@@ -167,7 +182,7 @@ def run_sparkparts(sf_dir: str) -> int:
             except Exception as e:  # noqa: BLE001
                 out[name] = [f"EXC {type(e).__name__}: {e}"]
             if (i + 1) % 50 == 0:
-                print(f"... {i + 1}/{len(queries)}", flush=True)
+                print(f"... {i + 1}/{len(selected)}", flush=True)
         spark.stop()
         return out
 
@@ -213,7 +228,7 @@ def main() -> int:
         "duckdet": run_duckdet,
         "sparkdet": run_sparkdet,
         "sparkparts": run_sparkparts,
-    }[mode](sf_dir)
+    }[mode](sf_dir, tuple(sys.argv[3:]))
 
 
 if __name__ == "__main__":

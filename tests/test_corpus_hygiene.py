@@ -33,6 +33,36 @@ def test_normalize_text_fixture(spark):
     }
 
 
+def test_md5_int_matches_the_duckdb_recipe(spark):
+    """md5_int is the Spark side of every oracle's
+    CAST(('0x' || substr(md5(k), 1, n)) AS UBIGINT)."""
+    import duckdb
+    import pytest
+
+    from social_warner_spark.functions.text import md5_int
+
+    keys = ["", "0", "doc|42", "naïve café ☃ 東京", "x" * 1000]
+    widths = (4, 8, 12, 15)
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = {
+        r["k"]: tuple(r[1:])
+        for r in df.select("k", *[md5_int(F.col("k"), n) for n in widths]).collect()
+    }
+    cols = ", ".join(
+        f"CAST(('0x' || substr(md5(k), 1, {n})) AS UBIGINT)" for n in widths
+    )
+    con = duckdb.connect()
+    want = {
+        k: tuple(con.execute(f"SELECT {cols} FROM (SELECT ?::VARCHAR AS k)", [k]).fetchone())
+        for k in keys
+    }
+    assert got == want
+    assert dict(df.select("k", md5_int(F.col("k"), 15).alias("h")).dtypes)["h"] == "bigint"
+    for bad in (0, 16):
+        with pytest.raises(ValueError, match="hex_chars"):
+            md5_int(F.col("k"), bad)
+
+
 def test_segment_dedup_first_occurrence_wins(spark):
     # seg_tokens=2: doc 1 = [A B][C D]; doc 2 repeats [A B] then new [E F];
     # doc 3 is entirely made of already-seen segments -> empty reassembly.

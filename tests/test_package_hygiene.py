@@ -22,12 +22,17 @@ constant.
 The third reads the values those calls pass: a defaulted parameter that
 selects a branch, although every call outside ``tests/`` gives it the
 same value, keeps a code path only tests run.
+
+Two more read names rather than the graph: a module-level binding in
+``queries/`` that nothing names is dead, and the md5-to-integer recipe
+is written only in ``functions.text.md5_int``.
 """
 
 from __future__ import annotations
 
 import ast
 import functools
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -452,3 +457,76 @@ def test_no_branch_is_decided_by_one_value_outside_tests():
     )
     # every allowlist entry is still a branch decided by one value
     assert set(ALLOWED_BRANCHES) <= found
+
+
+def _corpus() -> list[tuple[str, Path, ast.Module]]:
+    """(module, path, tree) for the package, ``tests/``, ``perfbench/``
+    and the entry scripts."""
+    out = [(mod, path, tree) for mod, (path, tree) in _modules().items()]
+    for f in sorted((ROOT / "tests").glob("*.py")):
+        out.append((f"tests.{f.stem}", f, ast.parse(f.read_text(), str(f))))
+    return out
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Identifiers ``node`` reads: loaded names, attribute names and the
+    names its from-imports take."""
+    out = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Load):
+            out.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            out.add(sub.attr)
+        elif isinstance(sub, ast.ImportFrom):
+            out.update(a.name for a in sub.names)
+    return out
+
+
+def test_every_query_module_binding_is_named():
+    """A module-level def, class or assignment in ``queries/`` that no other
+    statement of the package, the tests, perfbench or the entry scripts
+    names is dead: the query roots above keep every such binding alive,
+    so this check reads names instead."""
+    corpus = _corpus()
+    named: dict[str, set[tuple[str, int]]] = {}
+    for mod, _, tree in corpus:
+        for i, st in enumerate(tree.body):
+            for n in _names(st):
+                named.setdefault(n, set()).add((mod, i))
+    dead = sorted(
+        f"{mod}.{n}"
+        for mod, _, tree in corpus
+        if mod.startswith(f"{PKG}.queries")
+        for i, st in enumerate(tree.body)
+        for n in _binds(st) or ()
+        if not named.get(n, set()) - {(mod, i)}
+    )
+    assert not dead, f"module-level bindings in queries/ nothing names: {dead}"
+
+
+def _is_call(node: ast.AST, name: str) -> bool:
+    return isinstance(node, ast.Call) and (
+        getattr(node.func, "attr", None) == name or getattr(node.func, "id", None) == name
+    )
+
+
+def test_md5_integer_recipe_is_written_once():
+    """``conv(substring(md5(key), 1, n), 16, 10)`` is written only in
+    ``functions.text.md5_int``, so every bucket, split and uniform draw
+    shares one recipe; a hex prefix taken in an earlier column counts too.
+    Spark SQL strings are searched for it as well."""
+    home = ROOT / PKG / "functions" / "text.py"
+    recipe = re.compile(r"conv\s*\(\s*substr(ing)?\s*\(", re.I)
+    found = []
+    for mod, (path, tree) in _modules().items():
+        if not mod.startswith(PKG):
+            continue
+        for node in ast.walk(tree):
+            if (_is_call(node, "conv") and node.args and _is_call(node.args[0], "substring")) or (
+                isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and recipe.search(node.value)
+            ):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert [f.rpartition(":")[0] for f in found] == [str(home.relative_to(ROOT))], (
+        f"the md5-to-integer recipe outside functions.text.md5_int: {found}"
+    )

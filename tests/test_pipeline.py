@@ -117,6 +117,39 @@ def test_transform_config_frame_end_to_end(spark):
     assert fb["lfm&content&tags&genre"] is None   # empty tag list → all-null pivots
 
 
+def test_transform_projects_a_column_named_in_two_sections_once(spark):
+    # group_by ∪ meta_dimensions ∪ metrics is a union: a column listed in
+    # two sections is projected once, at its first position, with the
+    # dtype of the later section.
+    cfg = parse_config(
+        "cfg1",
+        dict(
+            CONFIG_DOC,
+            meta_dimensions={
+                **CONFIG_DOC["meta_dimensions"],
+                "lfm.fact.date_str": "datetime64[ns]",
+                "metric.impressions": "string",
+            },
+        ),
+    )
+    assert cfg.columns == [
+        "lfm.fact.date_str",
+        "lfm.post.channel",
+        "lfm.brand.name",
+        "lfm.content.tags",
+        "metric.impressions",
+        "metric.engagement_rate",
+    ]
+    out = transform_config_frame(_raw_fixture(spark), cfg)
+    assert out.columns.count("lfm&fact&date_str") == 1
+    assert out.columns.count("metric&impressions") == 1
+    assert out.columns[:3] == ["lfm&fact&date_str", "lfm&post&channel", "lfm&brand&name"]
+    rows = {r["lfm&post&channel"]: r for r in out.collect()}
+    assert rows["yt"]["lfm&fact&date_str"] == "2024-01-05"
+    assert rows["yt"]["metric&impressions"] == 1200  # metrics' int64 wins
+    assert rows["tw"]["metric&impressions"] == 0
+
+
 @pytest.mark.parametrize("tags_type", ["string", "bigint"])
 def test_transform_non_array_tags_pivot_to_nothing(spark, tags_type):
     # The reference maps non-list tags to {} (data_transform.py:102-150):

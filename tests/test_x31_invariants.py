@@ -107,11 +107,11 @@ def test_hubness_matches_numpy(spark, sf_smoke):
 
 def test_positivity_matches_pure_python(spark, sf_smoke):
     """x339: replay arms, decile bins and propensities."""
+    from social_warner_spark.queries.x20_series import DID_SALT
     from social_warner_spark.queries.x31_series import (
         PP_BINS,
         PP_HI,
         PP_LO,
-        PP_SALT,
         x339_positivity_check,
     )
 
@@ -125,7 +125,7 @@ def test_positivity_matches_pure_python(spark, sf_smoke):
     bins = defaultdict(list)
     for uid, cnt in users.items():
         b = 1 + sum(cnt > c for c in cuts)
-        t = 1 if _bucket(PP_SALT, uid, 2) == 0 else 0
+        t = 1 if _bucket(DID_SALT, uid, 2) == 0 else 0
         bins[b].append(t)
     props = {b: round(sum(ts) / len(ts), 6) for b, ts in bins.items()}
     assert r.n_bins == len(bins)
