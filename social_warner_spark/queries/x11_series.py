@@ -2951,7 +2951,7 @@ for _lg in _LANGS[1:]:
     _CHUNK_BEST_EXPR = f"GREATEST({_CHUNK_BEST_EXPR}, s_{_lg})"
 
 #: Portable hex→uint64 (first 8 md5 hex chars) as a DuckDB fold — the
-#: mirror of Spark's conv(substr(md5(x),1,8),16,10).
+#: mirror of Spark's functions.text.md5_int(x, 8).
 _HEX8_TO_INT = (
     "reduce(list_transform(string_split_regex(substr(md5({x}), 1, 8), ''),"
     " c -> CAST(CASE WHEN c BETWEEN '0' AND '9' THEN ascii(c)-48"

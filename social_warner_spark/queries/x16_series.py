@@ -391,7 +391,7 @@ def x266_matryoshka_recall(spark, sf_dir):
 
 
 #: Portable hex8→int: DuckDB-side mirror of Spark's
-#: conv(substr(md5(x),1,8),16,10).
+#: functions.text.md5_int(x, 8).
 def _hex8(x: str) -> str:
     return f"CAST(('0x' || substr(md5({x}), 1, 8)) AS UBIGINT)"
 
